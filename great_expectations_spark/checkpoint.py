@@ -30,12 +30,12 @@ DataFrame after the partition's validation completes).
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 import time
 from dataclasses import dataclass, field
 from typing import Any
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     BooleanType,
@@ -52,6 +52,7 @@ from great_expectations_spark.result import (
     calc_map_success,
 )
 from great_expectations_spark.runner import SuiteRunner
+from great_expectations_spark.segmented import _validate_rows
 from great_expectations_spark.suite import ExpectationSuite
 
 MANIFEST_SCHEMA = StructType(
@@ -68,33 +69,23 @@ MANIFEST_SCHEMA = StructType(
     ]
 )
 
-#: per-(partition × expectation) mergeable counters — the "metrics" half of
-#: the manifest. Counts add across partitions; observed_value is kept for
-#: aggregate expectations (not mergeable in general → suite-level aggregates
-#: are reported per partition, the north_rule's per-partition pass/fail).
+#: one row per (partition × segment × expectation) — the mergeable metrics
+#: store of both run modes. Counts add across partitions; observed_value is
+#: kept (``str(observed)``, NULL for None) for aggregate expectations, whose
+#: verdicts are reported per partition. A whole-suite row (whole-partition
+#: run, or an empty partition of a segmented run) has ``segment_col`` NULL;
+#: a segmented row names its column, and its ``segment`` may be a genuine
+#: NULL value. Merges key on ``(suite_hash, segment_col, segment,
+#: expectation_id)``, so rows of different suites, modes, segments and
+#: same-type expectations never add together.
 EVR_ROW_SCHEMA = StructType(
     [
         StructField("run_id", StringType()),
         StructField("partition_id", StringType()),
-        StructField("expectation_type", StringType()),
-        StructField("expectation_id", StringType()),
-        StructField("success", BooleanType()),
-        StructField("element_count", LongType()),
-        StructField("missing_count", LongType()),
-        StructField("unexpected_count", LongType()),
-        StructField("observed_value", StringType()),
-    ]
-)
-
-#: per-(partition × segment × expectation) counters — the segmented-mode
-#: twin of EVR_ROW_SCHEMA (``Checkpoint.run(segment_col=...)``). Counts add
-#: across partitions per segment, so the suite-level per-segment verdict is
-#: re-derivable from a resumed run exactly like the whole-partition one.
-SEGMENT_EVR_ROW_SCHEMA = StructType(
-    [
-        StructField("run_id", StringType()),
-        StructField("partition_id", StringType()),
+        StructField("suite_hash", StringType()),
+        StructField("segment_col", StringType()),
         StructField("segment", StringType()),
+        StructField("expectation_id", StringType()),
         StructField("expectation_type", StringType()),
         StructField("success", BooleanType()),
         StructField("element_count", LongType()),
@@ -104,15 +95,8 @@ SEGMENT_EVR_ROW_SCHEMA = StructType(
     ]
 )
 
-
-def salted_suite_hash(shash: str, segment_col: str) -> str:
-    """The segmented-mode manifest hash: the plain suite hash salted with
-    the segment column, so segmented and whole-partition runs of the same
-    suite never cross-skip. ONE definition — ``run()`` and the merge views
-    must always agree, or every segmented merge silently empties."""
-    return hashlib.sha256(
-        f"{shash}|segmented:{segment_col}".encode()
-    ).hexdigest()[:16]
+#: the merge view's grouping key
+MERGE_KEYS = ["suite_hash", "segment_col", "segment", "expectation_id"]
 
 
 def check_partitioned_layout(
@@ -143,31 +127,55 @@ def check_partitioned_layout(
         pass
 
 
-def suite_hash(suite: ExpectationSuite) -> str:
-    """Deterministic digest of the suite definition — a manifest row only
-    counts as 'done' for the exact suite it was produced by."""
-    payload = json.dumps(
-        [cfg.to_dict() for cfg in suite], sort_keys=True, default=str
-    )
-    return hashlib.sha256(payload.encode()).hexdigest()[:16]
+def suite_hash(suite: ExpectationSuite, segment_col: str | None = None) -> str:
+    """The run identity a manifest row and its EVR rows are keyed by: the
+    suite's own :attr:`~ExpectationSuite.suite_hash`, salted with the segment
+    column for a segmented run — so whole-partition and segmented runs of
+    one suite never cross-skip, and each merge view pins only its own rows."""
+    if segment_col is None:
+        return suite.suite_hash
+    return hashlib.sha256(
+        f"{suite.suite_hash}|segmented:{segment_col}".encode()
+    ).hexdigest()[:16]
+
+
+def suite_result_rows(
+    suite: ExpectationSuite, result: ExpectationSuiteValidationResult
+) -> list[tuple]:
+    """A SuiteRunner result as whole-suite rows in the segmented executor's
+    row shape ``(segment=None, expectation_id, expectation_type, success,
+    element_count, missing_count, unexpected_count, observed_value)``.
+    Results come back in suite order, so each row carries the USER suite's
+    expectation id even where the runner rewrote a config."""
+    rows = []
+    for cfg, r in zip(suite, result.results):
+        res = r.result or {}
+        observed = res.get("observed_value")
+        rows.append((
+            None, cfg.id, cfg.expectation_type, bool(r.success),
+            int(res.get("element_count") or 0),
+            int(res.get("missing_count") or 0),
+            int(res.get("unexpected_count") or 0),
+            None if observed is None else str(observed),
+        ))
+    return rows
 
 
 @dataclass
 class PartitionRunRecord:
     partition_id: str
     status: str  # "validated" | "skipped" | "failed"
+    #: the SuiteRunner result when the whole suite ran on the partition
+    #: (whole-partition runs, and empty partitions of segmented runs)
     result: ExpectationSuiteValidationResult | None = None
     rows_scanned: int = 0
     violations: int = 0
     elapsed_s: float = 0.0
-    #: for status="skipped": the manifest-recorded verdict of the run that
-    #: validated this partition (None if the manifest predates this field)
-    manifest_success: bool | None = None
-    #: segmented mode: number of segments validated in this partition, and
-    #: the partition verdict (all segments passed) — ``result`` stays None
-    #: because segmented runs emit per-segment rows, not one suite result
+    #: segmented mode: number of segments validated in this partition
     segments: int = 0
-    segmented_success: bool | None = None
+    #: this run's verdict if validated; the manifest's verdict if skipped
+    #: (None when the manifest row predates the field)
+    success: bool | None = None
 
 
 @dataclass
@@ -190,15 +198,7 @@ class CheckpointRunResult:
         partitions skipped on resume, judged by their manifest verdict (a
         resumed run over a previously-FAILING table must not report
         success just because the failing partitions were already done)."""
-        for r in self.records:
-            if r.result is not None:
-                if not r.result.success:
-                    return False
-            elif r.segmented_success is False:
-                return False
-            elif r.status == "skipped" and r.manifest_success is False:
-                return False
-        return True
+        return not any(r.success is False for r in self.records)
 
 
 def merge_map_counts(
@@ -270,8 +270,8 @@ class Checkpoint:
         field existed, or by an external tool) stays ``None`` — coercing
         it to False would flip the whole resumed run's verdict to failed
         even when every partition actually passed
-        (``PartitionRunRecord.manifest_success`` documents None as
-        "predates this field" and only ``is False`` fails the run)."""
+        (``PartitionRunRecord.success`` documents None as "predates this
+        field" and only ``is False`` fails the run)."""
         rows = (
             self.read_manifest()
             .filter(
@@ -295,61 +295,10 @@ class Checkpoint:
             "append"
         ).parquet(self.manifest_path)
 
-    def _append_evrs(
-        self,
-        run_id: str,
-        partition_id: str,
-        result: ExpectationSuiteValidationResult,
-    ) -> None:
-        if not self.evr_path:
-            return
-        rows = []
-        for r in result.results:
-            res = r.result or {}
-            rows.append(
-                {
-                    "run_id": run_id,
-                    "partition_id": partition_id,
-                    "expectation_type": r.expectation_config.get(
-                        "expectation_type"
-                    ),
-                    "expectation_id": r.expectation_config.get("id"),
-                    "success": bool(r.success),
-                    "element_count": int(res.get("element_count") or 0),
-                    "missing_count": int(res.get("missing_count") or 0),
-                    "unexpected_count": int(res.get("unexpected_count") or 0),
-                    "observed_value": json.dumps(
-                        res.get("observed_value"), default=str
-                    ),
-                }
-            )
+    def _append_evrs(self, rows: list[tuple]) -> None:
         self.spark.createDataFrame(rows, EVR_ROW_SCHEMA).coalesce(1).write.mode(
             "append"
         ).parquet(self.evr_path)
-
-    def _append_segment_evrs(self, run_id: str, partition_id: str,
-                             seg_rows: list) -> None:
-        """Segmented-mode EVR append: one row per (segment × expectation),
-        already driver-local (validate_by_group collects its counters)."""
-        if not self.evr_path:
-            return
-        rows = [
-            {
-                "run_id": run_id,
-                "partition_id": partition_id,
-                "segment": r["group"],
-                "expectation_type": r["expectation_type"],
-                "success": bool(r["success"]),
-                "element_count": int(r["element_count"] or 0),
-                "missing_count": int(r["missing_count"] or 0),
-                "unexpected_count": int(r["unexpected_count"] or 0),
-                "observed_value": r["observed_value"],
-            }
-            for r in seg_rows
-        ]
-        self.spark.createDataFrame(
-            rows, SEGMENT_EVR_ROW_SCHEMA
-        ).coalesce(1).write.mode("append").parquet(self.evr_path)
 
     # ------------------------------------------------------------------- run
     def run(
@@ -379,19 +328,13 @@ class Checkpoint:
         manifest row still commits only after its validation finished, so
         resume semantics are identical to the sequential path.
 
-        ``segment_col`` switches each partition's validation to
-        :func:`~great_expectations_spark.segmented.validate_by_group`:
-        the suite is evaluated once per distinct segment value WITHIN each
-        partition (one bundled groupBy per partition, not one scan per
-        segment), EVR rows land in ``evr_path`` under
-        :data:`SEGMENT_EVR_ROW_SCHEMA` (an extra ``segment`` column — use a
-        fresh path, not a whole-partition EVR store; guarded), and the
-        manifest/resume semantics are unchanged: kill/resume re-runs at
-        most the one in-flight partition, and per-segment suite-level
-        verdicts merge across partitions via
-        :meth:`merged_segment_verdicts`. The suite hash is salted with the
-        segment column so segmented and whole-partition runs of the same
-        suite never cross-skip each other.
+        ``segment_col`` evaluates the suite once per distinct segment value
+        WITHIN each partition (the segmented executor of
+        :func:`~great_expectations_spark.segmented.validate_by_group`: one
+        bundled groupBy per partition, not one scan per segment). Both modes
+        write the same :data:`EVR_ROW_SCHEMA` rows through the same append
+        and manifest commit, under :func:`suite_hash` ``(suite,
+        segment_col)``; :meth:`merged_map_verdicts` reads both back.
         """
         if self.violations_path is not None:
             # refuse to append partition_id=<pid>/expectation=… under a root
@@ -402,41 +345,20 @@ class Checkpoint:
                 stale_prefix="expectation",
                 expected="partition_id=<pid>/expectation=<type>/",
             )
-        shash = suite_hash(suite)
         if self.evr_path:
-            # the two EVR shapes must never share a store: reading a mixed
-            # store under either schema silently null-fills the other
-            # side's rows — and a whole-partition row null-filled into the
-            # `segment` column would merge into the genuinely-NULL segment
-            # group (a legitimate value in segmented mode). Refuse BOTH
-            # directions instead.
-            from pyspark.errors import AnalysisException
-
             try:
-                existing = set(
-                    self.spark.read.parquet(self.evr_path).columns
-                )
+                existing = self.spark.read.parquet(self.evr_path).columns
             except AnalysisException:
-                # first run: no store yet (PATH_NOT_FOUND / unable to
-                # infer schema). ONLY that case may skip the guard — a
-                # corrupt or unreadable existing store must fail loudly
-                # here, not get the other schema appended into it
+                # first run: no store yet (PATH_NOT_FOUND / unable to infer
+                # schema); a corrupt existing store still fails loudly here
                 existing = None
-            if existing is not None:
-                if segment_col is not None and "segment" not in existing:
-                    raise ValueError(
-                        f"evr_path {self.evr_path!r} holds whole-partition "
-                        "EVR rows (no `segment` column); segmented runs "
-                        "need their own EVR store path"
-                    )
-                if segment_col is None and "segment" in existing:
-                    raise ValueError(
-                        f"evr_path {self.evr_path!r} holds segmented EVR "
-                        "rows (`segment` column present); whole-partition "
-                        "runs need their own EVR store path"
-                    )
-        if segment_col is not None:
-            shash = salted_suite_hash(shash, segment_col)
+            if existing is not None and "suite_hash" not in existing:
+                raise ValueError(
+                    f"evr_path {self.evr_path!r} holds EVR rows written "
+                    "before rows carried their suite hash and segment; "
+                    "use a new EVR store path"
+                )
+        shash = suite_hash(suite, segment_col)
         done = self.completed_partitions(shash)
         if partition_values is None:
             partition_values = sorted(
@@ -450,6 +372,7 @@ class Checkpoint:
         import urllib.parse
 
         write_lock = threading.Lock()
+        expectations = [(cfg.id, cfg) for cfg in suite]
 
         def run_partition(pv: Any) -> PartitionRunRecord:
             pid = str(pv)
@@ -469,124 +392,44 @@ class Checkpoint:
             # physical partition column of the source (Iceberg / dir-parquet).
             pdf = df.filter(F.col(partition_col) == F.lit(pv))
 
+            rows: list[tuple] = []
             if segment_col is not None:
-                from great_expectations_spark.segmented import (
-                    validate_by_group,
-                )
-
-                seg_rows = validate_by_group(
-                    pdf, suite, segment_col,
-                    max_groups=segment_max_groups,
-                    violations_path=vpath,
+                rows = _validate_rows(
+                    pdf, expectations, segment_col, strict=True,
+                    max_groups=segment_max_groups, violations_path=vpath,
                     unexpected_index_column_names=self.runner_kwargs.get(
                         "unexpected_index_column_names"
                     ),
-                ).collect()
-                n_segments = len({r["group"] for r in seg_rows})
-                if any(
-                    r["group"] == "__empty_partition__" for r in seg_rows
-                ):
-                    raise ValueError(
-                        f"partition {pid!r} holds a genuine segment named "
-                        "'__empty_partition__', which is reserved for "
-                        "empty-partition verdict rows — rename or derive "
-                        "the segment column so the merged per-segment "
-                        "counters cannot mix the two"
-                    )
-                if not seg_rows:
-                    # An EMPTY partition yields zero segments, so nothing
-                    # above ran — and `all([])` would mark the partition
-                    # validated/passed unconditionally with ZERO EVR rows
-                    # (invisible in the merge views and the docs page).
-                    # Whole-partition parity instead: run the WHOLE suite
-                    # through SuiteRunner on the empty frame (map kinds
-                    # succeed vacuously, a row-count floor FAILS) with the
-                    # checkpoint's configured runner kwargs, and record
-                    # every verdict with its real counters/observed value
-                    # under the reserved segment "__empty_partition__" —
-                    # NOT NULL, which is a legitimate segment value that
-                    # other partitions may genuinely hold and must not be
-                    # polluted with synthesized rows in the merge.
-                    empty_res = SuiteRunner(
-                        self.spark, **self.runner_kwargs
-                    ).validate(pdf, suite)
-                    seg_rows = [
-                        {
-                            "group": "__empty_partition__",
-                            "expectation_type": r.expectation_config[
-                                "expectation_type"
-                            ],
-                            "success": bool(r.success),
-                            "element_count": int(
-                                (r.result or {}).get("element_count") or 0
-                            ),
-                            "missing_count": int(
-                                (r.result or {}).get("missing_count") or 0
-                            ),
-                            "unexpected_count": int(
-                                (r.result or {}).get("unexpected_count")
-                                or 0
-                            ),
-                            # plain str like validate_by_group's agg rows
-                            # (one encoding per column across the store);
-                            # None stays SQL NULL
-                            "observed_value": (
-                                str(ov) if (ov := (r.result or {}).get(
-                                    "observed_value")) is not None else None
-                            ),
-                        }
-                        for r in empty_res.results
-                    ]
-                elapsed = time.monotonic() - t0
-                per_seg_ec: dict[Any, int] = {}
-                violations = 0
-                for r in seg_rows:
-                    per_seg_ec[r["group"]] = max(
-                        per_seg_ec.get(r["group"], 0),
-                        int(r["element_count"] or 0),
-                    )
-                    violations += int(r["unexpected_count"] or 0)
-                ok = all(bool(r["success"]) for r in seg_rows)
-                rows_scanned = sum(per_seg_ec.values())
-                with write_lock:
-                    self._append_segment_evrs(run_id, pid, seg_rows)
-                    self._append_manifest(
-                        {
-                            "run_id": run_id,
-                            "partition_id": pid,
-                            "status": "validated",
-                            "suite_hash": shash,
-                            "rows_scanned": rows_scanned,
-                            "violations": violations,
-                            "elapsed_s": elapsed,
-                            "success": ok,
-                        }
-                    )
-                return PartitionRunRecord(
-                    partition_id=pid,
-                    status="validated",
-                    rows_scanned=rows_scanned,
-                    violations=violations,
-                    elapsed_s=elapsed,
-                    segments=n_segments,
-                    segmented_success=ok,
                 )
-
-            runner = SuiteRunner(
-                self.spark, violations_path=vpath, **self.runner_kwargs
-            )
-            result = runner.validate(pdf, suite)
+            segments = len({r[0] for r in rows})
+            row_segment_col = segment_col
+            result = None
+            if not rows:
+                # A whole-partition run — or an EMPTY partition of a
+                # segmented run, which yields zero segments: the whole suite
+                # still runs (map kinds succeed vacuously, a row-count floor
+                # fails), recorded as whole-suite rows (segment_col NULL)
+                # that can never merge into a genuine NULL segment.
+                result = SuiteRunner(
+                    self.spark, violations_path=vpath, **self.runner_kwargs
+                ).validate(pdf, suite)
+                rows = suite_result_rows(suite, result)
+                row_segment_col = None
             elapsed = time.monotonic() - t0
 
-            rows_scanned = 0
-            violations = 0
-            for r in result.results:
-                res = r.result or {}
-                rows_scanned = max(rows_scanned, int(res.get("element_count") or 0))
-                violations += int(res.get("unexpected_count") or 0)
+            per_segment_ec: dict[Any, int] = {}
+            violations, ok = 0, True
+            for segment, _id, _type, success, ec, _miss, unexpected, _obs in rows:
+                per_segment_ec[segment] = max(per_segment_ec.get(segment, 0), ec)
+                violations += unexpected
+                ok = ok and success
+            rows_scanned = sum(per_segment_ec.values())
 
             with write_lock:
-                self._append_evrs(run_id, pid, result)
+                if self.evr_path:
+                    self._append_evrs(
+                        [(run_id, pid, shash, row_segment_col, *r) for r in rows]
+                    )
                 self._append_manifest(
                     {
                         "run_id": run_id,
@@ -596,7 +439,7 @@ class Checkpoint:
                         "rows_scanned": rows_scanned,
                         "violations": violations,
                         "elapsed_s": elapsed,
-                        "success": bool(result.success),
+                        "success": ok,
                     }
                 )
             return PartitionRunRecord(
@@ -606,6 +449,8 @@ class Checkpoint:
                 rows_scanned=rows_scanned,
                 violations=violations,
                 elapsed_s=elapsed,
+                segments=segments,
+                success=ok,
             )
 
         todo: list[Any] = []
@@ -614,9 +459,7 @@ class Checkpoint:
             if pid in done:
                 out.records.append(
                     PartitionRunRecord(
-                        partition_id=pid,
-                        status="skipped",
-                        manifest_success=done[pid],
+                        partition_id=pid, status="skipped", success=done[pid]
                     )
                 )
                 continue
@@ -645,66 +488,59 @@ class Checkpoint:
     def _committed_rows(
         self, evrs: DataFrame, shash: str | None = None
     ) -> DataFrame:
-        """Restrict an EVR frame to MANIFEST-COMMITTED rows: per partition,
-        the latest ``status=validated`` manifest row AMONG THE RUNS PRESENT
-        IN THIS STORE names the one ``run_id`` whose EVRs count. The
-        manifest append is the commit point (EVRs are written first, inside
-        the same lock) — a process killed between the two appends leaves
-        orphan EVR rows that a resumed run re-validates, and summing both
-        sets would double every counter for that partition.
+        """Restrict an EVR frame to MANIFEST-COMMITTED rows: per (suite hash,
+        partition), the latest ``status=validated`` manifest row AMONG THE
+        RUNS PRESENT IN THIS STORE names the one ``run_id`` whose EVRs
+        count. The manifest append is the commit point (EVRs are written
+        first, inside the same lock) — a process killed between the two
+        appends leaves orphan EVR rows that a resumed run re-validates, and
+        summing both sets would double every counter for that partition.
 
-        "Among the runs present in this store" matters: the manifest is
-        deliberately shareable across modes and suites (the segment-salted
-        suite hash exists precisely so a whole-partition run and a
-        segmented run of the same suite share one manifest without
-        cross-skipping, each with its OWN EVR store). Picking the latest
-        validated run across the whole manifest would name the other
-        store's run_id and semi-join this store down to nothing — so the
-        candidate set is intersected with this store's (partition, run)
-        pairs first. ``shash`` optionally narrows the manifest rows to one
-        suite hash. The join side is tiny (one row per partition) and
-        broadcast."""
+        Keying the lookup by suite hash keeps every suite and mode that
+        shares this manifest and store: the latest run of one suite never
+        hides another suite's rows on a shared partition. Intersecting with
+        the store's own (suite hash, partition, run) triples keeps a store
+        whose manifest is shared with other stores from semi-joining down to
+        another store's runs. ``shash`` optionally pins one suite hash. The
+        join side is tiny (one row per partition and suite) and broadcast."""
+        keys = ["suite_hash", "partition_id", "run_id"]
         validated = self.read_manifest().filter(
             F.col("status") == "validated"
         )
         if shash is not None:
             validated = validated.filter(F.col("suite_hash") == shash)
-        pairs = evrs.select("partition_id", "run_id").distinct()
         latest = (
-            pairs.join(
-                validated.select("partition_id", "run_id", "finished_ts"),
-                on=["partition_id", "run_id"],
-            )
-            .groupBy("partition_id")
+            evrs.select(*keys).distinct()
+            .join(validated.select(*keys, "finished_ts"), on=keys)
+            .groupBy("suite_hash", "partition_id")
             .agg(F.max_by("run_id", "finished_ts").alias("run_id"))
         )
-        return evrs.join(
-            F.broadcast(latest), on=["partition_id", "run_id"],
-            how="left_semi",
-        )
+        return evrs.join(F.broadcast(latest), on=keys, how="left_semi")
 
-    @staticmethod
-    def _resolve_shash(shash_or_suite: Any) -> str | None:
-        if shash_or_suite is None:
-            return None
-        if isinstance(shash_or_suite, str):
-            return shash_or_suite
-        return suite_hash(shash_or_suite)
+    def merged_map_verdicts(self, suite_hash: str | None = None) -> DataFrame:
+        """Suite-level merged counters per ``(suite_hash, segment_col,
+        segment, expectation_id)`` from the EVR store — counts add across
+        partitions (SURVEY.md §4.2 item 5), so a resumed multi-partition run
+        re-derives the numbers of a single whole-table run (or of a single
+        ``validate_by_group`` for segmented rows). Only manifest-committed
+        rows participate (``_committed_rows``); pass
+        ``suite_hash(suite, segment_col)`` (or
+        ``CheckpointRunResult.suite_hash``) to pin one run identity.
 
-    def merged_map_verdicts(self, shash_or_suite: Any = None) -> DataFrame:
-        """Suite-level merged counters per expectation_type from the EVR
-        store — counts add across partitions (SURVEY.md §4.2 item 5).
-        Only manifest-committed rows participate (``_committed_rows``);
-        passing the suite (or its hash) additionally pins the commit
-        lookup to that suite's manifest rows."""
+        Exactness caveat (inherent to per-partition validation, not to the
+        merge): map/aggregate counters add exactly; uniqueness and window
+        (increasing/decreasing) counters add exactly ONLY when the
+        checkpoint's partition column does not split a key group — a
+        duplicate pair or a lag window straddling two partitions is counted
+        per partition."""
         if self.evr_path is None:
             raise ValueError("Checkpoint was created without evr_path")
         evrs = self._committed_rows(
             self.spark.read.schema(EVR_ROW_SCHEMA).parquet(self.evr_path),
-            shash=self._resolve_shash(shash_or_suite),
+            shash=suite_hash,
         )
         return (
-            evrs.groupBy("expectation_type")
+            evrs.groupBy(*MERGE_KEYS, "expectation_type")
             .agg(
                 F.sum("element_count").alias("element_count"),
                 F.sum("missing_count").alias("missing_count"),
@@ -713,77 +549,5 @@ class Checkpoint:
                     "all_partitions_success"
                 ),
             )
-            .orderBy("expectation_type")
-        )
-
-    def merged_segment_verdicts(
-        self, shash_or_suite: Any = None, segment_col: str | None = None
-    ) -> DataFrame:
-        """Per-(segment × expectation_type) merged counters from a
-        segmented-mode EVR store: counts add across partitions, so a
-        resumed multi-partition run re-derives the same per-segment
-        suite-level numbers a single whole-table ``validate_by_group``
-        produces (tests assert the equivalence).
-
-        Exactness caveat (inherent to per-partition validation, not to
-        the merge): map/aggregate counters add exactly; uniqueness and
-        window (increasing/decreasing) counters add exactly ONLY when the
-        checkpoint's partition column does not split a key group — a
-        duplicate pair or a lag window straddling two partitions is
-        counted per partition, which is the declared semantics of
-        partition-granularity validation everywhere in this engine.
-
-        Only manifest-committed rows participate (``_committed_rows``):
-        EVR rows orphaned by a kill between the EVR append and the
-        manifest append are superseded by the resumed run's committed
-        set, never double-counted.
-
-        Pinning the commit lookup to one segmented run's manifest rows
-        (optional): pass the SUITE plus ``segment_col`` — the salted hash
-        is derived here — or the ALREADY-SALTED hash string from
-        ``CheckpointRunResult.suite_hash`` alone. A suite without
-        ``segment_col`` raises (the segmented manifest only ever holds
-        salted hashes, so the unsalted hash would silently match nothing
-        and empty the view); a string is never re-salted (double-salting
-        would do the same)."""
-        if self.evr_path is None:
-            raise ValueError("Checkpoint was created without evr_path")
-        shash = self._resolve_shash(shash_or_suite)
-        if shash is None and segment_col is not None:
-            raise ValueError(
-                "segment_col= without the suite pins nothing — pass "
-                "merged_segment_verdicts(suite, segment_col=...) or the "
-                "already-salted CheckpointRunResult.suite_hash"
-            )
-        if shash is not None and not isinstance(shash_or_suite, str):
-            if segment_col is None:
-                raise ValueError(
-                    "merged_segment_verdicts(suite) needs segment_col= to "
-                    "derive the segment-salted manifest hash — or pass "
-                    "CheckpointRunResult.suite_hash (already salted) "
-                    "instead of the suite"
-                )
-            shash = salted_suite_hash(shash, segment_col)
-        elif isinstance(shash_or_suite, str) and segment_col is not None:
-            raise ValueError(
-                "pass EITHER the already-salted hash string OR the suite "
-                "plus segment_col — a string is never re-salted"
-            )
-        evrs = self._committed_rows(
-            self.spark.read.schema(SEGMENT_EVR_ROW_SCHEMA).parquet(
-                self.evr_path
-            ),
-            shash=shash,
-        )
-        return (
-            evrs.groupBy("segment", "expectation_type")
-            .agg(
-                F.sum("element_count").alias("element_count"),
-                F.sum("missing_count").alias("missing_count"),
-                F.sum("unexpected_count").alias("unexpected_count"),
-                F.min(F.col("success").cast("int")).cast("boolean").alias(
-                    "all_partitions_success"
-                ),
-            )
-            .orderBy("segment", "expectation_type")
+            .orderBy(*MERGE_KEYS)
         )

@@ -209,13 +209,22 @@ def build_data_docs(
     for r in evrs:
         by_part.setdefault((r["run_id"], r["partition_id"]), []).append(r)
 
+    def segment_cell(r) -> str:
+        label = (f"{r['segment_col']}={r['segment']}" if r["segment_col"]
+                 else "whole suite")
+        return f"<td><code>{html.escape(label)}</code></td>"
+
     index_rows = []
     for (run_id, pid), rows in sorted(by_part.items()):
         ok = all(r["success"] for r in rows)
         fname = f"run_{_safe(run_id)}__part_{_safe(pid)}.html"
+        # a segmented run's page names each row's segment; a whole-partition
+        # page keeps its plain per-expectation table
+        segmented = any(r["segment_col"] for r in rows)
         trs = "".join(
             f"<tr><td class='{'pass' if r['success'] else 'fail'}'>"
             f"{'PASS' if r['success'] else 'FAIL'}</td>"
+            + (segment_cell(r) if segmented else "") +
             f"<td><code>{html.escape(str(r['expectation_type']))}</code></td>"
             f"<td>{r['element_count']}</td><td>{r['unexpected_count']}</td>"
             f"<td><code>{html.escape(str(r['observed_value'])[:120])}</code></td></tr>"
@@ -225,7 +234,9 @@ def build_data_docs(
             f"<h1>run <code>{html.escape(run_id)}</code> · partition "
             f"<code>{html.escape(pid)}</code></h1>"
             "<p><a href='index.html'>← index</a></p>"
-            "<table><tr><th>status</th><th>expectation_type</th>"
+            "<table><tr><th>status</th>"
+            + ("<th>segment</th>" if segmented else "") +
+            "<th>expectation_type</th>"
             "<th>element_count</th><th>unexpected</th><th>observed</th></tr>"
             f"{trs}</table>"
         )

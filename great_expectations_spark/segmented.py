@@ -73,9 +73,9 @@ from great_expectations_spark.suite import (
 )
 
 RESULT_SCHEMA = (
-    "group string, expectation_type string, success boolean, "
-    "element_count long, missing_count long, unexpected_count long, "
-    "observed_value string"
+    "group string, expectation_id string, expectation_type string, "
+    "success boolean, element_count long, missing_count long, "
+    "unexpected_count long, observed_value string"
 )
 
 
@@ -116,8 +116,9 @@ def validate_by_group(
     violations_path: str | None = None,
     unexpected_index_column_names: list[str] | None = None,
 ) -> DataFrame:
-    """Per-segment EVR rows ``(group, expectation_type, success,
-    element_count, missing_count, unexpected_count, observed_value)``.
+    """Per-segment EVR rows ``(group, expectation_id, expectation_type,
+    success, element_count, missing_count, unexpected_count,
+    observed_value)``; ``expectation_id`` is the suite config's ``id``.
 
     NULL segment values validate as their own group (the ``group``
     column of the result is genuinely NULL for them — no string
@@ -125,7 +126,8 @@ def validate_by_group(
     stays a separate segment)."""
     return df.sparkSession.createDataFrame(
         _validate_rows(
-            df, suite, group_by, strict=strict, max_groups=max_groups,
+            df, [(cfg.id, cfg) for cfg in suite], group_by, strict=strict,
+            max_groups=max_groups,
             violations_path=violations_path,
             unexpected_index_column_names=unexpected_index_column_names,
         ),
@@ -135,24 +137,27 @@ def validate_by_group(
 
 def _validate_rows(
     df: DataFrame,
-    suite: ExpectationSuite,
+    expectations: list[tuple[str, ExpectationConfiguration]],
     group_by: str,
     strict: bool,
     max_groups: int,
     violations_path: str | None,
     unexpected_index_column_names: list[str] | None,
 ) -> list[tuple]:
-    """validate_by_group's engine, returning the driver-local counter rows
-    directly — the rc sub-pass recurses HERE so a sub-suite's rows fold in
-    without a needless createDataFrame + collect round-trip per distinct
-    row_condition."""
+    """validate_by_group's engine over ``(expectation_id, config)`` pairs,
+    returning the driver-local counter rows directly — the rc sub-pass
+    recurses HERE so its rows fold in without a needless createDataFrame +
+    collect round-trip per distinct row_condition. Every row carries the
+    id it was given, so configs rebuilt below (rc stripped, windows
+    re-keyed) still report the caller's expectation id."""
     maps: list[tuple[int, CompiledMap, str | None]] = []
     dep_maps: list[tuple[int, CompiledMap]] = []
     aggs: list[tuple[int, CompiledAgg]] = []
     vc_aggs: list[tuple[int, CompiledAgg, str]] = []
-    uniqs: list[CompiledUnique] = []
+    uniqs: list[tuple[int, CompiledUnique]] = []
     win_maps: list[tuple[int, Any, CompiledMap, str | None]] = []
-    rc_deferred: dict[str, list[Any]] = {}
+    rc_deferred: dict[str, list[tuple[str, ExpectationConfiguration]]] = {}
+    ids = [eid for eid, _cfg in expectations]
 
     def _reject(cfg, why: str) -> None:
         if strict:
@@ -161,7 +166,7 @@ def _validate_rows(
                 "run it via SuiteRunner or pass strict=False to skip"
             )
 
-    for i, cfg in enumerate(suite.expectations):
+    for i, (eid, cfg) in enumerate(expectations):
         comp = compile_expectation(cfg)
         rc = cfg.kwargs.get("row_condition")
         if isinstance(comp, CompiledMap) and comp.condition.needs_window:
@@ -174,7 +179,7 @@ def _validate_rows(
                 _reject(cfg, "its two-wave condition has no column-deps "
                              "form (rebuild_expr)")
             elif rc is not None:
-                rc_deferred.setdefault(rc, []).append(cfg)
+                rc_deferred.setdefault(rc, []).append((eid, cfg))
             else:
                 dep_maps.append((i, comp))
         elif isinstance(comp, CompiledMap):
@@ -182,7 +187,7 @@ def _validate_rows(
         elif isinstance(comp, CompiledAgg):
             vc_col = getattr(comp.metric, "groupby_value_counts", None)
             if rc is not None:
-                rc_deferred.setdefault(rc, []).append(cfg)
+                rc_deferred.setdefault(rc, []).append((eid, cfg))
             elif vc_col is not None:
                 vc_aggs.append((i, comp, vc_col))
             elif not comp.metric.exprs:
@@ -192,9 +197,9 @@ def _validate_rows(
                 aggs.append((i, comp))
         elif isinstance(comp, CompiledUnique):
             if rc is not None:
-                rc_deferred.setdefault(rc, []).append(cfg)
+                rc_deferred.setdefault(rc, []).append((eid, cfg))
             else:
-                uniqs.append(comp)
+                uniqs.append((i, comp))
         else:
             _reject(cfg, "relational/query/meta kinds need their own pass")
 
@@ -331,7 +336,7 @@ def _validate_rows(
                     missing, unexpected = int(row[f"m_{i}"]), int(row[f"u_{i}"])
                     ok = calc_map_success(ec_i, missing, unexpected, cm.mostly)
                     out.append((
-                        g, cm.cfg.expectation_type, bool(ok),
+                        g, ids[i], cm.cfg.expectation_type, bool(ok),
                         ec_i, missing, unexpected, None,
                     ))
                 for i, cm in dep_maps:
@@ -340,7 +345,7 @@ def _validate_rows(
                     unexpected = int(w2[f"u_{i}"]) if w2 is not None else 0
                     ok = calc_map_success(ec, missing, unexpected, cm.mostly)
                     out.append((
-                        g, cm.cfg.expectation_type, bool(ok),
+                        g, ids[i], cm.cfg.expectation_type, bool(ok),
                         ec, missing, unexpected, None,
                     ))
                 for i, ca in aggs:
@@ -350,7 +355,7 @@ def _validate_rows(
                     observed = ca.metric.finalize(values)
                     ok, _extra = ca.validate(observed)
                     out.append((
-                        g, ca.cfg.expectation_type, bool(ok),
+                        g, ids[i], ca.cfg.expectation_type, bool(ok),
                         ec, 0, 0,
                         # NULL observed (all-null segment) stays SQL NULL — the
                         # string 'None' would render as text in the docs page
@@ -404,12 +409,12 @@ def _validate_rows(
                     observed = by_g.get(g, [])
                     ok, _extra = ca.validate(observed)
                     out.append((
-                        g, ca.cfg.expectation_type, bool(ok),
+                        g, ids[i], ca.cfg.expectation_type, bool(ok),
                         ec, 0, 0, str(observed),
                     ))
 
         # ---- one keyed pass per uniqueness expectation -----------------------
-        for cu in uniqs:
+        for i, cu in uniqs:
             keys = [F.col(c) for c in cu.key_cols]
             # match SuiteRunner's compound domain: missing only when ALL key
             # columns are null (ignore_row_if=all_values_are_missing default);
@@ -445,7 +450,7 @@ def _validate_rows(
                 ux = int(row["__ux"] or 0)
                 ok = calc_map_success(ec, missing, ux, cu.mostly)
                 out.append((
-                    row["__g"], cu.cfg.expectation_type, bool(ok),
+                    row["__g"], ids[i], cu.cfg.expectation_type, bool(ok),
                     ec, missing, ux, None,
                 ))
             if violations_path:
@@ -507,7 +512,8 @@ def _validate_rows(
                         unexpected = int(row[f"u_{i}"] or 0)
                         ok = calc_map_success(ec, missing, unexpected, comp.mostly)
                         out.append((
-                            row["__g"], cfg.expectation_type, bool(ok),
+                            row["__g"], ids[i], cfg.expectation_type,
+                            bool(ok),
                             ec, missing, unexpected, None,
                         ))
                 if violations_path:
@@ -534,29 +540,25 @@ def _validate_rows(
     # aggregates / uniqueness / two-wave conditions run over the filtered
     # frame (SuiteRunner domain-group semantics), all segments at once —
     # k distinct conditions cost k+1 scans, never segments × conditions ----
-    for rc, cfgs in rc_deferred.items():
-        sub_suite = ExpectationSuite(
-            name=f"{suite.name}::rc",
-            expectations=[
-                ExpectationConfiguration(
+    for rc, pairs in rc_deferred.items():
+        # the sub-pass's counters are already driver-local — fold them in
+        # directly (no createDataFrame + collect round-trip per distinct
+        # row_condition); the output stays ONE DataFrame built by the
+        # public wrapper
+        out.extend(_validate_rows(
+            df.filter(F.expr(rc)),
+            [
+                (eid, ExpectationConfiguration(
                     expectation_type=c.expectation_type,
                     kwargs={
                         k: v for k, v in c.kwargs.items()
                         if k != "row_condition"
                     },
                     meta=c.meta,
-                )
-                for c in cfgs
+                ))
+                for eid, c in pairs
             ],
-            meta=suite.meta,
-        )
-        # the sub-pass's counters are already driver-local — fold them in
-        # directly (no createDataFrame + collect round-trip per distinct
-        # row_condition); the output stays ONE DataFrame built by the
-        # public wrapper
-        out.extend(_validate_rows(
-            df.filter(F.expr(rc)), sub_suite, group_by,
-            strict=strict, max_groups=max_groups,
+            group_by, strict=strict, max_groups=max_groups,
             violations_path=violations_path,
             unexpected_index_column_names=unexpected_index_column_names,
         ))

@@ -5,12 +5,12 @@ incremental scan) is validated micro-batch by micro-batch with the SAME
 planner + bundled-agg runner the batch path uses — ``foreachBatch`` hands us
 a plain DataFrame, so nothing is reimplemented. Each micro-batch appends:
 
-- EVR rows ``(run_id, partition_id=epoch-<n>, expectation_type, success,
-  counts, observed_value)`` to ``evr_path`` — the
-  ``checkpoint.EVR_ROW_SCHEMA`` shape, mergeable with batch-checkpoint
-  output; ``run_id`` is the caller-supplied name or a per-validator UUID
-  (Spark's query id is not known until ``start()``, after ``foreachBatch``
-  may already have fired);
+- EVR rows ``(run_id, partition_id=epoch-<n>, suite_hash, expectation_id,
+  expectation_type, success, counts, observed_value)`` to ``evr_path`` —
+  the ``checkpoint.EVR_ROW_SCHEMA`` shape (whole-suite rows, segment
+  columns NULL), mergeable with batch-checkpoint output; ``run_id`` is the
+  caller-supplied name or a per-validator UUID (Spark's query id is not
+  known until ``start()``, after ``foreachBatch`` may already have fired);
 - optional violation rows via the runner's violations sink.
 
 Exactly-once bookkeeping rides on Spark's own streaming checkpoint
@@ -30,12 +30,15 @@ mergeability).
 
 from __future__ import annotations
 
-import json
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame, functions as F
 
-from great_expectations_spark.checkpoint import EVR_ROW_SCHEMA
+from great_expectations_spark.checkpoint import (
+    EVR_ROW_SCHEMA,
+    suite_hash,
+    suite_result_rows,
+)
 from great_expectations_spark.result import ExpectationSuiteValidationResult
 from great_expectations_spark.runner import SuiteRunner
 from great_expectations_spark.suite import ExpectationSuite
@@ -105,24 +108,11 @@ class StreamingValidator:
         self._check_layout(spark)
         runner = SuiteRunner(spark, **self.runner_kwargs)
         result = runner.validate(batch_df, self.suite)
-        rows = []
-        for r in result.results:
-            res = r.result or {}
-            rows.append(
-                {
-                    "run_id": self.run_id,
-                    "partition_id": f"epoch={epoch_id}",
-                    "expectation_type": r.expectation_config.get("expectation_type"),
-                    "expectation_id": r.expectation_config.get("id"),
-                    "success": bool(r.success),
-                    "element_count": int(res.get("element_count") or 0),
-                    "missing_count": int(res.get("missing_count") or 0),
-                    "unexpected_count": int(res.get("unexpected_count") or 0),
-                    "observed_value": json.dumps(
-                        res.get("observed_value"), default=str
-                    ),
-                }
-            )
+        shash = suite_hash(self.suite)
+        rows = [
+            (self.run_id, f"epoch={epoch_id}", shash, None, *row)
+            for row in suite_result_rows(self.suite, result)
+        ]
         # dynamic partition overwrite of THIS query's THIS epoch's directory
         # only (run_id=…/epoch=…) → idempotent under foreachBatch replay and
         # clobber-free across queries sharing one evr_path

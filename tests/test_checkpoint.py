@@ -93,7 +93,8 @@ def test_merged_verdicts_equal_whole_table_counts(spark, tmp_path, suite, tdf):
                     evr_path=str(tmp_path / "evrs"))
     ck.run(tdf, suite, run_id="r1", partition_col="day")
     merged = {
-        r["expectation_type"]: r for r in ck.merged_map_verdicts(suite).collect()
+        r["expectation_type"]: r
+        for r in ck.merged_map_verdicts(suite_hash(suite)).collect()
     }
     nn = merged["expect_column_values_to_not_be_null"]
     assert nn["element_count"] == 30
@@ -203,8 +204,30 @@ def test_resumed_run_reports_failed_skipped_partitions(spark, tmp_path, tdf):
 
     resumed = ck.run(tdf, failing, run_id="r2", partition_col="day")
     assert len(resumed.skipped) == 3
-    assert all(r.manifest_success is False for r in resumed.skipped)
+    assert all(r.success is False for r in resumed.skipped)
     assert resumed.success is False
+
+
+def test_checkpoint_suite_hash_is_the_suite_hash(suite):
+    """One suite-hash definition: a whole-partition run is keyed by the
+    suite's own hash; a segmented run's key derives from it and differs."""
+    assert suite_hash(suite) == suite.suite_hash
+    assert suite_hash(suite, "role") != suite.suite_hash
+    assert suite_hash(suite, "role") != suite_hash(suite, "day")
+
+
+def test_refuses_evr_store_without_suite_hash(spark, tmp_path, suite, tdf):
+    """A store written before EVR rows carried their suite hash cannot be
+    keyed by the merge view — refused, naming the path."""
+    old = str(tmp_path / "old_evrs")
+    spark.createDataFrame(
+        [("r0", "2025-01-01", "expect_column_values_to_not_be_null", True)],
+        "run_id string, partition_id string, expectation_type string, "
+        "success boolean",
+    ).write.parquet(old)
+    ck = Checkpoint(spark, manifest_path=str(tmp_path / "m"), evr_path=old)
+    with pytest.raises(ValueError, match="old_evrs"):
+        ck.run(tdf, suite, run_id="r1", partition_col="day")
 
 
 # ---------------------------------------------------------------- segmented
@@ -216,6 +239,10 @@ def seg_suite():
     s.add("expect_column_values_to_not_be_null", column="text", mostly=0.5)
     s.add("expect_column_values_to_be_unique", column="conv_id")
     return s
+
+
+def _by_segment_and_id(rows, segment_key):
+    return {(r[segment_key], r["expectation_id"]): r for r in rows}
 
 
 def test_segmented_checkpoint_kill_resume_equals_single_run(
@@ -238,17 +265,14 @@ def test_segmented_checkpoint_kill_resume_equals_single_run(
     assert [r.partition_id for r in r2.validated] == ["2025-01-03"]
     assert all(r.segments == 1 for r in r2.validated)  # one role value
 
-    merged = {
-        (r["segment"], r["expectation_type"]): r
-        for r in ck.merged_segment_verdicts().collect()
-    }
-    single = {
-        (r["group"], r["expectation_type"]): r
-        for r in validate_by_group(tdf, seg_suite, "role").collect()
-    }
+    merged = _by_segment_and_id(ck.merged_map_verdicts().collect(), "segment")
+    single = _by_segment_and_id(
+        validate_by_group(tdf, seg_suite, "role").collect(), "group"
+    )
     assert set(merged) == set(single)
     for k, m in merged.items():
         s = single[k]
+        assert m["segment_col"] == "role", k
         assert m["element_count"] == s["element_count"], k
         assert m["missing_count"] == s["missing_count"], k
         # conv_id repeats across days WITHIN a partition only (ids embed
@@ -258,9 +282,9 @@ def test_segmented_checkpoint_kill_resume_equals_single_run(
 
 def test_segmented_and_whole_runs_never_cross_skip(spark, tmp_path, suite,
                                                    tdf):
-    """The suite hash is salted with the segment column: a finished
-    whole-partition run must NOT mark the segmented run's partitions done
-    (and vice versa)."""
+    """The segmented run identity derives from the suite hash AND the
+    segment column: a finished whole-partition run must NOT mark the
+    segmented run's partitions done (and vice versa)."""
     ck = Checkpoint(spark, manifest_path=str(tmp_path / "m"))
     ck.run(tdf, suite, run_id="r1", partition_col="day")
     r2 = ck.run(tdf, suite, run_id="r2", partition_col="day",
@@ -268,16 +292,78 @@ def test_segmented_and_whole_runs_never_cross_skip(spark, tmp_path, suite,
     assert len(r2.validated) == 3 and not r2.skipped
 
 
+def _legacy_evr_store(spark, path, segmented):
+    """An EVR store in the row shape written before rows carried their
+    suite hash: whole-partition rows, or segmented rows with a ``segment``
+    column."""
+    cols = ["run_id string", "partition_id string"]
+    row = ["r0", "2025-01-01"]
+    if segmented:
+        cols.append("segment string")
+        row.append("user")
+    cols += ["expectation_type string", "success boolean",
+             "element_count long"]
+    row += ["expect_column_values_to_not_be_null", True, 10]
+    spark.createDataFrame([tuple(row)], ", ".join(cols)).write.parquet(path)
+
+
 def test_segmented_refuses_whole_partition_evr_store(spark, tmp_path, suite,
                                                      tdf):
-    """Appending segmented rows (extra `segment` column) into a
-    whole-partition EVR store would null-fill on read — must raise."""
+    """A segmented run appending into a whole-partition EVR store of the
+    earlier row shape would null-fill its suite hash and segment on read
+    — must raise, naming the path."""
+    old = str(tmp_path / "whole_evrs")
+    _legacy_evr_store(spark, old, segmented=False)
+    ck = Checkpoint(spark, manifest_path=str(tmp_path / "m"), evr_path=old)
+    with pytest.raises(ValueError, match="whole_evrs.*segment"):
+        ck.run(tdf, suite, run_id="r1", partition_col="day",
+               segment_col="role")
+
+
+def test_whole_run_refuses_segmented_evr_store(spark, tmp_path, suite, tdf):
+    """The other direction: a whole-partition run into a segmented EVR
+    store of the earlier row shape is refused too — its rows would carry
+    no suite hash to keep them apart from the segmented ones."""
+    old = str(tmp_path / "seg_evrs")
+    _legacy_evr_store(spark, old, segmented=True)
+    ck = Checkpoint(spark, manifest_path=str(tmp_path / "m"), evr_path=old)
+    with pytest.raises(ValueError, match="seg_evrs.*segment"):
+        ck.run(tdf, suite, run_id="r1", partition_col="day")
+
+
+def test_whole_and_segmented_runs_share_one_evr_store(spark, tmp_path,
+                                                      seg_suite, tdf):
+    """Every EVR row carries its suite hash and segment column, so both
+    modes of one suite may share one manifest and one EVR store: neither
+    skips the other's partitions, whole-suite rows never merge into a
+    segment (a genuine NULL segment included), and each pinned merge
+    returns only its own rows."""
     ck = Checkpoint(spark, manifest_path=str(tmp_path / "m"),
                     evr_path=str(tmp_path / "evr"))
-    ck.run(tdf, suite, run_id="r1", partition_col="day")
-    with pytest.raises(ValueError, match="segment"):
-        ck.run(tdf, suite, run_id="r2", partition_col="day",
-               segment_col="role")
+    whole = ck.run(tdf, seg_suite, run_id="r-whole", partition_col="day")
+    # NULL role in one partition: a genuine NULL segment
+    seg_df = tdf.withColumn(
+        "role",
+        F.when(F.col("day") == "2025-01-02", F.lit(None)).otherwise("user"),
+    )
+    seg = ck.run(seg_df, seg_suite, run_id="r-seg", partition_col="day",
+                 segment_col="role")
+    assert len(seg.validated) == 3 and not seg.skipped
+    again = ck.run(tdf, seg_suite, run_id="r-whole2", partition_col="day")
+    assert len(again.skipped) == 3 and not again.validated
+    assert whole.suite_hash == suite_hash(seg_suite)
+    assert seg.suite_hash == suite_hash(seg_suite, "role")
+
+    whole_rows = ck.merged_map_verdicts(whole.suite_hash).collect()
+    assert len(whole_rows) == 2
+    assert all(r["segment_col"] is None and r["element_count"] == 30
+               for r in whole_rows)
+    seg_rows = ck.merged_map_verdicts(seg.suite_hash).collect()
+    assert {(r["segment"], r["element_count"]) for r in seg_rows} == {
+        ("user", 20), (None, 10)
+    }
+    assert all(r["segment_col"] == "role" for r in seg_rows)
+    assert len(ck.merged_map_verdicts().collect()) == 6
 
 
 def test_segmented_checkpoint_failure_verdict(spark, tmp_path, tdf):
@@ -290,23 +376,9 @@ def test_segmented_checkpoint_failure_verdict(spark, tmp_path, tdf):
                     evr_path=str(tmp_path / "evr"))
     r1 = ck.run(tdf, s, run_id="r1", partition_col="day", segment_col="role")
     assert not r1.success
-    assert all(r.segmented_success is False for r in r1.validated)
+    assert all(r.success is False for r in r1.validated)
     r2 = ck.run(tdf, s, run_id="r2", partition_col="day", segment_col="role")
     assert len(r2.skipped) == 3 and not r2.success
-
-
-def test_whole_run_refuses_segmented_evr_store(spark, tmp_path, seg_suite,
-                                               suite, tdf):
-    """The shape guard is symmetric (round-5 review fix): a whole-partition
-    run into an existing SEGMENTED store is refused — its rows would
-    null-fill `segment` on read and merge into the genuinely-NULL segment
-    group, silently inflating those counters."""
-    ck = Checkpoint(spark, manifest_path=str(tmp_path / "m"),
-                    evr_path=str(tmp_path / "evr"))
-    ck.run(tdf, seg_suite, run_id="r1", partition_col="day",
-           segment_col="role")
-    with pytest.raises(ValueError, match="segmented EVR rows"):
-        ck.run(tdf, suite, run_id="r2", partition_col="day")
 
 
 def test_merged_segment_verdicts_ignore_orphan_evrs(spark, tmp_path,
@@ -316,6 +388,7 @@ def test_merged_segment_verdicts_ignore_orphan_evrs(spark, tmp_path,
     second full set. The merge must count ONLY manifest-committed rows
     (round-5 review fix), or every counter of that partition doubles."""
     from great_expectations_spark import validate_by_group
+    from great_expectations_spark.segmented import _validate_rows
 
     ck = Checkpoint(spark, manifest_path=str(tmp_path / "m"),
                     evr_path=str(tmp_path / "evr"))
@@ -324,19 +397,19 @@ def test_merged_segment_verdicts_ignore_orphan_evrs(spark, tmp_path,
     assert r1.success is not None
 
     # simulate the torn write: EVR rows committed, manifest row lost
-    orphan_rows = validate_by_group(
-        tdf.filter(F.col("day") == "2025-01-02"), seg_suite, "role"
-    ).collect()
-    ck._append_segment_evrs("r-orphan", "2025-01-02", orphan_rows)
+    orphan_rows = _validate_rows(
+        tdf.filter(F.col("day") == "2025-01-02"),
+        [(c.id, c) for c in seg_suite], "role", strict=True,
+        max_groups=100, violations_path=None,
+        unexpected_index_column_names=None,
+    )
+    ck._append_evrs([("r-orphan", "2025-01-02", r1.suite_hash, "role", *r)
+                     for r in orphan_rows])
 
-    merged = {
-        (r["segment"], r["expectation_type"]): r
-        for r in ck.merged_segment_verdicts().collect()
-    }
-    single = {
-        (r["group"], r["expectation_type"]): r
-        for r in validate_by_group(tdf, seg_suite, "role").collect()
-    }
+    merged = _by_segment_and_id(ck.merged_map_verdicts().collect(), "segment")
+    single = _by_segment_and_id(
+        validate_by_group(tdf, seg_suite, "role").collect(), "group"
+    )
     assert set(merged) == set(single)
     for k, m in merged.items():
         assert m["element_count"] == single[k]["element_count"], k
@@ -345,8 +418,7 @@ def test_merged_segment_verdicts_ignore_orphan_evrs(spark, tmp_path,
 
 def test_shared_manifest_does_not_wipe_merge_views(spark, tmp_path,
                                                    seg_suite, tdf):
-    """The manifest is deliberately shareable across modes (segment-salted
-    suite hashes prevent cross-skip), each mode with its OWN EVR store.
+    """A manifest may be shared by several EVR stores (one per mode here).
     The commit lookup must pick the latest validated run AMONG THE RUNS
     PRESENT IN EACH STORE — picking the manifest-wide latest would name
     the other store's run_id and semi-join a store down to nothing
@@ -360,12 +432,37 @@ def test_shared_manifest_does_not_wipe_merge_views(spark, tmp_path,
     ck_seg.run(tdf, seg_suite, run_id="r-seg", partition_col="day",
                segment_col="role")
 
-    whole = ck_whole.merged_map_verdicts(seg_suite).collect()
+    whole = ck_whole.merged_map_verdicts(suite_hash(seg_suite)).collect()
     assert len(whole) == 2                      # both expectations survive
     assert all(r["element_count"] == 30 for r in whole)
-    seg = ck_seg.merged_segment_verdicts().collect()
+    seg = ck_seg.merged_map_verdicts().collect()
     assert len(seg) == 2                        # one role value x 2 checks
     assert all(r["element_count"] == 30 for r in seg)
+
+
+def test_unpinned_merge_keeps_every_suite(spark, tmp_path, suite, seg_suite,
+                                          tdf):
+    """Two suites share one manifest and one EVR store and validate the
+    same partitions. The commit lookup picks the latest run per (suite
+    hash, partition), so the later suite never hides the earlier one's
+    rows; each pinned merge reports only its own suite."""
+    ck = Checkpoint(spark, manifest_path=str(tmp_path / "m"),
+                    evr_path=str(tmp_path / "evr"))
+    first = ck.run(tdf, suite, run_id="r-a", partition_col="day")
+    second = ck.run(tdf, seg_suite, run_id="r-b", partition_col="day")
+    ids = {
+        first.suite_hash: {c.id for c in suite},
+        second.suite_hash: {c.id for c in seg_suite},
+    }
+    rows = ck.merged_map_verdicts().collect()
+    assert {(r["suite_hash"], r["expectation_id"]) for r in rows} == {
+        (h, i) for h, eids in ids.items() for i in eids
+    }
+    assert all(r["element_count"] == 30 for r in rows)
+    for h, eids in ids.items():
+        pinned = ck.merged_map_verdicts(h).collect()
+        assert {r["expectation_id"] for r in pinned} == eids
+        assert {r["suite_hash"] for r in pinned} == {h}
 
 
 def test_empty_partition_segmented_honors_row_count_guard(spark, tmp_path,
@@ -373,9 +470,9 @@ def test_empty_partition_segmented_honors_row_count_guard(spark, tmp_path,
     """An empty partition yields zero segments; the WHOLE suite must still
     evaluate against the empty frame (whole-partition parity: map kinds
     succeed vacuously, a row-count floor FAILS instead of the partition
-    being vacuously marked passed), recorded with real counters under the
-    reserved "__empty_partition__" segment — never NULL, which is a
-    legitimate segment value other partitions may genuinely hold."""
+    being vacuously marked passed), recorded as whole-suite rows
+    (segment_col NULL) under the segmented run's suite hash — so they never
+    merge into a genuine NULL segment other partitions may hold."""
     s = ExpectationSuite("empty-guard")
     s.add("expect_column_values_to_not_be_null", column="text", mostly=0.5)
     s.add("expect_table_row_count_to_be_between", min_value=1)
@@ -385,59 +482,174 @@ def test_empty_partition_segmented_honors_row_count_guard(spark, tmp_path,
                  partition_values=["2025-01-01", "2099-12-31"],
                  segment_col="role")
     by_pid = {r.partition_id: r for r in res.records}
-    assert by_pid["2025-01-01"].segmented_success is True
+    assert by_pid["2025-01-01"].success is True
     ghost = by_pid["2099-12-31"]
     assert ghost.segments == 0
-    assert ghost.segmented_success is False     # row-count floor fired
+    assert ghost.success is False               # row-count floor fired
     assert res.success is False
-    # every verdict visible in the store under the reserved segment, with
-    # the runner's real observed value explaining the failure
+    # every verdict visible in the store as a whole-suite row, with the
+    # runner's real observed value explaining the failure
     rows = {r["expectation_type"]: r for r in spark.read.parquet(
         str(tmp_path / "evr")).filter(
         F.col("partition_id") == "2099-12-31").collect()}
     assert len(rows) == 2
-    assert all(r["segment"] == "__empty_partition__" for r in rows.values())
+    for r in rows.values():
+        assert r["suite_hash"] == res.suite_hash == suite_hash(s, "role")
+        assert r["segment_col"] is None and r["segment"] is None
     rc = rows["expect_table_row_count_to_be_between"]
     assert rc["success"] is False and rc["observed_value"] == "0"
     assert rows["expect_column_values_to_not_be_null"]["success"] is True
+    # the merge keeps them apart from the partition's genuine segment rows
+    merged = ck.merged_map_verdicts(res.suite_hash).collect()
+    assert {(r["segment_col"], r["segment"]) for r in merged} == {
+        (None, None), ("role", "user")
+    }
+    whole_suite = {r["expectation_type"]: r for r in merged
+                   if r["segment_col"] is None}
+    assert whole_suite["expect_table_row_count_to_be_between"][
+        "all_partitions_success"] is False
 
 
-def test_merged_segment_verdicts_salting_semantics(spark, tmp_path,
-                                                   seg_suite, tdf):
-    """Pinning the segmented merge to one suite: suite + segment_col works
-    (hash salted once, here); the already-salted string works alone; a
-    suite WITHOUT segment_col raises (unsalted hash would silently match
-    nothing), and string + segment_col raises (never re-salt)."""
+def test_merged_view_pins_one_run_identity(spark, tmp_path, seg_suite, tdf):
+    """Pinning the merge view to one segmented run: the run's suite hash
+    and ``suite_hash(suite, segment_col)`` are the same string and pin the
+    same rows; the whole-partition hash of the suite pins none of them."""
     ck = Checkpoint(spark, manifest_path=str(tmp_path / "m"),
                     evr_path=str(tmp_path / "evr"))
     res = ck.run(tdf, seg_suite, run_id="r1", partition_col="day",
                  segment_col="role")
-    n = len(ck.merged_segment_verdicts().collect())
-    assert n > 0
-    assert len(ck.merged_segment_verdicts(
-        seg_suite, segment_col="role").collect()) == n
-    assert len(ck.merged_segment_verdicts(res.suite_hash).collect()) == n
-    with pytest.raises(ValueError, match="segment_col"):
-        ck.merged_segment_verdicts(seg_suite)
-    with pytest.raises(ValueError, match="never re-salted"):
-        ck.merged_segment_verdicts(res.suite_hash, segment_col="role")
-    with pytest.raises(ValueError, match="pins nothing"):
-        ck.merged_segment_verdicts(segment_col="role")
+    assert res.suite_hash == suite_hash(seg_suite, "role")
+    n = len(ck.merged_map_verdicts().collect())
+    assert n == 2
+    assert len(ck.merged_map_verdicts(res.suite_hash).collect()) == n
+    assert ck.merged_map_verdicts(suite_hash(seg_suite)).collect() == []
 
 
-def test_reserved_empty_partition_segment_value_refused(spark, tmp_path,
-                                                        seg_suite):
-    """A genuine segment named '__empty_partition__' would merge with
-    synthesized empty-partition verdict rows — refused loudly."""
+def test_empty_partition_named_segment_validates_like_any_value(
+    spark, tmp_path, seg_suite
+):
+    """No segment value is reserved: a genuine '__empty_partition__' value
+    validates and merges like any other segment."""
     df = spark.createDataFrame(
-        [("c1", 0, "__empty_partition__", "hello", "d1")],
+        [("c1", 0, "__empty_partition__", "hello", "d1"),
+         ("c2", 1, "__empty_partition__", None, "d2")],
         "conv_id string, turn_idx int, role string, text string, day string",
     )
     ck = Checkpoint(spark, manifest_path=str(tmp_path / "m"),
                     evr_path=str(tmp_path / "evr"))
-    with pytest.raises(ValueError, match="reserved"):
-        ck.run(df, seg_suite, run_id="r1", partition_col="day",
-               segment_col="role")
+    res = ck.run(df, seg_suite, run_id="r1", partition_col="day",
+                 segment_col="role")
+    assert [r.segments for r in res.validated] == [1, 1]
+    merged = ck.merged_map_verdicts(res.suite_hash).collect()
+    assert {(r["segment_col"], r["segment"]) for r in merged} == {
+        ("role", "__empty_partition__")
+    }
+    assert all(r["element_count"] == 2 for r in merged)
+
+
+@pytest.fixture()
+def two_part_df(spark):
+    """40 rows over 2 partitions of 20: ``a`` holds 10 nulls, ``b`` none;
+    the (c, p) key repeats only within a partition; ``one`` is constant."""
+    rows = [(i // 20, None if i < 10 else i, i, i % 15, "all")
+            for i in range(40)]
+    return spark.createDataFrame(
+        rows, "p long, a long, b long, c long, one string"
+    )
+
+
+def test_same_type_expectations_merge_apart_in_both_modes(spark, tmp_path,
+                                                          two_part_df):
+    """Two not_null expectations must stay two merged rows in both modes —
+    a merge keyed by expectation type would fold b's clean verdict into
+    a's failing one."""
+    s = ExpectationSuite("two-not-null")
+    s.add("expect_column_values_to_not_be_null", column="a")
+    s.add("expect_column_values_to_not_be_null", column="b")
+    for segment_col in (None, "one"):
+        ck = Checkpoint(spark, manifest_path=str(tmp_path / "m"),
+                        evr_path=str(tmp_path / "evr"))
+        res = ck.run(two_part_df, s, run_id="r", partition_col="p",
+                     segment_col=segment_col)
+        got = sorted(
+            (r["element_count"], r["missing_count"], r["unexpected_count"],
+             r["all_partitions_success"])
+            for r in ck.merged_map_verdicts(res.suite_hash).collect()
+        )
+        assert got == [(40, 0, 0, True), (40, 0, 10, False)], segment_col
+
+
+def test_whole_table_one_segment_and_merged_partitions_agree(
+    spark, tmp_path, two_part_df
+):
+    """whole table ≡ one segment ≡ merged partitions, per expectation id:
+    SuiteRunner over the table, validate_by_group over a constant segment
+    column, and the merge views of a whole-partition and of a segmented
+    checkpoint give the same counters (the partitions split no key group).
+    An aggregate has no row counters in a SuiteRunner result, while the
+    segmented executor reports its segment's row count — so its
+    element_count is compared within each executor only."""
+    from great_expectations_spark import SuiteRunner, validate_by_group
+
+    s = ExpectationSuite("three-way")
+    s.add("expect_column_values_to_not_be_null", column="a")
+    s.add("expect_column_values_to_not_be_null", column="b")
+    s.add("expect_compound_columns_to_be_unique", column_list=["c", "p"])
+    agg = s.add("expect_column_mean_to_be_between", column="b",
+                min_value=0, max_value=100)
+
+    def counters(rows, key="expectation_id"):
+        return {r[key]: (r["element_count"], r["missing_count"],
+                         r["unexpected_count"]) for r in rows}
+
+    runner = {}
+    result = SuiteRunner(spark).validate(two_part_df, s)
+    for cfg, r in zip(s, result.results):
+        res = r.result or {}
+        runner[cfg.id] = tuple(int(res.get(k) or 0) for k in (
+            "element_count", "missing_count", "unexpected_count"))
+    one_segment = counters(
+        validate_by_group(two_part_df, s, "one").collect())
+    merged = {}
+    for segment_col in (None, "one"):
+        ck = Checkpoint(spark, manifest_path=str(tmp_path / "m"),
+                        evr_path=str(tmp_path / "evr"))
+        res = ck.run(two_part_df, s, run_id="r", partition_col="p",
+                     segment_col=segment_col)
+        merged[segment_col] = counters(
+            ck.merged_map_verdicts(res.suite_hash).collect())
+
+    assert set(runner) == set(one_segment) == set(merged[None]) \
+        == set(merged["one"]) == {c.id for c in s}
+    assert runner == merged[None]
+    assert one_segment == merged["one"]
+    for eid in runner:
+        if eid != agg.id:
+            assert runner[eid] == one_segment[eid], eid
+    assert runner[agg.id] == (0, 0, 0)
+    assert one_segment[agg.id] == (40, 0, 0)
+    assert runner[s.expectations[0].id] == (40, 0, 10)
+    assert runner[s.expectations[2].id] == (40, 0, 20)
+
+
+def test_store_rows_carry_user_expectation_ids(spark, tmp_path, tdf):
+    """The runner re-keys an increasing check's window from the index
+    columns (a rebuilt config with a different id); the segmented executor
+    strips row_condition for its sub-pass. Both modes still store the
+    user suite's ids."""
+    s = ExpectationSuite("ids")
+    s.add("expect_column_values_to_be_increasing", column="turn_idx")
+    s.add("expect_column_mean_to_be_between", column="turn_idx",
+          min_value=0, max_value=100, row_condition="turn_idx > 2")
+    ck = Checkpoint(spark, manifest_path=str(tmp_path / "m"),
+                    evr_path=str(tmp_path / "evr"),
+                    unexpected_index_column_names=["conv_id"])
+    for segment_col in (None, "role"):
+        res = ck.run(tdf, s, run_id="r", partition_col="day",
+                     segment_col=segment_col)
+        rows = ck.merged_map_verdicts(res.suite_hash).collect()
+        assert sorted(r["expectation_id"] for r in rows) == sorted(
+            c.id for c in s), segment_col
 
 
 def test_contiguous_concurrent_partitions_pair_correct_stats(spark,

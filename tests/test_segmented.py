@@ -286,6 +286,11 @@ def test_rc_aggregate_and_unique_sub_pass(spark):
     }
     mean_a = seg[("a", "expect_column_mean_to_be_between")]
     assert mean_a["success"] and mean_a["element_count"] == 2
+    # the sub-pass strips row_condition from its configs, yet every row
+    # keeps the user suite's expectation id
+    for (_g, kind), r in seg.items():
+        cfg = next(c for c in suite if c.expectation_type == kind)
+        assert r["expectation_id"] == cfg.id
     uq_b = seg[("b", "expect_column_values_to_be_unique")]
     assert not uq_b["success"] and uq_b["unexpected_count"] == 2
     # segment c never enters the rc domain → no rows for either check

@@ -61,7 +61,7 @@ def build_suite():
 
 
 def main() -> int:
-    from great_expectations_spark.checkpoint import Checkpoint
+    from great_expectations_spark.checkpoint import Checkpoint, suite_hash
     from great_expectations_spark.schema import generate_transcripts
     from great_expectations_spark.skew import build_session
 
@@ -131,8 +131,9 @@ def main() -> int:
     cols = ["partition_id", "expectation_type", "expectation_id", "success",
             "element_count", "missing_count", "unexpected_count",
             "observed_value"]
-    evr_a = {tuple(r) for r in ck_a.merged_map_verdicts(suite).collect()}
-    evr_b = {tuple(r) for r in ck_b.merged_map_verdicts(suite).collect()}
+    shash = suite_hash(suite)
+    evr_a = {tuple(r) for r in ck_a.merged_map_verdicts(shash).collect()}
+    evr_b = {tuple(r) for r in ck_b.merged_map_verdicts(shash).collect()}
     rows_a = {tuple(r) for r in spark.read.parquet(
         os.path.join(WORK, "runA", "evrs")).select(*cols).collect()}
     rows_b = {tuple(r) for r in spark.read.parquet(

@@ -102,17 +102,18 @@ def main(argv: list[str]) -> int:
             print("--segment-out belongs to the one-shot segmented mode; "
                   "the checkpointed mode's per-(partition × segment) EVR "
                   "rows live in --evr (read them back with "
-                  "Checkpoint.merged_segment_verdicts) — drop "
+                  "Checkpoint.merged_map_verdicts) — drop "
                   "--segment-out or drop --partition-col", file=sys.stderr)
             return 2
         if args.docs and not args.evr:
             print("--docs requires --evr (the segment report renders the "
                   "merged EVR store)", file=sys.stderr)
             return 2
-        # checkpointed segmented mode (round 5): the suite runs once per
-        # segment WITHIN each partition, per-(partition × segment) EVR rows
-        # land in --evr (segmented store, extra `segment` column), and the
-        # manifest makes the run kill/resumable at partition granularity
+        # checkpointed segmented mode: the suite runs once per segment
+        # WITHIN each partition, per-(partition × segment) EVR rows land in
+        # --evr (the same store whole-partition runs write, keyed by suite
+        # hash and segment), and the manifest makes the run kill/resumable
+        # at partition granularity
         ckpt = Checkpoint(
             spark,
             manifest_path=args.manifest,
@@ -129,15 +130,18 @@ def main(argv: list[str]) -> int:
         docs_index = None
         if args.docs:
             # segment report over the MERGED store (all partitions,
-            # committed rows only) — resumable-mode twin of the one-shot
-            # page; O(segments × expectations), never O(data)
+            # committed rows of this run's suite hash only) — resumable-mode
+            # twin of the one-shot page; O(segments × expectations), never
+            # O(data). An empty partition's whole-suite rows carry no
+            # segment column and are labelled as such.
             import os
 
             from great_expectations_spark.docs import render_segments_html
 
             merged = [
                 {
-                    "group": r["segment"],
+                    "group": (r["segment"] if r["segment_col"]
+                              else "(whole suite)"),
                     "expectation_type": r["expectation_type"],
                     "success": r["all_partitions_success"],
                     "element_count": r["element_count"],
@@ -145,7 +149,7 @@ def main(argv: list[str]) -> int:
                     "unexpected_count": r["unexpected_count"],
                     "observed_value": None,
                 }
-                for r in ckpt.merged_segment_verdicts().collect()
+                for r in ckpt.merged_map_verdicts(res.suite_hash).collect()
             ]
             os.makedirs(args.docs, exist_ok=True)
             docs_index = os.path.join(args.docs, "segments.html")
@@ -232,7 +236,7 @@ def main(argv: list[str]) -> int:
             unexpected_index_column_names=index_cols,
         )
         res = ckpt.run(df, suite, run_id=run_id, partition_col=args.partition_col)
-        n_ok = sum(1 for r in res.validated if r.result and r.result.success)
+        n_ok = sum(1 for r in res.validated if r.success)
         docs_index = None
         if args.docs:
             from great_expectations_spark.docs import build_data_docs
