@@ -564,7 +564,7 @@ def q_segment_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
               column="l_linenumber", value_set=[1])
     # round 5 (second pass): window-backed conditions re-windowed per
     # segment (lag never crosses a (segment, l_orderkey) boundary) and
-    # row_condition on aggregates via ONE filtered sub-pass per distinct rc
+    # row_condition on aggregates via ONE filtered domain group per distinct rc
     # composite order_by: the synthetic lineitem has duplicate
     # (l_orderkey, l_linenumber) keys, so (key, value) ordering is what
     # makes the lag sequence deterministic for the oracle replay

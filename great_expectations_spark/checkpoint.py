@@ -300,6 +300,15 @@ class Checkpoint:
             "append"
         ).parquet(self.evr_path)
 
+    def _stored_columns(self, path: str) -> list[str] | None:
+        """The column names of the parquet store at ``path``, or None when
+        it holds no rows yet (PATH_NOT_FOUND / unable to infer schema); a
+        corrupt existing store still fails loudly here."""
+        try:
+            return self.spark.read.parquet(path).columns
+        except AnalysisException:
+            return None
+
     # ------------------------------------------------------------------- run
     def run(
         self,
@@ -345,13 +354,22 @@ class Checkpoint:
                 stale_prefix="expectation",
                 expected="partition_id=<pid>/expectation=<type>/",
             )
+            existing = self._stored_columns(self.violations_path)
+            if existing is not None and ("group" in existing) != (
+                segment_col is not None
+            ):
+                # segmented violation rows lead with a `group` column under
+                # the same partition_id=/expectation= layout: one root
+                # holding both row shapes reads back with one side's
+                # columns null-filled or dropped
+                held = "segmented" if segment_col is None else "whole-partition"
+                raise ValueError(
+                    f"violations_path {self.violations_path!r} holds "
+                    f"{held} violation rows; segmented and whole-partition "
+                    "runs need separate violations paths"
+                )
         if self.evr_path:
-            try:
-                existing = self.spark.read.parquet(self.evr_path).columns
-            except AnalysisException:
-                # first run: no store yet (PATH_NOT_FOUND / unable to infer
-                # schema); a corrupt existing store still fails loudly here
-                existing = None
+            existing = self._stored_columns(self.evr_path)
             if existing is not None and "suite_hash" not in existing:
                 raise ValueError(
                     f"evr_path {self.evr_path!r} holds EVR rows written "
@@ -372,7 +390,6 @@ class Checkpoint:
         import urllib.parse
 
         write_lock = threading.Lock()
-        expectations = [(cfg.id, cfg) for cfg in suite]
 
         def run_partition(pv: Any) -> PartitionRunRecord:
             pid = str(pv)
@@ -395,7 +412,7 @@ class Checkpoint:
             rows: list[tuple] = []
             if segment_col is not None:
                 rows = _validate_rows(
-                    pdf, expectations, segment_col, strict=True,
+                    pdf, suite, segment_col, strict=True,
                     max_groups=segment_max_groups, violations_path=vpath,
                     unexpected_index_column_names=self.runner_kwargs.get(
                         "unexpected_index_column_names"

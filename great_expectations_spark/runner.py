@@ -33,7 +33,12 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.storagelevel import StorageLevel
 
-from great_expectations_spark.plans.planner import DomainGroup, SuitePlan, plan_suite
+from great_expectations_spark.plans.planner import (
+    DomainGroup,
+    SuitePlan,
+    monotone_windows,
+    plan_suite,
+)
 from great_expectations_spark.registry import (
     CompiledMap,
     CompiledQuery,
@@ -126,6 +131,74 @@ def _observed_str(cond) -> F.Column:
     return cond.observed.cast("string")
 
 
+def map_violations(
+    expectation_type: str,
+    cond,
+    gdf: DataFrame,
+    index_cols: list[str],
+    segment: F.Column | None = None,
+) -> DataFrame:
+    """The violations-sink rows of one map condition: ``(index…,
+    expectation, observed_value)``, led by a ``group`` column when the
+    segmented executor passes its ``segment``. The condition is projected
+    BEFORE filtering — window-backed conditions (increasing/decreasing) are
+    illegal in a WHERE clause."""
+    lead = ["group"] if segment is not None else []
+    return (
+        gdf.select(
+            *([segment.alias("group")] if segment is not None else []),
+            *[F.col(c) for c in index_cols],
+            _observed_str(cond).alias("observed_value"),
+            cond.unexpected.alias("__unexpected"),
+        )
+        .filter(F.col("__unexpected"))
+        .select(
+            *lead,
+            *index_cols,
+            F.lit(expectation_type).alias("expectation"),
+            "observed_value",
+        )
+    )
+
+
+def unique_missing(cu: CompiledUnique) -> F.Column:
+    """A uniqueness check's missing rows: a null key, or for a compound key
+    (default ``ignore_row_if=all_values_are_missing``) an all-null one — a
+    partly-null key still takes part in uniqueness."""
+    from functools import reduce
+
+    return reduce(lambda a, b: a & b, [F.col(c).isNull() for c in cu.key_cols])
+
+
+def unique_violations(
+    cu: CompiledUnique,
+    rows: DataFrame,
+    dup_keys: DataFrame,
+    index_cols: list[str],
+    segment: str | None = None,
+) -> DataFrame:
+    """The violations-sink rows of one uniqueness check: EVERY row of a
+    duplicated key (reference row-marking parity), found by a semi-join of
+    ``rows`` against ``dup_keys`` (key columns, led by the ``segment``
+    column for the segmented executor, which also leads the output as
+    ``group``). The join is null-safe: a partly-NULL key seen twice is a
+    duplicate, and an equi-join never matches NULL."""
+    from functools import reduce
+
+    keys = ([segment] if segment is not None else []) + cu.key_cols
+    dk = dup_keys.select(*[F.col(k).alias(f"__dk{j}") for j, k in enumerate(keys)])
+    on = reduce(
+        lambda a, b: a & b,
+        [F.col(k).eqNullSafe(F.col(f"__dk{j}")) for j, k in enumerate(keys)],
+    )
+    return rows.join(dk, on=on, how="left_semi").select(
+        *([F.col(segment).alias("group")] if segment is not None else []),
+        *[F.col(c) for c in index_cols],
+        F.lit(cu.cfg.expectation_type).alias("expectation"),
+        F.to_json(F.struct(*cu.key_cols)).alias("observed_value"),
+    )
+
+
 def _row_value(v: Any) -> Any:
     """Convert collected Spark values (Row/struct) to plain Python."""
     if hasattr(v, "asDict"):
@@ -190,48 +263,6 @@ class SuiteRunner:
         # strictly sequential execution
         self.max_concurrent_jobs = max(1, int(max_concurrent_jobs))
 
-    _MONOTONE_TYPES = frozenset(
-        {
-            "expect_column_values_to_be_increasing",
-            "expect_column_values_to_be_decreasing",
-        }
-    )
-
-    def _default_monotone_windows(self, suite: ExpectationSuite) -> ExpectationSuite:
-        """Default ``partition_by`` for increasing/decreasing from the
-        runner's ``unexpected_index_column_names``: a suite that declares
-        identity columns (e.g. ``["conv_id", "turn_idx"]``) has already
-        named its natural window key, so the scale-hazardous GLOBAL window
-        (whole batch shuffled into one task) becomes opt-in — pass
-        ``partition_by=None`` explicitly for reference parity — instead of
-        the silent default. The target column itself is excluded from the
-        key (windowing turn_idx BY turn_idx would leave one row per
-        partition and make the check vacuous). The rewrite happens inside
-        ``validate`` only, AFTER the checkpoint manifest's ``suite_hash``
-        is taken from the user's suite, so checkpoint identity is stable."""
-        if not self.index_cols:
-            return suite
-        from great_expectations_spark.suite import ExpectationConfiguration
-
-        rewritten, changed = [], False
-        for cfg in suite.expectations:
-            if (
-                cfg.expectation_type in self._MONOTONE_TYPES
-                and "partition_by" not in cfg.kwargs
-            ):
-                keys = [c for c in self.index_cols if c != cfg.kwargs.get("column")]
-                if keys:
-                    cfg = ExpectationConfiguration(
-                        expectation_type=cfg.expectation_type,
-                        kwargs={**cfg.kwargs, "partition_by": keys},
-                        meta=cfg.meta,
-                    )
-                    changed = True
-            rewritten.append(cfg)
-        if not changed:
-            return suite
-        return ExpectationSuite(suite.name, rewritten, suite.meta)
-
     # ------------------------------------------------------------------ API
     def validate(
         self,
@@ -243,7 +274,7 @@ class SuiteRunner:
             from great_expectations_spark.suite import bind_evaluation_parameters
 
             suite = bind_evaluation_parameters(suite, evaluation_parameters)
-        suite = self._default_monotone_windows(suite)
+        suite = monotone_windows(suite, self.index_cols)
         plan = plan_suite(suite)
         results_by_id: dict[str, ExpectationValidationResult] = {}
         violation_frames: list[DataFrame] = []
@@ -430,7 +461,7 @@ class SuiteRunner:
         for cu in group.uniques:
             items.append(
                 (frozenset(cu.key_cols), f"nc__{cu.cfg.id}",
-                 F.sum(F.when(self._unique_missing(cu), 1).otherwise(0)))
+                 F.sum(F.when(unique_missing(cu), 1).otherwise(0)))
             )
         if self.max_concurrent_jobs > 1 and len(items) > 1:
             # remap each item's columns to their physical scan footprint so
@@ -581,7 +612,10 @@ class SuiteRunner:
                 self._finish_map, cm, cond, gdf, element_count, values
             )
             if self.violations_path:
-                violation_frames.append(self._map_violations(cm, cond, gdf))
+                violation_frames.append(map_violations(
+                    cm.cfg.expectation_type, cond, gdf,
+                    self._effective_index_cols(gdf),
+                ))
         for cm in group.maps + group.window_maps + group.dependent_maps:
             out[cm.cfg.id] = self._guard(
                 cm.cfg, lambda cm=cm: fin_futs[cm.cfg.id].result()
@@ -717,24 +751,6 @@ class SuiteRunner:
             success=success, expectation_config=cm.cfg.to_dict(), result=result
         )
 
-    def _map_violations(self, cm: CompiledMap, cond, gdf: DataFrame) -> DataFrame:
-        # project the condition BEFORE filtering — window-backed conditions
-        # (increasing/decreasing/unique-window) are illegal in a WHERE clause
-        index_cols = self._effective_index_cols(gdf)
-        flags = gdf.select(
-            *[F.col(c) for c in index_cols],
-            _observed_str(cond).alias("observed_value"),
-            cond.unexpected.alias("__unexpected"),
-        )
-        return (
-            flags.filter(F.col("__unexpected"))
-            .select(
-                *[F.col(c) for c in index_cols],
-                F.lit(cm.cfg.expectation_type).alias("expectation"),
-                F.col("observed_value"),
-            )
-        )
-
     # ---- aggregate expectations --------------------------------------------
     def _finish_agg(self, ca, values: dict[str, Any]) -> ExpectationValidationResult:
         observed = ca.metric.finalize(values)
@@ -749,18 +765,10 @@ class SuiteRunner:
         )
 
     # ---- uniqueness ---------------------------------------------------------
-    def _unique_missing(self, cu: CompiledUnique) -> F.Column:
-        from functools import reduce
-
-        if len(cu.key_cols) == 1:
-            return F.col(cu.key_cols[0]).isNull()
-        # compound default ignore_row_if = all_values_are_missing
-        return reduce(lambda a, b: a & b, [F.col(c).isNull() for c in cu.key_cols])
-
     def _unique_precompute(self, cu: CompiledUnique, gdf: DataFrame) -> dict:
         """The heavy Spark jobs of one uniqueness check — runs on a worker
         thread concurrently with the bundle/window passes (_run_group)."""
-        domain = gdf.filter(~self._unique_missing(cu))
+        domain = gdf.filter(~unique_missing(cu))
 
         if (
             cu.hll_gate
@@ -859,16 +867,9 @@ class SuiteRunner:
                     ]
 
             if self.violations_path and unexpected_count > 0:
-                index_cols = self._effective_index_cols(gdf)
-                viol = (
-                    domain.join(dups.select(*cu.key_cols), on=cu.key_cols, how="left_semi")
-                    .select(
-                        *[F.col(c) for c in index_cols],
-                        F.lit(cu.cfg.expectation_type).alias("expectation"),
-                        F.to_json(F.struct(*cu.key_cols)).alias("observed_value"),
-                    )
-                )
-                violation_frames.append(viol)
+                violation_frames.append(unique_violations(
+                    cu, domain, dups, self._effective_index_cols(gdf)
+                ))
         finally:
             dups.unpersist()
 

@@ -191,6 +191,34 @@ def test_violations_path_stale_layout_refused(spark, tmp_path, suite, tdf):
     assert len(out2.skipped) == 3
 
 
+def _violations_mode_refused(spark, tmp_path, suite, df, first, second):
+    vroot = str(tmp_path / "violations")
+    Checkpoint(spark, manifest_path=str(tmp_path / "m1"),
+               violations_path=vroot).run(
+        df, suite, run_id="r1", partition_col="day", segment_col=first)
+    ck = Checkpoint(spark, manifest_path=str(tmp_path / "m2"),
+                    violations_path=vroot)
+    with pytest.raises(ValueError, match="violations_path") as exc:
+        ck.run(df, suite, run_id="r2", partition_col="day",
+               segment_col=second)
+    assert vroot in str(exc.value)
+
+
+def test_segmented_run_refuses_whole_partition_violations(spark, tmp_path,
+                                                          seg_suite, tdf):
+    """Segmented violation rows lead with a `group` column under the same
+    partition_id=/expectation= layout: a segmented run into a root whose
+    rows lack `group` is refused, naming the path."""
+    _violations_mode_refused(spark, tmp_path, seg_suite, tdf, None, "role")
+
+
+def test_whole_run_refuses_segmented_violations(spark, tmp_path, seg_suite,
+                                                tdf):
+    """The reverse: a whole-partition run into a root holding segmented
+    (`group`-led) violation rows is refused, naming the path."""
+    _violations_mode_refused(spark, tmp_path, seg_suite, tdf, "role", None)
+
+
 def test_resumed_run_reports_failed_skipped_partitions(spark, tmp_path, tdf):
     """A resume that skips previously-FAILING partitions must not report
     success=True just because nothing re-ran (round-3 fix: skipped records
@@ -399,7 +427,7 @@ def test_merged_segment_verdicts_ignore_orphan_evrs(spark, tmp_path,
     # simulate the torn write: EVR rows committed, manifest row lost
     orphan_rows = _validate_rows(
         tdf.filter(F.col("day") == "2025-01-02"),
-        [(c.id, c) for c in seg_suite], "role", strict=True,
+        seg_suite, "role", strict=True,
         max_groups=100, violations_path=None,
         unexpected_index_column_names=None,
     )
@@ -585,36 +613,55 @@ def test_whole_table_one_segment_and_merged_partitions_agree(
     """whole table ≡ one segment ≡ merged partitions, per expectation id:
     SuiteRunner over the table, validate_by_group over a constant segment
     column, and the merge views of a whole-partition and of a segmented
-    checkpoint give the same counters (the partitions split no key group).
-    An aggregate has no row counters in a SuiteRunner result, while the
-    segmented executor reports its segment's row count — so its
+    checkpoint give the same counters (the partitions split no key group,
+    window key or z-score distribution). The kinds cover a row_condition
+    map and aggregate, a decreasing check whose partition_by defaults from
+    the index columns, a z-score check and a most_common_value check. An
+    aggregate has no row counters in a SuiteRunner result, while the
+    segmented executor reports its segment's (domain's) row count — so its
     element_count is compared within each executor only."""
     from great_expectations_spark import SuiteRunner, validate_by_group
 
+    # d repeats 0..19 in each partition: same z-scores per partition
+    df = two_part_df.withColumn("d", F.col("b") % 20)
+    index_cols = ["p", "c"]
     s = ExpectationSuite("three-way")
     s.add("expect_column_values_to_not_be_null", column="a")
     s.add("expect_column_values_to_not_be_null", column="b")
     s.add("expect_compound_columns_to_be_unique", column_list=["c", "p"])
-    agg = s.add("expect_column_mean_to_be_between", column="b",
-                min_value=0, max_value=100)
+    aggs = [s.add("expect_column_mean_to_be_between", column="b",
+                  min_value=0, max_value=100)]
+    rc_map = s.add("expect_column_values_to_not_be_null", column="a",
+                   row_condition="c < 10")
+    aggs.append(s.add("expect_column_mean_to_be_between", column="b",
+                      min_value=0, max_value=100, row_condition="c < 10"))
+    window = s.add("expect_column_values_to_be_decreasing", column="b",
+                   order_by="b")
+    zscore = s.add("expect_column_value_z_scores_to_be_less_than",
+                   column="d", threshold=1.5)
+    aggs.append(s.add("expect_column_most_common_value_to_be_in_set",
+                      column="c", value_set=[0]))
+    agg_ids = {a.id for a in aggs}
 
     def counters(rows, key="expectation_id"):
         return {r[key]: (r["element_count"], r["missing_count"],
                          r["unexpected_count"]) for r in rows}
 
     runner = {}
-    result = SuiteRunner(spark).validate(two_part_df, s)
+    result = SuiteRunner(spark, unexpected_index_column_names=index_cols
+                         ).validate(df, s)
     for cfg, r in zip(s, result.results):
         res = r.result or {}
         runner[cfg.id] = tuple(int(res.get(k) or 0) for k in (
             "element_count", "missing_count", "unexpected_count"))
-    one_segment = counters(
-        validate_by_group(two_part_df, s, "one").collect())
+    one_segment = counters(validate_by_group(
+        df, s, "one", unexpected_index_column_names=index_cols).collect())
     merged = {}
     for segment_col in (None, "one"):
         ck = Checkpoint(spark, manifest_path=str(tmp_path / "m"),
-                        evr_path=str(tmp_path / "evr"))
-        res = ck.run(two_part_df, s, run_id="r", partition_col="p",
+                        evr_path=str(tmp_path / "evr"),
+                        unexpected_index_column_names=index_cols)
+        res = ck.run(df, s, run_id="r", partition_col="p",
                      segment_col=segment_col)
         merged[segment_col] = counters(
             ck.merged_map_verdicts(res.suite_hash).collect())
@@ -624,19 +671,25 @@ def test_whole_table_one_segment_and_merged_partitions_agree(
     assert runner == merged[None]
     assert one_segment == merged["one"]
     for eid in runner:
-        if eid != agg.id:
+        if eid not in agg_ids:
             assert runner[eid] == one_segment[eid], eid
-    assert runner[agg.id] == (0, 0, 0)
-    assert one_segment[agg.id] == (40, 0, 0)
+    for eid in agg_ids:
+        assert runner[eid] == (0, 0, 0), eid
+    assert [one_segment[a.id] for a in aggs] == [
+        (40, 0, 0), (30, 0, 0), (40, 0, 0)]
     assert runner[s.expectations[0].id] == (40, 0, 10)
     assert runner[s.expectations[2].id] == (40, 0, 20)
+    assert runner[rc_map.id] == (30, 0, 10)
+    # windows over (p, c): every row but the first of its window fails
+    assert runner[window.id] == (40, 0, 10)
+    assert runner[zscore.id] == (40, 0, 4)
 
 
 def test_store_rows_carry_user_expectation_ids(spark, tmp_path, tdf):
-    """The runner re-keys an increasing check's window from the index
-    columns (a rebuilt config with a different id); the segmented executor
-    strips row_condition for its sub-pass. Both modes still store the
-    user suite's ids."""
+    """Both executors re-key an increasing check's window before planning
+    (from the index columns, and the segmented one with the segment column
+    in front), so they plan rebuilt configs with different ids. Both modes
+    still store the user suite's ids."""
     s = ExpectationSuite("ids")
     s.add("expect_column_values_to_be_increasing", column="turn_idx")
     s.add("expect_column_mean_to_be_between", column="turn_idx",

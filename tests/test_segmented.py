@@ -237,8 +237,8 @@ def test_zscore_two_wave_per_segment(spark):
 
 
 def test_zscore_with_row_condition_sub_pass(spark):
-    """row_condition on a two-wave condition runs as a filtered sub-pass
-    (round 5): per-segment stats are computed over the rc domain only —
+    """row_condition on a two-wave condition runs in its filtered domain
+    group: per-segment stats are computed over the rc domain only —
     runner parity against validate(df.filter(rc)) per segment."""
     from great_expectations_spark import validate
 
@@ -265,8 +265,8 @@ def test_zscore_with_row_condition_sub_pass(spark):
 
 
 def test_rc_aggregate_and_unique_sub_pass(spark):
-    """row_condition on aggregates / uniqueness runs as ONE filtered
-    sub-pass per distinct rc. A segment entirely outside the rc domain
+    """row_condition on aggregates / uniqueness runs in ONE filtered
+    domain group per distinct rc. A segment entirely outside the rc domain
     produces no row for those expectations (the filtered batch never
     sees it), exactly like a filtered SuiteRunner run."""
     from great_expectations_spark import validate
@@ -286,8 +286,8 @@ def test_rc_aggregate_and_unique_sub_pass(spark):
     }
     mean_a = seg[("a", "expect_column_mean_to_be_between")]
     assert mean_a["success"] and mean_a["element_count"] == 2
-    # the sub-pass strips row_condition from its configs, yet every row
-    # keeps the user suite's expectation id
+    # the executor plans a window-rewritten copy of the suite, yet every
+    # row keeps the user suite's expectation id
     for (_g, kind), r in seg.items():
         cfg = next(c for c in suite if c.expectation_type == kind)
         assert r["expectation_id"] == cfg.id
@@ -343,7 +343,7 @@ def test_windowed_global_window_becomes_per_segment(spark):
 
 def test_windowed_default_keys_from_index_cols(spark):
     """Absent partition_by defaults from unexpected_index_column_names —
-    the same rewrite SuiteRunner._default_monotone_windows applies — with
+    the same rewrite SuiteRunner applies (planner.monotone_windows) — with
     the segment column prepended."""
     rows = [("a", "k1", 1, 1.0), ("a", "k1", 2, 2.0), ("a", "k2", 1, 5.0),
             ("a", "k2", 2, 4.0), ("b", "k1", 1, 1.0), ("b", "k1", 2, 3.0)]
@@ -518,8 +518,8 @@ def test_expr_backed_aggregates_segment_parity(spark):
 
 
 def test_rc_uniqueness_violations_flow_through_sub_pass(spark, tmp_path):
-    """row_condition uniqueness violations are written by the rc sub-pass
-    through the same violations sink — rows outside the rc domain are
+    """row_condition uniqueness violations are written by the rc domain
+    group through the same violations sink — rows outside the rc domain are
     invisible to the duplicate semi-join, not merely uncounted."""
     rows = [("a", 1, 10, 1), ("a", 1, 10, 2), ("a", 0, 10, 3),
             ("a", 1, 11, 4)]
@@ -536,3 +536,135 @@ def test_rc_uniqueness_violations_flow_through_sub_pass(spark, tmp_path):
     assert out["a"]["unexpected_count"] == 2
     viol = spark.read.parquet(vpath).collect()
     assert sorted(r["id"] for r in viol) == [1, 2]
+
+
+def test_rc_map_segment_outside_domain_gets_no_row(spark):
+    """One row_condition rule for every kind: a segment with no rows inside
+    a map's row_condition gets no row for it (no element_count-0 row),
+    as an aggregate or a uniqueness check with that condition does."""
+    df = spark.createDataFrame(
+        [("a", 1, None), ("a", 0, 5), ("b", 1, 7), ("c", 0, None)],
+        "seg string, flag int, v int",
+    )
+    suite = ExpectationSuite("rcm")
+    nn = suite.add("expect_column_values_to_not_be_null", column="v",
+                   row_condition="flag = 1")
+    suite.add("expect_column_values_to_not_be_null", column="v")
+    rows = validate_by_group(df, suite, "seg").collect()
+    rc_rows = {r["group"]: r for r in rows if r["expectation_id"] == nn.id}
+    assert set(rc_rows) == {"a", "b"}
+    assert (rc_rows["a"]["element_count"], rc_rows["a"]["unexpected_count"]) \
+        == (1, 1)
+    # the plain map still reports every segment, c included
+    assert {r["group"] for r in rows if r["expectation_id"] != nn.id} \
+        == {"a", "b", "c"}
+
+
+def _sink_rows(spark, path, drop=()):
+    return sorted(
+        tuple(r[c] for c in sorted(r.asDict()) if c not in drop)
+        for r in spark.read.parquet(path).collect()
+    )
+
+
+@pytest.fixture(scope="module")
+def partly_null_df(spark):
+    return spark.createDataFrame(
+        [(1, 1, 1), (2, 1, 2), (3, None, 5), (4, None, 5), (5, 7, None),
+         (6, 7, None), (7, 5, None), (8, None, None)],
+        "id int, a int, b int",
+    ).withColumn("one", F.lit("all"))
+
+
+def test_runner_unique_sink_keeps_partly_null_duplicates(spark, tmp_path,
+                                                         partly_null_df):
+    """The runner's uniqueness sink semi-joins null-safely: (NULL, 5) and
+    (7, NULL) seen twice are duplicates, and every one of their rows is a
+    sink row — an equi-join would never match them."""
+    from great_expectations_spark import SuiteRunner
+
+    suite = ExpectationSuite("cu")
+    suite.add("expect_compound_columns_to_be_unique", column_list=["a", "b"])
+    vpath = str(tmp_path / "viol")
+    res = SuiteRunner(spark, violations_path=vpath,
+                      unexpected_index_column_names=["id"]).validate(
+        partly_null_df, suite)
+    assert res.results[0].result["unexpected_count"] == 4
+    viol = spark.read.parquet(vpath).collect()
+    assert sorted(r["id"] for r in viol) == [3, 4, 5, 6]
+    # (NULL, 5) and (5, NULL) render apart
+    assert {r["observed_value"] for r in viol} == {'{"b":5}', '{"a":7}'}
+
+
+def test_segmented_sink_equals_runner_sink(spark, tmp_path, partly_null_df):
+    """One projection per violation kind: over a constant segment the
+    segmented sink, once its ``group`` column is dropped, holds exactly the
+    runner's rows — observed values included (a pair's JSON struct, a
+    compound key's JSON with its NULL parts kept apart)."""
+    from great_expectations_spark import SuiteRunner
+
+    suite = ExpectationSuite("sinks")
+    suite.add("expect_column_pair_values_to_be_equal",
+              column_A="a", column_B="b")
+    suite.add("expect_compound_columns_to_be_unique", column_list=["a", "b"])
+    suite.add("expect_column_values_to_be_unique", column="b")
+    suite.add("expect_column_values_to_be_between", column="a",
+              min_value=0, max_value=4)
+    suite.add("expect_column_values_to_be_increasing", column="a",
+              order_by="id", partition_by="one")
+    runner_path, seg_path = str(tmp_path / "runner"), str(tmp_path / "seg")
+    res = SuiteRunner(spark, violations_path=runner_path,
+                      unexpected_index_column_names=["id"]).validate(
+        partly_null_df, suite)
+    rows = validate_by_group(partly_null_df, suite, "one",
+                             violations_path=seg_path,
+                             unexpected_index_column_names=["id"]).collect()
+    assert [r["unexpected_count"] for r in rows] == [
+        r.result["unexpected_count"] for r in res.results]
+    seg_rows = _sink_rows(spark, seg_path, drop=("group",))
+    assert seg_rows == _sink_rows(spark, runner_path)
+    assert len(seg_rows) == sum(r["unexpected_count"] for r in rows)
+    pair = {r["observed_value"] for r in spark.read.parquet(seg_path)
+            .filter(F.col("expectation")
+                    == "expect_column_pair_values_to_be_equal").collect()}
+    assert '{"A":1,"B":2}' in pair
+
+
+def test_mixed_suite_job_count_pin(spark):
+    """Spark jobs of one validate_by_group over a mixed suite in which each
+    distinct row_condition also carries an aggregate or a uniqueness check:
+    planning through the runner's domain groups costs no more jobs than
+    the previous executor (27 on this suite, measured with 8 local cores
+    and 8 shuffle partitions)."""
+    rows = [(s, i % 4, i, float(i % 7), i // 3) for s in ("a", "b")
+            for i in range(30)]
+    df = spark.createDataFrame(
+        rows, "seg string, flag int, t int, v double, k int")
+    suite = ExpectationSuite("mixed")
+    suite.add("expect_column_values_to_not_be_null", column="v")
+    suite.add("expect_column_values_to_be_between", column="v",
+              min_value=0, max_value=5)
+    suite.add("expect_column_mean_to_be_between", column="v",
+              min_value=0, max_value=10)
+    suite.add("expect_column_values_to_be_unique", column="k")
+    suite.add("expect_column_values_to_be_increasing", column="t",
+              order_by="t", partition_by="flag")
+    suite.add("expect_column_most_common_value_to_be_in_set", column="flag",
+              value_set=[0])
+    suite.add("expect_column_values_to_not_be_null", column="v",
+              row_condition="flag = 1")
+    suite.add("expect_column_stdev_to_be_between", column="v",
+              min_value=0, max_value=10, row_condition="flag = 1")
+    suite.add("expect_column_values_to_be_unique", column="t",
+              row_condition="flag > 1")
+    suite.add("expect_column_value_z_scores_to_be_less_than", column="v",
+              threshold=3.0, row_condition="flag > 1")
+    validate_by_group(df, suite, "seg").collect()   # plan cache, JIT warm-up
+    sc = spark.sparkContext
+    sc.setJobGroup("segmented-job-pin", "segmented job count")
+    try:
+        validate_by_group(df, suite, "seg").collect()
+    finally:
+        sc.setJobGroup("", "")
+    jobs = len(sc.statusTracker().getJobIdsForGroup("segmented-job-pin"))
+    assert jobs <= 27, jobs
