@@ -13,7 +13,7 @@ Architecture (NOT a port — see SURVEY.md §7):
   great_expectations/expectations/expectation.py::_format_map_output)
 - Violation-row sink ``(keys…, expectation, observed_value)`` — the
   reference's unexpected_index_list materialized at scale (runner.py)
-- Skew-aware salted aggregation, HLL gates, approximate quantiles,
+- Skew-aware salted aggregation, approximate quantiles,
   per-partition checkpoint manifest for resumable runs (skew.py,
   checkpoint.py)
 - Training-data pipeline operators: dedup (exact/MinHash-LSH/SimHash/

@@ -51,7 +51,7 @@ from great_expectations_spark.result import (
     ExpectationSuiteValidationResult,
     calc_map_success,
 )
-from great_expectations_spark.runner import SuiteRunner
+from great_expectations_spark.runner import SparkThreadPool, SuiteRunner
 from great_expectations_spark.segmented import _validate_rows
 from great_expectations_spark.suite import ExpectationSuite
 
@@ -494,9 +494,8 @@ class Checkpoint:
                 raise ValueError(
                     "fail_partition (test hook) requires sequential mode"
                 )
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=max_concurrent_partitions) as pool:
+            # partitions run under the caller's job group and description
+            with SparkThreadPool(self.spark, max_concurrent_partitions) as pool:
                 for rec in pool.map(run_partition, todo):
                     out.records.append(rec)
         return out

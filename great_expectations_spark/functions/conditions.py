@@ -44,13 +44,11 @@ class MapCondition:
     #: window-backed conditions (increasing/decreasing) run in their own pass
     needs_window: bool = False
     #: scalar aggregate dependencies (alias -> agg expr); when present the
-    #: condition is built in wave 2 via ``rebuild(dep_values)``
+    #: condition is built in wave 2 via ``rebuild_expr(dep_columns)``
     requires: dict[str, Column] = field(default_factory=dict)
-    rebuild: Callable[[dict[str, Any]], "MapCondition"] | None = None
-    #: expression form of ``rebuild``: deps arrive as COLUMNS (one value per
-    #: row, e.g. per-segment mean/stddev joined onto the batch) instead of
-    #: Python scalars — what lets segmented validation run the two-wave
-    #: condition for every segment in ONE wave-2 pass
+    #: wave-2 builder: deps arrive as COLUMNS — literals of the whole
+    #: table's wave-1 values, or per-segment stats joined onto the batch, so
+    #: one wave-2 pass covers every segment
     rebuild_expr: Callable[[dict[str, Column]], "MapCondition"] | None = None
 
     @property
@@ -579,25 +577,14 @@ def z_scores_under_threshold(
 ) -> MapCondition:
     """column_values.z_score.under_threshold — MAP_FN ``(x-mean)/stddev``
     over agg deps (reference: column_values_z_score.py). Wave-1 computes
-    mean/stddev in the shared bundle; wave-2 injects them as literals."""
+    mean/stddev in the shared bundle; wave-2 rebuilds the condition over
+    them (literals for the whole table, joined columns per segment)."""
     c = _col(column)
     mean_alias = f"dep__mean__{column}"
     std_alias = f"dep__stddev__{column}"
 
-    def rebuild(deps: dict[str, Any]) -> MapCondition:
-        mean_v = deps[mean_alias]
-        std_v = deps[std_alias]
-        if std_v is None or std_v == 0:
-            z = F.lit(None).cast("double")
-        else:
-            z = (c.cast("double") - F.lit(float(mean_v))) / F.lit(float(std_v))
-        success = (F.abs(z) < threshold) if double_sided else (z < threshold)
-        return MapCondition([column], _nonnull_domain(column), success, c)
-
     def rebuild_expr(deps: dict[str, Column]) -> MapCondition:
-        # Column-deps twin of ``rebuild`` — identical semantics expressed
-        # per-row: NULL/zero stddev ⇒ z is NULL ⇒ the row counts unexpected
-        # (matches the literal path where z = lit(None) for the whole batch)
+        # NULL/zero stddev ⇒ z is NULL ⇒ every non-null row counts unexpected
         mean_c, std_c = deps[mean_alias], deps[std_alias]
         z = (
             F.when(std_c.isNull() | (std_c == 0), F.lit(None).cast("double"))
@@ -615,7 +602,6 @@ def z_scores_under_threshold(
             mean_alias: F.mean(c.cast("double")),
             std_alias: F.stddev_samp(c.cast("double")),
         },
-        rebuild=rebuild,
         rebuild_expr=rebuild_expr,
     )
 

@@ -6,18 +6,22 @@ partials per domain into one ``df.agg`` (reference:
 ``SparkDFExecutionEngine.resolve_metric_bundle`` — SURVEY.md §3/§4.1).
 Catalyst does NOT fuse separate actions, so cross-expectation bundling is
 the engine's own core rule. Our compiler plans the whole suite into a small,
-fixed set of passes per domain group (= distinct ``row_condition``):
+fixed set of passes per domain group (= distinct ``row_condition``), which
+``runner.run_passes`` runs with the executor's keys in front (none for a
+whole-table run, the segment for ``validate_by_group``):
 
-- **P1 bundle** — ONE ``df.agg(...)`` carrying: shared ``element_count``,
-  per-map null/unexpected counters, every aggregate metric expr (deduped by
-  deterministic alias), KL histogram buckets, and wave-2 dependencies.
-- **P-window** — map conditions that need a window (increasing/decreasing):
-  flags projected then aggregated in one pass.
-- **P2** — aggregate-dependent map counters (z-score) with wave-1 values
-  injected as literals.
-- **P-groupby** — key-uniqueness (salted two-level groupBy) and
-  value-counts-backed metrics; one job per distinct key set.
-- **P-violations** — a single melt pass over all failing map rows feeding
+- **bundle** — ONE ``groupBy(*keys).agg(...)`` job per group and key set
+  (:meth:`DomainGroup.bundle_exprs`): shared ``element_count``, per-map
+  null/unexpected counters, every aggregate metric expr (deduped by
+  deterministic alias), KL histogram buckets, and wave-2 dependencies. No
+  column cohorts: one scan reads the union of the group's columns.
+- **window** — map conditions that need a window (increasing/decreasing):
+  flags projected then counted in one pass.
+- **wave 2** — aggregate-dependent map counters (z-score), rebuilt through
+  ``rebuild_expr`` over the wave-1 values.
+- **value counts / uniqueness** — one pass per value-counts column and one
+  skew-aware value count per uniqueness check (exact; no approximate gate).
+- **violations** — a single melt pass over all failing map rows feeding
   the violations sink.
 
 Metric dedup: identical aggregate exprs requested by different expectations
@@ -123,52 +127,28 @@ class DomainGroup:
         n += len(self.uniques) + len(self.value_counts_columns)
         return n
 
-    def bundle_items(self) -> list[tuple[frozenset, str, Column]]:
-        """The P1 bundled aggregate expressions as ``(column_set, alias,
-        expr)`` triples, deduped by alias (same alias ⇒ same expr, later
-        wins — identical semantics to a dict update).
-
-        The column set is the expression's scan footprint (map domain
-        columns / the agg's column kwarg); the runner merges overlapping
-        sets into COLUMN-DISJOINT COHORTS and runs one concurrent
-        aggregation pass per cohort: parquet column pruning keeps total
-        bytes identical to the single union scan, while wall-clock drops
-        to the slowest cohort (the wide ``text`` column no longer gates
-        the narrow numeric metrics). ``element_count`` carries an empty
-        set and attaches to the narrowest cohort."""
+    def bundle_exprs(self) -> dict[str, Column]:
+        """The bundled pass's aggregate expressions, deduped by alias (same
+        alias ⇒ same expr): the shared ``element_count``, the counters of
+        every window-free map, the wave-1 dependencies of two-wave
+        conditions and every aggregate metric. Window-backed maps count in
+        their own pass."""
         from pyspark.sql import functions as F
 
-        items: list[tuple[frozenset, str, Column]] = [
-            (frozenset(), "element_count", F.count(F.lit(1)))
-        ]
-        for cm in self.maps + self.window_maps + self.dependent_maps:
-            cols = frozenset(cm.condition.domain_cols)
-            items.append(
-                (cols, f"nc__{cm.cfg.id}",
-                 F.sum(F.when(cm.condition.missing, 1).otherwise(0)))
+        exprs: dict[str, Column] = {"element_count": F.count(F.lit(1))}
+        for cm in self.maps + self.dependent_maps:
+            exprs[f"nc__{cm.cfg.id}"] = F.sum(
+                F.when(cm.condition.missing, 1).otherwise(0)
             )
         for cm in self.maps:
-            items.append(
-                (frozenset(cm.condition.domain_cols), f"uc__{cm.cfg.id}",
-                 F.sum(F.when(cm.condition.unexpected, 1).otherwise(0)))
+            exprs[f"uc__{cm.cfg.id}"] = F.sum(
+                F.when(cm.condition.unexpected, 1).otherwise(0)
             )
         for cm in self.dependent_maps:
-            cols = frozenset(cm.condition.domain_cols)
-            for a, e in cm.condition.requires.items():  # wave-2 deps ride wave 1
-                items.append((cols, a, e))
+            exprs.update(cm.condition.requires)  # wave-2 deps ride wave 1
         for ca in self.aggs:
-            cols = frozenset(
-                c
-                for k in ("column", "column_A", "column_B")
-                if (c := ca.cfg.kwargs.get(k)) is not None
-            ) | frozenset(ca.cfg.kwargs.get("column_list") or [])
-            for a, e in ca.metric.exprs.items():
-                items.append((cols, a, e))
-        return items
-
-    def bundle_exprs(self) -> dict[str, Column]:
-        """The P1 bundled aggregate expressions, deduped by alias."""
-        return {a: e for _, a, e in self.bundle_items()}
+            exprs.update(ca.metric.exprs)
+        return exprs
 
 
 @dataclass

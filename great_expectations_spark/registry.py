@@ -61,8 +61,6 @@ class CompiledUnique:
     key_cols: list[str]
     mostly: float | None
     result_format: dict[str, Any]
-    #: use an HLL approx-distinct gate before the exact pass (scale fast-path)
-    hll_gate: bool = False
 
 
 @dataclass
@@ -206,7 +204,6 @@ def _compile_unique(cfg: ExpectationConfiguration) -> CompiledUnique:
         key_cols=[cfg.kwargs["column"]],
         mostly=cfg.mostly,
         result_format=parse_result_format(cfg.kwargs.get("result_format")),
-        hll_gate=bool(cfg.kwargs.get("use_hll_gate", False)),
     )
 
 
@@ -217,7 +214,6 @@ def _compile_compound_unique(cfg: ExpectationConfiguration) -> CompiledUnique:
         key_cols=list(cfg.kwargs["column_list"]),
         mostly=cfg.mostly,
         result_format=parse_result_format(cfg.kwargs.get("result_format")),
-        hll_gate=bool(cfg.kwargs.get("use_hll_gate", False)),
     )
 
 

@@ -1,18 +1,30 @@
-"""Suite execution — bundled passes, EVR assembly, violations sink.
+"""Suite execution — keyed passes, EVR assembly, violations sink.
 
 Maps the reference's ``Checkpoint.run`` / ``Validator.graph_validate``
 lifecycle (SURVEY.md §3, entry point B) onto a fixed, small number of Spark
-jobs per domain group:
+jobs per domain group. One pass executor, :func:`run_passes`, runs a
+group's counter passes with a list of key columns in front of every pass:
+``[]`` for a whole-table ``SuiteRunner`` run, ``[segment]`` for
+``validate_by_group`` — a whole-table run is the zero-key segmented run:
 
   plan (metric dedup + bundling, driver-side, no Spark)
-    → P1 bundled ``df.agg`` (ONE job for all scalar metrics + map counters)
-    → P-window / P2 (only if window-backed or aggregate-dependent conditions)
-    → P-groupby (salted two-level aggregation per uniqueness key set)
+    → bundled pass: ONE ``groupBy(*keys).agg`` job per group and key set
+      for the shared ``element_count``, every map counter, every aggregate
+      metric and the wave-1 stats of two-wave conditions
+    → wave 2 (z-score): conditions rebuilt through ``rebuild_expr`` —
+      from the collected wave-1 row as literals (zero keys), or from the
+      wave-1 relation broadcast-joined back onto the batch (keyed)
+    → value counts (most_common_value: modes-with-ties via a max-join),
+      uniqueness (one skew-aware value count per check) and window passes
     → per-expectation partial-list jobs (``filter().limit(n)`` —
       CollectLimit early-exits the scan; SURVEY.md §2.9)
     → optional single melt pass writing ALL violation rows
       ``(index…, expectation, observed_value)`` to the sink — executor-side
       write, never collected to the driver (SURVEY.md §4.3)
+
+Independent passes, relational/query checks and EVR finishing jobs run as
+concurrent Spark jobs on one :class:`SparkThreadPool` per call, so the
+scheduler interleaves their stages.
 
 Persistence: the reference defaults to ``SparkDFExecutionEngine(
 persist=True)`` — caching the batch across metric waves. We default to
@@ -28,14 +40,19 @@ of a join you can't re-run); we then cache it as-is.
 
 from __future__ import annotations
 
-from typing import Any
+from concurrent.futures import ThreadPoolExecutor, wait
+from dataclasses import dataclass
+from functools import reduce
+from typing import Any, Callable
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from great_expectations_spark.functions.aggregates import safe_alias
+from great_expectations_spark.functions.conditions import MapCondition
 from great_expectations_spark.plans.planner import (
     DomainGroup,
-    SuitePlan,
     monotone_windows,
     plan_suite,
 )
@@ -56,74 +73,6 @@ from great_expectations_spark.skew import value_counts as skew_value_counts
 from great_expectations_spark.suite import ExpectationSuite
 
 
-def _scan_footprint(gdf: DataFrame, col: str) -> frozenset:
-    """The set of BASE columns a single named column actually reads, from
-    the physical plan's leaf scan output. Derived columns (e.g.
-    ``withColumn("__text_len", length(text))``) resolve to their source
-    columns, so cohort formation (below) never puts a derived column and
-    its source in different cohorts — which would decompress the source
-    column once per cohort. Falls back to the column's own name (and for
-    in-memory LocalTableScan leaves returns the full schema — conservative:
-    merges everything into one cohort, where splitting had no scan-pruning
-    benefit anyway)."""
-    try:
-        leaves = gdf.select(col)._jdf.queryExecution().executedPlan().collectLeaves()
-        names = set()
-        for i in range(leaves.size()):
-            out = leaves.apply(i).output()
-            for j in range(out.size()):
-                names.add(out.apply(j).name())
-        return frozenset(names) if names else frozenset([col])
-    except Exception:  # noqa: BLE001 — footprint is an optimization hint only
-        return frozenset([col])
-
-
-def _bundle_cohorts(
-    items: list, max_cohorts: int = 4
-) -> list[dict[str, Any]]:
-    """Merge ``(column_set, alias, expr)`` triples into COLUMN-DISJOINT
-    cohorts: overlapping column sets union (so no column is ever scanned by
-    two cohorts — total bytes = the single union scan), empty-set items
-    (element_count) attach to the narrowest cohort, and the smallest cohorts
-    merge until at most ``max_cohorts`` remain (each cohort is one Spark
-    job; more jobs than the runner's concurrency budget only adds
-    scheduling overhead). Returns alias→expr dicts, deduped by alias in
-    item order."""
-    # union-find over column names
-    parent: dict[str, str] = {}
-
-    def find(c: str) -> str:
-        while parent.setdefault(c, c) != c:
-            parent[c] = parent[parent[c]]
-            c = parent[c]
-        return c
-
-    for cols, _, _ in items:
-        cols = list(cols)
-        for other in cols[1:]:
-            parent[find(other)] = find(cols[0])
-
-    cohorts: dict[str, dict[str, Any]] = {}
-    deferred: list[tuple[str, Any]] = []
-    for cols, alias, expr in items:
-        if not cols:
-            deferred.append((alias, expr))
-            continue
-        cohorts.setdefault(find(next(iter(cols))), {})[alias] = expr
-
-    out = sorted(cohorts.values(), key=len)
-    if not out:
-        out = [{}]
-    for alias, expr in deferred:
-        out[0][alias] = expr
-    out = [c for c in out if c]
-    while len(out) > max(1, max_cohorts):
-        out.sort(key=len)
-        out[1].update(out[0])
-        out.pop(0)
-    return out
-
-
 def _observed_str(cond) -> F.Column:
     """Uniform string rendering of the observed value for the sink."""
     if len(cond.domain_cols) > 1:
@@ -136,17 +85,17 @@ def map_violations(
     cond,
     gdf: DataFrame,
     index_cols: list[str],
-    segment: F.Column | None = None,
+    segment: str | None = None,
 ) -> DataFrame:
     """The violations-sink rows of one map condition: ``(index…,
     expectation, observed_value)``, led by a ``group`` column when the
-    segmented executor passes its ``segment``. The condition is projected
+    segmented executor passes its ``segment`` column. The condition is projected
     BEFORE filtering — window-backed conditions (increasing/decreasing) are
     illegal in a WHERE clause."""
     lead = ["group"] if segment is not None else []
     return (
         gdf.select(
-            *([segment.alias("group")] if segment is not None else []),
+            *([F.col(segment).alias("group")] if segment is not None else []),
             *[F.col(c) for c in index_cols],
             _observed_str(cond).alias("observed_value"),
             cond.unexpected.alias("__unexpected"),
@@ -165,8 +114,6 @@ def unique_missing(cu: CompiledUnique) -> F.Column:
     """A uniqueness check's missing rows: a null key, or for a compound key
     (default ``ignore_row_if=all_values_are_missing``) an all-null one — a
     partly-null key still takes part in uniqueness."""
-    from functools import reduce
-
     return reduce(lambda a, b: a & b, [F.col(c).isNull() for c in cu.key_cols])
 
 
@@ -183,8 +130,6 @@ def unique_violations(
     column for the segmented executor, which also leads the output as
     ``group``). The join is null-safe: a partly-NULL key seen twice is a
     duplicate, and an equi-join never matches NULL."""
-    from functools import reduce
-
     keys = ([segment] if segment is not None else []) + cu.key_cols
     dk = dup_keys.select(*[F.col(k).alias(f"__dk{j}") for j, k in enumerate(keys)])
     on = reduce(
@@ -206,6 +151,205 @@ def _row_value(v: Any) -> Any:
     if isinstance(v, list):
         return [_row_value(x) for x in v]
     return v
+
+
+class SparkThreadPool(ThreadPoolExecutor):
+    """A thread pool whose tasks run under the submitting thread's Spark
+    local properties (job group, description, scheduler pool): each task
+    is wrapped with ``inheritable_thread_target`` at submit time, on the
+    caller's thread, so ``cancelJobGroup`` and job tags reach every job the
+    pool runs. The default width is the engine's pass concurrency."""
+
+    def __init__(self, spark: SparkSession, max_workers: int = 4) -> None:
+        super().__init__(max_workers=max_workers)
+        self._spark = spark
+
+    def submit(self, fn, /, *args, **kwargs):
+        carry = inheritable_thread_target(self._spark)
+        if carry is not self._spark:  # pinned-thread mode (PySpark default)
+            fn = carry(fn)
+        return super().submit(fn, *args, **kwargs)
+
+
+@dataclass
+class GroupPasses:
+    """What one domain group's keyed passes computed."""
+
+    #: key values (``()`` for the whole table) → alias → value
+    values: dict[tuple, dict[str, Any]]
+    #: map expectation id → (condition, the frame it reads); wave-2
+    #: conditions are rebuilt over their wave-1 stats
+    conds: dict[str, tuple[MapCondition, DataFrame]]
+    #: uniqueness expectation id → its duplicate-key counts
+    #: ``(*keys, *key_cols, count)``, persisted (materialized on first read)
+    dups: dict[str, DataFrame]
+    #: every relation the passes cached
+    persisted: list[DataFrame]
+
+    def release(self) -> None:
+        """Unpersist every relation the passes cached."""
+        for rel in self.persisted:
+            rel.unpersist()
+
+
+def _on_keys(keys: list[str], prefix: str) -> F.Column:
+    """Null-safe equality of ``keys`` with their ``prefix``-renamed copies
+    (a NULL segment is a segment of its own)."""
+    return reduce(lambda a, b: a & b, [
+        F.col(k).eqNullSafe(F.col(f"{prefix}{j}")) for j, k in enumerate(keys)
+    ])
+
+
+def run_passes(
+    group: DomainGroup,
+    gdf: DataFrame,
+    keys: list[str],
+    pool: ThreadPoolExecutor,
+    collect: Callable[[DataFrame], list] = DataFrame.collect,
+) -> GroupPasses:
+    """One domain group's counter passes over ``gdf``, with the ``keys``
+    columns in front of every pass: ``[]`` for the whole table (one row
+    per pass), ``[segment]`` for validate_by_group. Values come back under
+    the runner's aliases (``element_count``, ``nc__<id>``, ``uc__<id>``,
+    ``dk__<id>`` duplicate-key counts, metric aliases). Independent passes
+    run concurrently on ``pool``; every result goes through ``collect``
+    (validate_by_group's max_groups guard).
+
+    - bundled: one ``groupBy(*keys).agg(group.bundle_exprs())`` job;
+    - wave 2: two-wave conditions through ``rebuild_expr`` — literals from
+      the collected wave-1 row without keys (no extra job), the persisted
+      wave-1 relation broadcast-joined back with keys;
+    - value counts: per column, the modes-with-ties of every key via a
+      broadcast max-join;
+    - uniqueness: one skew-aware value count over ``(*keys, *key_cols)``
+      (salted as the check's own key decides); missing keys are classified
+      after grouping;
+    - window: one pass counting ``element_count``, ``nc__`` and ``uc__``
+      of every window-backed map.
+
+    The uniqueness and window passes count ``element_count`` themselves, so
+    a group without a bundled pass still reports it for every key."""
+    by = [F.col(k) for k in keys]
+    conds: dict[str, tuple[MapCondition, DataFrame]] = {
+        cm.cfg.id: (cm.condition, gdf) for cm in group.maps + group.window_maps
+    }
+    dups: dict[str, DataFrame] = {}
+    persisted: list[DataFrame] = []
+
+    def cache(rel: DataFrame) -> DataFrame:
+        rel = rel.persist(StorageLevel.MEMORY_AND_DISK)
+        persisted.append(rel)
+        return rel
+
+    def bundled() -> list:
+        rel = gdf.groupBy(*by).agg(
+            *[e.alias(a) for a, e in group.bundle_exprs().items()]
+        )
+        if keys and group.dependent_maps:
+            # wave 2 joins the same per-key stats the collect below reads
+            rel = cache(rel)
+        rows = collect(rel)
+        if not group.dependent_maps:
+            return rows
+        deps = dict.fromkeys(
+            a for cm in group.dependent_maps for a in cm.condition.requires
+        )
+        if keys:
+            frame = gdf.join(
+                F.broadcast(rel.select(
+                    *[F.col(k).alias(f"__w{j}") for j, k in enumerate(keys)],
+                    *deps,
+                )),
+                on=_on_keys(keys, "__w"),
+                how="left",
+            )
+            dep_cols = {a: F.col(a) for a in deps}
+        else:
+            frame = gdf
+            dep_cols = {a: F.lit(rows[0][a]) for a in deps}
+        for cm in group.dependent_maps:
+            conds[cm.cfg.id] = (cm.condition.rebuild_expr(dep_cols), frame)
+        return rows + collect(frame.groupBy(*by).agg(*[
+            F.sum(F.when(conds[cm.cfg.id][0].unexpected, 1).otherwise(0))
+            .alias(f"uc__{cm.cfg.id}")
+            for cm in group.dependent_maps
+        ]))
+
+    def modes(col: str) -> list:
+        # one query: the max side reuses the counts' shuffle (ReusedExchange),
+        # so the counts need no cache
+        vc = (
+            gdf.filter(F.col(col).isNotNull())
+            .groupBy(*by, F.col(col).alias("__v"))
+            .agg(F.count(F.lit(1)).alias("__cnt"))
+        )
+        mx = vc.groupBy(
+            *[F.col(k).alias(f"__m{j}") for j, k in enumerate(keys)]
+        ).agg(F.max("__cnt").alias("__mx"))
+        on = F.col("__cnt") == F.col("__mx")
+        if keys:
+            on = _on_keys(keys, "__m") & on
+        return collect(
+            vc.join(F.broadcast(mx), on=on)
+            .groupBy(*by)
+            .agg(F.sort_array(F.collect_list("__v"))
+                 .alias(safe_alias("most_common", col)))
+        )
+
+    def unique(cu: CompiledUnique) -> list:
+        salted = cu.cfg.kwargs.get("salted")
+        if salted is None:
+            salted = len(cu.key_cols) == 1
+        vc = skew_value_counts(gdf, [*keys, *cu.key_cols], salted=salted)
+        miss = unique_missing(cu)
+        dup = ~miss & (F.col("count") > 1)
+        dups[cu.cfg.id] = cache(vc.filter(dup))
+        return collect(vc.groupBy(*by).agg(
+            F.sum("count").alias("element_count"),
+            F.sum(F.when(miss, F.col("count")).otherwise(0))
+            .alias(f"nc__{cu.cfg.id}"),
+            F.sum(F.when(dup, F.col("count")).otherwise(0))
+            .alias(f"uc__{cu.cfg.id}"),
+            F.count(F.when(dup, 1)).alias(f"dk__{cu.cfg.id}"),
+        ))
+
+    def window() -> list:
+        flags: dict[str, F.Column] = {}
+        for cm in group.window_maps:
+            flags[f"nc__{cm.cfg.id}"] = cm.condition.missing.cast("int")
+            flags[f"uc__{cm.cfg.id}"] = cm.condition.unexpected.cast("int")
+        return collect(
+            gdf.select(*by, *[e.alias(a) for a, e in flags.items()])
+            .groupBy(*by)
+            .agg(F.count(F.lit(1)).alias("element_count"),
+                 *[F.sum(a).alias(a) for a in flags])
+        )
+
+    futs = []
+    if group.maps or group.aggs or group.dependent_maps:
+        futs.append(pool.submit(bundled))
+    futs += [pool.submit(modes, col) for col in group.value_counts_columns]
+    futs += [pool.submit(unique, cu) for cu in group.uniques]
+    if group.window_maps:
+        futs.append(pool.submit(window))
+    wait(futs)
+    passes = GroupPasses({}, conds, dups, persisted)
+    try:
+        for fut in futs:
+            for r in fut.result():
+                d = r.asDict()
+                key = tuple(d.pop(k) for k in keys)
+                passes.values.setdefault(key, {}).update(
+                    {k: _row_value(v) for k, v in d.items()}
+                )
+    except Exception:
+        passes.release()
+        raise
+    for col in group.value_counts_columns:
+        # a key whose column is entirely NULL has no value counts
+        for vals in passes.values.values():
+            vals.setdefault(safe_alias("most_common", col), [])
+    return passes
 
 
 class SuiteRunner:
@@ -248,7 +392,6 @@ class SuiteRunner:
         violations_path: str | None = None,
         catch_exceptions: bool = True,
         persist: bool = False,
-        max_concurrent_jobs: int = 4,
         max_complete_rows: int | None = 1_000_000,
     ) -> None:
         self.spark = spark
@@ -258,10 +401,6 @@ class SuiteRunner:
         self.catch_exceptions = catch_exceptions
         self.persist = persist
         self.max_complete_rows = max_complete_rows
-        # independent validation passes are submitted as concurrent Spark
-        # jobs (thread pool → FIFO scheduler interleaves stages); 1 restores
-        # strictly sequential execution
-        self.max_concurrent_jobs = max(1, int(max_concurrent_jobs))
 
     # ------------------------------------------------------------------ API
     def validate(
@@ -293,32 +432,20 @@ class SuiteRunner:
                 },
             )
 
-        # relational / query expectations are independent of the domain
-        # groups — launch them concurrently so their joins interleave with
-        # the groups' aggregation stages (same rationale as _run_group's
-        # inner pool)
-        from concurrent.futures import ThreadPoolExecutor
-
-        side_pool = (
-            ThreadPoolExecutor(max_workers=self.max_concurrent_jobs)
-            if (plan.relationals or plan.queries) and self.max_concurrent_jobs > 1
-            else None
-        )
-        fut_rel: dict[str, Any] = {}
-        fut_q: dict[str, Any] = {}
-        if side_pool is not None:
-            fut_rel = {
-                cr.cfg.id: side_pool.submit(
+        with SparkThreadPool(self.spark) as pool:
+            # relational / query expectations are independent of the domain
+            # groups: their joins run on the pool alongside the groups' passes
+            fut_side = {
+                cr.cfg.id: pool.submit(
                     self._run_relational, cr, df, violation_frames
                 )
                 for cr in plan.relationals
             }
-            fut_q = {
-                cq.cfg.id: side_pool.submit(self._run_query, cq, df)
+            fut_side.update({
+                cq.cfg.id: pool.submit(self._run_query, cq, df)
                 for cq in plan.queries
-            }
+            })
 
-        try:
             for group in plan.groups:
                 gdf = df.filter(F.expr(group.row_condition)) if group.row_condition else df
                 persisted = False
@@ -327,7 +454,7 @@ class SuiteRunner:
                     persisted = True
                 try:
                     try:
-                        self._run_group(group, gdf, results_by_id, violation_frames)
+                        self._run_group(group, gdf, pool, results_by_id, violation_frames)
                     except Exception:
                         if not self.catch_exceptions:
                             raise
@@ -336,7 +463,9 @@ class SuiteRunner:
                         # healthy expectations still validate and the broken one
                         # gets its own EVR.exception_info (reference
                         # catch_exceptions fault-isolation semantics).
-                        self._run_group_isolated(group, gdf, results_by_id, violation_frames)
+                        self._run_group_isolated(
+                            group, gdf, pool, results_by_id, violation_frames
+                        )
                 finally:
                     if persisted:
                         gdf.unpersist()
@@ -345,27 +474,10 @@ class SuiteRunner:
                 results_by_id[cm.cfg.id] = self._guard(
                     cm.cfg, lambda cm=cm: self._run_meta(cm, df)
                 )
-            for cr in plan.relationals:
-                results_by_id[cr.cfg.id] = self._guard(
-                    cr.cfg,
-                    lambda cr=cr: (
-                        fut_rel[cr.cfg.id].result()
-                        if cr.cfg.id in fut_rel
-                        else self._run_relational(cr, df, violation_frames)
-                    ),
+            for c in plan.relationals + plan.queries:
+                results_by_id[c.cfg.id] = self._guard(
+                    c.cfg, fut_side[c.cfg.id].result
                 )
-            for cq in plan.queries:
-                results_by_id[cq.cfg.id] = self._guard(
-                    cq.cfg,
-                    lambda cq=cq: (
-                        fut_q[cq.cfg.id].result()
-                        if cq.cfg.id in fut_q
-                        else self._run_query(cq, df)
-                    ),
-                )
-        finally:
-            if side_pool is not None:
-                side_pool.shutdown(wait=True)
 
         if self.violations_path and violation_frames:
             out = violation_frames[0]
@@ -406,6 +518,7 @@ class SuiteRunner:
         self,
         group: DomainGroup,
         gdf: DataFrame,
+        pool: ThreadPoolExecutor,
         out: dict[str, ExpectationValidationResult],
         violation_frames: list[DataFrame],
     ) -> None:
@@ -426,7 +539,7 @@ class SuiteRunner:
                 if vc_col is not None:
                     mini.value_counts_columns.append(vc_col)
             try:
-                self._run_group(mini, gdf, out, violation_frames)
+                self._run_group(mini, gdf, pool, out, violation_frames)
             except Exception as exc:  # noqa: BLE001
                 import traceback
 
@@ -445,196 +558,47 @@ class SuiteRunner:
         self,
         group: DomainGroup,
         gdf: DataFrame,
+        pool: ThreadPoolExecutor,
         out: dict[str, ExpectationValidationResult],
         violation_frames: list[DataFrame],
     ) -> None:
-        # Independent passes (bundle agg, mode groupBys, window pass, each
-        # uniqueness groupBy) are submitted as CONCURRENT Spark jobs from a
-        # thread pool: the scheduler interleaves their stages, so straggler
-        # tasks of one pass no longer leave the cluster idle — wall time per
-        # group approaches max(pass) instead of sum(pass).
-        from concurrent.futures import ThreadPoolExecutor
-
-        # ---- P1: the bundled aggregation, split into column-disjoint
-        # cohorts run as concurrent jobs (see DomainGroup.bundle_items) ----
-        items = group.bundle_items()
-        for cu in group.uniques:
-            items.append(
-                (frozenset(cu.key_cols), f"nc__{cu.cfg.id}",
-                 F.sum(F.when(unique_missing(cu), 1).otherwise(0)))
-            )
-        if self.max_concurrent_jobs > 1 and len(items) > 1:
-            # remap each item's columns to their physical scan footprint so
-            # cohorts are disjoint in BASE columns, not just names
-            fp: dict[str, frozenset] = {}
-            items = [
-                (
-                    frozenset().union(
-                        *[fp.setdefault(c, _scan_footprint(gdf, c)) for c in cols]
-                    )
-                    if cols
-                    else cols,
-                    alias,
-                    expr,
-                )
-                for cols, alias, expr in items
-            ]
-        cohorts = _bundle_cohorts(items, max_cohorts=self.max_concurrent_jobs)
-
-        def cohort_job(exprs: dict[str, Any]) -> dict[str, Any]:
-            row = gdf.agg(*[e.alias(a) for a, e in exprs.items()]).collect()[0]
-            return {k: _row_value(v) for k, v in row.asDict().items()}
-
-        def bundle_job() -> dict[str, Any]:
-            # single-cohort path (or max_concurrent_jobs == 1): one union scan
-            out: dict[str, Any] = {}
-            for c in cohorts:
-                out.update(cohort_job(c))
-            return out
-
-        def mode_job(col: str) -> list[Any]:
-            vc = (
-                gdf.filter(F.col(col).isNotNull())
-                .groupBy(col)
-                .agg(F.count(F.lit(1)).alias("count"))
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            try:
-                mx = vc.agg(F.max("count").alias("m")).collect()[0]["m"]
-                return (
-                    [r[col] for r in vc.filter(F.col("count") == mx).orderBy(col).collect()]
-                    if mx is not None
-                    else []
-                )
-            finally:
-                vc.unpersist()
-
-        def window_job() -> dict[str, Any]:
-            flag_cols = [
-                cm.condition.unexpected.cast("int").alias(f"uc__{cm.cfg.id}")
-                for cm in group.window_maps
-            ]
-            row = (
-                gdf.select(*flag_cols)
-                .agg(*[F.sum(f"uc__{cm.cfg.id}").alias(f"uc__{cm.cfg.id}") for cm in group.window_maps])
-                .collect()[0]
-            )
-            return row.asDict()
-
-        n_jobs = (
-            len(cohorts)
-            + len(group.value_counts_columns)
-            + (1 if group.window_maps else 0)
-            + len(group.uniques)
-        )
-        pool = ThreadPoolExecutor(
-            max_workers=max(1, min(n_jobs, self.max_concurrent_jobs))
-        )
-        fut_unique: dict[str, Any] = {}
+        """The group's zero-key passes, then its EVRs from the one row of
+        values. Map finishing launches partial-list / top-k jobs when an
+        expectation has unexpected rows — independent per expectation, so
+        they go through the pool as well."""
+        passes = run_passes(group, gdf, [], pool)
         try:
-            if self.max_concurrent_jobs > 1:
-                fut_bundles = [pool.submit(cohort_job, c) for c in cohorts]
-            else:
-                fut_bundles = [pool.submit(bundle_job)]
-            fut_modes = {
-                col: pool.submit(mode_job, col)
-                for col in group.value_counts_columns
-            }
-            fut_window = pool.submit(window_job) if group.window_maps else None
-            fut_unique = {
-                cu.cfg.id: pool.submit(self._unique_precompute, cu, gdf)
-                for cu in group.uniques
-            }
+            values = passes.values[()]
+            element_count = int(values.get("element_count") or 0)
+            index_cols = self._effective_index_cols(gdf)
+            fin_futs = {}
+            for cm in group.maps + group.window_maps + group.dependent_maps:
+                cond, frame = passes.conds[cm.cfg.id]
+                fin_futs[cm.cfg.id] = pool.submit(
+                    self._finish_map, cm, cond, frame, element_count, values
+                )
+                if self.violations_path:
+                    violation_frames.append(map_violations(
+                        cm.cfg.expectation_type, cond, frame, index_cols
+                    ))
+            for cm in group.maps + group.window_maps + group.dependent_maps:
+                out[cm.cfg.id] = self._guard(cm.cfg, fin_futs[cm.cfg.id].result)
 
-            values: dict[str, Any] = {}
-            for fb in fut_bundles:
-                values.update(fb.result())
-            from great_expectations_spark.functions.aggregates import safe_alias
+            for ca in group.aggs:
+                out[ca.cfg.id] = self._guard(
+                    ca.cfg, lambda ca=ca: self._finish_agg(ca, values)
+                )
 
-            for col, fut in fut_modes.items():
-                values[safe_alias("most_common", col)] = fut.result()
-            if fut_window is not None:
-                values.update(fut_window.result())
-        except Exception:
-            # group-level failure → unpersist any dup frames the uniqueness
-            # jobs already materialized, then let the isolation path retry
-            pool.shutdown(wait=True)
-            for fut in fut_unique.values():
-                try:
-                    pre = fut.result()
-                    if pre.get("dups") is not None:
-                        pre["dups"].unpersist()
-                except Exception:  # noqa: BLE001 — its own EVR covers it
-                    pass
-            raise
-
-        # the pool stays open: EVR finishing below submits its partial-list
-        # jobs to it; closed in the finally at the end of the method
-        try:
-            self._run_group_finish(
-                group, gdf, values, {}, out, violation_frames, pool, fut_unique
-            )
+            for cu in group.uniques:
+                out[cu.cfg.id] = self._guard(
+                    cu.cfg,
+                    lambda cu=cu: self._finish_unique(
+                        cu, gdf, element_count, values,
+                        passes.dups[cu.cfg.id], violation_frames,
+                    ),
+                )
         finally:
-            pool.shutdown(wait=True)
-
-    def _run_group_finish(
-        self,
-        group: DomainGroup,
-        gdf: DataFrame,
-        values: dict[str, Any],
-        rebuilt: dict[str, Any],
-        out: dict[str, ExpectationValidationResult],
-        violation_frames: list[DataFrame],
-        pool,
-        fut_unique: dict[str, Any],
-    ) -> None:
-        # ---- P2: aggregate-dependent map conditions -----------------------
-        if group.dependent_maps:
-            dep_exprs = {}
-            for cm in group.dependent_maps:
-                cond = cm.condition.rebuild(values)
-                rebuilt[cm.cfg.id] = cond
-                dep_exprs[f"uc__{cm.cfg.id}"] = F.sum(
-                    F.when(cond.unexpected, 1).otherwise(0)
-                )
-            row = gdf.agg(*[e.alias(a) for a, e in dep_exprs.items()]).collect()[0]
-            values.update(row.asDict())
-
-        # ---- EVR assembly --------------------------------------------------
-        element_count = int(values.get("element_count", 0) or 0)
-
-        # map-EVR finishing launches partial-list / top-k jobs when an
-        # expectation has unexpected rows — independent per expectation, so
-        # they go through the pool as well instead of running back-to-back
-        fin_futs = {}
-        for cm in group.maps + group.window_maps + group.dependent_maps:
-            cond = rebuilt.get(cm.cfg.id, cm.condition)
-            fin_futs[cm.cfg.id] = pool.submit(
-                self._finish_map, cm, cond, gdf, element_count, values
-            )
-            if self.violations_path:
-                violation_frames.append(map_violations(
-                    cm.cfg.expectation_type, cond, gdf,
-                    self._effective_index_cols(gdf),
-                ))
-        for cm in group.maps + group.window_maps + group.dependent_maps:
-            out[cm.cfg.id] = self._guard(
-                cm.cfg, lambda cm=cm: fin_futs[cm.cfg.id].result()
-            )
-
-        for ca in group.aggs:
-            out[ca.cfg.id] = self._guard(
-                ca.cfg, lambda ca=ca: self._finish_agg(ca, values)
-            )
-
-        for cu in group.uniques:
-            out[cu.cfg.id] = self._guard(
-                cu.cfg,
-                lambda cu=cu: self._finish_unique(
-                    cu, gdf, element_count, int(values.get(f"nc__{cu.cfg.id}", 0) or 0),
-                    violation_frames,
-                    precomputed=fut_unique[cu.cfg.id].result(),
-                ),
-            )
+            passes.release()
 
     # ---- map expectations -------------------------------------------------
     def _map_flags(self, cond, gdf: DataFrame, index_cols: list[str]) -> DataFrame:
@@ -765,113 +729,67 @@ class SuiteRunner:
         )
 
     # ---- uniqueness ---------------------------------------------------------
-    def _unique_precompute(self, cu: CompiledUnique, gdf: DataFrame) -> dict:
-        """The heavy Spark jobs of one uniqueness check — runs on a worker
-        thread concurrently with the bundle/window passes (_run_group)."""
-        domain = gdf.filter(~unique_missing(cu))
-
-        if (
-            cu.hll_gate
-            and cu.mostly is None
-            and cu.result_format["result_format"] == "BOOLEAN_ONLY"
-        ):
-            # HLL fast gate (SURVEY.md §2.3 column_values.unique): when the
-            # approximate distinct count is far below the row count the key
-            # is *certainly* duplicated (HLL rsd=0.5% → 5σ margin), so a
-            # BOOLEAN_ONLY check can fail without the exact groupBy pass.
-            # A near-equal estimate proves nothing (HLL may overcount), so
-            # the pass/boundary cases fall through to the exact pass.
-            row = domain.agg(
-                F.approx_count_distinct(F.struct(*cu.key_cols), 0.005).alias("ad"),
-                F.count(F.lit(1)).alias("n"),
-            ).collect()[0]
-            if row["n"] and row["ad"] < row["n"] * (1 - 0.025):
-                return {"gate_failed": True}
-
-        # auto skew strategy: salt single-column keys (hot conv_id), plain
-        # groupBy for compound keys whose hash spreads uniformly (skew.py)
-        vc = skew_value_counts(
-            domain, cu.key_cols, salted=cu.cfg.kwargs.get("salted")
-        )
-        dups = vc.filter(F.col("count") > 1).persist(StorageLevel.MEMORY_AND_DISK)
-        stats = dups.agg(
-            F.coalesce(F.sum("count"), F.lit(0)).alias("uc"),
-            F.count(F.lit(1)).alias("dup_keys"),
-        ).collect()[0]
-        return {"gate_failed": False, "domain": domain, "dups": dups,
-                "stats": stats}
-
     def _finish_unique(
         self,
         cu: CompiledUnique,
         gdf: DataFrame,
         element_count: int,
-        null_count: int,
+        values: dict[str, Any],
+        dups: DataFrame,
         violation_frames: list[DataFrame],
-        precomputed: dict | None = None,
     ) -> ExpectationValidationResult:
-        """Key uniqueness via skew-aware two-level groupBy — never the
+        """Key uniqueness from the skew-aware value-count pass — never the
         reference's full-table ``Window.partitionBy`` (SURVEY.md §4.3).
         Row-level marking parity: ALL rows of a duplicated key are
-        unexpected."""
-        pre = precomputed if precomputed is not None else self._unique_precompute(cu, gdf)
-        if pre.get("gate_failed"):
-            return ExpectationValidationResult(
-                success=False,
-                expectation_config=cu.cfg.to_dict(),
-                result={},
-            )
-        domain, dups, stats = pre["domain"], pre["dups"], pre["stats"]
-        try:
-            unexpected_count = int(stats["uc"])
-            dup_keys = int(stats["dup_keys"])
+        unexpected; partial lists and top-k read the duplicate-key frame."""
+        null_count = int(values.get(f"nc__{cu.cfg.id}") or 0)
+        unexpected_count = int(values.get(f"uc__{cu.cfg.id}") or 0)
+        dup_keys = int(values.get(f"dk__{cu.cfg.id}") or 0)
 
-            rf = cu.result_format
-            n_partial = rf["partial_unexpected_count"]
-            partial_list: list[Any] = []
-            partial_counts: list[dict[str, Any]] = []
-            if rf["result_format"] != "BOOLEAN_ONLY" and unexpected_count > 0:
-                # reference marks every row of a duplicated key unexpected →
-                # partial list repeats each key `count` times (capped)
-                key_struct = (
-                    F.col(cu.key_cols[0])
-                    if len(cu.key_cols) == 1
-                    else F.struct(*cu.key_cols)
+        rf = cu.result_format
+        n_partial = rf["partial_unexpected_count"]
+        partial_list: list[Any] = []
+        partial_counts: list[dict[str, Any]] = []
+        if rf["result_format"] != "BOOLEAN_ONLY" and unexpected_count > 0:
+            # reference marks every row of a duplicated key unexpected →
+            # partial list repeats each key `count` times (capped)
+            key_struct = (
+                F.col(cu.key_cols[0])
+                if len(cu.key_cols) == 1
+                else F.struct(*cu.key_cols)
+            )
+            head = (
+                dups.select(
+                    F.explode(
+                        F.array_repeat(
+                            key_struct, F.least(F.col("count"), F.lit(n_partial)).cast("int")
+                        )
+                    ).alias("v")
                 )
-                head = (
-                    dups.select(
-                        F.explode(
-                            F.array_repeat(
-                                key_struct, F.least(F.col("count"), F.lit(n_partial)).cast("int")
-                            )
-                        ).alias("v")
-                    )
+                .limit(n_partial)
+                .collect()
+            )
+            partial_list = [_row_value(r["v"]) for r in head]
+            if rf["result_format"] in ("SUMMARY", "COMPLETE"):
+                top = (
+                    dups.orderBy(F.desc("count"), *cu.key_cols)
                     .limit(n_partial)
                     .collect()
                 )
-                partial_list = [_row_value(r["v"]) for r in head]
-                if rf["result_format"] in ("SUMMARY", "COMPLETE"):
-                    top = (
-                        dups.orderBy(F.desc("count"), *cu.key_cols)
-                        .limit(n_partial)
-                        .collect()
-                    )
-                    partial_counts = [
-                        {
-                            "value": _row_value(r[cu.key_cols[0]])
-                            if len(cu.key_cols) == 1
-                            else {c: _row_value(r[c]) for c in cu.key_cols},
-                            "count": int(r["count"]),
-                        }
-                        for r in top
-                    ]
+                partial_counts = [
+                    {
+                        "value": _row_value(r[cu.key_cols[0]])
+                        if len(cu.key_cols) == 1
+                        else {c: _row_value(r[c]) for c in cu.key_cols},
+                        "count": int(r["count"]),
+                    }
+                    for r in top
+                ]
 
-            if self.violations_path and unexpected_count > 0:
-                violation_frames.append(unique_violations(
-                    cu, domain, dups, self._effective_index_cols(gdf)
-                ))
-        finally:
-            dups.unpersist()
+        if self.violations_path and unexpected_count > 0:
+            violation_frames.append(unique_violations(
+                cu, gdf, dups, self._effective_index_cols(gdf)
+            ))
 
         success = calc_map_success(element_count, null_count, unexpected_count, cu.mostly)
         result = format_map_result(

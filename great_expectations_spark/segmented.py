@@ -5,30 +5,19 @@ distinct value of ``group_by`` (per source, per language, per day, per
 tenant) and returns a long-format DataFrame of per-segment results.
 
 The reference can only express this as N filtered validation runs — N
-full scans. Here it is the plan ``SuiteRunner`` runs: ``plan_suite``
-groups the suite into domain groups (one per distinct ``row_condition``),
-and every pass of a group runs over ``df.filter(row_condition)`` with the
-segment column in front — a ``groupBy(segment)`` where the runner
-aggregates the whole frame — so a 10,000-segment quality report costs the
-same passes as a single-segment one:
-
-- **bundled pass** — the group's ``bundle_exprs()``: the shared
-  ``element_count``, every map counter and every aggregate metric
-  (duplicates computed once), plus the wave-1 stats of two-wave conditions;
-- **wave 2** — two-wave conditions (z-score) rebuilt through
-  ``rebuild_expr`` over their segment's wave-1 stats, broadcast-joined back
-  onto the batch, all counted in one second groupBy;
-- **value counts** — one keyed pass per value-counts column
-  (most_common_value: modes-with-ties via a broadcast max-join, never a
-  per-segment collect_list of every distinct value);
-- **uniqueness** — one keyed pass per uniqueness expectation;
-- **window** — one pass per group: increasing/decreasing windowed by
-  ``(segment, *partition_by)`` through the runner's own
-  :func:`~great_expectations_spark.plans.planner.monotone_windows`
-  rewrite, so lag never crosses a segment boundary.
-
-Every aggregate finishes through its metric's ``finalize`` over its
-segment's values, as in the runner.
+full scans. Here it is the plan ``SuiteRunner`` runs, through the
+runner's own passes: ``plan_suite`` groups the suite into domain groups
+(one per distinct ``row_condition``), and
+:func:`~great_expectations_spark.runner.run_passes` runs every group over
+``df.filter(row_condition)`` with the segment as its key — where the
+runner passes no key at all — so a 10,000-segment quality report costs the
+same passes as a whole-table run: the bundled pass, z-score's wave 2 over
+the per-segment wave-1 stats, value counts, uniqueness and the window pass
+(increasing/decreasing windowed by ``(segment, *partition_by)`` through the
+runner's :func:`~great_expectations_spark.plans.planner.monotone_windows`
+rewrite, so lag never crosses a segment boundary). This module only
+finishes the values of each segment: every aggregate through its metric's
+``finalize``, every map and uniqueness check through ``calc_map_success``.
 
 One ``row_condition`` rule covers every kind: a segment with no rows inside
 a group's ``row_condition`` gets no row for that group's expectations —
@@ -56,20 +45,15 @@ from __future__ import annotations
 from typing import Any
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.storagelevel import StorageLevel
 
-from great_expectations_spark.functions.aggregates import safe_alias
-from great_expectations_spark.plans.planner import (
-    DomainGroup,
-    monotone_windows,
-    plan_suite,
-)
+from great_expectations_spark.plans.planner import monotone_windows, plan_suite
 from great_expectations_spark.registry import CompiledAgg
 from great_expectations_spark.result import calc_map_success
 from great_expectations_spark.runner import (
-    _row_value,
+    GroupPasses,
+    SparkThreadPool,
     map_violations,
-    unique_missing,
+    run_passes,
     unique_violations,
 )
 from great_expectations_spark.suite import ExpectationSuite
@@ -151,28 +135,42 @@ def _validate_rows(
             )
         return rows
 
-    seg = F.col(group_by).cast("string")
-    frames: list[DataFrame] | None = [] if violations_path else None
-    # compiled expectation → its group's {segment: {alias: value}}
-    values_of: dict[int, dict[Any, dict[str, Any]]] = {}
-    to_unpersist: list[DataFrame] = []
-    # every persisted relation is released even when a pass raises
-    # (max_groups overflow, a failing violations write): a checkpointed
-    # per-partition loop must not accumulate CacheManager entries
+    # the segment as a string key column: every pass runs keyed by it
+    keyed = df.withColumn("__g", F.col(group_by).cast("string"))
+    frames: list[DataFrame] = []
+    # compiled expectation → its group's {(segment,): {alias: value}}
+    values_of: dict[int, dict[tuple, dict[str, Any]]] = {}
+    done: list[GroupPasses] = []
+    # every cached relation is released even when a pass raises (max_groups
+    # overflow, a failing violations write): a checkpointed per-partition
+    # loop must not accumulate CacheManager entries
     try:
-        for group in plan.groups:
-            gdf = (
-                df.filter(F.expr(group.row_condition))
-                if group.row_condition else df
-            )
-            values = _run_group(
-                group, gdf, seg, capped_collect, frames, index_cols,
-                to_unpersist,
-            )
-            for compiled in (group.maps + group.window_maps
-                             + group.dependent_maps + group.aggs
-                             + group.uniques):
-                values_of[id(compiled)] = values
+        with SparkThreadPool(df.sparkSession) as pool:
+            for group in plan.groups:
+                gdf = (
+                    keyed.filter(F.expr(group.row_condition))
+                    if group.row_condition else keyed
+                )
+                passes = run_passes(group, gdf, ["__g"], pool, capped_collect)
+                done.append(passes)
+                for compiled in (group.maps + group.window_maps
+                                 + group.dependent_maps + group.aggs
+                                 + group.uniques):
+                    values_of[id(compiled)] = passes.values
+                if not violations_path:
+                    continue
+                for cm in (group.maps + group.window_maps
+                           + group.dependent_maps):
+                    cond, frame = passes.conds[cm.cfg.id]
+                    frames.append(map_violations(
+                        cm.cfg.expectation_type, cond, frame, index_cols,
+                        segment="__g",
+                    ))
+                for cu in group.uniques:
+                    frames.append(unique_violations(
+                        cu, gdf, passes.dups[cu.cfg.id], index_cols,
+                        segment="__g",
+                    ))
 
         if frames:
             vout = frames[0]
@@ -182,14 +180,14 @@ def _validate_rows(
                 violations_path
             )
     finally:
-        for rel in to_unpersist:
-            rel.unpersist()
+        for passes in done:
+            passes.release()
 
     out: list[tuple] = []
     for (_kind, compiled), cfg in zip(plan.ordered, suite):
         if id(compiled) not in values_of:
             continue  # a meta/relational/query kind skipped by strict=False
-        for g, vals in values_of[id(compiled)].items():
+        for (g,), vals in values_of[id(compiled)].items():
             ec = int(vals.get("element_count") or 0)
             if isinstance(compiled, CompiledAgg):
                 observed = compiled.metric.finalize(vals)
@@ -206,149 +204,3 @@ def _validate_rows(
             out.append((g, cfg.id, cfg.expectation_type, bool(ok), ec,
                         missing, unexpected, observed))
     return out
-
-
-def _run_group(
-    group: DomainGroup,
-    gdf: DataFrame,
-    seg: F.Column,
-    capped_collect,
-    frames: list[DataFrame] | None,
-    index_cols: list[str],
-    to_unpersist: list[DataFrame],
-) -> dict[Any, dict[str, Any]]:
-    """One domain group's passes, each keyed by segment. Returns
-    ``{segment: {alias: value}}`` under the runner's aliases
-    (``element_count``, ``nc__<id>``, ``uc__<id>``, metric aliases). The
-    uniqueness and window passes count ``element_count`` themselves, so a
-    group without a bundled pass still reports it for every segment."""
-    values: dict[Any, dict[str, Any]] = {}
-
-    def merge(rows: list) -> None:
-        for r in rows:
-            d = r.asDict()
-            values.setdefault(d.pop("__g"), {}).update(
-                {k: _row_value(v) for k, v in d.items()}
-            )
-
-    if group.maps or group.aggs or group.dependent_maps:
-        bundled = gdf.groupBy(seg.alias("__g")).agg(
-            *[e.alias(a) for a, e in group.bundle_exprs().items()]
-        )
-        if group.dependent_maps:
-            # wave 2 reads the same per-segment stats the collect below
-            # reads — persist so the aggregation runs once
-            bundled = bundled.persist(StorageLevel.MEMORY_AND_DISK)
-            to_unpersist.append(bundled)
-        merge(capped_collect(bundled))
-
-        if group.dependent_maps:
-            deps = dict.fromkeys(
-                a for cm in group.dependent_maps for a in cm.condition.requires
-            )
-            joined = gdf.select(seg.alias("__seg"), "*").join(
-                F.broadcast(bundled.select(
-                    F.col("__g").alias("__dg"), *[F.col(a) for a in deps]
-                )),
-                on=F.col("__seg").eqNullSafe(F.col("__dg")),
-                how="left",
-            )
-            conds = {
-                cm.cfg.id: cm.condition.rebuild_expr(
-                    {a: F.col(a) for a in cm.condition.requires}
-                )
-                for cm in group.dependent_maps
-            }
-            merge(capped_collect(
-                joined.groupBy(F.col("__seg").alias("__g")).agg(*[
-                    F.sum(F.when(c.unexpected, 1).otherwise(0))
-                    .alias(f"uc__{eid}")
-                    for eid, c in conds.items()
-                ])
-            ))
-            if frames is not None:
-                frames.extend(
-                    map_violations(cm.cfg.expectation_type,
-                                   conds[cm.cfg.id], joined, index_cols,
-                                   segment=F.col("__seg"))
-                    for cm in group.dependent_maps
-                )
-        if frames is not None:
-            frames.extend(
-                map_violations(cm.cfg.expectation_type, cm.condition, gdf,
-                               index_cols, segment=seg)
-                for cm in group.maps
-            )
-
-    for col in group.value_counts_columns:
-        alias = safe_alias("most_common", col)
-        vc = (
-            gdf.filter(F.col(col).isNotNull())
-            .groupBy(seg.alias("__g"), F.col(col).alias("__v"))
-            .agg(F.count(F.lit(1)).alias("__cnt"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        try:
-            mx = vc.groupBy(F.col("__g").alias("__gm")).agg(
-                F.max("__cnt").alias("__mx")
-            )
-            merge(capped_collect(
-                vc.join(
-                    F.broadcast(mx),
-                    on=F.col("__g").eqNullSafe(F.col("__gm"))
-                    & (F.col("__cnt") == F.col("__mx")),
-                )
-                .groupBy("__g")
-                .agg(F.sort_array(F.collect_list("__v")).alias(alias))
-            ))
-        finally:
-            vc.unpersist()
-        # a segment whose column is entirely NULL has no value counts —
-        # [] mirrors the runner's mode_job empty result
-        for vals in values.values():
-            vals.setdefault(alias, [])
-
-    for cu in group.uniques:
-        per_key = (
-            gdf.groupBy(seg.alias("__g"), unique_missing(cu).alias("__miss"),
-                        *[F.col(c) for c in cu.key_cols])
-            .agg(F.count(F.lit(1)).alias("__cnt"))
-        )
-        if frames is not None:
-            # the violations join reads the same keyed counts as the
-            # per-segment rollup below — persist so the shuffle runs once
-            per_key = per_key.persist(StorageLevel.MEMORY_AND_DISK)
-            to_unpersist.append(per_key)
-        dup = ~F.col("__miss") & (F.col("__cnt") > 1)
-        merge(capped_collect(per_key.groupBy("__g").agg(
-            F.sum("__cnt").alias("element_count"),
-            F.sum(F.when(F.col("__miss"), F.col("__cnt")).otherwise(0))
-            .alias(f"nc__{cu.cfg.id}"),
-            F.sum(F.when(dup, F.col("__cnt")).otherwise(0))
-            .alias(f"uc__{cu.cfg.id}"),
-        )))
-        if frames is not None:
-            frames.append(unique_violations(
-                cu, gdf.select(seg.alias("__g"), "*"),
-                per_key.filter(dup), index_cols, segment="__g",
-            ))
-
-    if group.window_maps:
-        flags: dict[str, F.Column] = {}
-        for cm in group.window_maps:
-            flags[f"nc__{cm.cfg.id}"] = cm.condition.missing.cast("int")
-            flags[f"uc__{cm.cfg.id}"] = cm.condition.unexpected.cast("int")
-        merge(capped_collect(
-            gdf.select(seg.alias("__g"),
-                       *[e.alias(a) for a, e in flags.items()])
-            .groupBy("__g")
-            .agg(F.count(F.lit(1)).alias("element_count"),
-                 *[F.sum(a).alias(a) for a in flags])
-        ))
-        if frames is not None:
-            frames.extend(
-                map_violations(cm.cfg.expectation_type, cm.condition, gdf,
-                               index_cols, segment=seg)
-                for cm in group.window_maps
-            )
-    return values

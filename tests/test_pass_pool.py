@@ -1,0 +1,98 @@
+"""The engine's thread pools keep the caller's Spark local properties: every
+job a validation launches — passes, relational/query checks, EVR finishing,
+checkpoint partitions — is filed under the caller's job group, so
+``cancelJobGroup`` stops a validation and job tags reach every pass."""
+
+from __future__ import annotations
+
+from pathlib import Path
+
+import pytest
+from pyspark.sql import functions as F
+
+from great_expectations_spark import ExpectationSuite, SuiteRunner
+from great_expectations_spark.checkpoint import Checkpoint
+from great_expectations_spark.schema import generate_tools_dim, generate_transcripts
+
+NORTH_STAR = Path(__file__).resolve().parents[1] / "suites" / "north_star.json"
+
+
+@pytest.fixture(scope="module")
+def mixed(spark):
+    rows = [(s, i % 4, i, float(i % 7), i // 3) for s in ("a", "b")
+            for i in range(30)]
+    df = spark.createDataFrame(
+        rows, "seg string, flag int, t int, v double, k int")
+    suite = ExpectationSuite("pool")
+    suite.add("expect_column_values_to_be_between", column="v",
+              min_value=0, max_value=5, result_format="SUMMARY")
+    suite.add("expect_column_mean_to_be_between", column="v",
+              min_value=0, max_value=10)
+    suite.add("expect_column_values_to_be_unique", column="k",
+              result_format="SUMMARY")
+    suite.add("expect_column_values_to_be_increasing", column="t",
+              order_by="t", partition_by="flag")
+    suite.add("expect_column_most_common_value_to_be_in_set", column="flag",
+              value_set=[0])
+    suite.add("expect_column_value_z_scores_to_be_less_than", column="v",
+              threshold=1.0, row_condition="flag > 1")
+    suite.add("expect_query_to_return_no_unexpected_rows",
+              query="SELECT * FROM {active_batch} WHERE v > 5")
+    return df, suite
+
+
+def test_validate_jobs_land_in_callers_job_group(spark, job_ids, mixed,
+                                                 tmp_path):
+    """Every job of a SuiteRunner.validate run — bundled, wave-2, value
+    counts, uniqueness, window, query, partial lists and the violations
+    write — is filed under the job group set on the calling thread."""
+    df, suite = mixed
+    runner = SuiteRunner(spark, violations_path=str(tmp_path / "v"),
+                         unexpected_index_column_names=["seg", "t"])
+    launched, grouped = job_ids("pool-validate",
+                                lambda: runner.validate(df, suite))
+    assert launched and grouped == launched
+
+
+def test_validate_by_group_jobs_land_in_callers_job_group(spark, job_ids,
+                                                         mixed):
+    from great_expectations_spark import validate_by_group
+
+    df, suite = mixed
+    launched, grouped = job_ids(
+        "pool-segmented",
+        lambda: validate_by_group(df, suite, "seg", strict=False).collect(),
+    )
+    assert launched and grouped == launched
+
+
+def test_checkpoint_partition_pool_keeps_job_group(spark, job_ids, mixed,
+                                                   tmp_path):
+    df, suite = mixed
+    ck = Checkpoint(spark, manifest_path=str(tmp_path / "m"),
+                    evr_path=str(tmp_path / "evr"))
+    launched, grouped = job_ids(
+        "pool-checkpoint",
+        lambda: ck.run(df, suite, run_id="r", partition_col="seg",
+                       max_concurrent_partitions=2),
+    )
+    assert launched and grouped == launched
+
+
+def test_north_star_runner_job_pin(spark, job_ids, tmp_path):
+    """Spark jobs of one SuiteRunner.validate of the north-star suite on a
+    small parquet table, all under the caller's job group: no more than
+    the previous executor's 20 (its bundled aggregation split into column
+    cohorts; measured by job-id delta with 8 local cores and 8 shuffle
+    partitions, since its pass threads dropped the job group)."""
+    path = str(tmp_path / "transcripts")
+    generate_transcripts(spark, n_turns=2_000, seed=3).write.parquet(path)
+    df = spark.read.parquet(path).withColumn("__text_len", F.length("text"))
+    suite = ExpectationSuite.from_json(NORTH_STAR.read_text())
+    runner = SuiteRunner(spark, tables={"tools": generate_tools_dim(spark)},
+                         unexpected_index_column_names=["conv_id", "turn_idx"])
+    runner.validate(df, suite)   # plan cache, JIT warm-up
+    launched, grouped = job_ids("north-star-pin",
+                                lambda: runner.validate(df, suite))
+    assert grouped == launched
+    assert 0 < len(launched) <= 20, len(launched)

@@ -199,54 +199,6 @@ def test_rbp_multi_batch_is_one_aggregation(spark):
     assert len(rows) == 3
 
 
-def test_bundle_cohorts_are_column_disjoint(spark, tpath):
-    """The P1 bundled agg splits into column-disjoint cohorts: narrow
-    numeric metrics must not share a cohort (and hence a scan) with the
-    wide text column's metrics, and every column lands in exactly one
-    cohort — total bytes read equal the single union scan."""
-    from great_expectations_spark import ExpectationSuite
-    from great_expectations_spark.plans.planner import plan_suite
-    from great_expectations_spark.runner import _bundle_cohorts
-
-    suite = ExpectationSuite("cohorts")
-    suite.add("expect_column_values_to_not_be_null", column="conv_id")
-    suite.add("expect_column_mean_to_be_between", column="turn_idx",
-              min_value=0, max_value=1e9)
-    suite.add("expect_column_value_lengths_to_be_between", column="text",
-              min_value=0, max_value=10_000)
-    suite.add("expect_column_values_to_be_in_set", column="role",
-              value_set=["system", "user", "assistant", "tool"])
-
-    plan = plan_suite(suite)
-    (group,) = plan.groups
-    items = group.bundle_items()
-    cohorts = _bundle_cohorts(items, max_cohorts=4)
-    assert 2 <= len(cohorts) <= 4
-
-    # alias sets partition the full bundle
-    all_aliases = [a for _, a, _ in items]
-    cohort_aliases = [set(c) for c in cohorts]
-    assert set().union(*cohort_aliases) == set(all_aliases)
-    for i in range(len(cohort_aliases)):
-        for j in range(i + 1, len(cohort_aliases)):
-            assert not (cohort_aliases[i] & cohort_aliases[j])
-
-    # each cohort's exprs read disjoint base columns at the parquet scan
-    df = spark.read.parquet(tpath)
-    reads = []
-    for c in cohorts:
-        plan_txt = _plan(df.agg(*[e.alias(a) for a, e in c.items()]))
-        scan = [ln for ln in plan_txt.splitlines() if "ReadSchema" in ln][0]
-        schema = scan.split("ReadSchema:")[1]
-        reads.append({col for col in ("conv_id", "turn_idx", "text", "role")
-                      if col in schema})
-    for i in range(len(reads)):
-        for j in range(i + 1, len(reads)):
-            assert not (reads[i] & reads[j]), reads
-    # the wide text column is scanned by exactly one cohort
-    assert sum("text" in r for r in reads) == 1, reads
-
-
 def test_repetition_profile_single_explode(spark):
     """repetition_profile must be one linear chain: ONE Generate feeding
     one (id,n,gram)-keyed shuffle (line rows ride the same explode under

@@ -79,25 +79,55 @@ def test_max_groups_guard(spark):
 
 def test_matches_per_group_suite_runner(spark, seg_df):
     """Segmented results equal running the same suite on each filtered
-    segment — the N-scan semantics in one pass."""
+    segment (the NULL segment included) — the N-scan semantics in one pass,
+    through the same keyed passes. The suite covers single-column
+    uniqueness (salted in both executors), most_common_value with a
+    four-way tie (segment a) and over an all-NULL column (segment b),
+    z-score over a zero-stddev segment (b) and a windowed check."""
     from great_expectations_spark import validate
 
+    df = (
+        seg_df.withColumn("u", F.col("k") % 15)
+        .withColumn("m", F.when(F.col("seg") == "a", F.col("k") % 4))
+    )
     suite = ExpectationSuite("eq")
     suite.add("expect_column_values_to_not_be_null", column="text",
               mostly=0.6)
     suite.add("expect_column_mean_to_be_between", column="v",
               min_value=0.0, max_value=10.0)
+    suite.add("expect_column_values_to_be_unique", column="u")
+    suite.add("expect_column_most_common_value_to_be_in_set", column="m",
+              value_set=[0, 1, 2, 3], ties_okay=True)
+    suite.add("expect_column_most_common_value_to_be_in_set", column="m",
+              value_set=[0])
+    suite.add("expect_column_value_z_scores_to_be_less_than", column="v",
+              threshold=1.5)
+    suite.add("expect_column_values_to_be_decreasing", column="v",
+              order_by="k")
     seg_rows = {
-        (r["group"], r["expectation_type"]): r
-        for r in validate_by_group(seg_df, suite, "seg").collect()
+        (r["group"], r["expectation_id"]): (
+            r["success"], r["missing_count"], r["unexpected_count"])
+        for r in validate_by_group(df, suite, "seg").collect()
     }
-    for g in ("a", "b"):
-        res = validate(seg_df.filter(F.col("seg") == g), suite)
-        for r in res.results:
-            s = seg_rows[(g, r.expectation_config["expectation_type"])]
-            assert s["success"] == r.success
-            if "unexpected_count" in r.result:
-                assert s["unexpected_count"] == r.result["unexpected_count"]
+    assert len(seg_rows) == 3 * len(suite.expectations)
+    for g in ("a", "b", None):
+        res = validate(df.filter(F.col("seg").eqNullSafe(g)), suite)
+        for cfg, r in zip(suite, res.results):
+            assert not r.exception_info["raised_exception"], r.exception_info
+            assert seg_rows[(g, cfg.id)] == (
+                r.success, int(r.result.get("missing_count") or 0),
+                int(r.result.get("unexpected_count") or 0),
+            ), (g, cfg.expectation_type)
+    ids = [c.id for c in suite]
+    # the kinds really exercise their edges: duplicates, ties, an all-NULL
+    # column, a zero-stddev segment, window failures
+    assert seg_rows[("a", ids[2])] == (False, 0, 40)
+    assert seg_rows[("b", ids[2])] == (False, 0, 10)
+    assert seg_rows[("a", ids[3])][0] and not seg_rows[("a", ids[4])][0]
+    assert seg_rows[("b", ids[5])] == (False, 0, 20)
+    assert seg_rows[("a", ids[5])] == (False, 0, 8)
+    assert seg_rows[("a", ids[6])] == (False, 0, 36)
+    assert seg_rows[("b", ids[6])] == (True, 0, 0)
 
 
 def test_max_groups_guard_applies_to_unique_pass_too(spark):
@@ -630,12 +660,13 @@ def test_segmented_sink_equals_runner_sink(spark, tmp_path, partly_null_df):
     assert '{"A":1,"B":2}' in pair
 
 
-def test_mixed_suite_job_count_pin(spark):
+def test_mixed_suite_job_count_pin(spark, job_ids):
     """Spark jobs of one validate_by_group over a mixed suite in which each
     distinct row_condition also carries an aggregate or a uniqueness check:
-    planning through the runner's domain groups costs no more jobs than
-    the previous executor (27 on this suite, measured with 8 local cores
-    and 8 shuffle partitions)."""
+    the runner's keyed passes cost no more jobs than the previous executor
+    (27 on this suite, measured with 8 local cores and 8 shuffle
+    partitions). The passes run on pool threads, and every job they launch
+    is filed under the caller's job group."""
     rows = [(s, i % 4, i, float(i % 7), i // 3) for s in ("a", "b")
             for i in range(30)]
     df = spark.createDataFrame(
@@ -660,11 +691,9 @@ def test_mixed_suite_job_count_pin(spark):
     suite.add("expect_column_value_z_scores_to_be_less_than", column="v",
               threshold=3.0, row_condition="flag > 1")
     validate_by_group(df, suite, "seg").collect()   # plan cache, JIT warm-up
-    sc = spark.sparkContext
-    sc.setJobGroup("segmented-job-pin", "segmented job count")
-    try:
-        validate_by_group(df, suite, "seg").collect()
-    finally:
-        sc.setJobGroup("", "")
-    jobs = len(sc.statusTracker().getJobIdsForGroup("segmented-job-pin"))
-    assert jobs <= 27, jobs
+    launched, grouped = job_ids(
+        "segmented-job-pin",
+        lambda: validate_by_group(df, suite, "seg").collect(),
+    )
+    assert grouped == launched
+    assert 0 < len(launched) <= 27, len(launched)

@@ -154,7 +154,7 @@ def main() -> None:
             "  tmpfs (a real cluster's per-node NVMe equivalent — the virtio\n"
             "  disk otherwise serializes shuffle I/O across all threads);\n"
             "  independent suite passes run as concurrent Spark jobs\n"
-            "  (SuiteRunner.max_concurrent_jobs), so scheduler gaps of one\n"
+            "  on the runner's thread pool, so scheduler gaps of one\n"
             "  pass are filled by another.\n"
             "- the suite compiles to a FIXED number of jobs independent of\n"
             "  input size — per-job driver overhead amortizes at cluster\n"
