@@ -19,8 +19,10 @@ whole-table run, the segment for ``validate_by_group``):
   flags projected then counted in one pass.
 - **wave 2** — aggregate-dependent map counters (z-score), rebuilt through
   ``rebuild_expr`` over the wave-1 values.
-- **value counts / uniqueness** — one pass per value-counts column and one
-  skew-aware value count per uniqueness check (exact; no approximate gate).
+- **value counts / uniqueness / contiguity** — one pass per value-counts
+  column, one skew-aware value count per uniqueness check (exact; no
+  approximate gate) and one per-group stats aggregation per contiguity
+  check.
 - **violations** — a single melt pass over all failing map rows feeding
   the violations sink.
 
@@ -38,6 +40,7 @@ from pyspark.sql import Column
 from great_expectations_spark.registry import (
     Compiled,
     CompiledAgg,
+    CompiledContiguous,
     CompiledMap,
     CompiledMeta,
     CompiledQuery,
@@ -116,16 +119,9 @@ class DomainGroup:
     dependent_maps: list[CompiledMap] = field(default_factory=list)
     aggs: list[CompiledAgg] = field(default_factory=list)
     uniques: list[CompiledUnique] = field(default_factory=list)
+    contiguous: list[CompiledContiguous] = field(default_factory=list)
     #: columns whose exact value_counts the groupBy pass must produce
     value_counts_columns: list[str] = field(default_factory=list)
-
-    @property
-    def n_passes(self) -> int:
-        n = 1 if (self.maps or self.aggs or self.dependent_maps) else 0
-        n += 1 if self.window_maps else 0
-        n += 1 if self.dependent_maps else 0
-        n += len(self.uniques) + len(self.value_counts_columns)
-        return n
 
     def bundle_exprs(self) -> dict[str, Column]:
         """The bundled pass's aggregate expressions, deduped by alias (same
@@ -157,15 +153,11 @@ class SuitePlan:
     metas: list[CompiledMeta]
     relationals: list[CompiledRelational]
     queries: list[CompiledQuery]
-    #: preserves suite order for EVR output: (kind, group_idx_or_None, obj)
+    #: preserves suite order for EVR output: (kind, compiled)
     ordered: list[tuple[str, Compiled]] = field(default_factory=list)
     #: configs that failed to compile (bad kwargs / unknown type) — the
     #: runner turns these into exception EVRs under catch_exceptions
-    broken: list[tuple[Any, Exception, str]] = field(default_factory=list)
-
-    @property
-    def total_passes(self) -> int:
-        return sum(g.n_passes for g in self.groups)
+    broken: list[tuple[Any, Exception]] = field(default_factory=list)
 
 
 # (app_id, suite_hash) → SuitePlan. Column expressions are JVM-session-bound
@@ -210,14 +202,12 @@ def _plan_suite_uncached(suite: ExpectationSuite) -> SuitePlan:
             groups[row_condition] = DomainGroup(row_condition=row_condition)
         return groups[row_condition]
 
-    broken: list[tuple[Any, Exception, str]] = []
+    broken: list[tuple[Any, Exception]] = []
     for cfg in suite:
         try:
             compiled = compile_expectation(cfg)
         except Exception as exc:  # noqa: BLE001 — per-expectation isolation
-            import traceback
-
-            broken.append((cfg, exc, traceback.format_exc()))
+            broken.append((cfg, exc))
             continue
         if isinstance(compiled, CompiledMap):
             g = group_for(cfg.row_condition)
@@ -240,6 +230,9 @@ def _plan_suite_uncached(suite: ExpectationSuite) -> SuitePlan:
         elif isinstance(compiled, CompiledUnique):
             group_for(cfg.row_condition).uniques.append(compiled)
             ordered.append(("unique", compiled))
+        elif isinstance(compiled, CompiledContiguous):
+            group_for(cfg.row_condition).contiguous.append(compiled)
+            ordered.append(("contiguous", compiled))
         elif isinstance(compiled, CompiledMeta):
             metas.append(compiled)
             ordered.append(("meta", compiled))

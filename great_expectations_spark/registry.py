@@ -13,6 +13,8 @@ Compiled kinds:
   success rule; all exprs dedup into the same bundled pass.
 - :class:`CompiledUnique` — key-uniqueness checks (groupBy-shaped; salted
   two-level aggregation at scale — never the reference's full-table window).
+- :class:`CompiledContiguous` — per-group dense-sequence checks (a keyed
+  aggregation counted over groups).
 - :class:`CompiledMeta` — schema-only checks, zero scans.
 - :class:`CompiledRelational` — cross-table checks (left-anti referential
   joins, row-count comparisons).
@@ -64,6 +66,15 @@ class CompiledUnique:
 
 
 @dataclass
+class CompiledContiguous:
+    cfg: ExpectationConfiguration
+    column: str
+    group_by: list[str]
+    start: int
+    mostly: float | None
+
+
+@dataclass
 class CompiledMeta:
     cfg: ExpectationConfiguration
     run: Callable[[DataFrame], tuple[bool, dict[str, Any]]]
@@ -75,14 +86,6 @@ class CompiledRelational:
     run: Callable[[DataFrame, dict[str, DataFrame]], tuple[bool, dict[str, Any]]]
     #: referential map checks also emit violation rows via this builder
     violations: Callable[[DataFrame, dict[str, DataFrame]], DataFrame] | None = None
-    mostly: float | None = None
-    result_format: dict[str, Any] = field(default_factory=lambda: parse_result_format(None))
-    #: compile-time capability flag: run() accepts the per-call
-    #: sink_violations= keyword (compiled objects are SHARED across
-    #: runners and threads via the plan cache, so per-RUN hints travel as
-    #: run() keyword arguments — this frozen flag only says the keyword
-    #: exists, sparing the runner reflection)
-    accepts_sink_hint: bool = False
 
 
 @dataclass
@@ -93,7 +96,8 @@ class CompiledQuery:
 
 
 Compiled = (
-    CompiledMap | CompiledAgg | CompiledUnique | CompiledMeta | CompiledRelational | CompiledQuery
+    CompiledMap | CompiledAgg | CompiledUnique | CompiledContiguous | CompiledMeta
+    | CompiledRelational | CompiledQuery
 )
 
 _REGISTRY: dict[str, Callable[[ExpectationConfiguration], Compiled]] = {}
@@ -711,13 +715,7 @@ def _compile_exist_in(cfg: ExpectationConfiguration) -> CompiledRelational:
             "unexpected_count": int(unexpected),
         }
 
-    return CompiledRelational(
-        cfg=cfg,
-        run=run,
-        violations=_viol,
-        mostly=mostly,
-        result_format=parse_result_format(cfg.kwargs.get("result_format")),
-    )
+    return CompiledRelational(cfg=cfg, run=run, violations=_viol)
 
 
 @register("expect_table_row_count_to_equal_other_table")
@@ -733,7 +731,7 @@ def _compile_rc_other(cfg: ExpectationConfiguration) -> CompiledRelational:
 
 
 @register("expect_column_values_to_be_contiguous")
-def _compile_contiguous(cfg: ExpectationConfiguration) -> CompiledRelational:
+def _compile_contiguous(cfg: ExpectationConfiguration) -> CompiledContiguous:
     """Per-group dense-sequence check (extension; no upstream counterpart —
     transcript-native): within each ``group_by`` group, the non-null values
     of ``column`` must be exactly ``start, start+1, …, start+n-1`` — no
@@ -743,117 +741,21 @@ def _compile_contiguous(cfg: ExpectationConfiguration) -> CompiledRelational:
     suite member (e.g. ``column='turn_idx', group_by=['conv_id']``; TPC-H
     analog ``l_linenumber`` per ``l_orderkey`` with ``start=1``).
 
-    ONE shuffle on the group key: groupBy → count/min/max/count_distinct,
-    then a tiny second-stage agg over the per-group rows. A group is never
-    wider than its sequence length (turns per conversation), so there is no
-    hot-key salting concern — per-group state is four scalars regardless of
-    corpus size. ``mostly`` applies over GROUPS (fraction of groups that
-    are contiguous), matching how a user reads "99% of conversations are
-    well-formed"."""
-    column = cfg.kwargs["column"]
-    group_by = list(cfg.kwargs["group_by"])
-    start = int(cfg.kwargs.get("start", 0))
-    mostly = cfg.mostly
-    # run(sink_violations=True) materializes the per-group stats via
-    # localCheckpoint and stashes them here so the violations pass reuses
-    # the computed aggregation instead of re-scanning and re-shuffling the
-    # whole table (the runner always calls run() before violations() on
-    # the same df). localCheckpoint — NOT persist(): CacheManager holds
-    # persisted relations until an explicit unpersist (ContextCleaner
-    # never touches SQL cache entries), which would leak one entry per
-    # compile in a per-partition checkpoint loop; a checkpointed RDD is
-    # plain reference-counted, so dropping the stash entry lets
-    # ContextCleaner reclaim the blocks. The stash is keyed by id(df) AND
-    # verified against a stored strong reference (id() alone could match
-    # a recycled address), holds one entry per IN-FLIGHT frame (compiled
-    # objects are shared across runners and threads via the plan cache,
-    # so concurrent partitions must not clobber each other), and
-    # violations() POPS its entry — consume-once, no growth.
-
-    def _group_stats(df: DataFrame) -> DataFrame:
-        return (
-            df.filter(F.col(column).isNotNull())
-            .groupBy(*group_by)
-            .agg(
-                F.count(F.lit(1)).alias("__n"),
-                F.min(column).alias("__mn"),
-                F.max(column).alias("__mx"),
-                F.count_distinct(F.col(column)).alias("__nd"),
-            )
-        )
-
-    def _bad(stats: DataFrame) -> DataFrame:
-        return stats.filter(
-            ~(
-                (F.col("__mn") == start)
-                & (F.col("__mx") == start + F.col("__n") - 1)
-                & (F.col("__nd") == F.col("__n"))
-            )
-        )
-
-    stash: dict[int, tuple[DataFrame, DataFrame]] = {}
-
-    def _viol(df: DataFrame, tables: dict[str, DataFrame]) -> DataFrame:
-        # rows belonging to broken groups; the bad-group set is small in the
-        # passing regime, so AQE broadcasts the build side (no forced hint —
-        # a wholly-broken table would flag every group). Consumes run()'s
-        # materialized stats when available: ONE aggregation of the table
-        # per validated run, not one per consumer.
-        entry = stash.pop(id(df), None)
-        stats = (
-            entry[1] if entry is not None and entry[0] is df
-            else _group_stats(df)
-        )
-        return df.join(_bad(stats).select(*group_by), on=group_by,
-                       how="left_semi")
-
-    def run(
-        df: DataFrame, tables: dict[str, DataFrame],
-        sink_violations: bool = False,
-    ) -> tuple[bool, dict[str, Any]]:
-        from great_expectations_spark.result import calc_map_success
-
-        stats = _group_stats(df)
-        if sink_violations:
-            # materialize the per-group stats ONLY when violations() will
-            # consume them (the runner passes the hint PER CALL — never an
-            # attribute on this shared, plan-cached object): one
-            # aggregation per validated run shared across both consumers.
-            # Without a sink, run() stays a single streaming groupBy→agg
-            # pass — no checkpoint job, no per-group rows in block storage
-            stats = stats.localCheckpoint(eager=True)
-        row = stats.agg(
-            F.count(F.lit(1)).alias("tg"),
-            F.sum(
-                F.when(
-                    (F.col("__mn") == start)
-                    & (F.col("__mx") == start + F.col("__n") - 1)
-                    & (F.col("__nd") == F.col("__n")),
-                    0,
-                ).otherwise(1)
-            ).alias("bg"),
-        ).collect()[0]
-        # stash only AFTER the verdict job succeeded: an entry inserted
-        # before a failing collect would never be popped (violations()
-        # is skipped when run() raises) and would pin the frame + the
-        # checkpointed blocks forever in the plan-cached closure
-        if sink_violations:
-            stash[id(df)] = (df, stats)
-        total_groups = int(row["tg"] or 0)
-        bad_groups = int(row["bg"] or 0)
-        success = calc_map_success(total_groups, 0, bad_groups, mostly)
-        return success, {
-            "element_count": total_groups,
-            "unexpected_count": bad_groups,
-            "unexpected_percent": (
-                100.0 * bad_groups / total_groups if total_groups else None
-            ),
-        }
-
-    return CompiledRelational(
-        cfg=cfg, run=run, violations=_viol, mostly=mostly,
-        result_format=parse_result_format(cfg.kwargs.get("result_format")),
-        accepts_sink_hint=True,
+    A keyed aggregation, run as a pass of ``runner.run_passes`` in its
+    ``row_condition``'s domain group: ONE shuffle on ``(*keys, *group_by)``
+    for count/min/max/count_distinct, then a tiny second-stage agg per
+    executor key. A group is never wider than its sequence length (turns
+    per conversation), so there is no hot-key salting concern.
+    ``element_count`` counts the groups holding a non-null value and
+    ``mostly`` applies over GROUPS (fraction of groups that are
+    contiguous), matching how a user reads "99% of conversations are
+    well-formed". The violations sink holds every row of a broken group."""
+    return CompiledContiguous(
+        cfg=cfg,
+        column=cfg.kwargs["column"],
+        group_by=list(cfg.kwargs["group_by"]),
+        start=int(cfg.kwargs.get("start", 0)),
+        mostly=cfg.mostly,
     )
 
 
@@ -902,10 +804,7 @@ def _compile_contamination(cfg: ExpectationConfiguration) -> CompiledRelational:
             "observed_value": rate,
         }
 
-    return CompiledRelational(
-        cfg=cfg, run=run, violations=_viol,
-        result_format=parse_result_format(cfg.kwargs.get("result_format")),
-    )
+    return CompiledRelational(cfg=cfg, run=run, violations=_viol)
 
 
 @register("expect_column_repetition_fractions_to_be_less_than")
@@ -977,10 +876,7 @@ def _compile_repetition(cfg: ExpectationConfiguration) -> CompiledRelational:
             ),
         }
 
-    return CompiledRelational(
-        cfg=cfg, run=run, violations=_viol, mostly=mostly,
-        result_format=parse_result_format(cfg.kwargs.get("result_format")),
-    )
+    return CompiledRelational(cfg=cfg, run=run, violations=_viol)
 
 
 # ---------------------------------------------------------------------------
@@ -989,8 +885,9 @@ def _compile_repetition(cfg: ExpectationConfiguration) -> CompiledRelational:
 
 @register("expect_query_to_return_no_unexpected_rows")
 def _compile_query(cfg: ExpectationConfiguration) -> CompiledQuery:
-    """Arbitrary SQL over the batch (temp view ``active_batch``; the
-    reference's ``{active_batch}`` placeholder is substituted). Success ⇔
+    """Arbitrary SQL over the batch (the reference's ``{active_batch}``
+    placeholder names a temp view of the batch, registered per run).
+    Success ⇔
     the query returns zero rows (GX 1.0 UnexpectedRowsExpectation
     semantics)."""
     return CompiledQuery(

@@ -15,7 +15,8 @@ group's counter passes with a list of key columns in front of every pass:
       from the collected wave-1 row as literals (zero keys), or from the
       wave-1 relation broadcast-joined back onto the batch (keyed)
     → value counts (most_common_value: modes-with-ties via a max-join),
-      uniqueness (one skew-aware value count per check) and window passes
+      uniqueness (one skew-aware value count per check), contiguity (one
+      per-group stats aggregation per check) and window passes
     → per-expectation partial-list jobs (``filter().limit(n)`` —
       CollectLimit early-exits the scan; SURVEY.md §2.9)
     → optional single melt pass writing ALL violation rows
@@ -24,22 +25,26 @@ group's counter passes with a list of key columns in front of every pass:
 
 Independent passes, relational/query checks and EVR finishing jobs run as
 concurrent Spark jobs on one :class:`SparkThreadPool` per call, so the
-scheduler interleaves their stages.
+scheduler interleaves their stages. Relational and query checks read the
+batch filtered by their own ``row_condition``, as every domain group does.
 
 Persistence: the reference defaults to ``SparkDFExecutionEngine(
-persist=True)`` — caching the batch across metric waves. We default to
-``persist=False``: on columnar sources every pass re-scans with Catalyst
+persist=True)`` — caching the batch across metric waves. The engine never
+caches the batch: on columnar sources every pass re-scans with Catalyst
 column pruning (a 2-column pass reads 2 columns), whereas a full-width
 MEMORY_AND_DISK cache materializes every column row-wise and each
 subsequent pass pays the whole row back (measured 10× slower than pruned
 parquet re-scans on a 4M-row transcripts table — and at 10^12 rows a
-full-table cache is impossible regardless). Set ``persist=True`` only when
-the input's lineage is expensive to recompute AND narrow (e.g. the output
-of a join you can't re-run); we then cache it as-is.
+full-table cache is impossible regardless). A batch whose lineage is
+non-deterministic (unseeded ``rand()``/sample, non-deterministic UDFs) may
+show separate passes different rows and yield internally inconsistent
+EVRs: persist or checkpoint such an input before validating it.
 """
 
 from __future__ import annotations
 
+import traceback
+import uuid
 from concurrent.futures import ThreadPoolExecutor, wait
 from dataclasses import dataclass
 from functools import reduce
@@ -57,6 +62,7 @@ from great_expectations_spark.plans.planner import (
     plan_suite,
 )
 from great_expectations_spark.registry import (
+    CompiledContiguous,
     CompiledMap,
     CompiledQuery,
     CompiledRelational,
@@ -118,29 +124,50 @@ def unique_missing(cu: CompiledUnique) -> F.Column:
 
 
 def unique_violations(
-    cu: CompiledUnique,
+    expectation_type: str,
+    key_cols: list[str],
+    observed: F.Column,
     rows: DataFrame,
-    dup_keys: DataFrame,
+    bad_keys: DataFrame,
     index_cols: list[str],
     segment: str | None = None,
 ) -> DataFrame:
-    """The violations-sink rows of one uniqueness check: EVERY row of a
-    duplicated key (reference row-marking parity), found by a semi-join of
-    ``rows`` against ``dup_keys`` (key columns, led by the ``segment``
+    """The violations-sink rows of one keyed check: EVERY row of a violating
+    key — a duplicated key of a uniqueness check (reference row-marking
+    parity), a broken group of a contiguity check — found by a semi-join of
+    ``rows`` against ``bad_keys`` on ``key_cols`` (led by the ``segment``
     column for the segmented executor, which also leads the output as
-    ``group``). The join is null-safe: a partly-NULL key seen twice is a
-    duplicate, and an equi-join never matches NULL."""
-    keys = ([segment] if segment is not None else []) + cu.key_cols
-    dk = dup_keys.select(*[F.col(k).alias(f"__dk{j}") for j, k in enumerate(keys)])
-    on = reduce(
-        lambda a, b: a & b,
-        [F.col(k).eqNullSafe(F.col(f"__dk{j}")) for j, k in enumerate(keys)],
-    )
-    return rows.join(dk, on=on, how="left_semi").select(
+    ``group``), with ``observed`` as the observed value. The join is
+    null-safe: a NULL or partly-NULL key is a key like any other, and an
+    equi-join never matches NULL."""
+    keys = ([segment] if segment is not None else []) + key_cols
+    dk = bad_keys.select(*[F.col(k).alias(f"__dk{j}") for j, k in enumerate(keys)])
+    return rows.join(dk, on=_on_keys(keys, "__dk"), how="left_semi").select(
         *([F.col(segment).alias("group")] if segment is not None else []),
         *[F.col(c) for c in index_cols],
-        F.lit(cu.cfg.expectation_type).alias("expectation"),
-        F.to_json(F.struct(*cu.key_cols)).alias("observed_value"),
+        F.lit(expectation_type).alias("expectation"),
+        observed.alias("observed_value"),
+    )
+
+
+def domain(df: DataFrame, row_condition: str | None) -> DataFrame:
+    """The batch an expectation reads: ``df`` filtered by its
+    ``row_condition`` (reference ``get_domain_records``)."""
+    return df.filter(F.expr(row_condition)) if row_condition else df
+
+
+def _exception_evr(cfg, exc: Exception) -> ExpectationValidationResult:
+    """The failed EVR of an expectation that raised ``exc`` (reference
+    ``catch_exceptions`` parity)."""
+    return ExpectationValidationResult(
+        success=False,
+        expectation_config=cfg.to_dict(),
+        result={},
+        exception_info={
+            "raised_exception": True,
+            "exception_message": str(exc),
+            "exception_traceback": "".join(traceback.format_exception(exc)),
+        },
     )
 
 
@@ -180,9 +207,11 @@ class GroupPasses:
     #: map expectation id → (condition, the frame it reads); wave-2
     #: conditions are rebuilt over their wave-1 stats
     conds: dict[str, tuple[MapCondition, DataFrame]]
-    #: uniqueness expectation id → its duplicate-key counts
-    #: ``(*keys, *key_cols, count)``, persisted (materialized on first read)
-    dups: dict[str, DataFrame]
+    #: keyed expectation id → its violating keys, persisted (materialized
+    #: on first read): a uniqueness check's duplicate-key counts
+    #: ``(*keys, *key_cols, count)``, a contiguity check's broken groups
+    #: ``(*keys, *group_by, stats…)``
+    bad_keys: dict[str, DataFrame]
     #: every relation the passes cached
     persisted: list[DataFrame]
 
@@ -211,9 +240,9 @@ def run_passes(
     columns in front of every pass: ``[]`` for the whole table (one row
     per pass), ``[segment]`` for validate_by_group. Values come back under
     the runner's aliases (``element_count``, ``nc__<id>``, ``uc__<id>``,
-    ``dk__<id>`` duplicate-key counts, metric aliases). Independent passes
-    run concurrently on ``pool``; every result goes through ``collect``
-    (validate_by_group's max_groups guard).
+    ``dk__<id>`` duplicate-key counts, ``ec__<id>`` group counts, metric
+    aliases). Independent passes run concurrently on ``pool``; every result
+    goes through ``collect`` (validate_by_group's max_groups guard).
 
     - bundled: one ``groupBy(*keys).agg(group.bundle_exprs())`` job;
     - wave 2: two-wave conditions through ``rebuild_expr`` — literals from
@@ -224,6 +253,10 @@ def run_passes(
     - uniqueness: one skew-aware value count over ``(*keys, *key_cols)``
       (salted as the check's own key decides); missing keys are classified
       after grouping;
+    - contiguity: per-group count/min/max/count_distinct over
+      ``(*keys, *group_by)``, then per key ``ec__`` (groups holding a
+      non-null value) and ``uc__`` (broken groups) — it counts groups, not
+      rows, so under its own aliases, and every key of ``gdf`` gets a row;
     - window: one pass counting ``element_count``, ``nc__`` and ``uc__``
       of every window-backed map.
 
@@ -233,7 +266,7 @@ def run_passes(
     conds: dict[str, tuple[MapCondition, DataFrame]] = {
         cm.cfg.id: (cm.condition, gdf) for cm in group.maps + group.window_maps
     }
-    dups: dict[str, DataFrame] = {}
+    bad_keys: dict[str, DataFrame] = {}
     persisted: list[DataFrame] = []
 
     def cache(rel: DataFrame) -> DataFrame:
@@ -303,7 +336,7 @@ def run_passes(
         vc = skew_value_counts(gdf, [*keys, *cu.key_cols], salted=salted)
         miss = unique_missing(cu)
         dup = ~miss & (F.col("count") > 1)
-        dups[cu.cfg.id] = cache(vc.filter(dup))
+        bad_keys[cu.cfg.id] = cache(vc.filter(dup))
         return collect(vc.groupBy(*by).agg(
             F.sum("count").alias("element_count"),
             F.sum(F.when(miss, F.col("count")).otherwise(0))
@@ -311,6 +344,25 @@ def run_passes(
             F.sum(F.when(dup, F.col("count")).otherwise(0))
             .alias(f"uc__{cu.cfg.id}"),
             F.count(F.when(dup, 1)).alias(f"dk__{cu.cfg.id}"),
+        ))
+
+    def contiguous(cc: CompiledContiguous) -> list:
+        n = F.col("__n")
+        stats = gdf.groupBy(*by, *[F.col(c) for c in cc.group_by]).agg(
+            F.count(F.col(cc.column)).alias("__n"),
+            F.min(cc.column).alias("__mn"),
+            F.max(cc.column).alias("__mx"),
+            F.count_distinct(F.col(cc.column)).alias("__nd"),
+        )
+        broken = (n > 0) & ~(
+            (F.col("__mn") == cc.start)
+            & (F.col("__mx") == cc.start + n - 1)
+            & (F.col("__nd") == n)
+        )
+        bad_keys[cc.cfg.id] = cache(stats.filter(broken))
+        return collect(stats.groupBy(*by).agg(
+            F.count(F.when(n > 0, 1)).alias(f"ec__{cc.cfg.id}"),
+            F.count(F.when(broken, 1)).alias(f"uc__{cc.cfg.id}"),
         ))
 
     def window() -> list:
@@ -330,10 +382,11 @@ def run_passes(
         futs.append(pool.submit(bundled))
     futs += [pool.submit(modes, col) for col in group.value_counts_columns]
     futs += [pool.submit(unique, cu) for cu in group.uniques]
+    futs += [pool.submit(contiguous, cc) for cc in group.contiguous]
     if group.window_maps:
         futs.append(pool.submit(window))
     wait(futs)
-    passes = GroupPasses({}, conds, dups, persisted)
+    passes = GroupPasses({}, conds, bad_keys, persisted)
     try:
         for fut in futs:
             for r in fut.result():
@@ -374,14 +427,11 @@ class SuiteRunner:
         content plus ``details.complete_truncated`` (the violations sink is
         the at-scale channel for the full row set). ``None`` disables the
         guard (reference parity).
-    persist: cache the batch across multi-pass groups. Default False — the
-        bundled planner already makes most suites single-pass, and caching a
-        100 TB scan is usually a net loss. CAVEAT (diverges from the
-        reference SparkDFExecutionEngine persist=True): if the batch's
-        lineage is non-deterministic (unseeded ``rand()``/sample,
-        non-deterministic UDFs), separate passes may observe DIFFERENT rows
-        and produce internally inconsistent EVRs — pass ``persist=True`` to
-        pin a consistent snapshot for such inputs.
+
+    The batch is never cached (module docstring): if its lineage is
+    non-deterministic (unseeded ``rand()``/sample, non-deterministic UDFs),
+    persist or checkpoint it before validating, or separate passes may
+    observe DIFFERENT rows and produce internally inconsistent EVRs.
     """
 
     def __init__(
@@ -391,7 +441,6 @@ class SuiteRunner:
         unexpected_index_column_names: list[str] | None = None,
         violations_path: str | None = None,
         catch_exceptions: bool = True,
-        persist: bool = False,
         max_complete_rows: int | None = 1_000_000,
     ) -> None:
         self.spark = spark
@@ -399,7 +448,6 @@ class SuiteRunner:
         self.index_cols = unexpected_index_column_names
         self.violations_path = violations_path
         self.catch_exceptions = catch_exceptions
-        self.persist = persist
         self.max_complete_rows = max_complete_rows
 
     # ------------------------------------------------------------------ API
@@ -417,75 +465,68 @@ class SuiteRunner:
         plan = plan_suite(suite)
         results_by_id: dict[str, ExpectationValidationResult] = {}
         violation_frames: list[DataFrame] = []
+        done: list[GroupPasses] = []
 
-        for cfg, exc, tb in plan.broken:
+        for cfg, exc in plan.broken:
             if not self.catch_exceptions:
                 raise exc
-            results_by_id[cfg.id] = ExpectationValidationResult(
-                success=False,
-                expectation_config=cfg.to_dict(),
-                result={},
-                exception_info={
-                    "raised_exception": True,
-                    "exception_message": str(exc),
-                    "exception_traceback": tb,
-                },
-            )
+            results_by_id[cfg.id] = _exception_evr(cfg, exc)
 
-        with SparkThreadPool(self.spark) as pool:
-            # relational / query expectations are independent of the domain
-            # groups: their joins run on the pool alongside the groups' passes
-            fut_side = {
-                cr.cfg.id: pool.submit(
-                    self._run_relational, cr, df, violation_frames
-                )
-                for cr in plan.relationals
-            }
-            fut_side.update({
-                cq.cfg.id: pool.submit(self._run_query, cq, df)
-                for cq in plan.queries
-            })
+        # every cached relation is released after the violations write
+        # (its last reader), also when a pass or the write raises
+        try:
+            with SparkThreadPool(self.spark) as pool:
+                # relational / query expectations are independent of the
+                # domain groups: their joins run on the pool alongside the
+                # groups' passes, each over its own row_condition's batch
+                fut_side = {
+                    cr.cfg.id: pool.submit(
+                        self._run_relational, cr,
+                        domain(df, cr.cfg.row_condition), violation_frames,
+                    )
+                    for cr in plan.relationals
+                }
+                fut_side.update({
+                    cq.cfg.id: pool.submit(
+                        self._run_query, cq, domain(df, cq.cfg.row_condition)
+                    )
+                    for cq in plan.queries
+                })
 
-            for group in plan.groups:
-                gdf = df.filter(F.expr(group.row_condition)) if group.row_condition else df
-                persisted = False
-                if self.persist and group.n_passes > 1:
-                    gdf = gdf.persist(StorageLevel.MEMORY_AND_DISK)
-                    persisted = True
-                try:
+                for group in plan.groups:
+                    gdf = domain(df, group.row_condition)
                     try:
-                        self._run_group(group, gdf, pool, results_by_id, violation_frames)
+                        self._run_group(
+                            group, gdf, pool, results_by_id, violation_frames, done
+                        )
                     except Exception:
                         if not self.catch_exceptions:
                             raise
                         # One bad expectation (e.g. unknown column) poisons the
-                        # shared bundle. Degrade to per-expectation mini-groups so
-                        # healthy expectations still validate and the broken one
-                        # gets its own EVR.exception_info (reference
+                        # shared bundle. Degrade to per-expectation mini-groups
+                        # so healthy expectations still validate and the broken
+                        # one gets its own EVR.exception_info (reference
                         # catch_exceptions fault-isolation semantics).
                         self._run_group_isolated(
-                            group, gdf, pool, results_by_id, violation_frames
+                            group, gdf, pool, results_by_id, violation_frames, done
                         )
-                finally:
-                    if persisted:
-                        gdf.unpersist()
 
-            for cm in plan.metas:
-                results_by_id[cm.cfg.id] = self._guard(
-                    cm.cfg, lambda cm=cm: self._run_meta(cm, df)
-                )
-            for c in plan.relationals + plan.queries:
-                results_by_id[c.cfg.id] = self._guard(
-                    c.cfg, fut_side[c.cfg.id].result
-                )
+                for cm in plan.metas:
+                    results_by_id[cm.cfg.id] = self._guard(
+                        cm.cfg, lambda cm=cm: self._run_meta(cm, df)
+                    )
+                for c in plan.relationals + plan.queries:
+                    results_by_id[c.cfg.id] = self._guard(
+                        c.cfg, fut_side[c.cfg.id].result
+                    )
 
-        if self.violations_path and violation_frames:
-            out = violation_frames[0]
-            for vf in violation_frames[1:]:
-                out = out.unionByName(vf)
-            out.write.mode("append").partitionBy("expectation").parquet(
-                self.violations_path
-            )
+            if self.violations_path and violation_frames:
+                reduce(DataFrame.unionByName, violation_frames).write.mode(
+                    "append"
+                ).partitionBy("expectation").parquet(self.violations_path)
+        finally:
+            for passes in done:
+                passes.release()
 
         results = [results_by_id[cfg.id] for cfg in suite]
         return ExpectationSuiteValidationResult(
@@ -501,18 +542,7 @@ class SuiteRunner:
         try:
             return fn()
         except Exception as exc:  # noqa: BLE001 — reference catch_exceptions parity
-            import traceback
-
-            return ExpectationValidationResult(
-                success=False,
-                expectation_config=cfg.to_dict(),
-                result={},
-                exception_info={
-                    "raised_exception": True,
-                    "exception_message": str(exc),
-                    "exception_traceback": traceback.format_exc(),
-                },
-            )
+            return _exception_evr(cfg, exc)
 
     def _run_group_isolated(
         self,
@@ -521,38 +551,22 @@ class SuiteRunner:
         pool: ThreadPoolExecutor,
         out: dict[str, ExpectationValidationResult],
         violation_frames: list[DataFrame],
+        done: list[GroupPasses],
     ) -> None:
         """Error path: one single-expectation group per expectation, each
         individually guarded — N small jobs instead of one poisoned bundle."""
-        members = (
-            [("maps", m) for m in group.maps]
-            + [("window_maps", m) for m in group.window_maps]
-            + [("dependent_maps", m) for m in group.dependent_maps]
-            + [("aggs", a) for a in group.aggs]
-            + [("uniques", u) for u in group.uniques]
-        )
-        for attr, member in members:
-            mini = DomainGroup(row_condition=group.row_condition)
-            getattr(mini, attr).append(member)
-            if attr == "aggs":
-                vc_col = getattr(member.metric, "groupby_value_counts", None)
+        for attr in ("maps", "window_maps", "dependent_maps", "aggs",
+                     "uniques", "contiguous"):
+            for member in getattr(group, attr):
+                mini = DomainGroup(group.row_condition, **{attr: [member]})
+                metric = getattr(member, "metric", None)
+                vc_col = getattr(metric, "groupby_value_counts", None)
                 if vc_col is not None:
                     mini.value_counts_columns.append(vc_col)
-            try:
-                self._run_group(mini, gdf, pool, out, violation_frames)
-            except Exception as exc:  # noqa: BLE001
-                import traceback
-
-                out[member.cfg.id] = ExpectationValidationResult(
-                    success=False,
-                    expectation_config=member.cfg.to_dict(),
-                    result={},
-                    exception_info={
-                        "raised_exception": True,
-                        "exception_message": str(exc),
-                        "exception_traceback": traceback.format_exc(),
-                    },
-                )
+                try:
+                    self._run_group(mini, gdf, pool, out, violation_frames, done)
+                except Exception as exc:  # noqa: BLE001
+                    out[member.cfg.id] = _exception_evr(member.cfg, exc)
 
     def _run_group(
         self,
@@ -561,44 +575,53 @@ class SuiteRunner:
         pool: ThreadPoolExecutor,
         out: dict[str, ExpectationValidationResult],
         violation_frames: list[DataFrame],
+        done: list[GroupPasses],
     ) -> None:
         """The group's zero-key passes, then its EVRs from the one row of
         values. Map finishing launches partial-list / top-k jobs when an
         expectation has unexpected rows — independent per expectation, so
-        they go through the pool as well."""
+        they go through the pool as well. The passes go on ``done``, for
+        release after the violations write."""
         passes = run_passes(group, gdf, [], pool)
-        try:
-            values = passes.values[()]
-            element_count = int(values.get("element_count") or 0)
-            index_cols = self._effective_index_cols(gdf)
-            fin_futs = {}
-            for cm in group.maps + group.window_maps + group.dependent_maps:
-                cond, frame = passes.conds[cm.cfg.id]
-                fin_futs[cm.cfg.id] = pool.submit(
-                    self._finish_map, cm, cond, frame, element_count, values
-                )
-                if self.violations_path:
-                    violation_frames.append(map_violations(
-                        cm.cfg.expectation_type, cond, frame, index_cols
-                    ))
-            for cm in group.maps + group.window_maps + group.dependent_maps:
-                out[cm.cfg.id] = self._guard(cm.cfg, fin_futs[cm.cfg.id].result)
+        done.append(passes)
+        values = passes.values[()]
+        element_count = int(values.get("element_count") or 0)
+        index_cols = self._effective_index_cols(gdf)
+        fin_futs = {}
+        for cm in group.maps + group.window_maps + group.dependent_maps:
+            cond, frame = passes.conds[cm.cfg.id]
+            fin_futs[cm.cfg.id] = pool.submit(
+                self._finish_map, cm, cond, frame, element_count, values
+            )
+            if self.violations_path:
+                violation_frames.append(map_violations(
+                    cm.cfg.expectation_type, cond, frame, index_cols
+                ))
+        for cm in group.maps + group.window_maps + group.dependent_maps:
+            out[cm.cfg.id] = self._guard(cm.cfg, fin_futs[cm.cfg.id].result)
 
-            for ca in group.aggs:
-                out[ca.cfg.id] = self._guard(
-                    ca.cfg, lambda ca=ca: self._finish_agg(ca, values)
-                )
+        for ca in group.aggs:
+            out[ca.cfg.id] = self._guard(
+                ca.cfg, lambda ca=ca: self._finish_agg(ca, values)
+            )
 
-            for cu in group.uniques:
-                out[cu.cfg.id] = self._guard(
-                    cu.cfg,
-                    lambda cu=cu: self._finish_unique(
-                        cu, gdf, element_count, values,
-                        passes.dups[cu.cfg.id], violation_frames,
-                    ),
-                )
-        finally:
-            passes.release()
+        for cu in group.uniques:
+            out[cu.cfg.id] = self._guard(
+                cu.cfg,
+                lambda cu=cu: self._finish_unique(
+                    cu, gdf, element_count, values,
+                    passes.bad_keys[cu.cfg.id], violation_frames,
+                ),
+            )
+
+        for cc in group.contiguous:
+            out[cc.cfg.id] = self._guard(
+                cc.cfg,
+                lambda cc=cc: self._finish_contiguous(
+                    cc, gdf, values, passes.bad_keys[cc.cfg.id],
+                    violation_frames,
+                ),
+            )
 
     # ---- map expectations -------------------------------------------------
     def _map_flags(self, cond, gdf: DataFrame, index_cols: list[str]) -> DataFrame:
@@ -788,7 +811,9 @@ class SuiteRunner:
 
         if self.violations_path and unexpected_count > 0:
             violation_frames.append(unique_violations(
-                cu, gdf, dups, self._effective_index_cols(gdf)
+                cu.cfg.expectation_type, cu.key_cols,
+                F.to_json(F.struct(*cu.key_cols)), gdf, dups,
+                self._effective_index_cols(gdf),
             ))
 
         success = calc_map_success(element_count, null_count, unexpected_count, cu.mostly)
@@ -806,6 +831,33 @@ class SuiteRunner:
             success=success, expectation_config=cu.cfg.to_dict(), result=result
         )
 
+    # ---- contiguity ---------------------------------------------------------
+    def _finish_contiguous(
+        self, cc: CompiledContiguous, gdf: DataFrame, values: dict[str, Any],
+        broken_groups: DataFrame, violation_frames: list[DataFrame],
+    ) -> ExpectationValidationResult:
+        """Dense-sequence verdict over GROUPS: ``element_count`` counts the
+        groups holding a non-null value, ``unexpected_count`` the broken
+        ones, and ``mostly`` applies over groups. The broken-group frame
+        is read only by the sink, and only when some group is broken."""
+        groups = int(values.get(f"ec__{cc.cfg.id}") or 0)
+        broken = int(values.get(f"uc__{cc.cfg.id}") or 0)
+        if self.violations_path and broken > 0:
+            violation_frames.append(unique_violations(
+                cc.cfg.expectation_type, cc.group_by,
+                F.col(cc.column).cast("string"), gdf, broken_groups,
+                self._effective_index_cols(gdf),
+            ))
+        return ExpectationValidationResult(
+            success=calc_map_success(groups, 0, broken, cc.mostly),
+            expectation_config=cc.cfg.to_dict(),
+            result={
+                "element_count": groups,
+                "unexpected_count": broken,
+                "unexpected_percent": 100.0 * broken / groups if groups else None,
+            },
+        )
+
     # ---- meta / relational / query ------------------------------------------
     def _run_meta(self, cm, df: DataFrame) -> ExpectationValidationResult:
         success, result = cm.run(df)
@@ -816,19 +868,7 @@ class SuiteRunner:
     def _run_relational(
         self, cr: CompiledRelational, df: DataFrame, violation_frames: list[DataFrame]
     ) -> ExpectationValidationResult:
-        # tell run() whether violations() will consume its intermediate
-        # state (e.g. contiguous per-group stats): with a sink it may
-        # materialize once for both consumers; without one it must stay a
-        # single streaming pass. The hint travels as a PER-CALL keyword —
-        # compiled objects are shared across runners and threads via the
-        # plan cache, so a mutable attribute would race; the frozen
-        # accepts_sink_hint capability flag spares per-call reflection
-        kwargs = {}
-        if cr.accepts_sink_hint:
-            kwargs["sink_violations"] = bool(
-                self.violations_path and cr.violations is not None
-            )
-        success, result = cr.run(df, self.tables, **kwargs)
+        success, result = cr.run(df, self.tables)
         if self.violations_path and cr.violations is not None:
             index_cols = self._effective_index_cols(df)
             column = cr.cfg.kwargs.get("column")
@@ -843,16 +883,21 @@ class SuiteRunner:
         )
 
     def _run_query(self, cq: CompiledQuery, df: DataFrame) -> ExpectationValidationResult:
-        df.createOrReplaceTempView("active_batch")
-        sql = cq.query.replace("{active_batch}", "active_batch")
-        res = self.spark.sql(sql)
-        # one bounded collect decides success AND yields the sample; the
-        # arbitrary user SQL only re-executes for an exact count when it
-        # returned MORE than the partial cap (the passing case — zero rows —
-        # costs exactly one job)
-        cap = cq.result_format["partial_unexpected_count"]
-        head = res.limit(cap + 1).collect()
-        n = res.count() if len(head) > cap else len(head)
+        # a view name of this call's own: concurrent runs (checkpoint
+        # partitions) and the user's session views never see the batch
+        view = f"active_batch_{uuid.uuid4().hex}"
+        df.createTempView(view)
+        try:
+            res = self.spark.sql(cq.query.replace("{active_batch}", view))
+            # one bounded collect decides success AND yields the sample; the
+            # arbitrary user SQL only re-executes for an exact count when it
+            # returned MORE than the partial cap (the passing case — zero
+            # rows — costs exactly one job)
+            cap = cq.result_format["partial_unexpected_count"]
+            head = res.limit(cap + 1).collect()
+            n = res.count() if len(head) > cap else len(head)
+        finally:
+            self.spark.catalog.dropTempView(view)
         head = head[:cap]
         return ExpectationValidationResult(
             success=n == 0,

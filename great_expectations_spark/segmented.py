@@ -12,21 +12,24 @@ runner's own passes: ``plan_suite`` groups the suite into domain groups
 ``df.filter(row_condition)`` with the segment as its key — where the
 runner passes no key at all — so a 10,000-segment quality report costs the
 same passes as a whole-table run: the bundled pass, z-score's wave 2 over
-the per-segment wave-1 stats, value counts, uniqueness and the window pass
+the per-segment wave-1 stats, value counts, uniqueness, contiguity (the
+per-group stats keyed by ``(segment, *group_by)``) and the window pass
 (increasing/decreasing windowed by ``(segment, *partition_by)`` through the
 runner's :func:`~great_expectations_spark.plans.planner.monotone_windows`
 rewrite, so lag never crosses a segment boundary). This module only
 finishes the values of each segment: every aggregate through its metric's
-``finalize``, every map and uniqueness check through ``calc_map_success``.
+``finalize``, every map, uniqueness and contiguity check through
+``calc_map_success`` (a contiguity check over its segment's groups).
 
 One ``row_condition`` rule covers every kind: a segment with no rows inside
 a group's ``row_condition`` gets no row for that group's expectations —
 a filtered ``SuiteRunner`` batch never sees it either.
 
-Relational, query, and meta kinds raise a ``ValueError`` naming the
-offender (``strict=False`` skips them) — their semantics need their
-own pass; run them through ``SuiteRunner`` instead. An expectation that
-does not compile raises.
+Relational kinds (``exist_in``, row count vs another table, benchmark
+contamination, repetition fractions), query and meta kinds raise a
+``ValueError`` naming the offender (``strict=False`` skips them) — their
+semantics need their own pass; run them through ``SuiteRunner`` instead.
+An expectation that does not compile raises.
 
 Violations sink: pass ``violations_path`` (plus
 ``unexpected_index_column_names``) to append every failing row as
@@ -42,6 +45,7 @@ million-segment collect.
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import DataFrame, functions as F
@@ -52,6 +56,7 @@ from great_expectations_spark.result import calc_map_success
 from great_expectations_spark.runner import (
     GroupPasses,
     SparkThreadPool,
+    domain,
     map_violations,
     run_passes,
     unique_violations,
@@ -147,15 +152,12 @@ def _validate_rows(
     try:
         with SparkThreadPool(df.sparkSession) as pool:
             for group in plan.groups:
-                gdf = (
-                    keyed.filter(F.expr(group.row_condition))
-                    if group.row_condition else keyed
-                )
+                gdf = domain(keyed, group.row_condition)
                 passes = run_passes(group, gdf, ["__g"], pool, capped_collect)
                 done.append(passes)
                 for compiled in (group.maps + group.window_maps
                                  + group.dependent_maps + group.aggs
-                                 + group.uniques):
+                                 + group.uniques + group.contiguous):
                     values_of[id(compiled)] = passes.values
                 if not violations_path:
                     continue
@@ -166,19 +168,24 @@ def _validate_rows(
                         cm.cfg.expectation_type, cond, frame, index_cols,
                         segment="__g",
                     ))
-                for cu in group.uniques:
-                    frames.append(unique_violations(
-                        cu, gdf, passes.dups[cu.cfg.id], index_cols,
-                        segment="__g",
-                    ))
+                sinks = (
+                    [(cu, cu.key_cols, F.to_json(F.struct(*cu.key_cols)))
+                     for cu in group.uniques]
+                    + [(cc, cc.group_by, F.col(cc.column).cast("string"))
+                       for cc in group.contiguous]
+                )
+                for c, key_cols, observed in sinks:
+                    # a violating-key frame is read only when some key broke
+                    if any(v.get(f"uc__{c.cfg.id}") for v in passes.values.values()):
+                        frames.append(unique_violations(
+                            c.cfg.expectation_type, key_cols, observed, gdf,
+                            passes.bad_keys[c.cfg.id], index_cols, segment="__g",
+                        ))
 
         if frames:
-            vout = frames[0]
-            for vf in frames[1:]:
-                vout = vout.unionByName(vf)
-            vout.write.mode("append").partitionBy("expectation").parquet(
-                violations_path
-            )
+            reduce(DataFrame.unionByName, frames).write.mode(
+                "append"
+            ).partitionBy("expectation").parquet(violations_path)
     finally:
         for passes in done:
             passes.release()
@@ -188,7 +195,9 @@ def _validate_rows(
         if id(compiled) not in values_of:
             continue  # a meta/relational/query kind skipped by strict=False
         for (g,), vals in values_of[id(compiled)].items():
-            ec = int(vals.get("element_count") or 0)
+            # a contiguity check counts its groups under its own alias
+            ec = int(vals.get(f"ec__{compiled.cfg.id}",
+                              vals.get("element_count")) or 0)
             if isinstance(compiled, CompiledAgg):
                 observed = compiled.metric.finalize(vals)
                 ok, _extra = compiled.validate(observed)

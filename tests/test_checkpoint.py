@@ -616,7 +616,8 @@ def test_whole_table_one_segment_and_merged_partitions_agree(
     checkpoint give the same counters (the partitions split no key group,
     window key or z-score distribution). The kinds cover a row_condition
     map and aggregate, a decreasing check whose partition_by defaults from
-    the index columns, a z-score check and a most_common_value check. An
+    the index columns, a z-score check, a most_common_value check and a
+    contiguity check whose groups hold the partition column. An
     aggregate has no row counters in a SuiteRunner result, while the
     segmented executor reports its segment's (domain's) row count — so its
     element_count is compared within each executor only."""
@@ -641,6 +642,9 @@ def test_whole_table_one_segment_and_merged_partitions_agree(
                    column="d", threshold=1.5)
     aggs.append(s.add("expect_column_most_common_value_to_be_in_set",
                       column="c", value_set=[0]))
+    # per p, a is 10..19 (plus NULLs) and 20..39: one dense group, one not
+    contig = s.add("expect_column_values_to_be_contiguous", column="a",
+                   group_by=["p", "one"], start=10)
     agg_ids = {a.id for a in aggs}
 
     def counters(rows, key="expectation_id"):
@@ -683,6 +687,7 @@ def test_whole_table_one_segment_and_merged_partitions_agree(
     # windows over (p, c): every row but the first of its window fails
     assert runner[window.id] == (40, 0, 10)
     assert runner[zscore.id] == (40, 0, 4)
+    assert runner[contig.id] == (2, 0, 1)
 
 
 def test_store_rows_carry_user_expectation_ids(spark, tmp_path, tdf):
@@ -707,9 +712,9 @@ def test_store_rows_carry_user_expectation_ids(spark, tmp_path, tdf):
 
 def test_contiguous_concurrent_partitions_pair_correct_stats(spark,
                                                              tmp_path):
-    """The per-group stats stash is keyed per frame (compiled objects are
-    plan-cache-shared across threads): concurrent partitions must each
-    join their OWN stats — wrong pairing would sink phantom violations."""
+    """Concurrent partitions each sink the rows of their OWN broken groups
+    (compiled checks are plan-cache-shared across threads) — a wrong
+    pairing would sink phantom violations."""
     rows = []
     for day, bad in (("d1", True), ("d2", False)):
         for conv in range(4):

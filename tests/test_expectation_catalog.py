@@ -322,6 +322,34 @@ def test_referential_exist_in(spark, df):
     assert evr.result["missing_count"] == 3  # NULL tools are missing, not violations
 
 
+def test_relational_and_query_read_the_row_condition_batch(spark):
+    """A relational or query check reads the batch filtered by its own
+    row_condition, like every other kind: here the filtered batch holds
+    only known tools, so exist_in passes over its 2 rows and the query
+    finds no unexpected row."""
+    df = spark.createDataFrame(
+        [("a", "t1", 1), ("a", "t1", 2), ("b", "ghost", 3), ("b", "ghost", 4)],
+        "conv_id string, tool string, n int",
+    )
+    dim = spark.createDataFrame([("t1",)], "tool_name string")
+    rc = 'conv_id = "a"'
+    suite = ExpectationSuite("rc-side")
+    suite.add("expect_column_values_to_exist_in", column="tool",
+              other_table="tools", other_column="tool_name", row_condition=rc)
+    suite.add("expect_query_to_return_no_unexpected_rows",
+              query="SELECT * FROM {active_batch} WHERE n > 2",
+              row_condition=rc)
+    suite.add("expect_column_values_to_not_be_null", column="tool",
+              row_condition=rc)
+    out = SuiteRunner(spark, tables={"tools": dim}).validate(df, suite)
+    exist_in, query, not_null = out.results
+    assert exist_in.success is True
+    assert exist_in.result["element_count"] == 2
+    assert exist_in.result["unexpected_count"] == 0
+    assert query.success is True and query.result["observed_value"] == 0
+    assert not_null.result["element_count"] == 2
+
+
 def test_row_count_vs_other_table(spark, df):
     suite = ExpectationSuite("rc2")
     suite.add("expect_table_row_count_to_equal_other_table", other_table="other")
@@ -348,6 +376,24 @@ def test_query_expectation(spark, df):
     out = SuiteRunner(spark).validate(df, suite)
     assert out.results[0].success is False
     assert out.results[0].result["observed_value"] == 1  # c1 has 3 turns
+
+
+def test_query_expectation_keeps_the_users_active_batch_view(spark, df):
+    """The batch is registered under a view name of its own for the run:
+    a session view the user named ``active_batch`` survives a validate, and
+    no view of the run is left behind."""
+    spark.createDataFrame([(7,)], "z int").createOrReplaceTempView(
+        "active_batch")
+    try:
+        before = {t.name for t in spark.catalog.listTables()}
+        suite = ExpectationSuite("q3")
+        suite.add("expect_query_to_return_no_unexpected_rows",
+                  query="SELECT * FROM {active_batch} WHERE n > 1000")
+        assert SuiteRunner(spark).validate(df, suite).success
+        assert spark.table("active_batch").columns == ["z"]
+        assert {t.name for t in spark.catalog.listTables()} == before
+    finally:
+        spark.catalog.dropTempView("active_batch")
 
 
 # ---------------------------------------------------------------------------
@@ -854,35 +900,40 @@ class TestContiguous:
         got = {r["conv_id"] for r in v.collect()}
         assert got == {"c2", "c3", "c4"}
 
-    def test_violations_reuse_run_stats(self, spark, turns):
-        """ONE aggregation of the table per validated run: the violations
-        frame must read run()'s localCheckpoint-materialized per-group
-        stats (an ExistingRDD scan in the physical plan, with NO second
-        aggregate on the build side), never re-aggregate the table from
-        scratch. localCheckpoint, not persist: CacheManager would hold a
-        persisted relation until explicit unpersist — one leaked entry per
-        compile in a per-partition checkpoint loop — while checkpointed
-        RDD blocks are reference-counted and ContextCleaner-reclaimed."""
-        from great_expectations_spark.registry import compile_expectation
-        from great_expectations_spark.suite import ExpectationConfiguration
+    def test_row_condition_filters_the_batch(self, spark):
+        """Groups are counted in the row_condition's batch: conv ``a``'s
+        rows are dense, conv ``b``'s gap lies outside the domain."""
+        df = spark.createDataFrame(
+            [("a", "x", 0), ("a", "x", 1), ("b", "y", 0), ("b", "y", 2)],
+            "conv_id string, kind string, turn_idx int",
+        )
+        r = run_one(
+            df, "expect_column_values_to_be_contiguous",
+            column="turn_idx", group_by=["conv_id"], start=0,
+            row_condition='conv_id = "a"',
+        )
+        assert r.success is True
+        assert r.result["element_count"] == 1
+        assert r.result["unexpected_count"] == 0
 
-        comp = compile_expectation(ExpectationConfiguration(
-            "expect_column_values_to_be_contiguous",
-            {"column": "turn_idx", "group_by": ["conv_id"], "start": 0},
-        ))
-        # the runner passes this PER CALL whenever a violations sink is
-        # configured (compiled objects are plan-cache-shared across
-        # threads, so it is never a mutable attribute); without it run()
-        # stays a single streaming pass and violations() re-aggregates
-        comp.run(turns, {}, sink_violations=True)
-        viol = comp.violations(turns, {})
-        plan = viol._jdf.queryExecution().executedPlan().toString()
-        assert "ExistingRDD" in plan
-        # exactly ONE aggregate in the whole violations plan would mean a
-        # re-aggregation of the table; the checkpointed build side has none
-        assert "HashAggregate" not in plan
-        assert {r["conv_id"] for r in viol.select("conv_id").distinct().collect()} \
-            == {"c2", "c3", "c4"}
+    def test_broken_null_key_group_sinks_its_rows(self, spark, tmp_path):
+        """A NULL group key is a group like any other: its broken group's
+        rows reach the sink (the semi-join is null-safe)."""
+        df = spark.createDataFrame(
+            [(1, None, 0), (2, None, 2), (3, "c1", 0), (4, "c1", 1)],
+            "id int, conv_id string, turn_idx int",
+        )
+        suite = ExpectationSuite("contig-null")
+        suite.add("expect_column_values_to_be_contiguous",
+                  column="turn_idx", group_by=["conv_id"], start=0)
+        vp = str(tmp_path / "viol")
+        r = SuiteRunner(spark, violations_path=vp,
+                        unexpected_index_column_names=["id"]
+                        ).validate(df, suite).results[0]
+        assert r.result["unexpected_count"] == 1
+        viol = spark.read.parquet(vp).collect()
+        assert sorted((v["id"], v["observed_value"]) for v in viol) == [
+            (1, "0"), (2, "2")]
 
 
 def test_pair_correlation_expectation(spark):

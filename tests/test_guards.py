@@ -265,27 +265,38 @@ def _spy_persist(monkeypatch, df_cls):
     return calls
 
 
-def test_contiguous_run_and_violations_never_persist(spark, monkeypatch):
-    """expect_column_values_to_be_contiguous materializes its per-group
-    stats via localCheckpoint, never persist(): a per-partition checkpoint
-    loop compiles it fresh per partition and nothing ever unpersists the
-    compiled expectation's cache entry."""
-    from great_expectations_spark.registry import compile_expectation
-    from great_expectations_spark.suite import ExpectationConfiguration
-
+def test_contiguous_validate_unpersists_what_it_persists(spark, monkeypatch,
+                                                         tmp_path):
+    """Every relation a contiguous check's validate() persists — its
+    broken-group frame — is unpersisted when validate() returns, with or
+    without a violations sink: a per-partition checkpoint loop must not
+    accumulate CacheManager entries."""
     df = spark.createDataFrame(
         [("c1", 0), ("c1", 1), ("c2", 0), ("c2", 2)],
         "conv_id string, turn_idx int",
     )
-    comp = compile_expectation(ExpectationConfiguration(
-        "expect_column_values_to_be_contiguous",
-        {"column": "turn_idx", "group_by": ["conv_id"], "start": 0},
-    ))
-    calls = _spy_persist(monkeypatch, type(df))
-    ok, extra = comp.run(df, {})
-    viol = comp.violations(df, {}).collect()
-    assert not ok and {r["conv_id"] for r in viol} == {"c2"}
-    assert calls == []
+    suite = ExpectationSuite("contig-cache")
+    suite.add("expect_column_values_to_be_contiguous", column="turn_idx",
+              group_by=["conv_id"], start=0)
+    persisted = _spy_persist(monkeypatch, type(df))
+    unpersisted: list = []
+    orig_unpersist = type(df).unpersist
+
+    def spy_unpersist(self, *a, **k):
+        unpersisted.append(self)
+        return orig_unpersist(self, *a, **k)
+
+    monkeypatch.setattr(type(df), "unpersist", spy_unpersist)
+    for sink in (None, str(tmp_path / "v")):
+        persisted.clear()
+        runner = SuiteRunner(spark, violations_path=sink,
+                             unexpected_index_column_names=["conv_id"])
+        r = runner.validate(df, suite).results[0]
+        assert r.result["unexpected_count"] == 1
+        assert persisted, sink
+        assert all(any(p is u for u in unpersisted) for p in persisted), sink
+    viol = spark.read.parquet(str(tmp_path / "v")).collect()
+    assert {v["conv_id"] for v in viol} == {"c2"}
 
 
 def test_score_documents_default_oov_never_persists(spark, monkeypatch):

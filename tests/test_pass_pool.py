@@ -96,3 +96,36 @@ def test_north_star_runner_job_pin(spark, job_ids, tmp_path):
                                 lambda: runner.validate(df, suite))
     assert grouped == launched
     assert 0 < len(launched) <= 20, len(launched)
+
+
+def test_passing_keyed_sinks_cost_no_job(spark, job_ids, tmp_path):
+    """Passing contiguity and uniqueness checks run no more Spark jobs with
+    a violations sink than without one, in both executors: a violating-key
+    frame is read only when some key broke, and no empty sink is written."""
+    from great_expectations_spark import validate_by_group
+
+    rows = [(f"s{i // 10 % 2}", f"c{i // 10}", i % 10, i) for i in range(1_000)]
+    df = spark.createDataFrame(
+        rows, "seg string, conv_id string, turn_idx int, id int")
+    suite = ExpectationSuite("keyed-pin")
+    suite.add("expect_column_values_to_be_contiguous", column="turn_idx",
+              group_by=["conv_id"], start=0)
+    suite.add("expect_column_values_to_be_unique", column="id")
+    executors = {
+        "runner": lambda path: SuiteRunner(
+            spark, violations_path=path, unexpected_index_column_names=["id"],
+        ).validate(df, suite).success,
+        "segmented": lambda path: all(r["success"] for r in validate_by_group(
+            df, suite, "seg", violations_path=path,
+            unexpected_index_column_names=["id"]).collect()),
+    }
+    for name, run in executors.items():
+        sink = tmp_path / name
+        jobs = {}
+        for path in (None, str(sink)):
+            launched, grouped = job_ids(f"{name}-{path is not None}",
+                                        lambda: run(path))
+            assert launched and grouped == launched
+            jobs[path is not None] = len(launched)
+        assert jobs[True] <= jobs[False], (name, jobs)
+        assert not sink.exists(), name

@@ -697,3 +697,41 @@ def test_mixed_suite_job_count_pin(spark, job_ids):
     )
     assert grouped == launched
     assert 0 < len(launched) <= 27, len(launched)
+
+
+def test_contiguous_per_segment_with_runner_sink(spark, tmp_path):
+    """Contiguity is segmentable: each segment counts its own groups (a
+    group key seen in two segments is a group of each), and per segment the
+    sink holds exactly the rows of a SuiteRunner sink over that segment's
+    batch, led by ``group`` — NULL segment and NULL group key included."""
+    from great_expectations_spark import SuiteRunner
+
+    rows = [(1, "a", "c1", 0), (2, "a", "c1", 1), (3, "b", "c1", 2),
+            (4, "b", "c2", 0), (5, "b", "c2", 2), (6, None, "c3", 1),
+            (7, "a", None, 0), (8, "a", None, 0), (9, "a", "c4", None)]
+    df = spark.createDataFrame(
+        rows, "id int, seg string, conv_id string, turn_idx int")
+    suite = ExpectationSuite("contig-seg")
+    suite.add("expect_column_values_to_be_contiguous", column="turn_idx",
+              group_by=["conv_id"], start=0)
+    seg_path = str(tmp_path / "seg")
+    out = {r["group"]: r for r in validate_by_group(
+        df, suite, "seg", violations_path=seg_path,
+        unexpected_index_column_names=["id"]).collect()}
+    assert {g: (r["success"], r["element_count"], r["unexpected_count"])
+            for g, r in out.items()} == {
+        "a": (False, 2, 1), "b": (False, 2, 2), None: (False, 1, 1)}
+    seg_sink = spark.read.parquet(seg_path)
+    for g in out:
+        runner_path = str(tmp_path / f"runner-{g}")
+        res = SuiteRunner(spark, violations_path=runner_path,
+                          unexpected_index_column_names=["id"]).validate(
+            df.filter(F.col("seg").eqNullSafe(F.lit(g))), suite)
+        assert res.results[0].result["unexpected_count"] \
+            == out[g]["unexpected_count"]
+        got = sorted(
+            tuple(r[c] for c in sorted(r.asDict()) if c != "group")
+            for r in seg_sink.filter(
+                F.col("group").eqNullSafe(F.lit(g))).collect()
+        )
+        assert got == _sink_rows(spark, runner_path), g
