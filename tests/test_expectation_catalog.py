@@ -900,6 +900,42 @@ class TestContiguous:
         got = {r["conv_id"] for r in v.collect()}
         assert got == {"c2", "c3", "c4"}
 
+    def test_violations_reuse_run_stats(self, spark, turns, tmp_path,
+                                        monkeypatch):
+        """ONE aggregation of the table per validated run: the sink frame
+        semi-joins the batch against the pass's cached broken-group stats
+        (an InMemoryTableScan), and nothing outside that cached relation
+        aggregates the table again."""
+        import great_expectations_spark.runner as runner_mod
+
+        plans: list[str] = []
+        orig = runner_mod.unique_violations
+
+        def spy(*a, **k):
+            out = orig(*a, **k)
+            plans.append(out._jdf.queryExecution().executedPlan().toString())
+            return out
+
+        monkeypatch.setattr(runner_mod, "unique_violations", spy)
+        suite = ExpectationSuite("contig-reuse")
+        suite.add(
+            "expect_column_values_to_be_contiguous",
+            column="turn_idx", group_by=["conv_id"], start=0,
+        )
+        vp = str(tmp_path / "viol")
+        SuiteRunner(
+            spark, violations_path=vp,
+            unexpected_index_column_names=["conv_id"],
+        ).validate(turns, suite)
+        assert len(plans) == 1
+        # the cached relation's own plan is printed below InMemoryRelation;
+        # everything above it is the sink's semi-join
+        sink_side = plans[0].split("InMemoryRelation")[0]
+        assert "InMemoryTableScan" in sink_side
+        assert "HashAggregate" not in sink_side
+        got = {r["conv_id"] for r in spark.read.parquet(vp).collect()}
+        assert got == {"c2", "c3", "c4"}
+
     def test_row_condition_filters_the_batch(self, spark):
         """Groups are counted in the row_condition's batch: conv ``a``'s
         rows are dense, conv ``b``'s gap lies outside the domain."""

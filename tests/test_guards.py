@@ -299,6 +299,35 @@ def test_contiguous_validate_unpersists_what_it_persists(spark, monkeypatch,
     assert {v["conv_id"] for v in viol} == {"c2"}
 
 
+def test_contiguous_run_and_violations_never_persist(spark, monkeypatch,
+                                                      tmp_path):
+    """A contiguous check's pass and its violations sink never leave a
+    persisted relation in Spark's CacheManager once validate() returns,
+    with or without a sink: the cache holds no entry for any relation the
+    run persisted, so a per-partition checkpoint loop cannot accumulate
+    them."""
+    df = spark.createDataFrame(
+        [("c1", 0), ("c1", 1), ("c2", 0), ("c2", 2)],
+        "conv_id string, turn_idx int",
+    )
+    suite = ExpectationSuite("contig-cm")
+    suite.add("expect_column_values_to_be_contiguous", column="turn_idx",
+              group_by=["conv_id"], start=0)
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    persisted = _spy_persist(monkeypatch, type(df))
+    for sink in (None, str(tmp_path / "v")):
+        persisted.clear()
+        runner = SuiteRunner(spark, violations_path=sink,
+                             unexpected_index_column_names=["conv_id"])
+        r = runner.validate(df, suite).results[0]
+        assert not r.success and r.result["unexpected_count"] == 1
+        assert persisted, sink
+        assert not any(cache_manager.lookupCachedData(p._jdf).isDefined()
+                       for p in persisted), sink
+    viol = spark.read.parquet(str(tmp_path / "v")).collect()
+    assert {v["conv_id"] for v in viol} == {"c2"}
+
+
 def test_score_documents_default_oov_never_persists(spark, monkeypatch):
     """score_documents(oov_logp=None) must not register a CacheManager
     entry per call — a per-batch pipeline would leak one ≤top_k-row cached
