@@ -103,7 +103,7 @@ def check_partitioned_layout(
     spark: SparkSession, path: str, stale_prefix: str, expected: str
 ) -> None:
     """One-time guard against mixing two partition-directory depths under one
-    parquet root (same protection as StreamingValidator._check_layout):
+    parquet root (the checkpoint's violations sink, the streaming EVR sink):
     appending the new layout into a root that already holds ``stale_prefix=``
     top-level dirs would make the whole root unreadable ("conflicting
     directory structures"). Raises ValueError; FS quirks never block."""

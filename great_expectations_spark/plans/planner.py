@@ -123,6 +123,12 @@ class DomainGroup:
     #: columns whose exact value_counts the groupBy pass must produce
     value_counts_columns: list[str] = field(default_factory=list)
 
+    @property
+    def checks(self) -> list:
+        """Every compiled check of the group, maps first."""
+        return (self.maps + self.window_maps + self.dependent_maps + self.aggs
+                + self.uniques + self.contiguous)
+
     def bundle_exprs(self) -> dict[str, Column]:
         """The bundled pass's aggregate expressions, deduped by alias (same
         alias ⇒ same expr): the shared ``element_count``, the counters of

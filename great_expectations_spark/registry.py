@@ -53,8 +53,8 @@ class CompiledMap:
 class CompiledAgg:
     cfg: ExpectationConfiguration
     metric: AggMetric
-    #: observed_value -> (success, extra_result_fields)
-    validate: Callable[[Any], tuple[bool, dict[str, Any]]]
+    #: observed_value -> success
+    validate: Callable[[Any], bool]
 
 
 @dataclass
@@ -266,8 +266,8 @@ def _agg_between(name: str, metric_builder: Callable[[ExpectationConfiguration],
     def compiler(cfg: ExpectationConfiguration) -> CompiledAgg:
         metric = metric_builder(cfg)
 
-        def validate(observed: Any) -> tuple[bool, dict[str, Any]]:
-            return _between_success(observed, cfg.kwargs), {}
+        def validate(observed: Any) -> bool:
+            return _between_success(observed, cfg.kwargs)
 
         return CompiledAgg(cfg=cfg, metric=metric, validate=validate)
 
@@ -318,8 +318,8 @@ _agg_between("expect_table_row_count_to_be_between", lambda c: A.row_count())
 def _compile_row_count_equal(cfg: ExpectationConfiguration) -> CompiledAgg:
     target = int(cfg.kwargs["value"])
 
-    def validate(observed: Any) -> tuple[bool, dict[str, Any]]:
-        return observed == target, {}
+    def validate(observed: Any) -> bool:
+        return observed == target
 
     return CompiledAgg(cfg=cfg, metric=A.row_count(), validate=validate)
 
@@ -341,18 +341,25 @@ def _compile_quantiles(cfg: ExpectationConfiguration) -> CompiledAgg:
         vals = base_fin(values)
         return {"quantiles": quantiles, "values": vals}
 
-    def validate(observed: Any) -> tuple[bool, dict[str, Any]]:
+    def per_quantile(observed: Any) -> list[bool] | None:
         vals = observed["values"] if observed else None
         if vals is None:
-            return False, {}
-        per_q = [
+            return None
+        return [
             (lo is None or v >= lo) and (hi is None or v <= hi)
             for v, (lo, hi) in zip(vals, ranges)
         ]
-        return all(per_q), {"details": {"success_details": per_q}}
+
+    def validate(observed: Any) -> bool:
+        per_q = per_quantile(observed)
+        return per_q is not None and all(per_q)
+
+    def details(values: dict[str, Any]) -> dict[str, Any] | None:
+        per_q = per_quantile(finalize(values))
+        return None if per_q is None else {"success_details": per_q}
 
     return CompiledAgg(
-        cfg=cfg, metric=AggMetric(metric.exprs, finalize, metric.details), validate=validate
+        cfg=cfg, metric=AggMetric(metric.exprs, finalize, details), validate=validate
     )
 
 
@@ -362,8 +369,8 @@ def _distinct_set_compiler(name: str, check: Callable[[set, set], bool]):
         metric = A.distinct_values(cfg.kwargs["column"])
         value_set = set(cfg.kwargs["value_set"])
 
-        def validate(observed: Any) -> tuple[bool, dict[str, Any]]:
-            return check(set(observed or []), value_set), {}
+        def validate(observed: Any) -> bool:
+            return check(set(observed or []), value_set)
 
         return CompiledAgg(cfg=cfg, metric=metric, validate=validate)
 
@@ -393,12 +400,12 @@ def _compile_kl(cfg: ExpectationConfiguration) -> CompiledAgg:
     )
     threshold = float(cfg.kwargs["threshold"])
 
-    def validate(observed: Any) -> tuple[bool, dict[str, Any]]:
+    def validate(observed: Any) -> bool:
         import math
 
         if observed is None or (isinstance(observed, float) and math.isnan(observed)):
-            return False, {}
-        return bool(observed < threshold), {}
+            return False
+        return bool(observed < threshold)
 
     return CompiledAgg(cfg=cfg, metric=metric, validate=validate)
 
@@ -412,14 +419,14 @@ def _p_value_compiler(expectation_type: str, metric_builder) -> None:
         metric = metric_builder(cfg)
         threshold = float(cfg.kwargs.get("p", 0.05))
 
-        def validate(observed: Any) -> tuple[bool, dict[str, Any]]:
+        def validate(observed: Any) -> bool:
             import math
 
             if observed is None or (
                 isinstance(observed, float) and math.isnan(observed)
             ):
-                return False, {}
-            return bool(observed > threshold), {}
+                return False
+            return bool(observed > threshold)
 
         return CompiledAgg(cfg=cfg, metric=metric, validate=validate)
 
@@ -544,11 +551,11 @@ def _compile_most_common(cfg: ExpectationConfiguration) -> CompiledAgg:
 
     sentinel_alias = A.safe_alias("most_common", column)
 
-    def validate(observed: Any) -> tuple[bool, dict[str, Any]]:
+    def validate(observed: Any) -> bool:
         modes = observed or []
         if ties_okay:
-            return set(modes) <= value_set, {}
-        return len(modes) == 1 and modes[0] in value_set, {}
+            return set(modes) <= value_set
+        return len(modes) == 1 and modes[0] in value_set
 
     metric = AggMetric(
         exprs={}, finalize=lambda v, a=sentinel_alias: v.get(a)

@@ -23,6 +23,11 @@ group's counter passes with a list of key columns in front of every pass:
       ``(index…, expectation, observed_value)`` to the sink — executor-side
       write, never collected to the driver (SURVEY.md §4.3)
 
+Both executors turn one key's pass values into a check's verdict through
+:func:`verdict` and build a group's sink frames through
+:func:`violation_frames`; ``SuiteRunner`` adds only what a check's
+``result_format`` asks for.
+
 Independent passes, relational/query checks and EVR finishing jobs run as
 concurrent Spark jobs on one :class:`SparkThreadPool` per call, so the
 scheduler interleaves their stages. Relational and query checks read the
@@ -48,7 +53,7 @@ import uuid
 from concurrent.futures import ThreadPoolExecutor, wait
 from dataclasses import dataclass
 from functools import reduce
-from typing import Any, Callable
+from typing import Any, Callable, NamedTuple
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -62,6 +67,7 @@ from great_expectations_spark.plans.planner import (
     plan_suite,
 )
 from great_expectations_spark.registry import (
+    CompiledAgg,
     CompiledContiguous,
     CompiledMap,
     CompiledQuery,
@@ -214,6 +220,8 @@ class GroupPasses:
     bad_keys: dict[str, DataFrame]
     #: every relation the passes cached
     persisted: list[DataFrame]
+    #: the group's domain frame the passes read
+    frame: DataFrame
 
     def release(self) -> None:
         """Unpersist every relation the passes cached."""
@@ -386,7 +394,7 @@ def run_passes(
     if group.window_maps:
         futs.append(pool.submit(window))
     wait(futs)
-    passes = GroupPasses({}, conds, bad_keys, persisted)
+    passes = GroupPasses({}, conds, bad_keys, persisted, gdf)
     try:
         for fut in futs:
             for r in fut.result():
@@ -403,6 +411,77 @@ def run_passes(
         for vals in passes.values.values():
             vals.setdefault(safe_alias("most_common", col), [])
     return passes
+
+
+class Verdict(NamedTuple):
+    success: bool
+    element_count: int
+    missing_count: int
+    unexpected_count: int
+    #: an aggregate's finalized metric; None for row- and group-counting checks
+    observed: Any
+
+
+def verdict(compiled, vals: dict[str, Any]) -> Verdict:
+    """One check's verdict from one key's pass values — the reference's
+    per-expectation ``_validate``, shared by both executors whatever key
+    the values came from.
+
+    ``element_count`` is the row count of the check's domain, except for a
+    contiguity check, which counts the groups holding a non-null value (and
+    applies ``mostly`` over groups). An aggregate's observed value is its
+    metric's ``finalize``, judged by its ``validate``; it has no missing or
+    unexpected rows. Every other check is judged by ``calc_map_success``."""
+    def count(alias: str) -> int:
+        return int(vals.get(alias) or 0)
+
+    eid = compiled.cfg.id
+    if isinstance(compiled, CompiledAgg):
+        observed = compiled.metric.finalize(vals)
+        return Verdict(bool(compiled.validate(observed)),
+                       count("element_count"), 0, 0, observed)
+    if isinstance(compiled, CompiledContiguous):
+        ec, nc = count(f"ec__{eid}"), 0
+    else:
+        ec, nc = count("element_count"), count(f"nc__{eid}")
+    uc = count(f"uc__{eid}")
+    return Verdict(calc_map_success(ec, nc, uc, compiled.mostly), ec, nc, uc,
+                   None)
+
+
+def violation_frames(
+    group: DomainGroup,
+    passes: GroupPasses,
+    index_cols: list[str],
+    segment: str | None = None,
+) -> list[DataFrame]:
+    """The violations-sink frames of one domain group, for both executors
+    (``segment`` names the segmented executor's key column): a check's
+    frame only when some key has unexpected rows, so a passing check never
+    re-reads its condition or violating-key frame into an empty write."""
+    def broke(c) -> bool:
+        return any(verdict(c, v).unexpected_count for v in passes.values.values())
+
+    frames = [
+        map_violations(cm.cfg.expectation_type, *passes.conds[cm.cfg.id],
+                       index_cols, segment)
+        for cm in group.maps + group.window_maps + group.dependent_maps
+        if broke(cm)
+    ]
+    keyed = (
+        [(cu, cu.key_cols, F.to_json(F.struct(*cu.key_cols)))
+         for cu in group.uniques]
+        + [(cc, cc.group_by, F.col(cc.column).cast("string"))
+           for cc in group.contiguous]
+    )
+    frames += [
+        unique_violations(c.cfg.expectation_type, key_cols, observed,
+                          passes.frame, passes.bad_keys[c.cfg.id], index_cols,
+                          segment)
+        for c, key_cols, observed in keyed
+        if broke(c)
+    ]
+    return frames
 
 
 class SuiteRunner:
@@ -464,7 +543,7 @@ class SuiteRunner:
         suite = monotone_windows(suite, self.index_cols)
         plan = plan_suite(suite)
         results_by_id: dict[str, ExpectationValidationResult] = {}
-        violation_frames: list[DataFrame] = []
+        sinks: list[DataFrame] = []
         done: list[GroupPasses] = []
 
         for cfg, exc in plan.broken:
@@ -482,7 +561,7 @@ class SuiteRunner:
                 fut_side = {
                     cr.cfg.id: pool.submit(
                         self._run_relational, cr,
-                        domain(df, cr.cfg.row_condition), violation_frames,
+                        domain(df, cr.cfg.row_condition), sinks,
                     )
                     for cr in plan.relationals
                 }
@@ -497,7 +576,7 @@ class SuiteRunner:
                     gdf = domain(df, group.row_condition)
                     try:
                         self._run_group(
-                            group, gdf, pool, results_by_id, violation_frames, done
+                            group, gdf, pool, results_by_id, sinks, done
                         )
                     except Exception:
                         if not self.catch_exceptions:
@@ -508,7 +587,7 @@ class SuiteRunner:
                         # one gets its own EVR.exception_info (reference
                         # catch_exceptions fault-isolation semantics).
                         self._run_group_isolated(
-                            group, gdf, pool, results_by_id, violation_frames, done
+                            group, gdf, pool, results_by_id, sinks, done
                         )
 
                 for cm in plan.metas:
@@ -520,8 +599,8 @@ class SuiteRunner:
                         c.cfg, fut_side[c.cfg.id].result
                     )
 
-            if self.violations_path and violation_frames:
-                reduce(DataFrame.unionByName, violation_frames).write.mode(
+            if self.violations_path and sinks:
+                reduce(DataFrame.unionByName, sinks).write.mode(
                     "append"
                 ).partitionBy("expectation").parquet(self.violations_path)
         finally:
@@ -550,7 +629,7 @@ class SuiteRunner:
         gdf: DataFrame,
         pool: ThreadPoolExecutor,
         out: dict[str, ExpectationValidationResult],
-        violation_frames: list[DataFrame],
+        sinks: list[DataFrame],
         done: list[GroupPasses],
     ) -> None:
         """Error path: one single-expectation group per expectation, each
@@ -564,7 +643,7 @@ class SuiteRunner:
                 if vc_col is not None:
                     mini.value_counts_columns.append(vc_col)
                 try:
-                    self._run_group(mini, gdf, pool, out, violation_frames, done)
+                    self._run_group(mini, gdf, pool, out, sinks, done)
                 except Exception as exc:  # noqa: BLE001
                     out[member.cfg.id] = _exception_evr(member.cfg, exc)
 
@@ -574,54 +653,52 @@ class SuiteRunner:
         gdf: DataFrame,
         pool: ThreadPoolExecutor,
         out: dict[str, ExpectationValidationResult],
-        violation_frames: list[DataFrame],
+        sinks: list[DataFrame],
         done: list[GroupPasses],
     ) -> None:
-        """The group's zero-key passes, then its EVRs from the one row of
-        values. Map finishing launches partial-list / top-k jobs when an
-        expectation has unexpected rows — independent per expectation, so
-        they go through the pool as well. The passes go on ``done``, for
-        release after the violations write."""
+        """The group's zero-key passes, its sink frames, then one EVR per
+        check (:meth:`_evr`). Finishing launches partial-list / top-k jobs
+        when a check has unexpected rows — independent per check, so it goes
+        through the pool as well. The passes go on ``done``, for release
+        after the violations write."""
         passes = run_passes(group, gdf, [], pool)
         done.append(passes)
+        if self.violations_path:
+            sinks += violation_frames(
+                group, passes, self._effective_index_cols(gdf)
+            )
+        futs = {c.cfg.id: pool.submit(self._evr, c, passes) for c in group.checks}
+        for c in group.checks:
+            out[c.cfg.id] = self._guard(c.cfg, futs[c.cfg.id].result)
+
+    def _evr(self, c, passes: GroupPasses) -> ExpectationValidationResult:
+        """One check's EVR: the counters and success of :func:`verdict` over
+        the zero-key values, plus what the check's result format asks for
+        (partial lists, top-k, COMPLETE collects, details)."""
         values = passes.values[()]
-        element_count = int(values.get("element_count") or 0)
-        index_cols = self._effective_index_cols(gdf)
-        fin_futs = {}
-        for cm in group.maps + group.window_maps + group.dependent_maps:
-            cond, frame = passes.conds[cm.cfg.id]
-            fin_futs[cm.cfg.id] = pool.submit(
-                self._finish_map, cm, cond, frame, element_count, values
-            )
-            if self.violations_path:
-                violation_frames.append(map_violations(
-                    cm.cfg.expectation_type, cond, frame, index_cols
-                ))
-        for cm in group.maps + group.window_maps + group.dependent_maps:
-            out[cm.cfg.id] = self._guard(cm.cfg, fin_futs[cm.cfg.id].result)
-
-        for ca in group.aggs:
-            out[ca.cfg.id] = self._guard(
-                ca.cfg, lambda ca=ca: self._finish_agg(ca, values)
-            )
-
-        for cu in group.uniques:
-            out[cu.cfg.id] = self._guard(
-                cu.cfg,
-                lambda cu=cu: self._finish_unique(
-                    cu, gdf, element_count, values,
-                    passes.bad_keys[cu.cfg.id], violation_frames,
-                ),
-            )
-
-        for cc in group.contiguous:
-            out[cc.cfg.id] = self._guard(
-                cc.cfg,
-                lambda cc=cc: self._finish_contiguous(
-                    cc, gdf, values, passes.bad_keys[cc.cfg.id],
-                    violation_frames,
-                ),
-            )
+        v = verdict(c, values)
+        if isinstance(c, CompiledAgg):
+            result: dict[str, Any] = {
+                "element_count": v.element_count, "observed_value": v.observed,
+            }
+            details = c.metric.details(values)
+            if details:
+                result["details"] = details
+        elif isinstance(c, CompiledContiguous):
+            # counted over groups: no missing rows, no partial lists
+            result = {
+                "element_count": v.element_count,
+                "unexpected_count": v.unexpected_count,
+                "unexpected_percent": 100.0 * v.unexpected_count
+                / v.element_count if v.element_count else None,
+            }
+        elif isinstance(c, CompiledUnique):
+            result = self._unique_result(c, v, passes)
+        else:
+            result = self._map_result(c, v, *passes.conds[c.cfg.id])
+        return ExpectationValidationResult(
+            success=v.success, expectation_config=c.cfg.to_dict(), result=result
+        )
 
     # ---- map expectations -------------------------------------------------
     def _map_flags(self, cond, gdf: DataFrame, index_cols: list[str]) -> DataFrame:
@@ -637,18 +714,10 @@ class SuiteRunner:
             return []
         return [c for c in self.index_cols if c in gdf.columns]
 
-    def _finish_map(
-        self,
-        cm: CompiledMap,
-        cond,
-        gdf: DataFrame,
-        element_count: int,
-        values: dict[str, Any],
-    ) -> ExpectationValidationResult:
-        null_count = int(values.get(f"nc__{cm.cfg.id}", 0) or 0)
-        unexpected_count = int(values.get(f"uc__{cm.cfg.id}", 0) or 0)
-        success = calc_map_success(element_count, null_count, unexpected_count, cm.mostly)
-
+    def _map_result(
+        self, cm: CompiledMap, v: Verdict, cond, gdf: DataFrame
+    ) -> dict[str, Any]:
+        unexpected_count = v.unexpected_count
         rf = cm.result_format
         level = rf["result_format"]
         n_partial = rf["partial_unexpected_count"]
@@ -707,8 +776,8 @@ class SuiteRunner:
                     full = gdf.withColumn("__unexpected", cond.unexpected)
                     unexpected_rows = [
                         {
-                            k: _row_value(v)
-                            for k, v in r.asDict().items()
+                            k: _row_value(x)
+                            for k, x in r.asDict().items()
                             if k != "__unexpected"
                         }
                         for r in full.filter(F.col("__unexpected")).collect()
@@ -716,8 +785,8 @@ class SuiteRunner:
 
         result = format_map_result(
             result_format=rf,
-            element_count=element_count,
-            null_count=null_count,
+            element_count=v.element_count,
+            null_count=v.missing_count,
             unexpected_count=unexpected_count,
             partial_unexpected_list=partial_list,
             partial_unexpected_index_list=partial_index,
@@ -734,46 +803,22 @@ class SuiteRunner:
                 "note": "unexpected_list collect skipped (driver-OOM guard); "
                 "use the violations sink for the full row set",
             }
-        return ExpectationValidationResult(
-            success=success, expectation_config=cm.cfg.to_dict(), result=result
-        )
-
-    # ---- aggregate expectations --------------------------------------------
-    def _finish_agg(self, ca, values: dict[str, Any]) -> ExpectationValidationResult:
-        observed = ca.metric.finalize(values)
-        success, extra = ca.validate(observed)
-        result: dict[str, Any] = {"observed_value": observed}
-        details = ca.metric.details(values)
-        if details:
-            result["details"] = details
-        result.update(extra)
-        return ExpectationValidationResult(
-            success=success, expectation_config=ca.cfg.to_dict(), result=result
-        )
+        return result
 
     # ---- uniqueness ---------------------------------------------------------
-    def _finish_unique(
-        self,
-        cu: CompiledUnique,
-        gdf: DataFrame,
-        element_count: int,
-        values: dict[str, Any],
-        dups: DataFrame,
-        violation_frames: list[DataFrame],
-    ) -> ExpectationValidationResult:
+    def _unique_result(
+        self, cu: CompiledUnique, v: Verdict, passes: GroupPasses
+    ) -> dict[str, Any]:
         """Key uniqueness from the skew-aware value-count pass — never the
         reference's full-table ``Window.partitionBy`` (SURVEY.md §4.3).
         Row-level marking parity: ALL rows of a duplicated key are
         unexpected; partial lists and top-k read the duplicate-key frame."""
-        null_count = int(values.get(f"nc__{cu.cfg.id}") or 0)
-        unexpected_count = int(values.get(f"uc__{cu.cfg.id}") or 0)
-        dup_keys = int(values.get(f"dk__{cu.cfg.id}") or 0)
-
+        dups = passes.bad_keys[cu.cfg.id]
         rf = cu.result_format
         n_partial = rf["partial_unexpected_count"]
         partial_list: list[Any] = []
         partial_counts: list[dict[str, Any]] = []
-        if rf["result_format"] != "BOOLEAN_ONLY" and unexpected_count > 0:
+        if rf["result_format"] != "BOOLEAN_ONLY" and v.unexpected_count > 0:
             # reference marks every row of a duplicated key unexpected →
             # partial list repeats each key `count` times (capped)
             key_struct = (
@@ -809,54 +854,19 @@ class SuiteRunner:
                     for r in top
                 ]
 
-        if self.violations_path and unexpected_count > 0:
-            violation_frames.append(unique_violations(
-                cu.cfg.expectation_type, cu.key_cols,
-                F.to_json(F.struct(*cu.key_cols)), gdf, dups,
-                self._effective_index_cols(gdf),
-            ))
-
-        success = calc_map_success(element_count, null_count, unexpected_count, cu.mostly)
         result = format_map_result(
             result_format=rf,
-            element_count=element_count,
-            null_count=null_count,
-            unexpected_count=unexpected_count,
+            element_count=v.element_count,
+            null_count=v.missing_count,
+            unexpected_count=v.unexpected_count,
             partial_unexpected_list=partial_list,
             partial_unexpected_counts=partial_counts,
         )
         if rf["result_format"] != "BOOLEAN_ONLY":
-            result["details"] = {"duplicate_key_count": dup_keys}
-        return ExpectationValidationResult(
-            success=success, expectation_config=cu.cfg.to_dict(), result=result
-        )
-
-    # ---- contiguity ---------------------------------------------------------
-    def _finish_contiguous(
-        self, cc: CompiledContiguous, gdf: DataFrame, values: dict[str, Any],
-        broken_groups: DataFrame, violation_frames: list[DataFrame],
-    ) -> ExpectationValidationResult:
-        """Dense-sequence verdict over GROUPS: ``element_count`` counts the
-        groups holding a non-null value, ``unexpected_count`` the broken
-        ones, and ``mostly`` applies over groups. The broken-group frame
-        is read only by the sink, and only when some group is broken."""
-        groups = int(values.get(f"ec__{cc.cfg.id}") or 0)
-        broken = int(values.get(f"uc__{cc.cfg.id}") or 0)
-        if self.violations_path and broken > 0:
-            violation_frames.append(unique_violations(
-                cc.cfg.expectation_type, cc.group_by,
-                F.col(cc.column).cast("string"), gdf, broken_groups,
-                self._effective_index_cols(gdf),
-            ))
-        return ExpectationValidationResult(
-            success=calc_map_success(groups, 0, broken, cc.mostly),
-            expectation_config=cc.cfg.to_dict(),
-            result={
-                "element_count": groups,
-                "unexpected_count": broken,
-                "unexpected_percent": 100.0 * broken / groups if groups else None,
-            },
-        )
+            result["details"] = {"duplicate_key_count": int(
+                passes.values[()].get(f"dk__{cu.cfg.id}") or 0
+            )}
+        return result
 
     # ---- meta / relational / query ------------------------------------------
     def _run_meta(self, cm, df: DataFrame) -> ExpectationValidationResult:
@@ -866,10 +876,12 @@ class SuiteRunner:
         )
 
     def _run_relational(
-        self, cr: CompiledRelational, df: DataFrame, violation_frames: list[DataFrame]
+        self, cr: CompiledRelational, df: DataFrame, sinks: list[DataFrame]
     ) -> ExpectationValidationResult:
         success, result = cr.run(df, self.tables)
-        if self.violations_path and cr.violations is not None:
+        # like every check's, a sink frame only when some row is unexpected
+        if (self.violations_path and cr.violations is not None
+                and result.get("unexpected_count")):
             index_cols = self._effective_index_cols(df)
             column = cr.cfg.kwargs.get("column")
             viol = cr.violations(df, self.tables).select(
@@ -877,7 +889,7 @@ class SuiteRunner:
                 F.lit(cr.cfg.expectation_type).alias("expectation"),
                 F.col(column).cast("string").alias("observed_value"),
             )
-            violation_frames.append(viol)
+            sinks.append(viol)
         return ExpectationValidationResult(
             success=success, expectation_config=cr.cfg.to_dict(), result=result
         )

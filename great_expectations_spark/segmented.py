@@ -16,10 +16,11 @@ the per-segment wave-1 stats, value counts, uniqueness, contiguity (the
 per-group stats keyed by ``(segment, *group_by)``) and the window pass
 (increasing/decreasing windowed by ``(segment, *partition_by)`` through the
 runner's :func:`~great_expectations_spark.plans.planner.monotone_windows`
-rewrite, so lag never crosses a segment boundary). This module only
-finishes the values of each segment: every aggregate through its metric's
-``finalize``, every map, uniqueness and contiguity check through
-``calc_map_success`` (a contiguity check over its segment's groups).
+rewrite, so lag never crosses a segment boundary). Finishing lives in
+:func:`~great_expectations_spark.runner.verdict`, the function that gives
+``SuiteRunner`` its counters: each segment's row is that verdict over the
+segment's values, so an aggregate's ``element_count`` is its domain's row
+count in both executors.
 
 One ``row_condition`` rule covers every kind: a segment with no rows inside
 a group's ``row_condition`` gets no row for that group's expectations —
@@ -34,8 +35,9 @@ An expectation that does not compile raises.
 Violations sink: pass ``violations_path`` (plus
 ``unexpected_index_column_names``) to append every failing row as
 ``(group, <index cols…>, expectation, observed_value)`` parquet rows —
-the runner's violation projections with a leading ``group`` column;
-nothing row-level ever reaches the driver.
+the runner's :func:`~great_expectations_spark.runner.violation_frames`
+with a leading ``group`` column, so a check writes rows only when some
+segment has unexpected rows; nothing row-level ever reaches the driver.
 
 Scale guard: the grouped counters collect to the driver for the
 (Python) finalizers, so segment cardinality must be report-sized —
@@ -51,15 +53,13 @@ from typing import Any
 from pyspark.sql import DataFrame, functions as F
 
 from great_expectations_spark.plans.planner import monotone_windows, plan_suite
-from great_expectations_spark.registry import CompiledAgg
-from great_expectations_spark.result import calc_map_success
 from great_expectations_spark.runner import (
     GroupPasses,
     SparkThreadPool,
     domain,
-    map_violations,
     run_passes,
-    unique_violations,
+    verdict,
+    violation_frames,
 )
 from great_expectations_spark.suite import ExpectationSuite
 
@@ -155,32 +155,12 @@ def _validate_rows(
                 gdf = domain(keyed, group.row_condition)
                 passes = run_passes(group, gdf, ["__g"], pool, capped_collect)
                 done.append(passes)
-                for compiled in (group.maps + group.window_maps
-                                 + group.dependent_maps + group.aggs
-                                 + group.uniques + group.contiguous):
+                for compiled in group.checks:
                     values_of[id(compiled)] = passes.values
-                if not violations_path:
-                    continue
-                for cm in (group.maps + group.window_maps
-                           + group.dependent_maps):
-                    cond, frame = passes.conds[cm.cfg.id]
-                    frames.append(map_violations(
-                        cm.cfg.expectation_type, cond, frame, index_cols,
-                        segment="__g",
-                    ))
-                sinks = (
-                    [(cu, cu.key_cols, F.to_json(F.struct(*cu.key_cols)))
-                     for cu in group.uniques]
-                    + [(cc, cc.group_by, F.col(cc.column).cast("string"))
-                       for cc in group.contiguous]
-                )
-                for c, key_cols, observed in sinks:
-                    # a violating-key frame is read only when some key broke
-                    if any(v.get(f"uc__{c.cfg.id}") for v in passes.values.values()):
-                        frames.append(unique_violations(
-                            c.cfg.expectation_type, key_cols, observed, gdf,
-                            passes.bad_keys[c.cfg.id], index_cols, segment="__g",
-                        ))
+                if violations_path:
+                    frames += violation_frames(
+                        group, passes, index_cols, segment="__g"
+                    )
 
         if frames:
             reduce(DataFrame.unionByName, frames).write.mode(
@@ -195,21 +175,9 @@ def _validate_rows(
         if id(compiled) not in values_of:
             continue  # a meta/relational/query kind skipped by strict=False
         for (g,), vals in values_of[id(compiled)].items():
-            # a contiguity check counts its groups under its own alias
-            ec = int(vals.get(f"ec__{compiled.cfg.id}",
-                              vals.get("element_count")) or 0)
-            if isinstance(compiled, CompiledAgg):
-                observed = compiled.metric.finalize(vals)
-                ok, _extra = compiled.validate(observed)
-                missing = unexpected = 0
-                # NULL observed (all-null segment) stays SQL NULL — the
-                # string 'None' would render as text in the docs page
-                observed = str(observed) if observed is not None else None
-            else:
-                missing = int(vals.get(f"nc__{compiled.cfg.id}") or 0)
-                unexpected = int(vals.get(f"uc__{compiled.cfg.id}") or 0)
-                ok = calc_map_success(ec, missing, unexpected, compiled.mostly)
-                observed = None
-            out.append((g, cfg.id, cfg.expectation_type, bool(ok), ec,
-                        missing, unexpected, observed))
+            *counters, observed = verdict(compiled, vals)
+            # an aggregate's observed value as text; NULL (all-null
+            # segment) stays SQL NULL, not the string 'None'
+            out.append((g, cfg.id, cfg.expectation_type, *counters,
+                        None if observed is None else str(observed)))
     return out

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from great_expectations_spark.checkpoint import (
     EVR_ROW_SCHEMA,
+    check_partitioned_layout,
     suite_hash,
     suite_result_rows,
 )
@@ -82,25 +83,10 @@ class StreamingValidator:
         if self._layout_checked:
             return
         self._layout_checked = True
-        try:
-            jvm = spark._jvm
-            p = jvm.org.apache.hadoop.fs.Path(self.evr_path)
-            fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-            if not fs.exists(p):
-                return
-            for st in fs.listStatus(p):
-                name = st.getPath().getName()
-                if name.startswith("epoch="):
-                    raise ValueError(
-                        f"evr_path {self.evr_path!r} holds the old epoch-only "
-                        "partition layout; the v2 sink partitions by "
-                        "(run_id, epoch). Use a new path or migrate old files "
-                        "under run_id=<id>/epoch=<n>/ first."
-                    )
-        except ValueError:
-            raise
-        except Exception:  # pragma: no cover - FS quirks never block validation
-            pass
+        check_partitioned_layout(
+            spark, self.evr_path, stale_prefix="epoch",
+            expected="run_id=<id>/epoch=<n>/",
+        )
 
     # foreachBatch signature: (DataFrame, epoch_id)
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:

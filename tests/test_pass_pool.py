@@ -99,33 +99,55 @@ def test_north_star_runner_job_pin(spark, job_ids, tmp_path):
 
 
 def test_passing_keyed_sinks_cost_no_job(spark, job_ids, tmp_path):
-    """Passing contiguity and uniqueness checks run no more Spark jobs with
-    a violations sink than without one, in both executors: a violating-key
-    frame is read only when some key broke, and no empty sink is written."""
+    """Passing checks run no more Spark jobs with a violations sink than
+    without one, and write no sink: contiguity and uniqueness checks and a
+    map check in both executors, an ``exist_in`` in the runner
+    (validate_by_group refuses relational kinds). A check's sink frame is
+    built only when some key has unexpected rows."""
     from great_expectations_spark import validate_by_group
 
     rows = [(f"s{i // 10 % 2}", f"c{i // 10}", i % 10, i) for i in range(1_000)]
     df = spark.createDataFrame(
         rows, "seg string, conv_id string, turn_idx int, id int")
-    suite = ExpectationSuite("keyed-pin")
-    suite.add("expect_column_values_to_be_contiguous", column="turn_idx",
+    ids = spark.createDataFrame([(i,) for i in range(1_000)], "id int")
+    keyed = ExpectationSuite("keyed-pin")
+    keyed.add("expect_column_values_to_be_contiguous", column="turn_idx",
               group_by=["conv_id"], start=0)
-    suite.add("expect_column_values_to_be_unique", column="id")
-    executors = {
-        "runner": lambda path: SuiteRunner(
-            spark, violations_path=path, unexpected_index_column_names=["id"],
-        ).validate(df, suite).success,
-        "segmented": lambda path: all(r["success"] for r in validate_by_group(
+    keyed.add("expect_column_values_to_be_unique", column="id")
+    maps = ExpectationSuite("map-pin")
+    maps.add("expect_column_values_to_be_between", column="turn_idx",
+             min_value=0, max_value=9)
+    exist_in = ExpectationSuite("exist-in-pin")
+    exist_in.add("expect_column_values_to_exist_in", column="id",
+                 other_table="ids", other_column="id")
+
+    def runner(suite):
+        return lambda path: SuiteRunner(
+            spark, tables={"ids": ids}, violations_path=path,
+            unexpected_index_column_names=["id"],
+        ).validate(df, suite).success
+
+    def segmented(suite):
+        return lambda path: all(r["success"] for r in validate_by_group(
             df, suite, "seg", violations_path=path,
-            unexpected_index_column_names=["id"]).collect()),
+            unexpected_index_column_names=["id"]).collect())
+
+    cases = {
+        "keyed-runner": runner(keyed),
+        "keyed-segmented": segmented(keyed),
+        "map-runner": runner(maps),
+        "map-segmented": segmented(maps),
+        "exist_in-runner": runner(exist_in),
     }
-    for name, run in executors.items():
+    for name, run in cases.items():
         sink = tmp_path / name
         jobs = {}
         for path in (None, str(sink)):
+            passed = []
             launched, grouped = job_ids(f"{name}-{path is not None}",
-                                        lambda: run(path))
+                                        lambda: passed.append(run(path)))
             assert launched and grouped == launched
+            assert passed == [True], name
             jobs[path is not None] = len(launched)
         assert jobs[True] <= jobs[False], (name, jobs)
         assert not sink.exists(), name

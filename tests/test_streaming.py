@@ -100,6 +100,22 @@ def test_stream_validates_microbatches_and_is_idempotent(spark, suite, tmp_path)
     assert dup == 0
 
 
+def test_validator_refuses_epoch_only_evr_layout(spark, suite, tmp_path):
+    """An evr_path holding the old top-level ``epoch=`` layout is refused
+    before any micro-batch is validated or written: appending the
+    ``run_id=…/epoch=…`` layout beside it makes the root unreadable."""
+    from great_expectations_spark.streaming import StreamingValidator
+
+    evr = tmp_path / "evr"
+    batch = spark.createDataFrame([("c0", 0, "user", "t")], SCHEMA)
+    batch.write.parquet(str(evr / "epoch=0"))
+    validator = StreamingValidator(suite, str(evr))
+    with pytest.raises(ValueError, match="epoch="):
+        validator(batch, 1)
+    assert validator.results == []
+    assert sorted(p.name for p in evr.iterdir()) == ["epoch=0"]
+
+
 def test_pii_scan_composes_with_streams(spark, tmp_path):
     """scan_pii / redact_pii are stateless per-row expressions, so they
     apply unchanged to a streaming DataFrame — the firehose-scrubbing

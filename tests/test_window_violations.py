@@ -1,7 +1,7 @@
 """Regression: window-backed map conditions (increasing/decreasing) must
 work with the violations sink and include_unexpected_rows — a window
 function cannot appear in a WHERE clause, so every filter on the condition
-has to project the flag first (runner._map_violations / _finish_map)."""
+has to project the flag first (runner.map_violations / _map_result)."""
 
 from __future__ import annotations
 
