@@ -18,12 +18,12 @@ full expectation-suite run*):
 - ``minhash_dedup`` / ``ann_topk`` (when operators module present):
   training-data pipeline ops over documents/embeddings.
 - ``decontamination`` / ``repetition``: the round-3 corpus-curation ops
-  over documents (per-round regression tracking; the dedicated two-level
-  scaling record at 2M docs is BENCH/PIPELINE_OPS.md).
+  over documents (per-round regression tracking; their two-level scaling
+  record is ``tools/scaling_bench.py curation``, BENCH/PIPELINE_OPS.md).
 
 Environment:
     SPARK_GRAFT_SF_DIR  parquet dir   (default /root/testdata/sf0.1)
-    SPARK_GRAFT_CPUS    local[N]      (default 32)
+    SPARK_GRAFT_CPUS    local[N]      (default: the CPUs this process may use)
     BENCH_TURNS         transcript rows override (default 2_000_000 * sf * 10)
     BENCH_SWEEPS        minimum recorded interleaved sweeps (default 5)
     BENCH_WARMUP        discarded warm-up sweeps before recording (default 1)
@@ -55,17 +55,10 @@ import time
 from pyspark.sql import SparkSession, functions as F
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-# `nproc` reports 32 but a CPU-bound probe saturates at ~16 effective cores
-# (SMT/hypervisor sharing — BENCH/BASELINE.md "Why these levels"); running
-# local[32] OVERSUBSCRIBES the physical cores and measured 5-7x slower than
-# local[16] on the same job (41s vs 5.9s at 16M turns). A real deployment
-# sizes executor cores to physical cores, so the harness does the same:
-# the session uses min(CPUS, SPARK_GRAFT_EFFECTIVE_CORES); both the
-# requested and effective values are reported in the output JSON.
-EFFECTIVE_CORES = min(
-    CPUS, int(os.environ.get("SPARK_GRAFT_EFFECTIVE_CORES", "16"))
-)
+# the one place the bench session's cores are decided: SPARK_GRAFT_CPUS, else
+# every CPU this process may run on (its affinity mask, which a container's
+# cpuset narrows below the host's nproc)
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 CACHE_ROOT = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".bench_cache")
 
 
@@ -82,7 +75,7 @@ SF = _sf_of(SF_DIR)
 N_TURNS = int(os.environ.get("BENCH_TURNS", str(max(20_000, int(160_000_000 * SF)))))
 
 
-def build_spark(cpus: int = EFFECTIVE_CORES) -> SparkSession:
+def build_spark(cpus: int = CPUS) -> SparkSession:
     # shuffle/spill to tmpfs: the sandbox's virtio disk serializes shuffle
     # I/O and caps local[32] scaling; a real cluster's per-node NVMe is the
     # moral equivalent of /dev/shm here (override with SPARK_GRAFT_LOCAL_DIR)
@@ -358,12 +351,11 @@ def q_repetition(spark: SparkSession) -> dict:
     return {"rows": row["docs"], "repetitive": int(row["repetitive"] or 0)}
 
 
-def q_segmented_suite(spark: SparkSession) -> dict:
-    """Per-role segmented validation over the 16M-turn transcripts table
-    (round 4; segmented.py) — the whole map+agg suite in ONE groupBy."""
-    from great_expectations_spark import ExpectationSuite, validate_by_group
+def segmented_suite():
+    """The round-4 map+agg suite of :func:`q_segmented_suite` — one bundled
+    groupBy covers all of it."""
+    from great_expectations_spark import ExpectationSuite
 
-    tdf = spark.table(transcripts_table(spark))
     suite = ExpectationSuite("seg")
     suite.add("expect_column_values_to_not_be_null", column="text",
               mostly=0.99)
@@ -372,7 +364,17 @@ def q_segmented_suite(spark: SparkSession) -> dict:
     suite.add("expect_column_mean_to_be_between", column="turn_idx",
               min_value=0.0, max_value=500.0)
     suite.add("expect_table_row_count_to_be_between", min_value=1)
-    rows = validate_by_group(tdf, suite, "role").collect()
+    return suite
+
+
+def q_segmented_suite(spark: SparkSession, suite=None) -> dict:
+    """Per-role segmented validation over the 16M-turn transcripts table
+    (round 4; segmented.py) of ``suite``, by default
+    :func:`segmented_suite`."""
+    from great_expectations_spark import validate_by_group
+
+    tdf = spark.table(transcripts_table(spark))
+    rows = validate_by_group(tdf, suite or segmented_suite(), "role").collect()
     return {"segments": len({r["group"] for r in rows}),
             "evr_rows": len(rows)}
 
@@ -455,13 +457,6 @@ def main() -> None:
         "pii_scan": q_pii_scan,
         "line_dedup": q_line_dedup,
     }
-    # BENCH_QUERIES=a,b,c restricts the run (scaling harness runs only the
-    # headline suite at two core counts)
-    only = os.environ.get("BENCH_QUERIES")
-    if only:
-        wanted = {q.strip() for q in only.split(",")}
-        queries = {k: v for k, v in queries.items() if k in wanted}
-
     # INTERLEAVED sweeps (round-4 protocol, matching BENCH/BASELINE.md):
     # the host shows >2x multi-tenancy noise, and back-to-back repeats of
     # ONE query let a noise burst poison every sample of that query while
@@ -470,8 +465,7 @@ def main() -> None:
     # times (default 5), take the per-query MIN across sweeps (the
     # least-contended, cluster-representative sample), and publish the raw
     # per-sweep sample lists so any residual drift is attributable.
-    n_sweeps = max(1, int(os.environ.get("BENCH_SWEEPS",
-                                         os.environ.get("BENCH_REPEAT", "5"))))
+    n_sweeps = max(1, int(os.environ.get("BENCH_SWEEPS", "5")))
     max_sweeps = max(n_sweeps, int(os.environ.get("BENCH_MAX_SWEEPS",
                                                   str(n_sweeps + 4))))
     warmup = max(0, int(os.environ.get("BENCH_WARMUP", "1")))
@@ -525,7 +519,6 @@ def main() -> None:
         "queries": timings,
         "sf": SF,
         "cpus": CPUS,
-        "effective_cores": EFFECTIVE_CORES,
         "transcript_turns": N_TURNS,
         "turns_per_sec": round(N_TURNS / suite_s, 1) if suite_s and suite_s > 0 else None,
         "protocol": (

@@ -47,6 +47,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from great_expectations_spark.plans.planner import plan_suite
+from great_expectations_spark.registry import CompiledContiguous
 from great_expectations_spark.result import (
     ExpectationSuiteValidationResult,
     calc_map_success,
@@ -385,6 +387,14 @@ class Checkpoint:
             )
 
         out = CheckpointRunResult(run_id=run_id, suite_hash=shash)
+        # rows_scanned is read off checks whose element_count is their
+        # segment's row count: unconditioned checks of the domain groups,
+        # bar contiguity (which counts groups); a suite without one pays
+        # one count of each partition
+        row_counting = {
+            c.cfg.id for g in plan_suite(suite).groups if not g.row_condition
+            for c in g.checks if not isinstance(c, CompiledContiguous)
+        }
 
         import threading
         import urllib.parse
@@ -436,11 +446,17 @@ class Checkpoint:
 
             per_segment_ec: dict[Any, int] = {}
             violations, ok = 0, True
-            for segment, _id, _type, success, ec, _miss, unexpected, _obs in rows:
-                per_segment_ec[segment] = max(per_segment_ec.get(segment, 0), ec)
+            for segment, eid, _type, success, ec, _miss, unexpected, _obs in rows:
+                if eid in row_counting:
+                    # max: a check that raised reports 0
+                    per_segment_ec[segment] = max(
+                        per_segment_ec.get(segment, 0), ec
+                    )
                 violations += unexpected
                 ok = ok and success
-            rows_scanned = sum(per_segment_ec.values())
+            rows_scanned = (
+                sum(per_segment_ec.values()) if row_counting else pdf.count()
+            )
 
             with write_lock:
                 if self.evr_path:

@@ -88,6 +88,24 @@ def test_manifest_lineage_fields(spark, tmp_path, suite, tdf):
         assert row["violations"] >= 1  # one null-text row per partition
 
 
+def test_rows_scanned_counts_rows_without_a_row_counting_check(spark, tmp_path,
+                                                              tdf):
+    """A row-conditioned check counts its filtered rows and a contiguity
+    check counts groups, so neither gives a partition's row count: a suite
+    holding only such checks counts the partition, in both modes."""
+    s = ExpectationSuite("no-row-count")
+    s.add("expect_column_values_to_not_be_null", column="text",
+          row_condition="turn_idx > 2")
+    s.add("expect_column_values_to_be_contiguous", column="turn_idx",
+          group_by=["conv_id"], start=0)
+    ck = Checkpoint(spark, manifest_path=str(tmp_path / "manifest"))
+    for segment_col in (None, "conv_id"):
+        res = ck.run(tdf, s, run_id="r1", partition_col="day",
+                     segment_col=segment_col)
+        assert [r.rows_scanned for r in res.validated] == [10, 10, 10], \
+            segment_col
+
+
 def test_merged_verdicts_equal_whole_table_counts(spark, tmp_path, suite, tdf):
     ck = Checkpoint(spark, manifest_path=str(tmp_path / "manifest"),
                     evr_path=str(tmp_path / "evrs"))

@@ -5,8 +5,8 @@ DuckDB), but a user tuning ``n_bands`` / ``max_hamming`` for a real dedup
 run needs a recorded recall/precision curve. This harness measures both
 LSH families against EXACT char-5-gram Jaccard ground truth:
 
-- corpus: the same deterministic planted-near-dup generator as
-  tools/pipeline_ops_bench.py — ~40-word texts over a 64-word vocabulary,
+- corpus: the same deterministic planted-near-dup generator as the
+  ``curation`` ops of tools/scaling_bench.py — ~40-word texts over a 64-word vocabulary,
   every id ≡ 0 (mod 17) re-generated from id-1 plus one appended word.
   Planted pairs land at true Jaccard ≈ 0.95-0.98; random pairs from the
   shared vocabulary sit ≈ 0.2-0.4 — a realistic "near-dup vs topical
@@ -115,7 +115,7 @@ def main():
     )
 
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 1000
-    spark = build_spark(int(os.environ.get("SPARK_GRAFT_CPUS", "16")))
+    spark = build_spark()
     docs = planted_corpus(spark, n_docs).persist()
     n = docs.count()
 

@@ -63,16 +63,9 @@ def build_suite():
 def main() -> int:
     from great_expectations_spark.checkpoint import Checkpoint, suite_hash
     from great_expectations_spark.schema import generate_transcripts
-    from great_expectations_spark.skew import build_session
+    from bench import CPUS as cores, build_spark
 
-    cores = min(int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-                int(os.environ.get("SPARK_GRAFT_EFFECTIVE_CORES", "16")))
-    spark = build_session(
-        "resume-equivalence", master=f"local[{cores}]",
-        shuffle_partitions=cores * 2,
-        extra_conf={"spark.ui.enabled": "false",
-                    "spark.driver.memory": "8g"},
-    )
+    spark = build_spark()
 
     data_path = os.path.join(WORK, f"transcripts_{N_TURNS}_p{N_PARTS}")
     if not os.path.exists(os.path.join(data_path, "_SUCCESS")):

@@ -1,172 +1,351 @@
-"""Two-cluster-size scaling evidence (BASELINE.json north_rule).
+"""Two-level scaling record: one op set, timed at local[N] and local[4N].
 
-No real cluster exists in the sandbox, so the N → 4N executor criterion is
-evidenced by running the IDENTICAL full-suite validation job at two
-parallelism levels on the SAME cached input. Level choice: the driver's rule
-allows "N and 4N cores"; a CPU-bound probe (see BENCH/BASELINE.md) shows
-this box saturates at ~16 effective cores (nproc reports 32 hardware
-threads), so the fair pair that keeps BOTH configs inside physical
-parallelism — as distinct cluster nodes would be — is
+No real cluster exists on one box, so the N → 4N executor criterion
+(BASELINE.json north_rule) is evidenced by running the IDENTICAL ops at two
+parallelism levels over the SAME cached input. The levels come from the
+host: 4N is the session size ``bench.build_spark`` uses (``SPARK_GRAFT_CPUS``,
+else the CPUs this process may use) and N = 4N // 4.
 
-    local[4]  (= N)   vs   local[16] (= 4N)         (override: SCALE_N/SCALE_4N)
+Op sets (ops are timed in this order):
 
-Methodology, forced by >2x run-to-run noise from host multi-tenancy:
-- each timed sample is a fresh subprocess (fresh JVM);
-- inside each subprocess the suite runs BENCH_REPEAT (3) times and the MIN
-  is taken (least-contended sample);
-- subprocess samples at the two levels are INTERLEAVED (N, 4N, N, 4N, …) so
-  slow host phases hit both levels equally;
-- the reported figure per level is the min across its samples.
+- ``suite``: ``suite_transcripts`` — bench.py's north-star suite over the
+  bucketed transcripts table (size = turns);
+- ``segmented``: ``r4_kinds`` (bench.py's ``segmented_suite``: one bundled
+  groupBy) and ``r5_kinds`` (r4 + z-score, most_common_value, a windowed
+  strictly-increasing check and a row_condition mean: five passes), both
+  ``validate_by_group`` by role (size = turns);
+- ``curation``: ``contaminated``, ``repetition`` and the ``scan_probe``
+  ceiling over a synthetic documents corpus (size = docs);
+- ``lm_vocab``: ``vocab_build`` and ``score`` of the unigram LM at a
+  500k-token vocabulary (size = docs).
 
-Writes BENCH/BASELINE.md. Usage: python tools/scaling_bench.py [n_turns] [rounds]
+Protocol, forced by >2x run-to-run noise from host multi-tenancy: every
+sample is a fresh worker process (fresh JVM) that times each op REPEATS
+times and keeps the min; samples alternate between the levels, so slow host
+phases hit both; a level's figure is the min of its samples. Each op's
+efficiency is (t_N / t_4N) / (4N / N).
+
+Every run appends one JSON record per op to the output (default
+BENCH/SCALING_RUNS.jsonl), carrying the engine rev and the host, and prints
+a markdown table of the run. Pool runs by reading that file filtered by
+``engine_rev`` and ``host``. The run exits non-zero when the levels disagree
+on an op's observed value: a scaling figure over different answers means
+nothing.
+
+Usage: python tools/scaling_bench.py [op_set] [size] [rounds] [out.jsonl]
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
+import platform
 import subprocess
 import sys
+import time
+from concurrent.futures import ProcessPoolExecutor
+from multiprocessing import get_context
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-N_TURNS = int(sys.argv[1]) if len(sys.argv) > 1 else 16_000_000
-ROUNDS = int(sys.argv[2]) if len(sys.argv) > 2 else 2
-LEVEL_N = int(os.environ.get("SCALE_N", "4"))
-LEVEL_4N = int(os.environ.get("SCALE_4N", "16"))
-IN_JVM_REPEAT = os.environ.get("BENCH_REPEAT", "3")
+sys.path.insert(0, REPO)
+
+import bench  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
+
+REPEATS = 3
 
 
-def run_once(cpus: int) -> dict:
-    env = dict(
-        os.environ,
-        SPARK_GRAFT_CPUS=str(cpus),
-        BENCH_TURNS=str(N_TURNS),
-        BENCH_QUERIES="suite_transcripts",
-        BENCH_REPEAT=IN_JVM_REPEAT,
-    )
-    out = subprocess.run(
-        [sys.executable, os.path.join(REPO, "bench.py")],
-        env=env, cwd=REPO, capture_output=True, text=True, timeout=3600,
-    )
-    line = [l for l in out.stdout.splitlines() if l.startswith("{")][-1]
-    return json.loads(line)
+def suite_ops(spark, n_turns: int):
+    bench.N_TURNS = n_turns
+    # the warm-up bench.main runs before its timed sweeps: the bucketed
+    # table and the KL baseline profile are built outside the timed region
+    bench.transcripts_table(spark)
+    bench._text_len_baseline(spark)
+    yield "suite_transcripts", lambda: bench.q_suite_transcripts(spark)
 
 
-def main() -> None:
-    print(f"generating/validating transcripts cache ({N_TURNS} turns)…",
-          file=sys.stderr)
-    warm = run_once(LEVEL_4N)
+def segmented_ops(spark, n_turns: int):
+    from great_expectations_spark.schema import TOOL_NAMES
 
-    samples: dict[int, list[float]] = {LEVEL_N: [], LEVEL_4N: []}
-    samples[LEVEL_4N].append(warm["queries"]["suite_transcripts"])
-    # SCALE_PRIOR_RAW: the `Raw:` JSON of an earlier run of the SAME engine
-    # version — its samples merge into this run's pool (more interleaved
-    # samples → better minimum under the 2-4x host noise). Never merge
-    # across engine changes.
-    prior = os.environ.get("SCALE_PRIOR_RAW")
-    if prior:
-        pr = json.loads(prior)
-        assert pr["n_turns"] == N_TURNS and pr["levels"] == [LEVEL_N, LEVEL_4N]
-        for lvl in (LEVEL_N, LEVEL_4N):
-            samples[lvl].extend(pr["samples_sec"][str(lvl)])
-    for i in range(ROUNDS):
-        for lvl in (LEVEL_N, LEVEL_4N):
-            s = run_once(lvl)["queries"]["suite_transcripts"]
-            if s > 0:
-                samples[lvl].append(s)
-            print(f"round {i}: local[{lvl}] {s}s", file=sys.stderr)
+    bench.N_TURNS = n_turns
+    bench.transcripts_table(spark)
+    r5 = bench.segmented_suite()
+    r5.add("expect_column_value_z_scores_to_be_less_than", column="turn_idx",
+           threshold=6.0, double_sided=True, mostly=0.999)
+    r5.add("expect_column_most_common_value_to_be_in_set",
+           column="tool", value_set=list(TOOL_NAMES), ties_okay=True)
+    # the bucketed layout (CLUSTERED BY conv_id) keeps the runner's
+    # per-conv window shuffle-free, but the segmented window re-keys to
+    # (role, conv_id): this pass pays one sort-shuffle of the slim
+    # projection, inherent to windowing per segment
+    r5.add("expect_column_values_to_be_increasing", column="turn_idx",
+           strictly=True, partition_by="conv_id", order_by="turn_idx")
+    r5.add("expect_column_mean_to_be_between", column="turn_idx",
+           min_value=0.0, max_value=500.0, row_condition="turn_idx > 2")
+    yield "r4_kinds", lambda: bench.q_segmented_suite(spark)
+    yield "r5_kinds", lambda: bench.q_segmented_suite(spark, r5)
 
-    tN, t4N = min(samples[LEVEL_N]), min(samples[LEVEL_4N])
-    thrN, thr4N = N_TURNS / tN, N_TURNS / t4N
-    eff = (thr4N / thrN) / 4.0
 
-    result = {
-        "n_turns": N_TURNS,
-        "levels": [LEVEL_N, LEVEL_4N],
-        "samples_sec": {str(k): v for k, v in samples.items()},
-        "localN_sec": round(tN, 3),
-        "local4N_sec": round(t4N, 3),
-        "turns_per_sec_localN": round(thrN, 1),
-        "turns_per_sec_local4N": round(thr4N, 1),
-        "scaling_efficiency_N_to_4N": round(eff, 3),
-    }
-    print(json.dumps(result, indent=2))
+def _data_sized_shuffles(spark) -> None:
+    # Reduce-side parallelism must NOT scale down with the core count:
+    # repetition's per-gram aggregation shuffles ~76 gram rows/doc, and at
+    # shuffle.partitions=4 each reduce task hash-aggregates ~19M string keys in
+    # one BytesToBytesMap (measured: grow/rehash thrash, >10 min at local[4]).
+    # A real cluster sizes reduce partitions to the DATA, so both levels use
+    # the same fixed count — identical plans, only the core count varies;
+    # AQE still coalesces the small post-agg stages.
+    spark.conf.set("spark.sql.shuffle.partitions", "64")
+    # Text that EXPLODES ~76x must scan in small splits: at the default 128m
+    # maxPartitionBytes the corpus reads as 4 splits, so each map-side partial
+    # agg of the per-gram groupBy hash-aggregates ~19M near-unique string keys
+    # in one task — the map outgrows the per-task execution budget and
+    # spill-loops (measured >10 min at local[4]). 16m splits keep every
+    # per-task map ~3M keys. Same conf at both levels; on a real cluster this
+    # is exactly the knob you'd set for explode-heavy scans.
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "16m")
 
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    # Durable history: every run appends here, so the pooled-minimum
-    # estimator (BENCH/BASELINE.md round-4 headline) can always be
-    # rebuilt even after this script overwrites the markdown. Pool only
-    # across runs of the SAME engine version (rev recorded per line).
-    import subprocess as _sp
-    import time as _time
-    try:
-        rev = _sp.run(["git", "rev-parse", "--short", "HEAD"], cwd=REPO,
-                      capture_output=True, text=True).stdout.strip() \
-            or "unknown"
-    except Exception:
-        rev = "unknown"
-    with open(os.path.join(REPO, "BENCH", "SCALING_RUNS.jsonl"), "a") as fh:
-        fh.write(json.dumps({"ts": round(_time.time(), 1),
-                             "engine_rev": rev, **result}) + "\n")
-    # SCALE_OUT lets a larger-input amortization run land in its own file
-    # instead of clobbering the canonical 16M-turn BASELINE.md record.
-    out_path = os.environ.get(
-        "SCALE_OUT", os.path.join(REPO, "BENCH", "BASELINE.md")
-    )
-    with open(out_path, "w") as f:
-        f.write(
-            "# BENCH/BASELINE — two-cluster-size scaling evidence\n\n"
-            "north_rule: ≥0.8 throughput-scaling efficiency from N to 4N\n"
-            "executors. Sandbox evidence: the identical full-suite validation\n"
-            "job (bench.py::q_suite_transcripts — the north_star constraint\n"
-            "suite: not_null, compound-unique(conv_id,turn_idx), in_set(role),\n"
-            "mean/stddev/quantile-between, referential tool→dim,\n"
-            "KL-divergence(text-length), increasing turn_idx per conv) on the\n"
-            "SAME cached deterministic transcripts parquet at two parallelism\n"
-            f"levels: local[{LEVEL_N}] (= N) vs local[{LEVEL_4N}] (= 4N).\n\n"
-            "## Why these levels\n\n"
-            "`nproc` reports 32, but a pure CPU-bound Spark probe saturates at\n"
-            "~16 effective cores (local[16]→local[32] gains nothing: SMT\n"
-            "threads / hypervisor sharing, not physical cores). Real cluster\n"
-            "executors each own their cores, so the honest single-box analogue\n"
-            "keeps both levels within physical parallelism.\n\n"
-            "## Noise control\n\n"
-            "Host multi-tenancy causes >2x noise on identical runs. Protocol:\n"
-            "fresh JVM per sample; 3 in-JVM repeats taking the min; samples\n"
-            "interleaved across levels; min per level reported.\n\n"
-            "| config | wall s (min) | validated turns/sec | samples (s) |\n"
-            "|---|---|---|---|\n"
-            f"| local[{LEVEL_N}] (= N) | {tN:.2f} | {thrN:,.0f} | "
-            f"{[round(x,1) for x in samples[LEVEL_N]]} |\n"
-            f"| local[{LEVEL_4N}] (= 4N) | {t4N:.2f} | {thr4N:,.0f} | "
-            f"{[round(x,1) for x in samples[LEVEL_4N]]} |\n\n"
-            f"- input: {N_TURNS:,} transcript turns (deterministic seed 42,\n"
-            "  skewed conv_id hot keys included), stored as a BUCKETED+SORTED\n"
-            "  table (`CLUSTERED BY (conv_id) SORTED BY (conv_id, turn_idx)`)\n"
-            "  — the single-box analogue of an Iceberg table bucket-partitioned\n"
-            "  by conv hash with sorted data files. This layout removes the\n"
-            "  Exchange from the compound-unique groupBy (10.3s → 1.2s at 16M\n"
-            "  rows/local[16]) and both shuffle and sort from the\n"
-            "  increasing-per-conv window (4.5s → 0.1s): co-located keys make\n"
-            "  the two worst-scaling passes shuffle-free.\n"
-            f"- **scaling efficiency (thr_4N / thr_N) / 4 = {eff:.3f}**\n"
-            "- shuffle partitions scale with cores; AQE on; shuffle dirs on\n"
-            "  tmpfs (a real cluster's per-node NVMe equivalent — the virtio\n"
-            "  disk otherwise serializes shuffle I/O across all threads);\n"
-            "  independent suite passes run as concurrent Spark jobs\n"
-            "  on the runner's thread pool, so scheduler gaps of one\n"
-            "  pass are filled by another.\n"
-            "- the suite compiles to a FIXED number of jobs independent of\n"
-            "  input size — per-job driver overhead amortizes at cluster\n"
-            "  scale; single-box memory-bandwidth sharing at 4N makes this a\n"
-            "  LOWER bound on multi-node efficiency.\n\n"
-            f"Raw: `{json.dumps(result)}`\n\n"
-            "History: every run also appends to `BENCH/SCALING_RUNS.jsonl`\n"
-            "— pool same-engine-rev samples (per-level min across runs) for\n"
-            "the noise-robust estimator before quoting a single-run figure.\n"
+
+def _cached_corpus(spark, name: str, n_docs: int, text) -> str:
+    path = os.path.join(bench.CACHE_ROOT, name)
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        (
+            spark.range(n_docs)
+            .select(F.col("id").alias("doc_id"), text.alias("text"))
+            # 64 output files regardless of the generating level: the
+            # corpus is generated ONCE (first sample, whichever level);
+            # without this the scan+explode stages of every later sample
+            # are capped at the first level's split count and the 4N level
+            # can never use its cores — the scaling measurement would be an
+            # artifact of the file layout, not the operators
+            .repartition(64, "doc_id")
+            .write.mode("overwrite")
+            .parquet(path)
         )
-    print(f"wrote {out_path}", file=sys.stderr)
+    return path
+
+
+CURATION_VOCAB = (
+    "the a of to and in is it you that was for on are with as this have "
+    "from they spark table row scan filter join group window sort hash "
+    "batch stream query plan value key part merge fast slow big small "
+    "data column line order customer vector agg"
+).split()
+
+
+def curation_ops(spark, n_docs: int):
+    """~40-word texts over a 64-word vocabulary, generated JVM-side from the
+    row id; every id ≡ 0 (mod 17) re-generates its text from id-1 plus one
+    appended word (planted near-duplicates); the benchmark set for
+    contamination is ids ≡ 0/1 (mod 1000)."""
+    from great_expectations_spark.operators import decontamination as X
+    from great_expectations_spark.operators import textstats as T
+
+    _data_sized_shuffles(spark)
+    vocab = F.array(*[F.lit(w) for w in CURATION_VOCAB])
+    near_dup = (F.col("id") % 17 == 0) & (F.col("id") > 0)
+    base = F.when(near_dup, F.col("id") - 1).otherwise(F.col("id"))
+    words = F.transform(
+        F.sequence(F.lit(1), F.lit(40)),
+        lambda i: F.element_at(
+            vocab,
+            (F.pmod(F.xxhash64(base, i), F.lit(len(CURATION_VOCAB))) + 1)
+            .cast("int"),
+        ),
+    )
+    text = F.array_join(words, " ")
+    text = F.when(near_dup, F.concat(text, F.lit(" extra"))).otherwise(text)
+    docs = spark.read.parquet(
+        _cached_corpus(spark, f"pipeline_docs_{n_docs}", n_docs, text)
+    )
+    bench_set = docs.filter(F.col("doc_id") % 1000 < 2)
+
+    # word 13-grams hashed with xxhash64: the production path (slim 8-byte
+    # gram stream, broadcast benchmark side)
+    yield "contaminated", lambda: X.contaminated_docs(
+        docs, bench_set, text_col="text", id_col="doc_id",
+        n=13, hash_fn="xxhash64",
+    ).count()
+
+    def repetition():
+        rp = T.repetition_profile(docs, "text", "doc_id", top_ns=(2,),
+                                  dup_ns=(5,))
+        return rp.agg(
+            F.count(F.lit(1)).alias("docs"),
+            F.sum(F.when(F.col("top_2gram_char_frac") > 0.2, 1).otherwise(0)),
+        ).collect()[0]["docs"]
+
+    yield "repetition", repetition
+
+    # Memory-bandwidth probe: pure parquet scan + per-row hash into ONE
+    # scalar agg — no shuffle (beyond the single-row partial-agg exchange),
+    # no Python, no joins. Its N→4N efficiency is the measured single-box
+    # ceiling for any scan/hash-bound operator on this host; the curation
+    # ops' efficiency should be read AGAINST this ceiling, not against 1.0.
+    yield "scan_probe", lambda: docs.agg(
+        F.count(F.lit(1)).alias("docs"),
+        F.sum(F.length("text")),
+        # modulo keeps the running sum inside int64 under ANSI mode
+        F.sum(F.pmod(F.xxhash64("text"), F.lit(1_000_000_000))),
+    ).collect()[0]["docs"]
+
+
+LM_TOP_K = 500_000
+LM_TOKEN_SPACE = 2_000_000
+
+
+def lm_vocab_ops(spark, n_docs: int):
+    """~30-token docs over a ~2M-distinct token space with a harmonic skew,
+    so the top-500k vocabulary cut is a real boundary. ``vocab_build`` is
+    the oov_logp=None prelude of score_documents (executor-side vocab +
+    the one-row OOV-floor agg); ``score`` is the steady-state scoring pass
+    over a prebuilt vocab."""
+    from pyspark.storagelevel import StorageLevel
+
+    from great_expectations_spark.operators.lm import (
+        score_documents,
+        unigram_vocab,
+    )
+
+    # the token groupBy shuffles ~30 slim rows/doc into a ~token-space-key
+    # hash agg: reduce parallelism sized to the data, as for curation
+    _data_sized_shuffles(spark)
+    # token id uniform in [0, m) with m itself uniform in [1, token space]
+    # -> P(t) ~ sum_{m>t} 1/m: a harmonic tail, so frequency ranks are
+    # meaningful and the top-k boundary is real
+    rng = F.pmod(F.xxhash64(F.col("id"), F.lit(0)), F.lit(LM_TOKEN_SPACE)) + 1
+    words = F.transform(
+        F.sequence(F.lit(1), F.lit(30)),
+        lambda i: F.concat(
+            F.lit("tok"), F.pmod(F.xxhash64(F.col("id"), i), rng).cast("string")
+        ),
+    )
+    docs = spark.read.parquet(_cached_corpus(
+        spark, f"lm_docs_{n_docs}_{LM_TOKEN_SPACE}", n_docs,
+        F.array_join(words, " "),
+    ))
+
+    def vocab_build():
+        v = unigram_vocab(docs, top_k=LM_TOP_K).localCheckpoint(eager=True)
+        return v.agg(F.min("logp"), F.count(F.lit(1))).collect()[0][1]
+
+    # ORDER MATTERS: vocab_build must be timed BEFORE any other vocab
+    # relation is persisted — Spark's CacheManager substitutes cached plans
+    # by plan-EQUALITY, so a pre-existing persisted unigram_vocab(docs,
+    # top_k) would silently turn the timed build into a cache read.
+    yield "vocab_build", vocab_build
+
+    # the scored vocab is built once OUTSIDE the timed scoring loop and its
+    # floor passed explicitly, so `score` times the steady-state path a
+    # pipeline pays per batch (vocab reuse is the production shape); the
+    # floor agg also materializes the cache so the broadcast inside each
+    # timed score action reads it instead of recomputing the vocab build
+    vocab = unigram_vocab(docs, top_k=LM_TOP_K).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    oov = vocab.agg(F.min("logp")).collect()[0][0] - math.log(2.0)
+    yield "score", lambda: score_documents(docs, vocab, oov_logp=oov).agg(
+        F.count(F.lit(1)), F.sum("mean_logp")
+    ).collect()[0][0]
+
+
+#: op set → (ops generator, default size). A generator yields each op
+#: after its set-up and resumes once the op was timed.
+OP_SETS = {
+    "suite": (suite_ops, 16_000_000),
+    "segmented": (segmented_ops, 16_000_000),
+    "curation": (curation_ops, 5_000_000),
+    "lm_vocab": (lm_vocab_ops, 2_000_000),
+}
+
+
+def worker(op_set: str, size: int, cpus: int) -> dict:
+    """One sample: a fresh session at ``cpus`` cores times every op of the
+    set REPEATS times; per op the min seconds and the observed value."""
+    spark = bench.build_spark(cpus)
+    out = {}
+    try:
+        for op, fn in OP_SETS[op_set][0](spark, size):
+            best = math.inf
+            for _ in range(REPEATS):
+                t0 = time.monotonic()
+                observed = fn()
+                best = min(best, time.monotonic() - t0)
+            out[op] = {"sec": round(best, 3), "observed": observed}
+    finally:
+        spark.stop()
+    print(f"local[{cpus}] {json.dumps(out)}", file=sys.stderr, flush=True)
+    return out
+
+
+def run_once(op_set: str, size: int, cpus: int) -> dict:
+    # spawn, not fork: each sample is a fresh interpreter and a fresh JVM
+    with ProcessPoolExecutor(1, mp_context=get_context("spawn")) as pool:
+        return pool.submit(worker, op_set, size, cpus).result()
+
+
+def host() -> dict:
+    import pyspark
+
+    return {
+        "nproc": os.cpu_count(),
+        "cpus_available": len(os.sched_getaffinity(0)),
+        "spark": pyspark.__version__,
+        "python": platform.python_version(),
+    }
+
+
+def engine_rev() -> str:
+    out = subprocess.run(["git", "rev-parse", "--short", "HEAD"], cwd=REPO,
+                         capture_output=True, text=True)
+    return out.stdout.strip() or "unknown"
+
+
+def main() -> int:
+    op_set = sys.argv[1] if len(sys.argv) > 1 else "suite"
+    size = int(sys.argv[2]) if len(sys.argv) > 2 else OP_SETS[op_set][1]
+    rounds = int(sys.argv[3]) if len(sys.argv) > 3 else 2
+    out_path = (sys.argv[4] if len(sys.argv) > 4
+                else os.path.join(REPO, "BENCH", "SCALING_RUNS.jsonl"))
+    levels = (bench.CPUS // 4, bench.CPUS)
+    if levels[0] < 1:
+        raise SystemExit(f"two levels need at least 4 CPUs, have {bench.CPUS}")
+
+    samples: dict[int, list[dict]] = {lv: [] for lv in levels}
+    for _ in range(rounds):
+        # 4N first: the first sample generates the cached input
+        for lv in reversed(levels):
+            samples[lv].append(run_once(op_set, size, lv))
+
+    base = {"ts": round(time.time(), 1), "engine_rev": engine_rev(),
+            "host": host(), "op_set": op_set, "size": size,
+            "levels": list(levels)}
+    print(f"| op | local[{levels[0]}] s | local[{levels[1]}] s "
+          "| eff N→4N | observed |\n|---|---|---|---|---|")
+    agree = True
+    with open(out_path, "a") as fh:
+        for op in samples[levels[0]][0]:
+            secs = {lv: [s[op]["sec"] for s in samples[lv]] for lv in levels}
+            mins = {lv: min(secs[lv]) for lv in levels}
+            eff = (mins[levels[0]] / mins[levels[1]]) / (levels[1] / levels[0])
+            observed = {json.dumps(s[op]["observed"], sort_keys=True)
+                        for lv in levels for s in samples[lv]}
+            agree = agree and len(observed) == 1
+            fh.write(json.dumps({
+                **base, "op": op,
+                "samples_sec": {str(lv): secs[lv] for lv in levels},
+                "min_sec": {str(lv): mins[lv] for lv in levels},
+                "efficiency": round(eff, 3),
+                "observed": {str(lv): samples[lv][-1][op]["observed"]
+                             for lv in levels},
+            }) + "\n")
+            print(f"| {op} | {mins[levels[0]]:.2f} | {mins[levels[1]]:.2f} "
+                  f"| {eff:.3f} | {' ≠ '.join(sorted(observed))} |")
+    if not agree:
+        print("levels disagree on an observed value", file=sys.stderr)
+        return 1
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

@@ -104,7 +104,7 @@ def write_batches(spark, watch_dir: str) -> None:
 def main() -> None:
     from pyspark.sql import functions as F
 
-    from bench import CACHE_ROOT, build_spark
+    from bench import CACHE_ROOT, CPUS as cpus, build_spark
     from great_expectations_spark.streaming.dedup import streaming_exact_dedup
 
     # late_b must process with watermark PAST the early copy's extended
@@ -115,8 +115,7 @@ def main() -> None:
             f"need at least {2 * DELAY_MIN + 7} batches so the late copy "
             "batch lands beyond the (possibly extended) watermark window"
         )
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
-    spark = build_spark(cpus)
+    spark = build_spark()
     root = os.path.join(CACHE_ROOT, "streaming_bench")
     shutil.rmtree(root, ignore_errors=True)
     watch = os.path.join(root, "in")
