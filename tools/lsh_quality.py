@@ -6,8 +6,9 @@ run needs a recorded recall/precision curve. This harness measures both
 LSH families against EXACT char-5-gram Jaccard ground truth:
 
 - corpus: the same deterministic planted-near-dup generator as the
-  ``curation`` ops of tools/scaling_bench.py — ~40-word texts over a 64-word vocabulary,
-  every id ≡ 0 (mod 17) re-generated from id-1 plus one appended word.
+  ``curation`` ops of tools/scaling_bench.py — ~40-word texts over a
+  64-word vocabulary, every id ≡ 0 (mod 17) re-generated from id-1 plus one
+  appended word.
   Planted pairs land at true Jaccard ≈ 0.95-0.98; random pairs from the
   shared vocabulary sit ≈ 0.2-0.4 — a realistic "near-dup vs topical
   sibling" gap.

@@ -51,12 +51,15 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 import bench  # noqa: E402
+import pyspark  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 REPEATS = 3
 
 
 def suite_ops(spark, n_turns: int):
+    # bench sizes its transcripts table from N_TURNS; each worker is a
+    # process of its own
     bench.N_TURNS = n_turns
     # the warm-up bench.main runs before its timed sweeps: the bucketed
     # table and the KL baseline profile are built outside the timed region
@@ -285,8 +288,6 @@ def run_once(op_set: str, size: int, cpus: int) -> dict:
 
 
 def host() -> dict:
-    import pyspark
-
     return {
         "nproc": os.cpu_count(),
         "cpus_available": len(os.sched_getaffinity(0)),
@@ -303,6 +304,8 @@ def engine_rev() -> str:
 
 def main() -> int:
     op_set = sys.argv[1] if len(sys.argv) > 1 else "suite"
+    if op_set not in OP_SETS:
+        raise SystemExit(f"unknown op set {op_set!r}: one of {list(OP_SETS)}")
     size = int(sys.argv[2]) if len(sys.argv) > 2 else OP_SETS[op_set][1]
     rounds = int(sys.argv[3]) if len(sys.argv) > 3 else 2
     out_path = (sys.argv[4] if len(sys.argv) > 4
@@ -310,6 +313,8 @@ def main() -> int:
     levels = (bench.CPUS // 4, bench.CPUS)
     if levels[0] < 1:
         raise SystemExit(f"two levels need at least 4 CPUs, have {bench.CPUS}")
+    if rounds < 1:
+        raise SystemExit("rounds must be at least 1")
 
     samples: dict[int, list[dict]] = {lv: [] for lv in levels}
     for _ in range(rounds):
