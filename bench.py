@@ -24,6 +24,7 @@ full expectation-suite run*):
 Environment:
     SPARK_GRAFT_SF_DIR  parquet dir   (default /root/testdata/sf0.1)
     SPARK_GRAFT_CPUS    local[N]      (default: the CPUs this process may use)
+    BENCH_DRIVER_MEM    driver heap   (default: half the host's physical memory)
     BENCH_TURNS         transcript rows override (default 2_000_000 * sf * 10)
     BENCH_SWEEPS        minimum recorded interleaved sweeps (default 5)
     BENCH_WARMUP        discarded warm-up sweeps before recording (default 1)
@@ -76,6 +77,11 @@ N_TURNS = int(os.environ.get("BENCH_TURNS", str(max(20_000, int(160_000_000 * SF
 
 
 def build_spark(cpus: int = CPUS) -> SparkSession:
+    """The engine's own session (``skew.build_session``: AQE on, ANSI off)
+    on ``cpus`` cores and shuffle partitions, with a driver heap of half the
+    host's physical memory unless ``BENCH_DRIVER_MEM`` says otherwise."""
+    from great_expectations_spark.skew import build_session
+
     # shuffle/spill to tmpfs: the sandbox's virtio disk serializes shuffle
     # I/O and caps local[32] scaling; a real cluster's per-node NVMe is the
     # moral equivalent of /dev/shm here (override with SPARK_GRAFT_LOCAL_DIR)
@@ -85,19 +91,17 @@ def build_spark(cpus: int = CPUS) -> SparkSession:
     except OSError:
         local_dir = "/tmp/spark-local"
         os.makedirs(local_dir, exist_ok=True)
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.local.dir", local_dir)
-        .config("spark.sql.warehouse.dir", os.path.join(CACHE_ROOT, "warehouse"))
-        .appName(f"gx-spark-bench-sf{SF}")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("BENCH_DRIVER_MEM", "24g"))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    host_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    return build_session(
+        f"gx-spark-bench-sf{SF}", master=f"local[{cpus}]",
+        shuffle_partitions=cpus,
+        extra_conf={
+            "spark.local.dir": local_dir,
+            "spark.sql.warehouse.dir": os.path.join(CACHE_ROOT, "warehouse"),
+            "spark.ui.enabled": "false",
+            "spark.driver.memory": os.environ.get(
+                "BENCH_DRIVER_MEM", f"{max(1, host_gb // 2)}g"),
+        },
     )
 
 
@@ -376,7 +380,9 @@ def q_segmented_suite(spark: SparkSession, suite=None) -> dict:
     tdf = spark.table(transcripts_table(spark))
     rows = validate_by_group(tdf, suite or segmented_suite(), "role").collect()
     return {"segments": len({r["group"] for r in rows}),
-            "evr_rows": len(rows)}
+            "evr_rows": len(rows),
+            "failing_rows": sum(not r["success"] for r in rows),
+            "unexpected_count": sum(r["unexpected_count"] or 0 for r in rows)}
 
 
 def q_pii_scan(spark: SparkSession) -> dict:

@@ -10,8 +10,11 @@ batch. Our engine lifts that to the north_rule contract:
   dir-partitioned parquet table — Catalyst prunes the scan to one partition
   per run unit);
 - every finished partition appends one **manifest row** with lineage +
-  metrics ``(run_id, partition_id, status, rows_scanned, violations,
-  elapsed_s, suite_hash, element_count, unexpected_count, finished_ts)``;
+  metrics ``(run_id, partition_id, commit_id, status, suite_hash,
+  rows_scanned, violations, elapsed_s, success, finished_ts)``;
+- each partition attempt draws one ``commit_id``, written on its EVR rows
+  and its manifest row: only EVR rows whose commit id the manifest names
+  count, so the orphans of a torn write never do;
 - a re-run with the same ``(suite_hash, partition_id)`` is **skipped**
   (resume = anti-diff against the manifest, computed driver-side from a
   manifest read — the manifest is tiny: one row per partition);
@@ -21,17 +24,21 @@ batch. Our engine lifts that to the north_rule contract:
   AGGREGATE_FN partial → finalize split lifted to partition granularity
   (SURVEY.md §4.2 item 5).
 
-Determinism: nothing here uses unseeded randomness; the manifest is the only
-state, so kill/resume at any point re-runs at most the one in-flight
-partition (writes are atomic per partition: parquet append of a 1-row
-DataFrame after the partition's validation completes).
+Determinism: verdicts use no unseeded randomness (the commit id only names
+an attempt); the manifest is the only state, so kill/resume at any point
+re-runs at most the one in-flight partition (writes are atomic per partition:
+parquet append of a 1-row DataFrame after the partition's validation
+completes).
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+import threading
 import time
+import urllib.parse
+import uuid
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -61,6 +68,7 @@ MANIFEST_SCHEMA = StructType(
     [
         StructField("run_id", StringType()),
         StructField("partition_id", StringType()),
+        StructField("commit_id", StringType()),
         StructField("status", StringType()),
         StructField("suite_hash", StringType()),
         StructField("rows_scanned", LongType()),
@@ -84,6 +92,7 @@ EVR_ROW_SCHEMA = StructType(
     [
         StructField("run_id", StringType()),
         StructField("partition_id", StringType()),
+        StructField("commit_id", StringType()),
         StructField("suite_hash", StringType()),
         StructField("segment_col", StringType()),
         StructField("segment", StringType()),
@@ -101,14 +110,12 @@ EVR_ROW_SCHEMA = StructType(
 MERGE_KEYS = ["suite_hash", "segment_col", "segment", "expectation_id"]
 
 
-def check_partitioned_layout(
-    spark: SparkSession, path: str, stale_prefix: str, expected: str
-) -> None:
-    """One-time guard against mixing two partition-directory depths under one
-    parquet root (the checkpoint's violations sink, the streaming EVR sink):
-    appending the new layout into a root that already holds ``stale_prefix=``
-    top-level dirs would make the whole root unreadable ("conflicting
-    directory structures"). Raises ValueError; FS quirks never block."""
+def check_partitioned_layout(spark: SparkSession, path: str) -> None:
+    """One-time guard against mixing two partition-directory depths under the
+    checkpoint's violations root: appending ``partition_id=<pid>/`` dirs into
+    a root that already holds top-level ``expectation=`` dirs would make the
+    whole root unreadable ("conflicting directory structures"). Raises
+    ValueError; FS quirks never block."""
     try:
         jvm = spark._jvm
         p = jvm.org.apache.hadoop.fs.Path(path)
@@ -116,11 +123,11 @@ def check_partitioned_layout(
         if not fs.exists(p):
             return
         for st in fs.listStatus(p):
-            name = st.getPath().getName()
-            if name.startswith(f"{stale_prefix}="):
+            if st.getPath().getName().startswith("expectation="):
                 raise ValueError(
-                    f"{path!r} holds a stale top-level {stale_prefix}= "
-                    f"partition layout; this sink now writes {expected}. "
+                    f"{path!r} holds a stale top-level expectation= "
+                    "partition layout; this sink now writes "
+                    "partition_id=<pid>/expectation=<type>/. "
                     "Use a new path or migrate the old files first."
                 )
     except ValueError:
@@ -254,6 +261,10 @@ class Checkpoint:
         self.evr_path = evr_path
         self.violations_path = violations_path
         self.runner_kwargs = runner_kwargs
+        # one writer at a time for the EVR/manifest appends: concurrent
+        # partitions, and streaming queries sharing this checkpoint, never
+        # race a committer staging dir
+        self._write_lock = threading.Lock()
 
     # ------------------------------------------------------------ manifest io
     def read_manifest(self) -> DataFrame:
@@ -273,7 +284,8 @@ class Checkpoint:
         it to False would flip the whole resumed run's verdict to failed
         even when every partition actually passed
         (``PartitionRunRecord.success`` documents None as "predates this
-        field" and only ``is False`` fails the run)."""
+        field" and only ``is False`` fails the run). The manifest is tiny,
+        so it is sorted in one task: one Spark job, no range shuffle."""
         rows = (
             self.read_manifest()
             .filter(
@@ -281,7 +293,8 @@ class Checkpoint:
                 & (F.col("status") == "validated")
             )
             .select("partition_id", "success", "finished_ts")
-            .orderBy("finished_ts")
+            .coalesce(1)
+            .sortWithinPartitions("finished_ts")
             .collect()
         )
         return {
@@ -312,6 +325,40 @@ class Checkpoint:
             return None
 
     # ------------------------------------------------------------------- run
+    def _check_stores(self, segment_col: str | None) -> None:
+        """Refuse stores this run's rows cannot be read back from, naming
+        the path, before any partition is validated."""
+        if self.violations_path is not None:
+            # refuse to append partition_id=<pid>/expectation=… under a root
+            # still holding the pre-change expectation=… top-level layout
+            check_partitioned_layout(self.spark, self.violations_path)
+            existing = self._stored_columns(self.violations_path)
+            if existing is not None and ("group" in existing) != (
+                segment_col is not None
+            ):
+                # segmented violation rows lead with a `group` column under
+                # the same partition_id=/expectation= layout: one root
+                # holding both row shapes reads back with one side's
+                # columns null-filled or dropped
+                held = "segmented" if segment_col is None else "whole-partition"
+                raise ValueError(
+                    f"violations_path {self.violations_path!r} holds "
+                    f"{held} violation rows; segmented and whole-partition "
+                    "runs need separate violations paths"
+                )
+        if self.evr_path:
+            existing = self._stored_columns(self.evr_path)
+            if existing is not None and "commit_id" not in existing:
+                # rows without a commit id can never be matched to a
+                # manifest commit: a flat store of an earlier row shape, or
+                # the run_id=/epoch= root the streaming writer used to keep
+                raise ValueError(
+                    f"evr_path {self.evr_path!r} holds EVR rows written "
+                    "before rows carried their commit id, suite hash and "
+                    "segment (or a streaming run_id=/epoch= root); use a new "
+                    "EVR store path"
+                )
+
     def run(
         self,
         df: DataFrame,
@@ -319,7 +366,6 @@ class Checkpoint:
         run_id: str,
         partition_col: str,
         partition_values: list[Any] | None = None,
-        fail_partition: Any = None,
         max_concurrent_partitions: int = 1,
         segment_col: str | None = None,
         segment_max_groups: int = 100_000,
@@ -328,8 +374,6 @@ class Checkpoint:
 
         ``partition_values`` defaults to the distinct values of
         ``partition_col`` (one extra scan of that column only — prunable).
-        ``fail_partition`` is a test hook: raises mid-run after that
-        partition would start, simulating a kill for resume tests.
 
         ``max_concurrent_partitions`` > 1 validates that many partitions as
         concurrent Spark job sets (thread pool) — small partitions rarely
@@ -347,37 +391,7 @@ class Checkpoint:
         and manifest commit, under :func:`suite_hash` ``(suite,
         segment_col)``; :meth:`merged_map_verdicts` reads both back.
         """
-        if self.violations_path is not None:
-            # refuse to append partition_id=<pid>/expectation=… under a root
-            # still holding the pre-change expectation=… top-level layout
-            check_partitioned_layout(
-                self.spark,
-                self.violations_path,
-                stale_prefix="expectation",
-                expected="partition_id=<pid>/expectation=<type>/",
-            )
-            existing = self._stored_columns(self.violations_path)
-            if existing is not None and ("group" in existing) != (
-                segment_col is not None
-            ):
-                # segmented violation rows lead with a `group` column under
-                # the same partition_id=/expectation= layout: one root
-                # holding both row shapes reads back with one side's
-                # columns null-filled or dropped
-                held = "segmented" if segment_col is None else "whole-partition"
-                raise ValueError(
-                    f"violations_path {self.violations_path!r} holds "
-                    f"{held} violation rows; segmented and whole-partition "
-                    "runs need separate violations paths"
-                )
-        if self.evr_path:
-            existing = self._stored_columns(self.evr_path)
-            if existing is not None and "suite_hash" not in existing:
-                raise ValueError(
-                    f"evr_path {self.evr_path!r} holds EVR rows written "
-                    "before rows carried their suite hash and segment; "
-                    "use a new EVR store path"
-                )
+        self._check_stores(segment_col)
         shash = suite_hash(suite, segment_col)
         done = self.completed_partitions(shash)
         if partition_values is None:
@@ -387,134 +401,141 @@ class Checkpoint:
             )
 
         out = CheckpointRunResult(run_id=run_id, suite_hash=shash)
+        todo: list[Any] = []
+        for pv in partition_values:
+            if str(pv) in done:
+                out.records.append(PartitionRunRecord(
+                    str(pv), "skipped", success=done[str(pv)]))
+            else:
+                todo.append(pv)
+
+        def run_one(pv: Any) -> PartitionRunRecord:
+            # Catalyst partition-prunes this filter when partition_col is a
+            # physical partition column of the source (Iceberg / dir-parquet)
+            return self._validate_partition(
+                df.filter(F.col(partition_col) == F.lit(pv)), suite, run_id,
+                str(pv), segment_col, segment_max_groups,
+            )
+
+        if max_concurrent_partitions <= 1:
+            out.records.extend(map(run_one, todo))
+        else:
+            # partitions run under the caller's job group and description
+            with SparkThreadPool(self.spark, max_concurrent_partitions) as pool:
+                out.records.extend(pool.map(run_one, todo))
+        return out
+
+    def run_partition(
+        self, df: DataFrame, suite: ExpectationSuite, run_id: str,
+        partition_id: str,
+    ) -> PartitionRunRecord:
+        """Validate ``df`` whole as the one partition ``partition_id`` and
+        commit it like a partition of :meth:`run`: the ``skipped`` record
+        (with the recorded verdict) when the manifest already commits
+        ``(suite hash, partition_id)``, else one validation whose EVR rows
+        and manifest row carry one fresh commit id. A replay of a committed
+        partition is therefore skipped, and a replay after a torn write is
+        re-validated while the orphan rows stay out of the merge views.
+
+        This is the commit step of a streaming micro-batch
+        (:class:`~great_expectations_spark.streaming.StreamingValidator`);
+        the suite runs in ``df``'s own session, so a query check's view is
+        registered where foreachBatch's cloned session reads it."""
+        self._check_stores(None)
+        done = self.completed_partitions(suite_hash(suite))
+        if partition_id in done:
+            return PartitionRunRecord(
+                partition_id, "skipped", success=done[partition_id])
+        return self._validate_partition(df, suite, run_id, partition_id)
+
+    def _validate_partition(
+        self,
+        pdf: DataFrame,
+        suite: ExpectationSuite,
+        run_id: str,
+        pid: str,
+        segment_col: str | None = None,
+        segment_max_groups: int = 100_000,
+    ) -> PartitionRunRecord:
+        """Validate one partition's frame and commit it: EVR rows first,
+        then the manifest row, both under one fresh commit id."""
+        t0 = time.monotonic()
+        # Each partition's violations go to their OWN Hive-style
+        # subdirectory (violations_path/partition_id=<pid>/): concurrent
+        # workers never append to the same parquet root, so no two threads
+        # share a _temporary committer staging dir (the manifest/EVR lock
+        # does not cover this write), and reading the root rediscovers
+        # partition_id as a column.
+        vpath = self.violations_path
+        if vpath is not None:
+            vpath = os.path.join(
+                vpath, f"partition_id={urllib.parse.quote(pid, safe='')}"
+            )
+
+        rows: list[tuple] = []
+        if segment_col is not None:
+            rows = _validate_rows(
+                pdf, suite, segment_col, strict=True,
+                max_groups=segment_max_groups, violations_path=vpath,
+                unexpected_index_column_names=self.runner_kwargs.get(
+                    "unexpected_index_column_names"
+                ),
+            )
+        segments = len({r[0] for r in rows})
+        row_segment_col = segment_col
+        result = None
+        if not rows:
+            # A whole-partition run — or an EMPTY partition of a segmented
+            # run, which yields zero segments: the whole suite still runs
+            # (map kinds succeed vacuously, a row-count floor fails),
+            # recorded as whole-suite rows (segment_col NULL) that can never
+            # merge into a genuine NULL segment.
+            result = SuiteRunner(
+                pdf.sparkSession, violations_path=vpath, **self.runner_kwargs
+            ).validate(pdf, suite)
+            rows = suite_result_rows(suite, result)
+            row_segment_col = None
+        elapsed = time.monotonic() - t0
+
         # rows_scanned is read off checks whose element_count is their
         # segment's row count: unconditioned checks of the domain groups,
-        # bar contiguity (which counts groups); a suite without one pays
-        # one count of each partition
+        # bar contiguity (which counts groups); a suite without one pays one
+        # count of the partition
         row_counting = {
             c.cfg.id for g in plan_suite(suite).groups if not g.row_condition
             for c in g.checks if not isinstance(c, CompiledContiguous)
         }
+        per_segment_ec: dict[Any, int] = {}
+        violations, ok = 0, True
+        for segment, eid, _type, success, ec, _miss, unexpected, _obs in rows:
+            if eid in row_counting:
+                # max: a check that raised reports 0
+                per_segment_ec[segment] = max(per_segment_ec.get(segment, 0), ec)
+            violations += unexpected
+            ok = ok and success
+        rows_scanned = (
+            sum(per_segment_ec.values()) if row_counting else pdf.count()
+        )
 
-        import threading
-        import urllib.parse
-
-        write_lock = threading.Lock()
-
-        def run_partition(pv: Any) -> PartitionRunRecord:
-            pid = str(pv)
-            t0 = time.monotonic()
-            # Each partition's violations go to their OWN Hive-style
-            # subdirectory (violations_path/partition_id=<pid>/): concurrent
-            # workers never append to the same parquet root, so no two
-            # threads share a _temporary committer staging dir (the
-            # manifest/EVR lock below does not cover this write), and
-            # reading the root rediscovers partition_id as a column.
-            vpath = self.violations_path
-            if vpath is not None:
-                vpath = os.path.join(
-                    vpath, f"partition_id={urllib.parse.quote(pid, safe='')}"
-                )
-            # Catalyst partition-prunes this filter when partition_col is a
-            # physical partition column of the source (Iceberg / dir-parquet).
-            pdf = df.filter(F.col(partition_col) == F.lit(pv))
-
-            rows: list[tuple] = []
-            if segment_col is not None:
-                rows = _validate_rows(
-                    pdf, suite, segment_col, strict=True,
-                    max_groups=segment_max_groups, violations_path=vpath,
-                    unexpected_index_column_names=self.runner_kwargs.get(
-                        "unexpected_index_column_names"
-                    ),
-                )
-            segments = len({r[0] for r in rows})
-            row_segment_col = segment_col
-            result = None
-            if not rows:
-                # A whole-partition run — or an EMPTY partition of a
-                # segmented run, which yields zero segments: the whole suite
-                # still runs (map kinds succeed vacuously, a row-count floor
-                # fails), recorded as whole-suite rows (segment_col NULL)
-                # that can never merge into a genuine NULL segment.
-                result = SuiteRunner(
-                    self.spark, violations_path=vpath, **self.runner_kwargs
-                ).validate(pdf, suite)
-                rows = suite_result_rows(suite, result)
-                row_segment_col = None
-            elapsed = time.monotonic() - t0
-
-            per_segment_ec: dict[Any, int] = {}
-            violations, ok = 0, True
-            for segment, eid, _type, success, ec, _miss, unexpected, _obs in rows:
-                if eid in row_counting:
-                    # max: a check that raised reports 0
-                    per_segment_ec[segment] = max(
-                        per_segment_ec.get(segment, 0), ec
-                    )
-                violations += unexpected
-                ok = ok and success
-            rows_scanned = (
-                sum(per_segment_ec.values()) if row_counting else pdf.count()
-            )
-
-            with write_lock:
-                if self.evr_path:
-                    self._append_evrs(
-                        [(run_id, pid, shash, row_segment_col, *r) for r in rows]
-                    )
-                self._append_manifest(
-                    {
-                        "run_id": run_id,
-                        "partition_id": pid,
-                        "status": "validated",
-                        "suite_hash": shash,
-                        "rows_scanned": rows_scanned,
-                        "violations": violations,
-                        "elapsed_s": elapsed,
-                        "success": ok,
-                    }
-                )
-            return PartitionRunRecord(
-                partition_id=pid,
-                status="validated",
-                result=result,
-                rows_scanned=rows_scanned,
-                violations=violations,
-                elapsed_s=elapsed,
-                segments=segments,
-                success=ok,
-            )
-
-        todo: list[Any] = []
-        for pv in partition_values:
-            pid = str(pv)
-            if pid in done:
-                out.records.append(
-                    PartitionRunRecord(
-                        partition_id=pid, status="skipped", success=done[pid]
-                    )
-                )
-                continue
-            todo.append(pv)
-
-        if max_concurrent_partitions <= 1:
-            for pv in todo:
-                if fail_partition is not None and str(pv) == str(fail_partition):
-                    raise RuntimeError(
-                        f"simulated kill before partition {pv!r} (test hook)"
-                    )
-                out.records.append(run_partition(pv))
-        else:
-            if fail_partition is not None:
-                raise ValueError(
-                    "fail_partition (test hook) requires sequential mode"
-                )
-            # partitions run under the caller's job group and description
-            with SparkThreadPool(self.spark, max_concurrent_partitions) as pool:
-                for rec in pool.map(run_partition, todo):
-                    out.records.append(rec)
-        return out
+        shash = suite_hash(suite, segment_col)
+        commit_id = uuid.uuid4().hex
+        with self._write_lock:
+            if self.evr_path:
+                self._append_evrs([
+                    (run_id, pid, commit_id, shash, row_segment_col, *r)
+                    for r in rows
+                ])
+            self._append_manifest({
+                "run_id": run_id, "partition_id": pid, "commit_id": commit_id,
+                "status": "validated", "suite_hash": shash,
+                "rows_scanned": rows_scanned, "violations": violations,
+                "elapsed_s": elapsed, "success": ok,
+            })
+        return PartitionRunRecord(
+            partition_id=pid, status="validated", result=result,
+            rows_scanned=rows_scanned, violations=violations,
+            elapsed_s=elapsed, segments=segments, success=ok,
+        )
 
     # ------------------------------------------------------------- merge view
     def _committed_rows(
@@ -522,20 +543,22 @@ class Checkpoint:
     ) -> DataFrame:
         """Restrict an EVR frame to MANIFEST-COMMITTED rows: per (suite hash,
         partition), the latest ``status=validated`` manifest row AMONG THE
-        RUNS PRESENT IN THIS STORE names the one ``run_id`` whose EVRs
+        COMMITS PRESENT IN THIS STORE names the one ``commit_id`` whose EVRs
         count. The manifest append is the commit point (EVRs are written
         first, inside the same lock) — a process killed between the two
-        appends leaves orphan EVR rows that a resumed run re-validates, and
-        summing both sets would double every counter for that partition.
+        appends leaves orphan EVR rows that a resumed run re-validates under
+        a new commit id (the same ``run_id`` included), and summing both
+        sets would double every counter for that partition.
 
         Keying the lookup by suite hash keeps every suite and mode that
-        shares this manifest and store: the latest run of one suite never
+        shares this manifest and store: the latest commit of one suite never
         hides another suite's rows on a shared partition. Intersecting with
-        the store's own (suite hash, partition, run) triples keeps a store
+        the store's own (suite hash, partition, commit) triples keeps a store
         whose manifest is shared with other stores from semi-joining down to
-        another store's runs. ``shash`` optionally pins one suite hash. The
-        join side is tiny (one row per partition and suite) and broadcast."""
-        keys = ["suite_hash", "partition_id", "run_id"]
+        another store's commits. ``shash`` optionally pins one suite hash.
+        The join side is tiny (one row per partition and suite) and
+        broadcast."""
+        keys = ["suite_hash", "partition_id", "commit_id"]
         validated = self.read_manifest().filter(
             F.col("status") == "validated"
         )
@@ -545,7 +568,7 @@ class Checkpoint:
             evrs.select(*keys).distinct()
             .join(validated.select(*keys, "finished_ts"), on=keys)
             .groupBy("suite_hash", "partition_id")
-            .agg(F.max_by("run_id", "finished_ts").alias("run_id"))
+            .agg(F.max_by("commit_id", "finished_ts").alias("commit_id"))
         )
         return evrs.join(F.broadcast(latest), on=keys, how="left_semi")
 

@@ -3,9 +3,9 @@
 The reference has NO streaming support (SURVEY.md §2.10 — its Checkpoint is
 a batch-run config, great_expectations/checkpoint/checkpoint.py). This module
 is the post-v1 extension the survey plans: ``foreachBatch`` validation of
-appended micro-batches (e.g. Iceberg snapshot appends / file drops), writing
-the same EVR rows the batch checkpoint writes, so batch and streaming results
-land in one queryable table.
+appended micro-batches (e.g. Iceberg snapshot appends / file drops), each
+committed as one checkpoint partition, so batch and streaming results land
+in one manifest, one EVR store and one merge view.
 """
 
 from great_expectations_spark.streaming.dedup import streaming_exact_dedup

@@ -19,6 +19,21 @@ from great_expectations_spark.checkpoint import (
 )
 
 
+def _kill_at_commit(ck, pid):
+    """Kill the next run of ``ck`` at partition ``pid``'s manifest commit:
+    its EVR rows are written and its manifest row is not (the torn write
+    boundary). The kill fires once; a resumed run commits normally."""
+    append = ck._append_manifest
+
+    def append_or_kill(row):
+        if row["partition_id"] == pid:
+            del ck._append_manifest
+            raise RuntimeError(f"simulated kill at partition {pid!r}")
+        append(row)
+
+    ck._append_manifest = append_or_kill
+
+
 @pytest.fixture()
 def suite():
     s = ExpectationSuite("ckpt-suite")
@@ -53,9 +68,9 @@ def test_full_run_then_resume_skips_all(spark, tmp_path, suite, tdf):
 
 def test_kill_and_resume(spark, tmp_path, suite, tdf):
     ck = Checkpoint(spark, manifest_path=str(tmp_path / "manifest"))
+    _kill_at_commit(ck, "2025-01-03")
     with pytest.raises(RuntimeError, match="simulated kill"):
-        ck.run(tdf, suite, run_id="r1", partition_col="day",
-               fail_partition="2025-01-03")
+        ck.run(tdf, suite, run_id="r1", partition_col="day")
     # two partitions made it into the manifest before the kill
     assert len(ck.completed_partitions(suite_hash(suite))) == 2
 
@@ -117,6 +132,27 @@ def test_merged_verdicts_equal_whole_table_counts(spark, tmp_path, suite, tdf):
     nn = merged["expect_column_values_to_not_be_null"]
     assert nn["element_count"] == 30
     assert nn["unexpected_count"] == 3  # one null per partition
+
+
+def test_torn_partition_resumed_under_same_run_id_counts_once(spark, tmp_path,
+                                                              suite, tdf):
+    """Re-submitting a killed run under its own run id: the torn
+    partition's orphan EVR rows share that run id with the resumed rows,
+    but not their commit id, so the merge counts the partition once."""
+    ck = Checkpoint(spark, manifest_path=str(tmp_path / "manifest"),
+                    evr_path=str(tmp_path / "evrs"))
+    _kill_at_commit(ck, "2025-01-03")
+    with pytest.raises(RuntimeError, match="simulated kill"):
+        ck.run(tdf, suite, run_id="r1", partition_col="day")
+    resumed = ck.run(tdf, suite, run_id="r1", partition_col="day")
+    assert [r.partition_id for r in resumed.validated] == ["2025-01-03"]
+    merged = {r["expectation_type"]: r for r in ck.merged_map_verdicts()
+              .collect()}
+    nn = merged["expect_column_values_to_not_be_null"]
+    assert (nn["element_count"], nn["unexpected_count"]) == (30, 3)
+    stored = spark.read.parquet(str(tmp_path / "evrs"))
+    assert stored.filter(F.col("partition_id") == "2025-01-03") \
+        .select("commit_id").distinct().count() == 2     # orphans + resumed
 
 
 def test_merge_map_counts_reapplies_mostly():
@@ -301,9 +337,10 @@ def test_segmented_checkpoint_kill_resume_equals_single_run(
 
     ck = Checkpoint(spark, manifest_path=str(tmp_path / "m"),
                     evr_path=str(tmp_path / "evr"))
+    _kill_at_commit(ck, "2025-01-03")
     with pytest.raises(RuntimeError, match="simulated kill"):
         ck.run(tdf, seg_suite, run_id="r1", partition_col="day",
-               segment_col="role", fail_partition="2025-01-03")
+               segment_col="role")
 
     r2 = ck.run(tdf, seg_suite, run_id="r2", partition_col="day",
                 segment_col="role")
@@ -449,8 +486,8 @@ def test_merged_segment_verdicts_ignore_orphan_evrs(spark, tmp_path,
         max_groups=100, violations_path=None,
         unexpected_index_column_names=None,
     )
-    ck._append_evrs([("r-orphan", "2025-01-02", r1.suite_hash, "role", *r)
-                     for r in orphan_rows])
+    ck._append_evrs([("r-orphan", "2025-01-02", "c-orphan", r1.suite_hash,
+                      "role", *r) for r in orphan_rows])
 
     merged = _by_segment_and_id(ck.merged_map_verdicts().collect(), "segment")
     single = _by_segment_and_id(

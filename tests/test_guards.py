@@ -212,8 +212,8 @@ def test_completed_partitions_null_success_stays_none(spark, tmp_path):
     ts = datetime.datetime(2026, 1, 1)
     spark.createDataFrame(
         [
-            ("r1", "p0", "validated", "H", 10, 0, 0.1, None, ts),
-            ("r1", "p1", "validated", "H", 10, 0, 0.1, True, ts),
+            ("r1", "p0", "c0", "validated", "H", 10, 0, 0.1, None, ts),
+            ("r1", "p1", "c1", "validated", "H", 10, 0, 0.1, True, ts),
         ],
         MANIFEST_SCHEMA,
     ).write.parquet(mp)

@@ -1,9 +1,10 @@
 """Structured-Streaming incremental validation (SURVEY.md §2.10 extension).
 
 File-source stream drained with trigger(availableNow): every micro-batch is
-validated with the same planner/runner as batch mode, EVR rows land in the
-shared EVR_ROW_SCHEMA shape, and re-running from the same streaming
-checkpoint re-validates nothing (exactly-once bookkeeping).
+validated with the same planner/runner as batch mode and committed as one
+checkpoint partition, re-running from the same streaming checkpoint
+re-validates nothing (exactly-once bookkeeping), and a replayed epoch counts
+once in the checkpoint's merge view.
 """
 
 from __future__ import annotations
@@ -11,8 +12,12 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F, types as T
 
-from great_expectations_spark import ExpectationSuite
-from great_expectations_spark.streaming import validate_stream
+from great_expectations_spark import ExpectationSuite, SuiteRunner
+from great_expectations_spark.checkpoint import Checkpoint
+from great_expectations_spark.streaming import (
+    StreamingValidator,
+    validate_stream,
+)
 
 SCHEMA = T.StructType(
     [
@@ -48,19 +53,29 @@ def suite():
     return s
 
 
-def test_stream_validates_microbatches_and_is_idempotent(spark, suite, tmp_path):
-    src = str(tmp_path / "src")
-    evr = str(tmp_path / "evr")
-    ckpt = str(tmp_path / "ckpt")
-
-    _write_chunk(spark, src, 0, 40, bad_role_every=4)
-
-    stream = (
+def _stream(spark, src):
+    return (
         spark.readStream.schema(SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q, validator = validate_stream(stream, suite, evr, ckpt)
+
+
+def _counters(rows):
+    return {r["expectation_id"]: (r["element_count"], r["missing_count"],
+                                  r["unexpected_count"]) for r in rows}
+
+
+def test_stream_validates_microbatches_and_is_idempotent(spark, suite, tmp_path):
+    src = str(tmp_path / "src")
+    evr = str(tmp_path / "evr")
+    ckpt = str(tmp_path / "ckpt")
+    ck = Checkpoint(spark, manifest_path=str(tmp_path / "manifest"),
+                    evr_path=evr)
+
+    _write_chunk(spark, src, 0, 40, bad_role_every=4)
+
+    q, validator = validate_stream(_stream(spark, src), suite, ck, ckpt)
     q.awaitTermination(120)
 
     assert validator.results, "at least one micro-batch validated"
@@ -74,27 +89,22 @@ def test_stream_validates_microbatches_and_is_idempotent(spark, suite, tmp_path)
     assert in_set.success and in_set.result["unexpected_count"] == 10
 
     evr_df = spark.read.parquet(evr)
-    n_epochs = evr_df.select("epoch").distinct().count()
+    n_epochs = evr_df.select("partition_id").distinct().count()
     assert evr_df.count() == 3 * n_epochs
 
     # ---- append more data; restart from the same checkpoint: only the new
     # file is validated (committed epochs not re-offered)
     _write_chunk(spark, src, 100, 20)
-    stream2 = (
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q2, v2 = validate_stream(stream2, suite, evr, ckpt)
+    q2, v2 = validate_stream(_stream(spark, src), suite, ck, ckpt)
     q2.awaitTermination(120)
     assert len(v2.results) == 1
     assert v2.results[0][1].results[0].result["element_count"] == 20
 
     evr_df2 = spark.read.parquet(evr)
     assert evr_df2.count() == 3 * (n_epochs + 1)
-    # every epoch appears exactly once (idempotent per-epoch overwrite)
+    # every epoch appears exactly once (committed once per partition id)
     dup = (
-        evr_df2.groupBy("epoch", "expectation_id")
+        evr_df2.groupBy("partition_id", "expectation_id")
         .count().filter(F.col("count") > 1).count()
     )
     assert dup == 0
@@ -102,18 +112,120 @@ def test_stream_validates_microbatches_and_is_idempotent(spark, suite, tmp_path)
 
 def test_validator_refuses_epoch_only_evr_layout(spark, suite, tmp_path):
     """An evr_path holding the old top-level ``epoch=`` layout is refused
-    before any micro-batch is validated or written: appending the
-    ``run_id=…/epoch=…`` layout beside it makes the root unreadable."""
-    from great_expectations_spark.streaming import StreamingValidator
-
+    before any micro-batch is validated or written: its rows carry no
+    commit id, so no manifest commit could ever name them."""
     evr = tmp_path / "evr"
     batch = spark.createDataFrame([("c0", 0, "user", "t")], SCHEMA)
     batch.write.parquet(str(evr / "epoch=0"))
-    validator = StreamingValidator(suite, str(evr))
+    validator = StreamingValidator(suite, Checkpoint(
+        spark, manifest_path=str(tmp_path / "manifest"), evr_path=str(evr)))
     with pytest.raises(ValueError, match="epoch="):
         validator(batch, 1)
     assert validator.results == []
     assert sorted(p.name for p in evr.iterdir()) == ["epoch=0"]
+
+
+def test_stream_rows_merge_like_a_whole_table_run(spark, suite, tmp_path):
+    """A stream's micro-batches are checkpoint partitions: the merge view
+    over them equals one SuiteRunner run over all the streamed rows."""
+    src = str(tmp_path / "src")
+    _write_chunk(spark, src, 0, 40, bad_role_every=4)
+    _write_chunk(spark, src, 100, 25, bad_role_every=5)
+    ck = Checkpoint(spark, manifest_path=str(tmp_path / "manifest"),
+                    evr_path=str(tmp_path / "evr"))
+    q, validator = validate_stream(_stream(spark, src), suite, ck,
+                                   str(tmp_path / "ckpt"))
+    q.awaitTermination(120)
+    assert len(validator.results) == 2
+
+    whole = SuiteRunner(spark).validate(spark.read.parquet(src), suite)
+    expected = {cfg.id: tuple(int(r.result.get(k) or 0) for k in (
+        "element_count", "missing_count", "unexpected_count"))
+        for cfg, r in zip(suite, whole.results)}
+    assert _counters(ck.merged_map_verdicts().collect()) == expected
+    assert expected[suite.expectations[1].id] == (65, 0, 15)
+
+
+def test_checkpoint_run_and_stream_share_one_store(spark, suite, tmp_path):
+    """A batch checkpoint run and a stream committing into the same
+    manifest and EVR store both stay in the merge: the stream's appends
+    never hide the batch run's committed rows."""
+    src = str(tmp_path / "src")
+    _write_chunk(spark, src, 0, 20)
+    table = spark.createDataFrame(
+        [(f"b{i}", i, "user", f"t{i}", i % 2) for i in range(30)],
+        "conv_id string, turn_idx int, role string, text string, day int")
+    ck = Checkpoint(spark, manifest_path=str(tmp_path / "manifest"),
+                    evr_path=str(tmp_path / "evr"))
+    assert len(ck.run(table, suite, run_id="batch", partition_col="day")
+               .validated) == 2
+    q, _ = validate_stream(_stream(spark, src), suite, ck,
+                           str(tmp_path / "ckpt"))
+    q.awaitTermination(120)
+    merged = ck.merged_map_verdicts().collect()
+    assert len(merged) == 3
+    assert {r["element_count"] for r in merged} == {50}
+    assert len(ck.read_manifest().collect()) == 3
+
+
+def test_replayed_epoch_counts_once(spark, suite, tmp_path):
+    """foreachBatch may replay an epoch after a restart. A replay after the
+    epoch's commit is skipped; a replay after a torn write (EVR rows
+    appended, manifest row lost) re-validates, and the orphan rows stay out
+    of the merge."""
+    batch = spark.createDataFrame(
+        [(f"c{i}", i, "user", None if i == 0 else "t") for i in range(5)],
+        SCHEMA)
+    ck = Checkpoint(spark, manifest_path=str(tmp_path / "manifest"),
+                    evr_path=str(tmp_path / "evr"))
+    validator = StreamingValidator(suite, ck, run_id="q")
+    validator(batch, 0)
+    validator(batch, 0)                       # replay after the commit
+    assert [e for e, _ in validator.results] == [0]
+
+    append = ck._append_manifest
+
+    def torn(row):                            # the kill between the appends
+        ck._append_manifest = append
+        raise RuntimeError("simulated kill")
+
+    ck._append_manifest = torn
+    with pytest.raises(RuntimeError, match="simulated kill"):
+        validator(batch, 1)
+    validator(batch, 1)                       # replay after the torn write
+    assert [e for e, _ in validator.results] == [0, 1]
+
+    stored = spark.read.parquet(str(tmp_path / "evr"))
+    assert stored.count() == 3 * 3            # epoch 0, orphans, epoch 1
+    merged = {r["expectation_type"]: r for r in ck.merged_map_verdicts()
+              .collect()}
+    nn = merged["expect_column_values_to_not_be_null"]
+    assert (nn["element_count"], nn["unexpected_count"]) == (10, 2)
+    assert sorted(r["partition_id"] for r in ck.read_manifest().collect()) \
+        == ["q/epoch=0", "q/epoch=1"]
+
+
+#: jobs of one micro-batch (8 local cores, 8 shuffle partitions): the
+#: suite's two and the EVR append, plus the EVR store's schema check, the
+#: manifest lookup that skips a committed replay and the manifest append that
+#: commits the epoch (the per-epoch overwrite writer it replaced ran 3)
+MICROBATCH_JOBS = 6
+
+
+def test_microbatch_job_pin(spark, suite, job_ids, tmp_path):
+    """Spark jobs of one StreamingValidator call on a tiny batch, into a
+    store already holding a committed epoch, all under the caller's job
+    group. Besides the suite's own jobs and the EVR append, the commit pays
+    the manifest read (the replay lookup) and the manifest append."""
+    batch = spark.createDataFrame(
+        [(f"c{i}", i, "user", "t") for i in range(5)], SCHEMA)
+    ck = Checkpoint(spark, manifest_path=str(tmp_path / "manifest"),
+                    evr_path=str(tmp_path / "evr"))
+    validator = StreamingValidator(suite, ck, run_id="q")
+    validator(batch, 0)
+    launched, grouped = job_ids("micro-batch", lambda: validator(batch, 1))
+    assert grouped == launched
+    assert 0 < len(launched) <= MICROBATCH_JOBS, len(launched)
 
 
 def test_pii_scan_composes_with_streams(spark, tmp_path):

@@ -189,16 +189,16 @@ def _pin(df: DataFrame, args: argparse.Namespace) -> DataFrame:
 
 def main(argv: list[str] | None = None) -> int:
     args = parse_args(argv if argv is not None else sys.argv[1:])
-    if args.cpus:
-        from great_expectations_spark.skew import build_session
+    from great_expectations_spark.skew import build_session
 
+    if args.cpus:
         spark = build_session(
             app_name="curate_corpus", master=f"local[{args.cpus}]",
             shuffle_partitions=max(8, 2 * args.cpus),
             extra_conf={"spark.ui.enabled": "false"},
         )
     else:
-        spark = SparkSession.builder.appName("curate_corpus").getOrCreate()
+        spark = build_session(app_name="curate_corpus")
 
     t0 = time.time()
     df = spark.read.parquet(args.input)

@@ -27,8 +27,6 @@ from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
 
 def parse_args(argv: list[str]) -> argparse.Namespace:
     p = argparse.ArgumentParser(description=__doc__)
@@ -57,16 +55,16 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
 
 def main(argv: list[str] | None = None) -> int:
     args = parse_args(argv if argv is not None else sys.argv[1:])
-    if args.cpus:
-        from great_expectations_spark.skew import build_session
+    from great_expectations_spark.skew import build_session
 
+    if args.cpus:
         spark = build_session(
             app_name="profile_table", master=f"local[{args.cpus}]",
             shuffle_partitions=max(8, 2 * args.cpus),
             extra_conf={"spark.ui.enabled": "false"},
         )
     else:
-        spark = SparkSession.builder.appName("profile_table").getOrCreate()
+        spark = build_session(app_name="profile_table")
 
     from great_expectations_spark.profiler import profile_suite
 

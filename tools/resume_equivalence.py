@@ -16,12 +16,14 @@ Protocol
    checkpoint unit to its own files).
 2. Run A (control): one uninterrupted Checkpoint.run over all 16
    partitions.
-3. Run B (kill+resume): same suite, fresh manifest/EVR store, with the
-   test hook killing the driver loop before partition 8; catch the kill,
-   then re-invoke Checkpoint.run — the manifest must skip the completed 8
-   and validate only the remaining 8.
-4. Compare: per-(partition × expectation) EVR rows A vs B (exact), merged
-   suite-level counters A vs B (exact), and record timings.
+3. Run B (kill+resume): same suite, fresh manifest/EVR store, killed at
+   partition 8's manifest commit (its EVR rows are written, its manifest
+   row is not — the torn write boundary); catch the kill, then re-invoke
+   Checkpoint.run — the manifest must skip the completed 8 and validate
+   only the remaining 8.
+4. Compare: committed per-(partition × expectation) EVR rows A vs B
+   (exact), merged suite-level counters A vs B (exact), and record
+   timings.
 
 Writes BENCH/RESUME_16M.md. Usage: python tools/resume_equivalence.py
 """
@@ -58,6 +60,20 @@ def build_suite():
     s.add("expect_column_mean_to_be_between", column="turn_idx",
           min_value=0.0, max_value=1000.0)
     return s
+
+
+def kill_at_commit(ck, pid: str) -> None:
+    """Kill the next run of ``ck`` at partition ``pid``'s manifest commit,
+    once: a resumed run commits normally."""
+    append = ck._append_manifest
+
+    def append_or_kill(row):
+        if row["partition_id"] == pid:
+            del ck._append_manifest
+            raise RuntimeError(f"simulated kill at partition {pid!r}")
+        append(row)
+
+    ck._append_manifest = append_or_kill
 
 
 def main() -> int:
@@ -104,10 +120,11 @@ def main() -> int:
 
     # ---- run B: kill after half, then resume ----------------------------
     ck_b = fresh("runB")
+    kill_at_commit(ck_b, str(N_PARTS // 2))
     t0 = time.monotonic()
     try:
         ck_b.run(df, suite, run_id="B1", partition_col="part",
-                 partition_values=parts, fail_partition=N_PARTS // 2)
+                 partition_values=parts)
         raise AssertionError("kill hook did not fire")
     except RuntimeError as e:
         assert "simulated kill" in str(e)
@@ -127,10 +144,11 @@ def main() -> int:
     shash = suite_hash(suite)
     evr_a = {tuple(r) for r in ck_a.merged_map_verdicts(shash).collect()}
     evr_b = {tuple(r) for r in ck_b.merged_map_verdicts(shash).collect()}
-    rows_a = {tuple(r) for r in spark.read.parquet(
-        os.path.join(WORK, "runA", "evrs")).select(*cols).collect()}
-    rows_b = {tuple(r) for r in spark.read.parquet(
-        os.path.join(WORK, "runB", "evrs")).select(*cols).collect()}
+    rows_a, rows_b = (
+        sorted(map(tuple, ck._committed_rows(spark.read.parquet(ck.evr_path))
+                   .select(*cols).collect()))
+        for ck in (ck_a, ck_b)
+    )
 
     per_row_equal = rows_a == rows_b
     merged_equal = evr_a == evr_b
@@ -144,22 +162,23 @@ def main() -> int:
 
 Protocol: `tools/resume_equivalence.py` — {N_PARTS} hash partitions of the
 deterministic 16M-turn transcripts table (same generator/seed as bench.py);
-run A validates all partitions uninterrupted; run B is killed by the
-`fail_partition` hook before partition {N_PARTS // 2} and resumed from the
-manifest. local[{cores}], suite = not_null/in_set/between/value_length/mean
+run A validates all partitions uninterrupted; run B is killed at partition
+{N_PARTS // 2}'s manifest commit (its EVR rows written, its manifest row
+not) and resumed from the manifest. local[{cores}], suite = not_null/in_set/between/value_length/mean
 ({len(list(suite))} expectations, {len(rows_a)} EVR counter rows).
 
 | check | result |
 |---|---|
-| per-(partition × expectation) EVR rows A == B | **{per_row_equal}** |
+| committed per-(partition × expectation) EVR rows A == B | **{per_row_equal}** |
 | merged suite-level counters A == B | **{merged_equal}** |
 | resume skipped exactly the completed partitions | **True** ({skipped}/{N_PARTS}) |
 | run A wall (uninterrupted) | {t_a:.1f} s |
 | run B wall (to kill + resume) | {t_b1:.1f} s + {t_b2:.1f} s |
 
 The kill+resume path re-validates ONLY the {N_PARTS - skipped} partitions
-the manifest had not committed; its EVR store is byte-identical to the
-uninterrupted run's, so suite-level verdicts merged from partials
+the manifest had not committed; its committed EVR rows equal the
+uninterrupted run's (the torn partition's orphan rows carry a commit id the
+manifest never names), so suite-level verdicts merged from partials
 (`checkpoint.merge_map_counts` / `merged_map_verdicts`) are reproducible
 across arbitrary interruption points — the north_rule resumability
 contract at bench scale.

@@ -23,8 +23,6 @@ import json
 import sys
 import uuid
 
-from pyspark.sql import SparkSession
-
 
 def parse_args(argv: list[str]) -> argparse.Namespace:
     p = argparse.ArgumentParser(description=__doc__)
@@ -64,13 +62,10 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
 def main(argv: list[str]) -> int:
     from great_expectations_spark import ExpectationSuite, SuiteRunner
     from great_expectations_spark.checkpoint import Checkpoint
-    from great_expectations_spark.skew import ENGINE_CONF
+    from great_expectations_spark.skew import build_session
 
     args = parse_args(argv)
-    b = SparkSession.builder.appName("gx-spark-run-suite")
-    for k, v in ENGINE_CONF.items():
-        b = b.config(k, v)
-    spark = b.getOrCreate()
+    spark = build_session("gx-spark-run-suite")
 
     if args.format == "table":
         df = spark.read.table(args.table)
