@@ -14,7 +14,7 @@ Architecture (NOT a port — see SURVEY.md §7):
 - Violation-row sink ``(keys…, expectation, observed_value)`` — the
   reference's unexpected_index_list materialized at scale (runner.py)
 - Skew-aware salted aggregation, approximate quantiles,
-  per-partition checkpoint manifest for resumable runs (skew.py,
+  per-partition checkpoint commit log for resumable runs (skew.py,
   checkpoint.py)
 - Training-data pipeline operators: dedup (exact/MinHash-LSH/SimHash/
   embedding), ANN similarity, text analysis, multimodal plumbing

@@ -9,33 +9,38 @@ batch. Our engine lifts that to the north_rule contract:
   or, in the sandbox, a distinct value of a partition column of a
   dir-partitioned parquet table — Catalyst prunes the scan to one partition
   per run unit);
-- every finished partition appends one **manifest row** with lineage +
-  metrics ``(run_id, partition_id, commit_id, status, suite_hash,
-  rows_scanned, violations, elapsed_s, success, finished_ts)``;
-- each partition attempt draws one ``commit_id``, written on its EVR rows
-  and its manifest row: only EVR rows whose commit id the manifest names
-  count, so the orphans of a torn write never do;
-- a re-run with the same ``(suite_hash, partition_id)`` is **skipped**
-  (resume = anti-diff against the manifest, computed driver-side from a
-  manifest read — the manifest is tiny: one row per partition);
+- each partition attempt draws one ``commit_id`` before it validates and
+  writes, in order, its violations under
+  ``violations_path/partition_id=<pid>/commit_id=<cid>/``, its EVR rows as
+  JSON lines in ``evr_path/<cid>.json`` and its **manifest record**
+  (:data:`MANIFEST_SCHEMA`) as ``manifest_path/<cid>.json``, under a
+  dot-prefixed temp name (Hadoop ``FileSystem.create(overwrite=False)``)
+  then renamed: **the rename is the commit point**;
+- readers list the manifest log on the driver and keep the latest
+  ``validated`` record per ``(suite_hash, partition_id)``: no Spark job
+  finds what is committed, a committed partition is **skipped** on re-run,
+  and no reader opens a torn attempt's files;
 - suite-level statistics are re-derivable by **merging** the per-partition
   counters (counts add; ``mostly`` re-evaluated on merged counts) — see
   :func:`merge_map_counts`. This mirrors the reference's
   AGGREGATE_FN partial → finalize split lifted to partition granularity
   (SURVEY.md §4.2 item 5).
 
-Determinism: verdicts use no unseeded randomness (the commit id only names
-an attempt); the manifest is the only state, so kill/resume at any point
-re-runs at most the one in-flight partition (writes are atomic per partition:
-parquet append of a 1-row DataFrame after the partition's validation
-completes).
+Determinism: verdicts use no unseeded randomness; the manifest log is the
+only state, so kill/resume re-runs at most the one in-flight partition. On
+an object store rename is not atomic (S3 copies, then deletes): a commit
+there needs a create-if-absent of the final name (a conditional put). A
+reader opens every record, 2-3 ms each through py4j on a local disk, so
+past ~1k records (a long stream's epochs) a lookup takes seconds and the
+log needs compaction into one snapshot file, as Delta's checkpoints do;
+none is built.
 """
 
 from __future__ import annotations
 
+import datetime
 import hashlib
-import os
-import threading
+import json
 import time
 import urllib.parse
 import uuid
@@ -43,7 +48,7 @@ from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
@@ -64,70 +69,69 @@ from great_expectations_spark.runner import SparkThreadPool, SuiteRunner
 from great_expectations_spark.segmented import _validate_rows
 from great_expectations_spark.suite import ExpectationSuite
 
-MANIFEST_SCHEMA = StructType(
-    [
-        StructField("run_id", StringType()),
-        StructField("partition_id", StringType()),
-        StructField("commit_id", StringType()),
-        StructField("status", StringType()),
-        StructField("suite_hash", StringType()),
-        StructField("rows_scanned", LongType()),
-        StructField("violations", LongType()),
-        StructField("elapsed_s", DoubleType()),
-        StructField("success", BooleanType()),
-        StructField("finished_ts", TimestampType()),
-    ]
-)
+
+def _struct(ddl: str) -> StructType:
+    """A flat StructType from ``"name type, ..."`` DDL."""
+    types = {"string": StringType(), "long": LongType(), "double": DoubleType(),
+             "boolean": BooleanType(), "timestamp": TimestampType()}
+    return StructType([StructField(name, types[t]) for name, t in (
+        f.split() for f in ddl.split(","))])
+
+
+#: one committed partition attempt: lineage + metrics
+MANIFEST_SCHEMA = _struct(
+    "run_id string, partition_id string, commit_id string, status string, "
+    "suite_hash string, rows_scanned long, violations long, elapsed_s double, "
+    "success boolean, finished_ts timestamp")
 
 #: one row per (partition × segment × expectation) — the mergeable metrics
 #: store of both run modes. Counts add across partitions; observed_value is
-#: kept (``str(observed)``, NULL for None) for aggregate expectations, whose
-#: verdicts are reported per partition. A whole-suite row (whole-partition
-#: run, or an empty partition of a segmented run) has ``segment_col`` NULL;
-#: a segmented row names its column, and its ``segment`` may be a genuine
-#: NULL value. Merges key on ``(suite_hash, segment_col, segment,
-#: expectation_id)``, so rows of different suites, modes, segments and
-#: same-type expectations never add together.
-EVR_ROW_SCHEMA = StructType(
-    [
-        StructField("run_id", StringType()),
-        StructField("partition_id", StringType()),
-        StructField("commit_id", StringType()),
-        StructField("suite_hash", StringType()),
-        StructField("segment_col", StringType()),
-        StructField("segment", StringType()),
-        StructField("expectation_id", StringType()),
-        StructField("expectation_type", StringType()),
-        StructField("success", BooleanType()),
-        StructField("element_count", LongType()),
-        StructField("missing_count", LongType()),
-        StructField("unexpected_count", LongType()),
-        StructField("observed_value", StringType()),
-    ]
-)
+#: ``str(observed)`` (NULL for None). A whole-suite row (whole-partition run,
+#: or an empty partition of a segmented run) has ``segment_col`` NULL; a
+#: segmented row's ``segment`` may be a genuine NULL value. Merges key on
+#: ``(suite_hash, segment_col, segment, expectation_id)``, so rows of
+#: different suites, modes, segments and expectations never add together.
+EVR_ROW_SCHEMA = _struct(
+    "run_id string, partition_id string, commit_id string, suite_hash string, "
+    "segment_col string, segment string, expectation_id string, "
+    "expectation_type string, success boolean, element_count long, "
+    "missing_count long, unexpected_count long, observed_value string")
 
 #: the merge view's grouping key
 MERGE_KEYS = ["suite_hash", "segment_col", "segment", "expectation_id"]
 
+MERGED_SCHEMA = _struct(
+    "suite_hash string, segment_col string, segment string, "
+    "expectation_id string, expectation_type string, element_count long, "
+    "missing_count long, unexpected_count long, all_partitions_success boolean")
+
+
+def _fs(spark: SparkSession, path: str):
+    """The Hadoop ``FileSystem`` holding ``path``, and the ``Path``."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), p
+
 
 def check_partitioned_layout(spark: SparkSession, path: str) -> None:
-    """One-time guard against mixing two partition-directory depths under the
-    checkpoint's violations root: appending ``partition_id=<pid>/`` dirs into
-    a root that already holds top-level ``expectation=`` dirs would make the
-    whole root unreadable ("conflicting directory structures"). Raises
-    ValueError; FS quirks never block."""
+    """Refuse a violations root in an earlier, shallower layout (top-level
+    ``expectation=`` dirs, or ``partition_id=<pid>/expectation=<type>/``):
+    mixing depths makes the whole root unreadable ("conflicting directory
+    structures"). One layout writes a root, so its first ``partition_id=``
+    dir tells which. Raises ValueError naming the path; FS quirks never
+    block."""
     try:
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-        if not fs.exists(p):
-            return
-        for st in fs.listStatus(p):
-            if st.getPath().getName().startswith("expectation="):
+        fs, p = _fs(spark, path)
+        top = [st.getPath() for st in fs.listStatus(p)] if fs.exists(p) else []
+        pid_dir = next((q for q in top
+                        if q.getName().startswith("partition_id=")), None)
+        under = [st.getPath() for st in fs.listStatus(pid_dir)] if pid_dir else []
+        for stale, names in (("top-level expectation=", top),
+                             ("partition_id=<pid>/expectation=<type>/", under)):
+            if any(q.getName().startswith("expectation=") for q in names):
                 raise ValueError(
-                    f"{path!r} holds a stale top-level expectation= "
-                    "partition layout; this sink now writes "
-                    "partition_id=<pid>/expectation=<type>/. "
+                    f"{path!r} holds a stale {stale} partition layout; this "
+                    "sink now writes partition_id=<pid>/commit_id=<cid>/"
+                    "expectation=<type>/. "
                     "Use a new path or migrate the old files first."
                 )
     except ValueError:
@@ -220,19 +224,9 @@ def merge_map_counts(
     §1.4). This is what makes per-partition EVRs sufficient state for a
     resumable suite-level verdict.
     """
-    element_count = sum(int(p.get("element_count") or 0) for p in per_partition)
-    missing_count = sum(int(p.get("missing_count") or 0) for p in per_partition)
-    unexpected_count = sum(
-        int(p.get("unexpected_count") or 0) for p in per_partition
-    )
-    return {
-        "element_count": element_count,
-        "missing_count": missing_count,
-        "unexpected_count": unexpected_count,
-        "success": calc_map_success(
-            element_count, missing_count, unexpected_count, mostly
-        ),
-    }
+    counts = {k: sum(int(p.get(k) or 0) for p in per_partition)
+              for k in ("element_count", "missing_count", "unexpected_count")}
+    return {**counts, "success": calc_map_success(*counts.values(), mostly)}
 
 
 class Checkpoint:
@@ -241,9 +235,9 @@ class Checkpoint:
     Parameters
     ----------
     spark : session
-    manifest_path : parquet dir holding the manifest table (created lazily)
-    evr_path : optional parquet dir for per-(partition × expectation) EVR
-        counter rows (the mergeable metrics store)
+    manifest_path : dir of the manifest log, one JSON record per commit
+    evr_path : optional dir of per-attempt JSON-lines files of
+        :data:`EVR_ROW_SCHEMA` counter rows (the mergeable metrics store)
     violations_path : optional violations sink forwarded to SuiteRunner
     runner_kwargs : forwarded to :class:`SuiteRunner`
     """
@@ -261,85 +255,141 @@ class Checkpoint:
         self.evr_path = evr_path
         self.violations_path = violations_path
         self.runner_kwargs = runner_kwargs
-        # one writer at a time for the EVR/manifest appends: concurrent
-        # partitions, and streaming queries sharing this checkpoint, never
-        # race a committer staging dir
-        self._write_lock = threading.Lock()
 
-    # ------------------------------------------------------------ manifest io
-    def read_manifest(self) -> DataFrame:
+    # ----------------------------------------------------------------- log io
+    def _log(self, path: str, role: str):
+        """The log at ``path``: its ``FileSystem`` and ``{commit id: file
+        Path}`` (none if absent), skipping temp and checksum files; any
+        other non-``<cid>.json`` entry raises."""
+        fs, p = _fs(self.spark, path)
+        files = {}
+        for st in fs.listStatus(p) if fs.exists(p) else []:
+            file = st.getPath()
+            name = file.getName()
+            if name.startswith(".") or name.endswith(".crc"):
+                continue
+            if st.isDirectory() or not name.endswith(".json"):
+                raise ValueError(
+                    f"{role} {path!r} holds no commit log but parquet rows "
+                    "without a commit id, suite hash and segment (or a "
+                    f"streaming run_id=/epoch= root); use a new {role}")
+            files[name[:-len(".json")]] = file
+        return fs, files
+
+    def _read(self, fs, file, schema: StructType) -> list[dict]:
+        """The JSON-lines records of one log file, as dicts of ``schema``'s
+        fields; a record that fails to parse raises, naming the file."""
+        stream = fs.open(file)
         try:
-            return self.spark.read.schema(MANIFEST_SCHEMA).parquet(
-                self.manifest_path
-            )
-        except Exception:  # noqa: BLE001 — first run: no manifest yet
-            return self.spark.createDataFrame([], MANIFEST_SCHEMA)
+            data = bytes(self.spark._jvm.org.apache.hadoop.io.IOUtils
+                         .readFullyToByteArray(stream))
+        finally:
+            stream.close()
+        try:
+            return [{f: rec[f] for f in schema.fieldNames()}
+                    for rec in map(json.loads, data.decode().splitlines())]
+        except (ValueError, KeyError, TypeError) as e:
+            raise ValueError(
+                f"unreadable commit record {file.toString()!r}: {e!r}") from e
+
+    def _write(self, path: str, records: list[dict]) -> None:
+        """Write ``records`` as JSON lines to a dot-prefixed temp file, then
+        rename it to ``path``."""
+        fs, final = _fs(self.spark, path)
+        tmp = self.spark._jvm.org.apache.hadoop.fs.Path(
+            final.getParent(), f".{final.getName()}.tmp")
+        out = fs.create(tmp, False)
+        try:
+            out.write("".join(json.dumps(r) + "\n" for r in records).encode())
+        finally:
+            out.close()
+        if not fs.rename(tmp, final):
+            raise OSError(f"could not rename {tmp.toString()!r} to {path!r}")
+
+    def _commit(self, record: dict[str, Any]) -> None:
+        """The commit point: the manifest record renamed into the log."""
+        record = dict(record, finished_ts=datetime.datetime.now().isoformat())
+        self._write(f"{self.manifest_path}/{record['commit_id']}.json",
+                    [record])
+
+    def _committed(self, shash: str | None = None,
+                   store: dict | None = None) -> list[dict]:
+        """The latest ``validated`` manifest record per (suite hash,
+        partition) — so no suite sharing the log hides another's — optionally
+        pinned to one suite hash and to the commit ids in ``store``."""
+        fs, files = self._log(self.manifest_path, "manifest_path")
+        records = [rec for file in files.values()
+                   for rec in self._read(fs, file, MANIFEST_SCHEMA)]
+        latest: dict[tuple[str, str], dict] = {}
+        for rec in sorted(records, key=lambda r: (r["finished_ts"], r["commit_id"])):
+            if (rec["status"] == "validated" and shash in (None, rec["suite_hash"])
+                    and (store is None or rec["commit_id"] in store)):
+                latest[(rec["suite_hash"], rec["partition_id"])] = rec
+        return list(latest.values())
+
+    # ---------------------------------------------------------------- readers
+    def read_manifest(self) -> DataFrame:
+        """The committed manifest records as a :data:`MANIFEST_SCHEMA` frame."""
+        return self.spark.createDataFrame([
+            dict(r, finished_ts=datetime.datetime.fromisoformat(r["finished_ts"]))
+            for r in self._committed()], MANIFEST_SCHEMA)
 
     def completed_partitions(self, shash: str) -> dict[str, bool | None]:
         """{partition_id: recorded suite success} for every partition the
-        manifest marks validated under this suite hash (latest row wins —
-        dict-like a set for membership, plus the verdict for resume
-        reporting). A NULL success column (manifest written before the
-        field existed, or by an external tool) stays ``None`` — coercing
-        it to False would flip the whole resumed run's verdict to failed
-        even when every partition actually passed
-        (``PartitionRunRecord.success`` documents None as "predates this
-        field" and only ``is False`` fails the run). The manifest is tiny,
-        so it is sorted in one task: one Spark job, no range shuffle."""
-        rows = (
-            self.read_manifest()
-            .filter(
-                (F.col("suite_hash") == shash)
-                & (F.col("status") == "validated")
-            )
-            .select("partition_id", "success", "finished_ts")
-            .coalesce(1)
-            .sortWithinPartitions("finished_ts")
-            .collect()
-        )
-        return {
-            r["partition_id"]: (None if r["success"] is None else bool(r["success"]))
-            for r in rows
-        }
+        manifest commits under this suite hash. A NULL success (an external
+        tool's record) stays ``None``, which never fails a resumed run."""
+        return {r["partition_id"]: r["success"] for r in self._committed(shash)}
 
-    def _append_manifest(self, row: dict[str, Any]) -> None:
-        import datetime as _dt
+    def committed_evrs(self, suite_hash: str | None = None) -> list[dict]:
+        """The committed :data:`EVR_ROW_SCHEMA` rows as dicts: per (suite hash,
+        partition), the latest validated commit AMONG THOSE IN THIS STORE, so
+        a manifest shared by stores never reads one down to another's."""
+        if self.evr_path is None:
+            raise ValueError("Checkpoint was created without evr_path")
+        fs, files = self._log(self.evr_path, "evr_path")
+        return [row for rec in self._committed(suite_hash, files)
+                for row in self._read(fs, files[rec["commit_id"]],
+                                      EVR_ROW_SCHEMA)]
 
-        row = dict(row, finished_ts=_dt.datetime.now())
-        self.spark.createDataFrame([row], MANIFEST_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(self.manifest_path)
+    def read_violations(self, suite_hash: str | None = None) -> DataFrame:
+        """The violation rows of committed attempts only, read with the root
+        as ``basePath``: a resumed partition's rows count once.
+        ``partition_id`` and ``commit_id`` come back as the strings written,
+        not as Spark's inferred partition types."""
+        if self.violations_path is None:
+            raise ValueError("Checkpoint was created without violations_path")
+        fs, _ = _fs(self.spark, self.violations_path)
+        dirs = [d for d in (self._attempt_dir(r["partition_id"], r["commit_id"])
+                            for r in self._committed(suite_hash))
+                # a passing attempt writes no sink dir
+                if fs.exists(self.spark._jvm.org.apache.hadoop.fs.Path(d))]
+        if not dirs:
+            return self.spark.createDataFrame(
+                [], "partition_id string, commit_id string")
+        reader = self.spark.read.option("basePath", self.violations_path)
+        return reader.schema(StructType([
+            StructField(f.name, StringType()) if f.name in (
+                "partition_id", "commit_id") else f
+            for f in reader.parquet(*dirs).schema
+        ])).parquet(*dirs)
 
-    def _append_evrs(self, rows: list[tuple]) -> None:
-        self.spark.createDataFrame(rows, EVR_ROW_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(self.evr_path)
-
-    def _stored_columns(self, path: str) -> list[str] | None:
-        """The column names of the parquet store at ``path``, or None when
-        it holds no rows yet (PATH_NOT_FOUND / unable to infer schema); a
-        corrupt existing store still fails loudly here."""
-        try:
-            return self.spark.read.parquet(path).columns
-        except AnalysisException:
-            return None
+    def _attempt_dir(self, pid: str, commit_id: str) -> str:
+        return (f"{self.violations_path}/partition_id="
+                f"{urllib.parse.quote(pid, safe='')}/commit_id={commit_id}")
 
     # ------------------------------------------------------------------- run
     def _check_stores(self, segment_col: str | None) -> None:
         """Refuse stores this run's rows cannot be read back from, naming
         the path, before any partition is validated."""
         if self.violations_path is not None:
-            # refuse to append partition_id=<pid>/expectation=… under a root
-            # still holding the pre-change expectation=… top-level layout
             check_partitioned_layout(self.spark, self.violations_path)
-            existing = self._stored_columns(self.violations_path)
-            if existing is not None and ("group" in existing) != (
-                segment_col is not None
-            ):
-                # segmented violation rows lead with a `group` column under
-                # the same partition_id=/expectation= layout: one root
-                # holding both row shapes reads back with one side's
-                # columns null-filled or dropped
+            try:
+                existing = self.spark.read.parquet(self.violations_path).columns
+            except AnalysisException:  # no rows yet
+                existing = None
+            # segmented violation rows lead with a `group` column: one root
+            # holding both row shapes reads back null-filled
+            if existing and ("group" in existing) != (segment_col is not None):
                 held = "segmented" if segment_col is None else "whole-partition"
                 raise ValueError(
                     f"violations_path {self.violations_path!r} holds "
@@ -347,17 +397,7 @@ class Checkpoint:
                     "runs need separate violations paths"
                 )
         if self.evr_path:
-            existing = self._stored_columns(self.evr_path)
-            if existing is not None and "commit_id" not in existing:
-                # rows without a commit id can never be matched to a
-                # manifest commit: a flat store of an earlier row shape, or
-                # the run_id=/epoch= root the streaming writer used to keep
-                raise ValueError(
-                    f"evr_path {self.evr_path!r} holds EVR rows written "
-                    "before rows carried their commit id, suite hash and "
-                    "segment (or a streaming run_id=/epoch= root); use a new "
-                    "EVR store path"
-                )
+            self._log(self.evr_path, "evr_path")
 
     def run(
         self,
@@ -373,32 +413,35 @@ class Checkpoint:
         """Validate ``df`` partition-by-partition, resuming from the manifest.
 
         ``partition_values`` defaults to the distinct values of
-        ``partition_col`` (one extra scan of that column only — prunable).
+        ``partition_col``, observed by one no-output scan of that column
+        (prunable): one job, where a ``distinct`` runs two under AQE.
 
         ``max_concurrent_partitions`` > 1 validates that many partitions as
         concurrent Spark job sets (thread pool) — small partitions rarely
         saturate the cluster alone, so overlapping them fills the scheduler.
-        Manifest/EVR parquet appends are serialized through a lock (one
-        writer at a time avoids committer staging races); a partition's
-        manifest row still commits only after its validation finished, so
-        resume semantics are identical to the sequential path.
+        Each attempt writes only files of its own commit id.
 
         ``segment_col`` evaluates the suite once per distinct segment value
         WITHIN each partition (the segmented executor of
         :func:`~great_expectations_spark.segmented.validate_by_group`: one
         bundled groupBy per partition, not one scan per segment). Both modes
-        write the same :data:`EVR_ROW_SCHEMA` rows through the same append
-        and manifest commit, under :func:`suite_hash` ``(suite,
-        segment_col)``; :meth:`merged_map_verdicts` reads both back.
+        write the same :data:`EVR_ROW_SCHEMA` rows and manifest commit,
+        under :func:`suite_hash` ``(suite, segment_col)``;
+        :meth:`merged_map_verdicts` reads both back.
         """
         self._check_stores(segment_col)
         shash = suite_hash(suite, segment_col)
         done = self.completed_partitions(shash)
         if partition_values is None:
-            partition_values = sorted(
-                r[partition_col]
-                for r in df.select(partition_col).distinct().collect()
-            )
+            seen = Observation()
+            df.select(partition_col).observe(
+                seen, F.collect_set(partition_col).alias("values"),
+                F.max(F.col(partition_col).isNull()).alias("null"),
+            ).write.format("noop").mode("overwrite").save()
+            if seen.get["null"]:
+                raise ValueError(f"partition_col {partition_col!r} holds "
+                                 "NULLs, which no partition filter matches")
+            partition_values = sorted(seen.get["values"])
 
         out = CheckpointRunResult(run_id=run_id, suite_hash=shash)
         todo: list[Any] = []
@@ -432,12 +475,8 @@ class Checkpoint:
         """Validate ``df`` whole as the one partition ``partition_id`` and
         commit it like a partition of :meth:`run`: the ``skipped`` record
         (with the recorded verdict) when the manifest already commits
-        ``(suite hash, partition_id)``, else one validation whose EVR rows
-        and manifest row carry one fresh commit id. A replay of a committed
-        partition is therefore skipped, and a replay after a torn write is
-        re-validated while the orphan rows stay out of the merge views.
-
-        This is the commit step of a streaming micro-batch
+        ``(suite hash, partition_id)``, else one validated attempt under a
+        fresh commit id. This is the commit step of a streaming micro-batch
         (:class:`~great_expectations_spark.streaming.StreamingValidator`);
         the suite runs in ``df``'s own session, so a query check's view is
         registered where foreachBatch's cloned session reads it."""
@@ -457,20 +496,14 @@ class Checkpoint:
         segment_col: str | None = None,
         segment_max_groups: int = 100_000,
     ) -> PartitionRunRecord:
-        """Validate one partition's frame and commit it: EVR rows first,
-        then the manifest row, both under one fresh commit id."""
+        """Validate one partition's frame and commit it under one fresh
+        commit id: violations, then the EVR file, then the manifest record."""
         t0 = time.monotonic()
-        # Each partition's violations go to their OWN Hive-style
-        # subdirectory (violations_path/partition_id=<pid>/): concurrent
-        # workers never append to the same parquet root, so no two threads
-        # share a _temporary committer staging dir (the manifest/EVR lock
-        # does not cover this write), and reading the root rediscovers
-        # partition_id as a column.
-        vpath = self.violations_path
-        if vpath is not None:
-            vpath = os.path.join(
-                vpath, f"partition_id={urllib.parse.quote(pid, safe='')}"
-            )
+        commit_id = uuid.uuid4().hex
+        # each attempt's violations go to their OWN Hive-style subdirectory:
+        # concurrent workers never share a parquet root, and a torn attempt's
+        # rows stay apart from its resume's
+        vpath = self.violations_path and self._attempt_dir(pid, commit_id)
 
         rows: list[tuple] = []
         if segment_col is not None:
@@ -486,10 +519,9 @@ class Checkpoint:
         result = None
         if not rows:
             # A whole-partition run — or an EMPTY partition of a segmented
-            # run, which yields zero segments: the whole suite still runs
-            # (map kinds succeed vacuously, a row-count floor fails),
-            # recorded as whole-suite rows (segment_col NULL) that can never
-            # merge into a genuine NULL segment.
+            # run: the whole suite still runs (a row-count floor fails), as
+            # whole-suite rows (segment_col NULL) that never merge into a
+            # genuine NULL segment.
             result = SuiteRunner(
                 pdf.sparkSession, violations_path=vpath, **self.runner_kwargs
             ).validate(pdf, suite)
@@ -518,19 +550,18 @@ class Checkpoint:
         )
 
         shash = suite_hash(suite, segment_col)
-        commit_id = uuid.uuid4().hex
-        with self._write_lock:
-            if self.evr_path:
-                self._append_evrs([
-                    (run_id, pid, commit_id, shash, row_segment_col, *r)
-                    for r in rows
-                ])
-            self._append_manifest({
-                "run_id": run_id, "partition_id": pid, "commit_id": commit_id,
-                "status": "validated", "suite_hash": shash,
-                "rows_scanned": rows_scanned, "violations": violations,
-                "elapsed_s": elapsed, "success": ok,
-            })
+        if self.evr_path:
+            self._write(f"{self.evr_path}/{commit_id}.json", [
+                dict(zip(EVR_ROW_SCHEMA.fieldNames(),
+                         (run_id, pid, commit_id, shash, row_segment_col, *r)))
+                for r in rows
+            ])
+        self._commit({
+            "run_id": run_id, "partition_id": pid, "commit_id": commit_id,
+            "status": "validated", "suite_hash": shash,
+            "rows_scanned": rows_scanned, "violations": violations,
+            "elapsed_s": elapsed, "success": ok,
+        })
         return PartitionRunRecord(
             partition_id=pid, status="validated", result=result,
             rows_scanned=rows_scanned, violations=violations,
@@ -538,49 +569,13 @@ class Checkpoint:
         )
 
     # ------------------------------------------------------------- merge view
-    def _committed_rows(
-        self, evrs: DataFrame, shash: str | None = None
-    ) -> DataFrame:
-        """Restrict an EVR frame to MANIFEST-COMMITTED rows: per (suite hash,
-        partition), the latest ``status=validated`` manifest row AMONG THE
-        COMMITS PRESENT IN THIS STORE names the one ``commit_id`` whose EVRs
-        count. The manifest append is the commit point (EVRs are written
-        first, inside the same lock) — a process killed between the two
-        appends leaves orphan EVR rows that a resumed run re-validates under
-        a new commit id (the same ``run_id`` included), and summing both
-        sets would double every counter for that partition.
-
-        Keying the lookup by suite hash keeps every suite and mode that
-        shares this manifest and store: the latest commit of one suite never
-        hides another suite's rows on a shared partition. Intersecting with
-        the store's own (suite hash, partition, commit) triples keeps a store
-        whose manifest is shared with other stores from semi-joining down to
-        another store's commits. ``shash`` optionally pins one suite hash.
-        The join side is tiny (one row per partition and suite) and
-        broadcast."""
-        keys = ["suite_hash", "partition_id", "commit_id"]
-        validated = self.read_manifest().filter(
-            F.col("status") == "validated"
-        )
-        if shash is not None:
-            validated = validated.filter(F.col("suite_hash") == shash)
-        latest = (
-            evrs.select(*keys).distinct()
-            .join(validated.select(*keys, "finished_ts"), on=keys)
-            .groupBy("suite_hash", "partition_id")
-            .agg(F.max_by("commit_id", "finished_ts").alias("commit_id"))
-        )
-        return evrs.join(F.broadcast(latest), on=keys, how="left_semi")
-
     def merged_map_verdicts(self, suite_hash: str | None = None) -> DataFrame:
         """Suite-level merged counters per ``(suite_hash, segment_col,
-        segment, expectation_id)`` from the EVR store — counts add across
-        partitions (SURVEY.md §4.2 item 5), so a resumed multi-partition run
-        re-derives the numbers of a single whole-table run (or of a single
-        ``validate_by_group`` for segmented rows). Only manifest-committed
-        rows participate (``_committed_rows``); pass
-        ``suite_hash(suite, segment_col)`` (or
-        ``CheckpointRunResult.suite_hash``) to pin one run identity.
+        segment, expectation_id)`` of the committed EVR rows, ordered by that
+        key (NULLs first) — counts add across partitions (SURVEY.md §4.2
+        item 5), so a resumed multi-partition run re-derives the numbers of a
+        single whole-table run (or ``validate_by_group`` for segmented rows).
+        ``suite_hash`` pins one run identity.
 
         Exactness caveat (inherent to per-partition validation, not to the
         merge): map/aggregate counters add exactly; uniqueness and window
@@ -588,21 +583,21 @@ class Checkpoint:
         checkpoint's partition column does not split a key group — a
         duplicate pair or a lag window straddling two partitions is counted
         per partition."""
-        if self.evr_path is None:
-            raise ValueError("Checkpoint was created without evr_path")
-        evrs = self._committed_rows(
-            self.spark.read.schema(EVR_ROW_SCHEMA).parquet(self.evr_path),
-            shash=suite_hash,
-        )
-        return (
-            evrs.groupBy(*MERGE_KEYS, "expectation_type")
-            .agg(
-                F.sum("element_count").alias("element_count"),
-                F.sum("missing_count").alias("missing_count"),
-                F.sum("unexpected_count").alias("unexpected_count"),
-                F.min(F.col("success").cast("int")).cast("boolean").alias(
-                    "all_partitions_success"
-                ),
-            )
-            .orderBy(*MERGE_KEYS)
-        )
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        groups: dict[tuple, list[dict]] = {}
+        for r in self.committed_evrs(suite_hash):
+            key = tuple(r[k] for k in (*MERGE_KEYS, "expectation_type"))
+            groups.setdefault(key, []).append(r)
+        counts = ("element_count", "missing_count", "unexpected_count")
+        merged = [
+            dict(zip(MERGED_SCHEMA.fieldNames(), (
+                *key, *(sum(r[c] for r in rs) for c in counts),
+                all(r["success"] for r in rs))))
+            for key, rs in sorted(groups.items(), key=lambda kv: [
+                (v is not None, v) for v in kv[0]])
+        ]
+        # an Arrow table becomes a local relation: collecting it runs no job
+        return self.spark.createDataFrame(pa.Table.from_pylist(
+            merged, schema=to_arrow_schema(MERGED_SCHEMA)), MERGED_SCHEMA)

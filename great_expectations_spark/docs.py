@@ -13,10 +13,10 @@ Surfaces:
 - :func:`render_suite_markdown` / :func:`render_suite_html` — suite page.
 - :func:`render_result_markdown` / :func:`render_result_html` — one
   validation run (EVR table, statistics, failed-expectation detail).
-- :func:`build_data_docs` — write a small static site for a checkpoint EVR
-  store: index + one page per (run_id, partition_id), links included. Reads
-  ONLY the tiny EVR parquet (one row per partition × expectation), never
-  the validated data.
+- :func:`build_data_docs` — write a small static site for a checkpoint's
+  committed EVR rows: index + one page per (run_id, partition_id), links
+  included. Reads ONLY the checkpoint's commit log and the committed EVR
+  files (one row per partition × expectation), never the validated data.
 """
 
 from __future__ import annotations
@@ -188,22 +188,22 @@ def render_result_html(result: ExpectationSuiteValidationResult) -> str:
 # ---------------------------------------------------------------------------
 
 def build_data_docs(
-    spark,
-    evr_path: str,
+    checkpoint,
     site_dir: str,
     suite: ExpectationSuite | None = None,
 ) -> str:
-    """Write a static site for a checkpoint/streaming EVR store.
+    """Write a static site for a checkpoint's (or a stream's) EVR store.
 
     One index page (per-partition verdict rollup) plus one page per
-    (run_id, partition_id). Reads only the EVR parquet — one tiny row per
-    partition × expectation — so this stays O(partitions), independent of
-    validated-data size. Returns the index path.
+    (run_id, partition_id), over the committed rows only
+    (:meth:`~great_expectations_spark.checkpoint.Checkpoint.committed_evrs`):
+    a torn attempt's rows are never listed or counted. Reads one tiny row
+    per partition × expectation on the driver, so this stays
+    O(partitions), independent of validated-data size. Returns the index
+    path.
     """
-    from great_expectations_spark.checkpoint import EVR_ROW_SCHEMA
-
+    evrs = checkpoint.committed_evrs()
     os.makedirs(site_dir, exist_ok=True)
-    evrs = spark.read.schema(EVR_ROW_SCHEMA).parquet(evr_path).collect()
 
     by_part: dict[tuple[str, str], list] = {}
     for r in evrs:

@@ -7,18 +7,18 @@ a plain DataFrame, so nothing is reimplemented. Each micro-batch is one
 checkpoint partition: :meth:`Checkpoint.run_partition
 <great_expectations_spark.checkpoint.Checkpoint.run_partition>` validates it
 under the partition id ``<run_id>/epoch=<n>`` and commits it like any
-partition of ``Checkpoint.run`` — whole-suite EVR rows appended to the
-checkpoint's EVR store, then the manifest row that commits them, both
-carrying one commit id; violation rows go to the checkpoint's violations
-sink. Stream and batch rows therefore share one manifest, one EVR store and
-one merge view (``Checkpoint.merged_map_verdicts``).
+partition of ``Checkpoint.run`` — violation rows to the checkpoint's
+violations sink, whole-suite EVR rows as one file in its EVR store, then the
+manifest record that commits them, all under one commit id. Stream and
+batch rows therefore share one manifest, one EVR store and one merge view
+(``Checkpoint.merged_map_verdicts``).
 
 Exactly-once bookkeeping rides on Spark's own streaming checkpoint
 (``checkpointLocation``): on restart, committed epochs are not re-offered to
 ``foreachBatch``. An epoch Spark does replay counts once: if its manifest
-row was written, the replay is skipped; if the write was torn, the replay
-re-validates and the orphan EVR rows, whose commit id the manifest never
-named, stay out of the merge. ``run_id`` is the caller-supplied name or a
+record was committed, the replay is skipped; if the write was torn, the
+replay re-validates and the orphan rows, whose commit id the manifest never
+named, stay out of every reader. ``run_id`` is the caller-supplied name or a
 per-validator UUID (Spark's query id is not known until ``start()``, after
 ``foreachBatch`` may already have fired); a restart replays an epoch
 idempotently only under the ``run_id`` of the first start. The run id in
@@ -30,8 +30,10 @@ the new files (file-source maxFilesPerTrigger) or the new snapshot (Iceberg
 ``stream-from-timestamp``); no global state is kept, so watermarks are not
 needed — suite metrics are per-epoch by construction, and cross-epoch
 rollups happen at read time over the EVR store (counts add, per §4.2.5
-mergeability). The commit costs each micro-batch a manifest read (the replay
-lookup) and a manifest append besides the EVR append.
+mergeability). The commit adds no Spark job to the suite's own: the replay
+lookup lists and reads the manifest log on the driver, and the EVR file and
+the manifest record are two small files written through Hadoop's
+``FileSystem``.
 """
 
 from __future__ import annotations

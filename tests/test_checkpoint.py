@@ -20,18 +20,19 @@ from great_expectations_spark.checkpoint import (
 
 
 def _kill_at_commit(ck, pid):
-    """Kill the next run of ``ck`` at partition ``pid``'s manifest commit:
-    its EVR rows are written and its manifest row is not (the torn write
-    boundary). The kill fires once; a resumed run commits normally."""
-    append = ck._append_manifest
+    """Kill the next run of ``ck`` at partition ``pid``'s commit point: its
+    violations and EVR file are written and its manifest record is never
+    renamed into the log. The kill fires once; a resumed run commits
+    normally."""
+    commit = ck._commit
 
-    def append_or_kill(row):
-        if row["partition_id"] == pid:
-            del ck._append_manifest
+    def commit_or_kill(record):
+        if record["partition_id"] == pid:
+            del ck._commit
             raise RuntimeError(f"simulated kill at partition {pid!r}")
-        append(row)
+        commit(record)
 
-    ck._append_manifest = append_or_kill
+    ck._commit = commit_or_kill
 
 
 @pytest.fixture()
@@ -150,9 +151,12 @@ def test_torn_partition_resumed_under_same_run_id_counts_once(spark, tmp_path,
               .collect()}
     nn = merged["expect_column_values_to_not_be_null"]
     assert (nn["element_count"], nn["unexpected_count"]) == (30, 3)
-    stored = spark.read.parquet(str(tmp_path / "evrs"))
-    assert stored.filter(F.col("partition_id") == "2025-01-03") \
-        .select("commit_id").distinct().count() == 2     # orphans + resumed
+    written = {p.stem for p in (tmp_path / "evrs").glob("*.json")
+               if '"2025-01-03"' in p.read_text()}
+    committed = {r["commit_id"] for r in ck.committed_evrs()
+                 if r["partition_id"] == "2025-01-03"}
+    assert len(written) == 2                             # orphans + resumed
+    assert len(committed) == 1 and committed < written
 
 
 def test_merge_map_counts_reapplies_mostly():
@@ -200,12 +204,14 @@ def test_concurrent_partition_run_matches_sequential(spark, tmp_path):
         )
 
     assert summarize(r_seq) == summarize(r_conc)
-    evr_seq = spark.read.parquet(str(tmp_path / "e_seq"))
-    evr_conc = spark.read.parquet(str(tmp_path / "e_conc"))
     cols = ["partition_id", "expectation_type", "success",
             "element_count", "unexpected_count"]
-    assert sorted(map(tuple, evr_seq.select(*cols).collect())) == \
-        sorted(map(tuple, evr_conc.select(*cols).collect()))
+
+    def stored(ck):
+        return sorted(tuple(r[c] for c in cols) for r in ck.committed_evrs())
+
+    assert len(stored(seq)) == 4 * 2
+    assert stored(seq) == stored(conc)
 
     # resume: everything skipped on a re-run (concurrent mode too)
     r2 = conc.run(tdf, suite, run_id="r2", partition_col="bucket",
@@ -466,11 +472,12 @@ def test_segmented_checkpoint_failure_verdict(spark, tmp_path, tdf):
 
 def test_merged_segment_verdicts_ignore_orphan_evrs(spark, tmp_path,
                                                     seg_suite, tdf):
-    """A kill BETWEEN the EVR append and the manifest append leaves orphan
-    EVR rows; the resumed run re-validates the partition and appends a
+    """A kill BETWEEN the EVR file and the manifest commit leaves an orphan
+    EVR file; the resumed run re-validates the partition and writes a
     second full set. The merge must count ONLY manifest-committed rows
     (round-5 review fix), or every counter of that partition doubles."""
     from great_expectations_spark import validate_by_group
+    from great_expectations_spark.checkpoint import EVR_ROW_SCHEMA
     from great_expectations_spark.segmented import _validate_rows
 
     ck = Checkpoint(spark, manifest_path=str(tmp_path / "m"),
@@ -479,15 +486,17 @@ def test_merged_segment_verdicts_ignore_orphan_evrs(spark, tmp_path,
                 segment_col="role")
     assert r1.success is not None
 
-    # simulate the torn write: EVR rows committed, manifest row lost
+    # simulate the torn write: EVR file written, manifest record lost
     orphan_rows = _validate_rows(
         tdf.filter(F.col("day") == "2025-01-02"),
         seg_suite, "role", strict=True,
         max_groups=100, violations_path=None,
         unexpected_index_column_names=None,
     )
-    ck._append_evrs([("r-orphan", "2025-01-02", "c-orphan", r1.suite_hash,
-                      "role", *r) for r in orphan_rows])
+    ck._write(str(tmp_path / "evr" / "c-orphan.json"), [
+        dict(zip(EVR_ROW_SCHEMA.fieldNames(), (
+            "r-orphan", "2025-01-02", "c-orphan", r1.suite_hash, "role", *r)))
+        for r in orphan_rows])
 
     merged = _by_segment_and_id(ck.merged_map_verdicts().collect(), "segment")
     single = _by_segment_and_id(
@@ -572,9 +581,8 @@ def test_empty_partition_segmented_honors_row_count_guard(spark, tmp_path,
     assert res.success is False
     # every verdict visible in the store as a whole-suite row, with the
     # runner's real observed value explaining the failure
-    rows = {r["expectation_type"]: r for r in spark.read.parquet(
-        str(tmp_path / "evr")).filter(
-        F.col("partition_id") == "2099-12-31").collect()}
+    rows = {r["expectation_type"]: r for r in ck.committed_evrs()
+            if r["partition_id"] == "2099-12-31"}
     assert len(rows) == 2
     for r in rows.values():
         assert r["suite_hash"] == res.suite_hash == suite_hash(s, "role")
@@ -783,3 +791,88 @@ def test_contiguous_concurrent_partitions_pair_correct_stats(spark,
     # exactly the broken d1 conversation's rows — nothing from d2
     assert {r["conv_id"] for r in viol} == {"d1-c0"}
     assert len(viol) == 3
+
+
+def test_torn_partition_violations_count_once(spark, tmp_path, suite, tdf):
+    """A kill at the commit point leaves the torn attempt's violation rows
+    on disk under their own commit id; the resumed attempt writes its own.
+    The committed-violations reader reads each null row once, as the merge
+    counts it, with the partition and commit ids as the strings written."""
+    vroot = tmp_path / "violations"
+    ck = Checkpoint(spark, manifest_path=str(tmp_path / "m"),
+                    evr_path=str(tmp_path / "evr"), violations_path=str(vroot),
+                    unexpected_index_column_names=["conv_id", "turn_idx"])
+    two_days = tdf.filter(F.col("day") != "2025-01-03")
+    _kill_at_commit(ck, "2025-01-02")
+    with pytest.raises(RuntimeError, match="simulated kill"):
+        ck.run(two_days, suite, run_id="r1", partition_col="day")
+    ck.run(two_days, suite, run_id="r1", partition_col="day")
+
+    assert len(list(vroot.glob("partition_id=2025-01-02/commit_id=*"))) == 2
+    viol = ck.read_violations()
+    nulls = viol.filter(
+        F.col("expectation") == "expect_column_values_to_not_be_null")
+    assert nulls.count() == 2                       # one null text per day
+    merged = {r["expectation_type"]: r["unexpected_count"]
+              for r in ck.merged_map_verdicts().collect()}
+    assert merged["expect_column_values_to_not_be_null"] == 2
+    assert dict(viol.dtypes)["commit_id"] == "string"
+    assert dict(viol.dtypes)["partition_id"] == "string"
+    assert {r["partition_id"] for r in nulls.collect()} == {
+        "2025-01-01", "2025-01-02"}
+
+
+def test_violations_path_old_partition_depth_refused(spark, tmp_path, suite,
+                                                     tdf):
+    """A violations root in the partition_id=<pid>/expectation=<type>/
+    layout written before attempts carried a commit id directory is
+    refused, naming the path: one more directory level under it would mix
+    two depths and make the root unreadable."""
+    vroot = tmp_path / "violations"
+    (vroot / "partition_id=2025-01-01" /
+     "expectation=expect_column_values_to_not_be_null").mkdir(parents=True)
+    ck = Checkpoint(spark, manifest_path=str(tmp_path / "m"),
+                    violations_path=str(vroot))
+    with pytest.raises(ValueError, match="partition_id=<pid>/expectation=") \
+            as exc:
+        ck.run(tdf, suite, run_id="r1", partition_col="day")
+    assert str(vroot) in str(exc.value)
+
+
+def test_unreadable_manifest_log_fails_loudly(spark, tmp_path, suite, tdf):
+    """A missing log means no commits, and readers skip temp and checksum
+    files; a committed record that fails to parse raises, naming the file,
+    instead of silently re-validating every partition. A parquet manifest
+    written before the commit log is refused, naming the path."""
+    m = tmp_path / "m"
+    ck = Checkpoint(spark, manifest_path=str(m))
+    assert ck.completed_partitions(suite_hash(suite)) == {}
+    m.mkdir()
+    (m / ".c1.json.tmp").write_text("{half a rec")
+    (m / "c2.json.crc").write_text("crc")
+    assert ck.completed_partitions(suite_hash(suite)) == {}
+    assert ck.read_manifest().collect() == []
+    (m / "c3.json").write_text('{"run_id": "r1", "partition_id": ')
+    with pytest.raises(ValueError, match="c3.json"):
+        ck.completed_partitions(suite_hash(suite))
+    with pytest.raises(ValueError, match="c3.json"):
+        ck.run(tdf, suite, run_id="r1", partition_col="day")
+
+    old = str(tmp_path / "old_manifest")
+    spark.createDataFrame([("r0", "2025-01-01")],
+                          "run_id string, partition_id string") \
+        .write.parquet(old)
+    with pytest.raises(ValueError, match="old_manifest"):
+        Checkpoint(spark, manifest_path=old).run(
+            tdf, suite, run_id="r1", partition_col="day")
+
+
+def test_null_partition_value_refused(spark, tmp_path, suite, tdf):
+    """Rows whose partition value is NULL match no partition filter, so they
+    would never be validated: the run refuses them, naming the column."""
+    df = tdf.withColumn("day", F.when(F.col("turn_idx") == 0, F.lit(None))
+                        .otherwise(F.col("day")))
+    ck = Checkpoint(spark, manifest_path=str(tmp_path / "m"))
+    with pytest.raises(ValueError, match="'day' holds NULLs"):
+        ck.run(df, suite, run_id="r1", partition_col="day")
+    assert ck.read_manifest().collect() == []

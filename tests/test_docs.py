@@ -57,7 +57,7 @@ def test_build_data_docs_site(spark, suite, tdf, tmp_path):
                     evr_path=str(tmp_path / "e"))
     ck.run(tdf, suite, run_id="r1", partition_col="day")
     site = str(tmp_path / "site")
-    index = build_data_docs(spark, str(tmp_path / "e"), site, suite=suite)
+    index = build_data_docs(ck, site, suite=suite)
     assert os.path.exists(index)
     with open(index) as f:
         idx = f.read()
@@ -68,3 +68,36 @@ def test_build_data_docs_site(spark, suite, tdf, tmp_path):
         page = f.read()
     assert "expect_column_values_to_be_between" in page
     assert os.path.exists(os.path.join(site, "suite.html"))
+
+
+def test_data_docs_list_committed_rows_only(spark, suite, tdf, tmp_path):
+    """After a kill at the commit point and a resume under the same run
+    id, the torn partition's page lists each expectation once, and the
+    index's total unexpected counts no orphan row."""
+    ck = Checkpoint(spark, manifest_path=str(tmp_path / "m"),
+                    evr_path=str(tmp_path / "e"))
+    commit = ck._commit
+
+    def commit_or_kill(record):
+        if record["partition_id"] == "d1":
+            ck._commit = commit
+            raise RuntimeError("simulated kill")
+        commit(record)
+
+    ck._commit = commit_or_kill
+    with pytest.raises(RuntimeError, match="simulated kill"):
+        ck.run(tdf, suite, run_id="r1", partition_col="day")
+    ck.run(tdf, suite, run_id="r1", partition_col="day")
+    assert len(list((tmp_path / "e").glob("*.json"))) == 3   # one orphan
+
+    site = str(tmp_path / "site")
+    index = build_data_docs(ck, site)
+    with open(os.path.join(site, "run_r1__part_d1.html")) as f:
+        page = f.read()
+    assert page.count("expect_column_values_to_be_between") == 1
+    assert page.count("expect_column_values_to_not_be_null") == 1
+    # d0: turn_idx 4, 6, 8 out of range; d1: 5, 7, 9 plus the null text
+    with open(index) as f:
+        idx = f.read()
+    assert "<td>3</td>" in idx and "<td>4</td>" in idx
+    assert "<td>8</td>" not in idx

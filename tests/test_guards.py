@@ -201,23 +201,21 @@ def test_duplicate_clusters_long_chain_converges_or_warns(spark):
 
 
 def test_completed_partitions_null_success_stays_none(spark, tmp_path):
-    """A manifest row with NULL success (written before the field existed /
-    by an external tool) must surface as None, not False — coercion to
-    False flipped a fully-passing resumed run's verdict to failed."""
-    import datetime
+    """A manifest record with NULL success (written by an external tool)
+    must surface as None, not False — coercion to False flipped a
+    fully-passing resumed run's verdict to failed."""
+    import json
 
     from great_expectations_spark.checkpoint import Checkpoint, MANIFEST_SCHEMA
 
-    mp = str(tmp_path / "manifest")
-    ts = datetime.datetime(2026, 1, 1)
-    spark.createDataFrame(
-        [
-            ("r1", "p0", "c0", "validated", "H", 10, 0, 0.1, None, ts),
-            ("r1", "p1", "c1", "validated", "H", 10, 0, 0.1, True, ts),
-        ],
-        MANIFEST_SCHEMA,
-    ).write.parquet(mp)
-    done = Checkpoint(spark, manifest_path=mp).completed_partitions("H")
+    mp = tmp_path / "manifest"
+    mp.mkdir()
+    for pid, cid, success in (("p0", "c0", None), ("p1", "c1", True)):
+        (mp / f"{cid}.json").write_text(json.dumps(dict(zip(
+            MANIFEST_SCHEMA.fieldNames(),
+            ("r1", pid, cid, "validated", "H", 10, 0, 0.1, success,
+             "2026-01-01T00:00:00")))))
+    done = Checkpoint(spark, manifest_path=str(mp)).completed_partitions("H")
     assert done == {"p0": None, "p1": True}
 
 

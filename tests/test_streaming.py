@@ -88,9 +88,9 @@ def test_stream_validates_microbatches_and_is_idempotent(spark, suite, tmp_path)
     in_set = by_type["expect_column_values_to_be_in_set"]
     assert in_set.success and in_set.result["unexpected_count"] == 10
 
-    evr_df = spark.read.parquet(evr)
-    n_epochs = evr_df.select("partition_id").distinct().count()
-    assert evr_df.count() == 3 * n_epochs
+    evrs = ck.committed_evrs()
+    n_epochs = len({r["partition_id"] for r in evrs})
+    assert len(evrs) == 3 * n_epochs
 
     # ---- append more data; restart from the same checkpoint: only the new
     # file is validated (committed epochs not re-offered)
@@ -100,14 +100,11 @@ def test_stream_validates_microbatches_and_is_idempotent(spark, suite, tmp_path)
     assert len(v2.results) == 1
     assert v2.results[0][1].results[0].result["element_count"] == 20
 
-    evr_df2 = spark.read.parquet(evr)
-    assert evr_df2.count() == 3 * (n_epochs + 1)
+    evrs2 = ck.committed_evrs()
+    assert len(evrs2) == 3 * (n_epochs + 1)
     # every epoch appears exactly once (committed once per partition id)
-    dup = (
-        evr_df2.groupBy("partition_id", "expectation_id")
-        .count().filter(F.col("count") > 1).count()
-    )
-    assert dup == 0
+    keys = [(r["partition_id"], r["expectation_id"]) for r in evrs2]
+    assert len(set(keys)) == len(keys)
 
 
 def test_validator_refuses_epoch_only_evr_layout(spark, suite, tmp_path):
@@ -170,9 +167,9 @@ def test_checkpoint_run_and_stream_share_one_store(spark, suite, tmp_path):
 
 def test_replayed_epoch_counts_once(spark, suite, tmp_path):
     """foreachBatch may replay an epoch after a restart. A replay after the
-    epoch's commit is skipped; a replay after a torn write (EVR rows
-    appended, manifest row lost) re-validates, and the orphan rows stay out
-    of the merge."""
+    epoch's commit is skipped; a replay after a torn write (EVR file
+    written, manifest record never renamed into the log) re-validates, and
+    the orphan rows stay out of the merge."""
     batch = spark.createDataFrame(
         [(f"c{i}", i, "user", None if i == 0 else "t") for i in range(5)],
         SCHEMA)
@@ -183,20 +180,21 @@ def test_replayed_epoch_counts_once(spark, suite, tmp_path):
     validator(batch, 0)                       # replay after the commit
     assert [e for e, _ in validator.results] == [0]
 
-    append = ck._append_manifest
+    commit = ck._commit
 
-    def torn(row):                            # the kill between the appends
-        ck._append_manifest = append
+    def torn(record):                         # the kill at the commit point
+        ck._commit = commit
         raise RuntimeError("simulated kill")
 
-    ck._append_manifest = torn
+    ck._commit = torn
     with pytest.raises(RuntimeError, match="simulated kill"):
         validator(batch, 1)
     validator(batch, 1)                       # replay after the torn write
     assert [e for e, _ in validator.results] == [0, 1]
 
-    stored = spark.read.parquet(str(tmp_path / "evr"))
-    assert stored.count() == 3 * 3            # epoch 0, orphans, epoch 1
+    written = list((tmp_path / "evr").glob("*.json"))
+    assert len(written) == 3                  # epoch 0, orphans, epoch 1
+    assert len({r["commit_id"] for r in ck.committed_evrs()}) == 2
     merged = {r["expectation_type"]: r for r in ck.merged_map_verdicts()
               .collect()}
     nn = merged["expect_column_values_to_not_be_null"]
@@ -206,17 +204,15 @@ def test_replayed_epoch_counts_once(spark, suite, tmp_path):
 
 
 #: jobs of one micro-batch (8 local cores, 8 shuffle partitions): the
-#: suite's two and the EVR append, plus the EVR store's schema check, the
-#: manifest lookup that skips a committed replay and the manifest append that
-#: commits the epoch (the per-epoch overwrite writer it replaced ran 3)
-MICROBATCH_JOBS = 6
+#: suite's own two. The replay lookup, the EVR file and the manifest commit
+#: are driver-side file operations and run no job
+MICROBATCH_JOBS = 2
 
 
 def test_microbatch_job_pin(spark, suite, job_ids, tmp_path):
     """Spark jobs of one StreamingValidator call on a tiny batch, into a
     store already holding a committed epoch, all under the caller's job
-    group. Besides the suite's own jobs and the EVR append, the commit pays
-    the manifest read (the replay lookup) and the manifest append."""
+    group. The commit adds no job to the suite's own."""
     batch = spark.createDataFrame(
         [(f"c{i}", i, "user", "t") for i in range(5)], SCHEMA)
     ck = Checkpoint(spark, manifest_path=str(tmp_path / "manifest"),

@@ -17,8 +17,8 @@ Protocol
 2. Run A (control): one uninterrupted Checkpoint.run over all 16
    partitions.
 3. Run B (kill+resume): same suite, fresh manifest/EVR store, killed at
-   partition 8's manifest commit (its EVR rows are written, its manifest
-   row is not — the torn write boundary); catch the kill, then re-invoke
+   partition 8's commit point (its EVR file is written, its manifest
+   record is never renamed into the log); catch the kill, then re-invoke
    Checkpoint.run — the manifest must skip the completed 8 and validate
    only the remaining 8.
 4. Compare: committed per-(partition × expectation) EVR rows A vs B
@@ -63,17 +63,17 @@ def build_suite():
 
 
 def kill_at_commit(ck, pid: str) -> None:
-    """Kill the next run of ``ck`` at partition ``pid``'s manifest commit,
+    """Kill the next run of ``ck`` at partition ``pid``'s commit point,
     once: a resumed run commits normally."""
-    append = ck._append_manifest
+    commit = ck._commit
 
-    def append_or_kill(row):
-        if row["partition_id"] == pid:
-            del ck._append_manifest
+    def commit_or_kill(record):
+        if record["partition_id"] == pid:
+            del ck._commit
             raise RuntimeError(f"simulated kill at partition {pid!r}")
-        append(row)
+        commit(record)
 
-    ck._append_manifest = append_or_kill
+    ck._commit = commit_or_kill
 
 
 def main() -> int:
@@ -145,8 +145,7 @@ def main() -> int:
     evr_a = {tuple(r) for r in ck_a.merged_map_verdicts(shash).collect()}
     evr_b = {tuple(r) for r in ck_b.merged_map_verdicts(shash).collect()}
     rows_a, rows_b = (
-        sorted(map(tuple, ck._committed_rows(spark.read.parquet(ck.evr_path))
-                   .select(*cols).collect()))
+        sorted(tuple(r[c] for c in cols) for r in ck.committed_evrs())
         for ck in (ck_a, ck_b)
     )
 
@@ -163,8 +162,8 @@ def main() -> int:
 Protocol: `tools/resume_equivalence.py` — {N_PARTS} hash partitions of the
 deterministic 16M-turn transcripts table (same generator/seed as bench.py);
 run A validates all partitions uninterrupted; run B is killed at partition
-{N_PARTS // 2}'s manifest commit (its EVR rows written, its manifest row
-not) and resumed from the manifest. local[{cores}], suite = not_null/in_set/between/value_length/mean
+{N_PARTS // 2}'s commit point (its EVR file written, its manifest record
+never renamed into the log) and resumed from the manifest. local[{cores}], suite = not_null/in_set/between/value_length/mean
 ({len(list(suite))} expectations, {len(rows_a)} EVR counter rows).
 
 | check | result |

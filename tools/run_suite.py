@@ -236,7 +236,7 @@ def main(argv: list[str]) -> int:
         if args.docs:
             from great_expectations_spark.docs import build_data_docs
 
-            docs_index = build_data_docs(spark, args.evr, args.docs, suite=suite)
+            docs_index = build_data_docs(ckpt, args.docs, suite=suite)
         print(json.dumps({
             "run_id": run_id,
             "partitions_validated": len(res.validated),
