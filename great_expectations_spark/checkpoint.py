@@ -12,14 +12,17 @@ batch. Our engine lifts that to the north_rule contract:
 - each partition attempt draws one ``commit_id`` before it validates and
   writes, in order, its violations under
   ``violations_path/partition_id=<pid>/commit_id=<cid>/``, its EVR rows as
-  JSON lines in ``evr_path/<cid>.json`` and its **manifest record**
-  (:data:`MANIFEST_SCHEMA`) as ``manifest_path/<cid>.json``, under a
-  dot-prefixed temp name (Hadoop ``FileSystem.create(overwrite=False)``)
+  JSON lines in ``evr_path/<suite_hash>/<pid>/<cid>.json`` and its
+  **manifest record** (:data:`MANIFEST_SCHEMA`) as
+  ``manifest_path/<suite_hash>/<pid>/<cid>.json`` (keys URL-quoted), under
+  a dot-prefixed temp name (Hadoop ``FileSystem.create(overwrite=False)``)
   then renamed: **the rename is the commit point**;
 - readers list the manifest log on the driver and keep the latest
   ``validated`` record per ``(suite_hash, partition_id)``: no Spark job
   finds what is committed, a committed partition is **skipped** on re-run,
-  and no reader opens a torn attempt's files;
+  and no reader opens a torn attempt's files. A lookup lists only its own
+  key's directory: one partition's (a streaming micro-batch) or one suite's
+  (a run's resume diff);
 - suite-level statistics are re-derivable by **merging** the per-partition
   counters (counts add; ``mostly`` re-evaluated on merged counts) — see
   :func:`merge_map_counts`. This mirrors the reference's
@@ -30,10 +33,10 @@ Determinism: verdicts use no unseeded randomness; the manifest log is the
 only state, so kill/resume re-runs at most the one in-flight partition. On
 an object store rename is not atomic (S3 copies, then deletes): a commit
 there needs a create-if-absent of the final name (a conditional put). A
-reader opens every record, 2-3 ms each through py4j on a local disk, so
-past ~1k records (a long stream's epochs) a lookup takes seconds and the
-log needs compaction into one snapshot file, as Delta's checkpoints do;
-none is built.
+reader opens each record of its key, 2-3 ms each through py4j on a local
+disk, so past ~10k records under one suite (a run's resume diff, a merge)
+a read takes tens of seconds and the log needs compaction into one
+snapshot file, as Delta's checkpoints do; none is built.
 """
 
 from __future__ import annotations
@@ -41,6 +44,7 @@ from __future__ import annotations
 import datetime
 import hashlib
 import json
+import re
 import time
 import urllib.parse
 import uuid
@@ -70,40 +74,64 @@ from great_expectations_spark.segmented import _validate_rows
 from great_expectations_spark.suite import ExpectationSuite
 
 
-def _struct(ddl: str) -> StructType:
-    """A flat StructType from ``"name type, ..."`` DDL."""
-    types = {"string": StringType(), "long": LongType(), "double": DoubleType(),
-             "boolean": BooleanType(), "timestamp": TimestampType()}
-    return StructType([StructField(name, types[t]) for name, t in (
-        f.split() for f in ddl.split(","))])
-
-
-#: one committed partition attempt: lineage + metrics
-MANIFEST_SCHEMA = _struct(
-    "run_id string, partition_id string, commit_id string, status string, "
-    "suite_hash string, rows_scanned long, violations long, elapsed_s double, "
-    "success boolean, finished_ts timestamp")
+MANIFEST_SCHEMA = StructType(
+    [
+        StructField("run_id", StringType()),
+        StructField("partition_id", StringType()),
+        StructField("commit_id", StringType()),
+        StructField("status", StringType()),
+        StructField("suite_hash", StringType()),
+        StructField("rows_scanned", LongType()),
+        StructField("violations", LongType()),
+        StructField("elapsed_s", DoubleType()),
+        StructField("success", BooleanType()),
+        StructField("finished_ts", TimestampType()),
+    ]
+)
 
 #: one row per (partition × segment × expectation) — the mergeable metrics
 #: store of both run modes. Counts add across partitions; observed_value is
-#: ``str(observed)`` (NULL for None). A whole-suite row (whole-partition run,
-#: or an empty partition of a segmented run) has ``segment_col`` NULL; a
-#: segmented row's ``segment`` may be a genuine NULL value. Merges key on
-#: ``(suite_hash, segment_col, segment, expectation_id)``, so rows of
-#: different suites, modes, segments and expectations never add together.
-EVR_ROW_SCHEMA = _struct(
-    "run_id string, partition_id string, commit_id string, suite_hash string, "
-    "segment_col string, segment string, expectation_id string, "
-    "expectation_type string, success boolean, element_count long, "
-    "missing_count long, unexpected_count long, observed_value string")
+#: kept (``str(observed)``, NULL for None) for aggregate expectations, whose
+#: verdicts are reported per partition. A whole-suite row (whole-partition
+#: run, or an empty partition of a segmented run) has ``segment_col`` NULL;
+#: a segmented row names its column, and its ``segment`` may be a genuine
+#: NULL value. Merges key on ``(suite_hash, segment_col, segment,
+#: expectation_id)``, so rows of different suites, modes, segments and
+#: same-type expectations never add together.
+EVR_ROW_SCHEMA = StructType(
+    [
+        StructField("run_id", StringType()),
+        StructField("partition_id", StringType()),
+        StructField("commit_id", StringType()),
+        StructField("suite_hash", StringType()),
+        StructField("segment_col", StringType()),
+        StructField("segment", StringType()),
+        StructField("expectation_id", StringType()),
+        StructField("expectation_type", StringType()),
+        StructField("success", BooleanType()),
+        StructField("element_count", LongType()),
+        StructField("missing_count", LongType()),
+        StructField("unexpected_count", LongType()),
+        StructField("observed_value", StringType()),
+    ]
+)
 
 #: the merge view's grouping key
 MERGE_KEYS = ["suite_hash", "segment_col", "segment", "expectation_id"]
 
-MERGED_SCHEMA = _struct(
-    "suite_hash string, segment_col string, segment string, "
-    "expectation_id string, expectation_type string, element_count long, "
-    "missing_count long, unexpected_count long, all_partitions_success boolean")
+MERGED_SCHEMA = StructType(
+    [
+        StructField("suite_hash", StringType()),
+        StructField("segment_col", StringType()),
+        StructField("segment", StringType()),
+        StructField("expectation_id", StringType()),
+        StructField("expectation_type", StringType()),
+        StructField("element_count", LongType()),
+        StructField("missing_count", LongType()),
+        StructField("unexpected_count", LongType()),
+        StructField("all_partitions_success", BooleanType()),
+    ]
+)
 
 
 def _fs(spark: SparkSession, path: str):
@@ -224,9 +252,19 @@ def merge_map_counts(
     §1.4). This is what makes per-partition EVRs sufficient state for a
     resumable suite-level verdict.
     """
-    counts = {k: sum(int(p.get(k) or 0) for p in per_partition)
-              for k in ("element_count", "missing_count", "unexpected_count")}
-    return {**counts, "success": calc_map_success(*counts.values(), mostly)}
+    element_count = sum(int(p.get("element_count") or 0) for p in per_partition)
+    missing_count = sum(int(p.get("missing_count") or 0) for p in per_partition)
+    unexpected_count = sum(
+        int(p.get("unexpected_count") or 0) for p in per_partition
+    )
+    return {
+        "element_count": element_count,
+        "missing_count": missing_count,
+        "unexpected_count": unexpected_count,
+        "success": calc_map_success(
+            element_count, missing_count, unexpected_count, mostly
+        ),
+    }
 
 
 class Checkpoint:
@@ -257,23 +295,44 @@ class Checkpoint:
         self.runner_kwargs = runner_kwargs
 
     # ----------------------------------------------------------------- log io
-    def _log(self, path: str, role: str):
-        """The log at ``path``: its ``FileSystem`` and ``{commit id: file
-        Path}`` (none if absent), skipping temp and checksum files; any
-        other non-``<cid>.json`` entry raises."""
-        fs, p = _fs(self.spark, path)
-        files = {}
+    # Both logs lay out one attempt's file (EVR rows, manifest record) as
+    # ``<root>/<suite_hash>/<pid>/<cid>.json``, each key URL-quoted into one
+    # path segment, so a lookup lists only its own key's directory.
+    @staticmethod
+    def _key_path(root: str, *key: str) -> str:
+        return "/".join([root, *(urllib.parse.quote(k, safe="") for k in key)])
+
+    def _check_log(self, root: str, role: str):
+        """The ``FileSystem`` of the log at ``root``; a root in an older
+        layout is refused, naming the path. Its top level holds only suite
+        hash dirs, where a parquet store holds files and a streaming root
+        ``k=v`` dirs (a quoted key holds no ``=``)."""
+        fs, p = _fs(self.spark, root)
         for st in fs.listStatus(p) if fs.exists(p) else []:
-            file = st.getPath()
-            name = file.getName()
-            if name.startswith(".") or name.endswith(".crc"):
-                continue
-            if st.isDirectory() or not name.endswith(".json"):
+            name = st.getPath().getName()
+            if not name.startswith(".") and (not st.isDirectory() or "=" in name):
                 raise ValueError(
-                    f"{role} {path!r} holds no commit log but parquet rows "
+                    f"{role} {root!r} holds no commit log but parquet rows "
                     "without a commit id, suite hash and segment (or a "
                     f"streaming run_id=/epoch= root); use a new {role}")
-            files[name[:-len(".json")]] = file
+        return fs
+
+    def _log(self, root: str, role: str, *key: str | None):
+        """The log at ``root``: its ``FileSystem`` and ``{commit id: file
+        Path}`` of the records under ``key`` (a suite hash, then a
+        partition; None for all), skipping temp and checksum files."""
+        fs = self._check_log(root, role)
+        key = tuple(k for k in key if k is not None)
+        # a glob lists on the JVM side; the root's own metacharacters are
+        # escaped, and a quoted key holds none
+        literal = re.sub(r"([\\*?\[\]{}])", r"\\\1", self._key_path(root, *key))
+        pattern = "/".join([literal, *["*"] * (2 - len(key)), "*.json"])
+        files = {}
+        for st in fs.globStatus(
+                self.spark._jvm.org.apache.hadoop.fs.Path(pattern)) or []:
+            file = st.getPath()
+            if not file.getName().startswith("."):
+                files[file.getName()[:-len(".json")]] = file
         return fs, files
 
     def _read(self, fs, file, schema: StructType) -> list[dict]:
@@ -281,8 +340,7 @@ class Checkpoint:
         fields; a record that fails to parse raises, naming the file."""
         stream = fs.open(file)
         try:
-            data = bytes(self.spark._jvm.org.apache.hadoop.io.IOUtils
-                         .readFullyToByteArray(stream))
+            data = bytes(stream.readAllBytes())
         finally:
             stream.close()
         try:
@@ -309,19 +367,23 @@ class Checkpoint:
     def _commit(self, record: dict[str, Any]) -> None:
         """The commit point: the manifest record renamed into the log."""
         record = dict(record, finished_ts=datetime.datetime.now().isoformat())
-        self._write(f"{self.manifest_path}/{record['commit_id']}.json",
-                    [record])
+        self._write(self._key_path(
+            self.manifest_path, *(record[k] for k in (
+                "suite_hash", "partition_id", "commit_id"))) + ".json", [record])
 
-    def _committed(self, shash: str | None = None,
+    def _committed(self, shash: str | None = None, pid: str | None = None,
                    store: dict | None = None) -> list[dict]:
         """The latest ``validated`` manifest record per (suite hash,
         partition) — so no suite sharing the log hides another's — optionally
-        pinned to one suite hash and to the commit ids in ``store``."""
-        fs, files = self._log(self.manifest_path, "manifest_path")
+        pinned to one suite hash, then one partition (only their directory of
+        the log is listed), and to the commit ids in ``store``. A record
+        without ``finished_ts`` (an external tool's) sorts first."""
+        fs, files = self._log(self.manifest_path, "manifest_path", shash, pid)
         records = [rec for file in files.values()
                    for rec in self._read(fs, file, MANIFEST_SCHEMA)]
         latest: dict[tuple[str, str], dict] = {}
-        for rec in sorted(records, key=lambda r: (r["finished_ts"], r["commit_id"])):
+        for rec in sorted(records, key=lambda r: (r["finished_ts"] or "",
+                                                  r["commit_id"] or "")):
             if (rec["status"] == "validated" and shash in (None, rec["suite_hash"])
                     and (store is None or rec["commit_id"] in store)):
                 latest[(rec["suite_hash"], rec["partition_id"])] = rec
@@ -331,7 +393,8 @@ class Checkpoint:
     def read_manifest(self) -> DataFrame:
         """The committed manifest records as a :data:`MANIFEST_SCHEMA` frame."""
         return self.spark.createDataFrame([
-            dict(r, finished_ts=datetime.datetime.fromisoformat(r["finished_ts"]))
+            dict(r, finished_ts=r["finished_ts"] and
+                 datetime.datetime.fromisoformat(r["finished_ts"]))
             for r in self._committed()], MANIFEST_SCHEMA)
 
     def completed_partitions(self, shash: str) -> dict[str, bool | None]:
@@ -346,8 +409,8 @@ class Checkpoint:
         a manifest shared by stores never reads one down to another's."""
         if self.evr_path is None:
             raise ValueError("Checkpoint was created without evr_path")
-        fs, files = self._log(self.evr_path, "evr_path")
-        return [row for rec in self._committed(suite_hash, files)
+        fs, files = self._log(self.evr_path, "evr_path", suite_hash)
+        return [row for rec in self._committed(suite_hash, store=files)
                 for row in self._read(fs, files[rec["commit_id"]],
                                       EVR_ROW_SCHEMA)]
 
@@ -397,7 +460,7 @@ class Checkpoint:
                     "runs need separate violations paths"
                 )
         if self.evr_path:
-            self._log(self.evr_path, "evr_path")
+            self._check_log(self.evr_path, "evr_path")
 
     def run(
         self,
@@ -481,10 +544,10 @@ class Checkpoint:
         the suite runs in ``df``'s own session, so a query check's view is
         registered where foreachBatch's cloned session reads it."""
         self._check_stores(None)
-        done = self.completed_partitions(suite_hash(suite))
-        if partition_id in done:
+        done = self._committed(suite_hash(suite), partition_id)
+        if done:
             return PartitionRunRecord(
-                partition_id, "skipped", success=done[partition_id])
+                partition_id, "skipped", success=done[0]["success"])
         return self._validate_partition(df, suite, run_id, partition_id)
 
     def _validate_partition(
@@ -551,7 +614,8 @@ class Checkpoint:
 
         shash = suite_hash(suite, segment_col)
         if self.evr_path:
-            self._write(f"{self.evr_path}/{commit_id}.json", [
+            self._write(self._key_path(
+                self.evr_path, shash, pid, commit_id) + ".json", [
                 dict(zip(EVR_ROW_SCHEMA.fieldNames(),
                          (run_id, pid, commit_id, shash, row_segment_col, *r)))
                 for r in rows

@@ -31,8 +31,9 @@ the new files (file-source maxFilesPerTrigger) or the new snapshot (Iceberg
 needed — suite metrics are per-epoch by construction, and cross-epoch
 rollups happen at read time over the EVR store (counts add, per §4.2.5
 mergeability). The commit adds no Spark job to the suite's own: the replay
-lookup lists and reads the manifest log on the driver, and the EVR file and
-the manifest record are two small files written through Hadoop's
+lookup reads only its epoch's directory of the manifest log on the driver,
+so it costs the same however old the stream is, and the EVR file and the
+manifest record are two small files written through Hadoop's
 ``FileSystem``.
 """
 

@@ -151,7 +151,7 @@ def test_torn_partition_resumed_under_same_run_id_counts_once(spark, tmp_path,
               .collect()}
     nn = merged["expect_column_values_to_not_be_null"]
     assert (nn["element_count"], nn["unexpected_count"]) == (30, 3)
-    written = {p.stem for p in (tmp_path / "evrs").glob("*.json")
+    written = {p.stem for p in (tmp_path / "evrs").rglob("*.json")
                if '"2025-01-03"' in p.read_text()}
     committed = {r["commit_id"] for r in ck.committed_evrs()
                  if r["partition_id"] == "2025-01-03"}
@@ -212,6 +212,11 @@ def test_concurrent_partition_run_matches_sequential(spark, tmp_path):
 
     assert len(stored(seq)) == 4 * 2
     assert stored(seq) == stored(conc)
+    # one EVR file and one manifest record written per partition in both
+    # modes: no partition was validated twice
+    for m, e in (("m_seq", "e_seq"), ("m_conc", "e_conc")):
+        assert len(list((tmp_path / e).rglob("*.json"))) == 4
+        assert len(list((tmp_path / m).rglob("*.json"))) == 4
 
     # resume: everything skipped on a re-run (concurrent mode too)
     r2 = conc.run(tdf, suite, run_id="r2", partition_col="bucket",
@@ -493,7 +498,8 @@ def test_merged_segment_verdicts_ignore_orphan_evrs(spark, tmp_path,
         max_groups=100, violations_path=None,
         unexpected_index_column_names=None,
     )
-    ck._write(str(tmp_path / "evr" / "c-orphan.json"), [
+    ck._write(ck._key_path(str(tmp_path / "evr"), r1.suite_hash,
+                           "2025-01-02", "c-orphan") + ".json", [
         dict(zip(EVR_ROW_SCHEMA.fieldNames(), (
             "r-orphan", "2025-01-02", "c-orphan", r1.suite_hash, "role", *r)))
         for r in orphan_rows])
@@ -847,12 +853,15 @@ def test_unreadable_manifest_log_fails_loudly(spark, tmp_path, suite, tdf):
     m = tmp_path / "m"
     ck = Checkpoint(spark, manifest_path=str(m))
     assert ck.completed_partitions(suite_hash(suite)) == {}
-    m.mkdir()
-    (m / ".c1.json.tmp").write_text("{half a rec")
-    (m / "c2.json.crc").write_text("crc")
+    key = m / suite_hash(suite) / "2025-01-01"
+    key.mkdir(parents=True)
+    (key / ".c1.json.tmp").write_text("{half a rec")
+    (key / "c2.json.crc").write_text("crc")
     assert ck.completed_partitions(suite_hash(suite)) == {}
     assert ck.read_manifest().collect() == []
-    (m / "c3.json").write_text('{"run_id": "r1", "partition_id": ')
+    (key / "c3.json").write_text('{"run_id": "r1", "partition_id": ')
+    with pytest.raises(ValueError, match="c3.json"):
+        ck.read_manifest()
     with pytest.raises(ValueError, match="c3.json"):
         ck.completed_partitions(suite_hash(suite))
     with pytest.raises(ValueError, match="c3.json"):

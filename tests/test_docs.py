@@ -88,7 +88,7 @@ def test_data_docs_list_committed_rows_only(spark, suite, tdf, tmp_path):
     with pytest.raises(RuntimeError, match="simulated kill"):
         ck.run(tdf, suite, run_id="r1", partition_col="day")
     ck.run(tdf, suite, run_id="r1", partition_col="day")
-    assert len(list((tmp_path / "e").glob("*.json"))) == 3   # one orphan
+    assert len(list((tmp_path / "e").rglob("*.json"))) == 3  # one orphan
 
     site = str(tmp_path / "site")
     index = build_data_docs(ck, site)

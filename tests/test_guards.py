@@ -203,20 +203,27 @@ def test_duplicate_clusters_long_chain_converges_or_warns(spark):
 def test_completed_partitions_null_success_stays_none(spark, tmp_path):
     """A manifest record with NULL success (written by an external tool)
     must surface as None, not False — coercion to False flipped a
-    fully-passing resumed run's verdict to failed."""
+    fully-passing resumed run's verdict to failed. A NULL finished_ts
+    sorts before every timestamped record of its partition and reads back
+    as NULL."""
     import json
 
     from great_expectations_spark.checkpoint import Checkpoint, MANIFEST_SCHEMA
 
     mp = tmp_path / "manifest"
-    mp.mkdir()
-    for pid, cid, success in (("p0", "c0", None), ("p1", "c1", True)):
-        (mp / f"{cid}.json").write_text(json.dumps(dict(zip(
+    for pid, cid, success, ts in (
+            ("p0", "c0", None, "2026-01-01T00:00:00"),
+            ("p1", "c1", True, "2026-01-01T00:00:00"),
+            ("p1", "c2", False, None), ("p2", "c3", True, None)):
+        (mp / "H" / pid).mkdir(parents=True, exist_ok=True)
+        (mp / "H" / pid / f"{cid}.json").write_text(json.dumps(dict(zip(
             MANIFEST_SCHEMA.fieldNames(),
-            ("r1", pid, cid, "validated", "H", 10, 0, 0.1, success,
-             "2026-01-01T00:00:00")))))
-    done = Checkpoint(spark, manifest_path=str(mp)).completed_partitions("H")
-    assert done == {"p0": None, "p1": True}
+            ("r1", pid, cid, "validated", "H", 10, 0, 0.1, success, ts)))))
+    ck = Checkpoint(spark, manifest_path=str(mp))
+    assert ck.completed_partitions("H") == {"p0": None, "p1": True, "p2": True}
+    assert sorted((r["partition_id"], r["finished_ts"] is None)
+                  for r in ck.read_manifest().collect()) == [
+        ("p0", False), ("p1", False), ("p2", True)]
 
 
 def test_docs_safe_names_do_not_collide(tmp_path):

@@ -9,6 +9,8 @@ once in the checkpoint's merge view.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F, types as T
 
@@ -91,6 +93,10 @@ def test_stream_validates_microbatches_and_is_idempotent(spark, suite, tmp_path)
     evrs = ck.committed_evrs()
     n_epochs = len({r["partition_id"] for r in evrs})
     assert len(evrs) == 3 * n_epochs
+    # one EVR file and one manifest record written per epoch: no epoch was
+    # validated twice
+    assert len(list(Path(evr).rglob("*.json"))) == n_epochs
+    assert len(list((tmp_path / "manifest").rglob("*.json"))) == n_epochs
 
     # ---- append more data; restart from the same checkpoint: only the new
     # file is validated (committed epochs not re-offered)
@@ -102,6 +108,8 @@ def test_stream_validates_microbatches_and_is_idempotent(spark, suite, tmp_path)
 
     evrs2 = ck.committed_evrs()
     assert len(evrs2) == 3 * (n_epochs + 1)
+    assert len(list(Path(evr).rglob("*.json"))) == n_epochs + 1
+    assert len(list((tmp_path / "manifest").rglob("*.json"))) == n_epochs + 1
     # every epoch appears exactly once (committed once per partition id)
     keys = [(r["partition_id"], r["expectation_id"]) for r in evrs2]
     assert len(set(keys)) == len(keys)
@@ -192,7 +200,7 @@ def test_replayed_epoch_counts_once(spark, suite, tmp_path):
     validator(batch, 1)                       # replay after the torn write
     assert [e for e, _ in validator.results] == [0, 1]
 
-    written = list((tmp_path / "evr").glob("*.json"))
+    written = list((tmp_path / "evr").rglob("*.json"))
     assert len(written) == 3                  # epoch 0, orphans, epoch 1
     assert len({r["commit_id"] for r in ck.committed_evrs()}) == 2
     merged = {r["expectation_type"]: r for r in ck.merged_map_verdicts()

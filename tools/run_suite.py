@@ -31,8 +31,8 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     p.add_argument("--format", default="parquet",
                    choices=["parquet", "table", "orc", "csv", "json"])
     p.add_argument("--suite", required=True, help="suite JSON file")
-    p.add_argument("--manifest", required=True, help="manifest parquet dir")
-    p.add_argument("--evr", default=None, help="EVR rows parquet dir")
+    p.add_argument("--manifest", required=True, help="manifest log dir")
+    p.add_argument("--evr", default=None, help="EVR rows dir (one JSON file per commit)")
     p.add_argument("--violations", default=None, help="violations parquet dir")
     p.add_argument("--partition-col", default=None,
                    help="run per-partition + resumable when set; whole-table otherwise")
