@@ -226,6 +226,20 @@ def test_completed_partitions_null_success_stays_none(spark, tmp_path):
         ("p0", False), ("p1", False), ("p2", True)]
 
 
+
+def test_log_root_with_glob_metacharacters_reads_its_records(spark, tmp_path):
+    """The log is listed with a Hadoop glob: a root whose own name holds
+    glob metacharacters still finds its committed records instead of
+    silently reading none (which would re-validate every partition)."""
+    from great_expectations_spark.checkpoint import Checkpoint
+
+    ck = Checkpoint(spark, manifest_path=str(tmp_path / "m[1]{a,b}*?"))
+    ck._commit({"run_id": "r1", "partition_id": "a/b=c", "commit_id": "c0",
+                "status": "validated", "suite_hash": "H", "rows_scanned": 1,
+                "violations": 0, "elapsed_s": 0.1, "success": True})
+    assert ck.completed_partitions("H") == {"a/b=c": True}
+    assert [r["partition_id"] for r in ck._committed("H", "a/b=c")] == ["a/b=c"]
+
 def test_docs_safe_names_do_not_collide(tmp_path):
     from great_expectations_spark.docs import _safe
 
