@@ -51,7 +51,6 @@ import uuid
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import (
     BooleanType,
@@ -140,19 +139,25 @@ def _fs(spark: SparkSession, path: str):
     return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), p
 
 
-def check_partitioned_layout(spark: SparkSession, path: str) -> None:
+def check_partitioned_layout(spark: SparkSession, path: str) -> bool | None:
     """Refuse a violations root in an earlier, shallower layout (top-level
     ``expectation=`` dirs, or ``partition_id=<pid>/expectation=<type>/``):
     mixing depths makes the whole root unreadable ("conflicting directory
     structures"). One layout writes a root, so its first ``partition_id=``
-    dir tells which. Raises ValueError naming the path; FS quirks never
-    block."""
+    dir tells which. Raises ValueError naming the path. Returns whether the
+    root's rows carry a segmented run's ``group`` column, from the Parquet
+    footer of its first data file (no Spark job); None for a root without
+    rows, and FS quirks never block."""
     try:
         fs, p = _fs(spark, path)
-        top = [st.getPath() for st in fs.listStatus(p)] if fs.exists(p) else []
-        pid_dir = next((q for q in top
-                        if q.getName().startswith("partition_id=")), None)
-        under = [st.getPath() for st in fs.listStatus(pid_dir)] if pid_dir else []
+
+        def ls(d, prefix: str = "") -> list:
+            return [st.getPath() for st in fs.listStatus(d)
+                    if st.getPath().getName().startswith(prefix)]
+
+        top = ls(p) if fs.exists(p) else []
+        pid_dirs = [q for q in top if q.getName().startswith("partition_id=")]
+        under = ls(pid_dirs[0]) if pid_dirs else []
         for stale, names in (("top-level expectation=", top),
                              ("partition_id=<pid>/expectation=<type>/", under)):
             if any(q.getName().startswith("expectation=") for q in names):
@@ -162,10 +167,23 @@ def check_partitioned_layout(spark: SparkSession, path: str) -> None:
                     "expectation=<type>/. "
                     "Use a new path or migrate the old files first."
                 )
+        first = next((f for pid in pid_dirs for cid in ls(pid, "commit_id=")
+                      for e in ls(cid, "expectation=") for f in ls(e)
+                      if not f.getName().startswith(("_", "."))), None)
+        if first is None:
+            return None
+        parquet = spark._jvm.org.apache.parquet.hadoop
+        reader = parquet.ParquetFileReader.open(
+            parquet.util.HadoopInputFile.fromPath(
+                first, spark.sparkContext._jsc.hadoopConfiguration()))
+        try:
+            return reader.getFileMetaData().getSchema().containsField("group")
+        finally:
+            reader.close()
     except ValueError:
         raise
     except Exception:  # pragma: no cover - FS quirks never block validation
-        pass
+        return None
 
 
 def suite_hash(suite: ExpectationSuite, segment_col: str | None = None) -> str:
@@ -445,14 +463,10 @@ class Checkpoint:
         """Refuse stores this run's rows cannot be read back from, naming
         the path, before any partition is validated."""
         if self.violations_path is not None:
-            check_partitioned_layout(self.spark, self.violations_path)
-            try:
-                existing = self.spark.read.parquet(self.violations_path).columns
-            except AnalysisException:  # no rows yet
-                existing = None
+            grouped = check_partitioned_layout(self.spark, self.violations_path)
             # segmented violation rows lead with a `group` column: one root
             # holding both row shapes reads back null-filled
-            if existing and ("group" in existing) != (segment_col is not None):
+            if grouped is not None and grouped != (segment_col is not None):
                 held = "segmented" if segment_col is None else "whole-partition"
                 raise ValueError(
                     f"violations_path {self.violations_path!r} holds "

@@ -15,6 +15,7 @@ checkpoint path relies on (SURVEY.md §4.2 item 5).
 
 from __future__ import annotations
 
+import hashlib
 import re
 from dataclasses import dataclass, field
 from typing import Any, Callable
@@ -23,9 +24,14 @@ from pyspark.sql import Column, functions as F
 
 
 def safe_alias(*parts: Any) -> str:
-    """Deterministic, Spark-safe alias from free-form parts."""
+    """Deterministic, Spark-safe alias from free-form parts. Parts with
+    other characters than ``[0-9a-zA-Z_]`` add a digest of the raw parts,
+    so columns ``a b`` and ``a_b`` never share an alias in one bundle."""
     raw = "__".join(str(p) for p in parts)
-    return re.sub(r"[^0-9a-zA-Z_]", "_", raw)
+    alias = re.sub(r"[^0-9a-zA-Z_]", "_", raw)
+    if alias != raw:
+        alias += "__" + hashlib.md5(raw.encode()).hexdigest()[:8]
+    return alias
 
 
 @dataclass
@@ -79,17 +85,6 @@ def row_count() -> AggMetric:
     return _single("table_row_count", F.count(F.lit(1)))
 
 
-def nonnull_count(column: str) -> AggMetric:
-    return _single(safe_alias("nonnull", column), F.count(F.col(column)))
-
-
-def null_count(column: str) -> AggMetric:
-    return _single(
-        safe_alias("nullcount", column),
-        F.sum(F.when(F.col(column).isNull(), 1).otherwise(0)),
-    )
-
-
 # -- quantiles ----------------------------------------------------------------
 
 def median(column: str, approximate: bool = True, relative_error: float = 0.001) -> AggMetric:
@@ -129,14 +124,14 @@ def quantile_values(
 
 def distinct_count(column: str, approximate: bool = False, rsd: float = 0.01) -> AggMetric:
     """Exact ``count(DISTINCT)`` or HLL ``approx_count_distinct`` — the
-    10^12-scale path per north_star (SURVEY.md §2.5)."""
-    alias = safe_alias("distinct_count", column, approximate)
-    expr = (
-        F.approx_count_distinct(F.col(column), rsd)
-        if approximate
-        else F.countDistinct(F.col(column))
-    )
-    return _single(alias, expr)
+    10^12-scale path per north_star (SURVEY.md §2.5). The HLL alias carries
+    ``rsd``: two sketches of one column at different accuracies are two
+    expressions, not one."""
+    if approximate:
+        return _single(safe_alias("distinct_count", column, approximate, rsd),
+                       F.approx_count_distinct(F.col(column), rsd))
+    return _single(safe_alias("distinct_count", column, approximate),
+                   F.countDistinct(F.col(column)))
 
 
 def pair_correlation(column_a: str, column_b: str) -> AggMetric:
@@ -152,18 +147,14 @@ def pair_correlation(column_a: str, column_b: str) -> AggMetric:
 
 
 def unique_proportion(column: str, approximate: bool = False) -> AggMetric:
-    """distinct_count / nonnull_count — two bundled aggs, zero extra scans."""
-    dc = safe_alias("distinct_count", column, approximate)
+    """distinct count / non-null count — two bundled aggs, zero extra scans.
+    The approximate count is HLL at Spark's default rsd, 0.05."""
+    distinct = distinct_count(column, approximate, rsd=0.05)
     nn = safe_alias("nonnull", column)
-    exprs = {
-        dc: F.approx_count_distinct(F.col(column))
-        if approximate
-        else F.countDistinct(F.col(column)),
-        nn: F.count(F.col(column)),
-    }
+    exprs = {**distinct.exprs, nn: F.count(F.col(column))}
 
     def fin(v: dict[str, Any]) -> Any:
-        return (v[dc] / v[nn]) if v[nn] else None
+        return (distinct.finalize(v) / v[nn]) if v[nn] else None
 
     return AggMetric(exprs, fin)
 
@@ -225,8 +216,6 @@ def histogram(column: str, bins: list[float]) -> AggMetric:
     # the alias must encode EVERY edge, not just endpoints: two histograms
     # over the same column/range with different interior edges (uniform vs
     # quantile bins) must not collide in the domain group's bundle dict
-    import hashlib
-
     bins_digest = hashlib.md5(repr([float(b) for b in bins]).encode()).hexdigest()[:10]
     alias = safe_alias("hist", column, n, bins_digest)
     expr = F.expr("array(" + ", ".join(parts) + ")")

@@ -4,14 +4,13 @@ Reimplements the reference's ``UserConfigurableProfiler``
 (great_expectations/profile/user_configurable_profiler.py, ≈900 LoC,
 unverified — SURVEY.md §0/§3): classify each column's cardinality, then emit
 type- and cardinality-appropriate expectations with observed values as
-bounds. The reference resolves one metric graph per column (many small
-jobs); ours computes EVERY per-column statistic in ONE bundled ``df.agg``
-pass — count/nulls/approx-distinct/min/max/mean/stddev for all columns at
-once — then ONE GROUPING SETS job for every low-cardinality column's value
-set and ONE fused agg for all exact-uniqueness verifications. At most four
-Spark jobs total (plus one for drift gates), regardless of column count —
-a 500-column table profiles in the same number of job submissions as a
-5-column one.
+bounds. As in the reference, the statistics come from the engine that
+validates expectations: :func:`column_metrics` runs them as bound-free
+checks through ``runner.run_passes``, one bundled aggregation for every
+column. Then ONE GROUPING SETS query counts every low-cardinality column's
+value set and one bundled query verifies the uniqueness candidates exactly
+(plus one for drift gates): the query count does not grow with the column
+count. Under AQE one query launches several Spark jobs.
 
 Cardinality bands follow the reference's ``ProfilerCardinality``:
     NONE(0) ONE(1) TWO(2) VERY_FEW(<=10) FEW(<=100)
@@ -28,6 +27,9 @@ from typing import Any
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from great_expectations_spark.plans.planner import plan_suite
+from great_expectations_spark.registry import CompiledAgg
+from great_expectations_spark.runner import SparkThreadPool, run_passes, verdict
 from great_expectations_spark.suite import ExpectationSuite
 
 CARDINALITY_BANDS = [
@@ -43,20 +45,66 @@ _TEMPORAL = (T.TimestampType, T.DateType)
 
 def _band(distinct: int, nonnull: int) -> str:
     # approx_count_distinct can undercount a truly-unique column; a 15%
-    # margin (~3σ at the 5% rsd used in pass 1) marks the candidate, which
-    # pass 2 then verifies EXACTLY before an
+    # margin (~3σ at the 5% rsd of "approx_distinct") marks the candidate,
+    # which is then verified EXACTLY before an
     # expect_column_values_to_be_unique is emitted — a false candidate only
-    # costs one extra countDistinct inside the fused verification job.
-    # (rsd 0.005 was a scale bug: HLL buffer size is (1.04/rsd)² registers,
-    # i.e. ~11k AGGREGATION-BUFFER ATTRIBUTES per column — a 20-column
-    # profile built a 24 MiB task binary and OOM'd codegen; rsd 0.05 is 86
-    # words/column, linear and cheap at 500 columns.)
+    # costs one extra countDistinct inside the fused verification query.
     if nonnull and distinct >= nonnull * 0.85:
         return "UNIQUE"
     for name, cap in CARDINALITY_BANDS:
         if distinct <= cap:
             return name
     return "VERY_MANY"
+
+
+#: each profile statistic as the registry expectation that computes it,
+#: run without bounds so only its observed value is read; "nn" is the
+#: not-null check's element_count − unexpected_count
+_METRICS = {
+    "nn": ("expect_column_values_to_not_be_null", {}),
+    "min": ("expect_column_min_to_be_between", {}),
+    "max": ("expect_column_max_to_be_between", {}),
+    "mean": ("expect_column_mean_to_be_between", {}),
+    "stddev": ("expect_column_stdev_to_be_between", {}),
+    "median": ("expect_column_median_to_be_between", {}),
+    # rsd 0.05, not tighter: the HLL buffer holds (1.04/rsd)² registers, so
+    # rsd 0.005 is ~11k aggregation-buffer attributes per column (a 20-column
+    # profile built a 24 MiB task binary and OOM'd codegen); rsd 0.05 is 86
+    # words per column, linear and cheap at 500 columns
+    "approx_distinct": ("expect_column_unique_value_count_to_be_between",
+                        {"approximate": True, "rsd": 0.05}),
+    "distinct": ("expect_column_unique_value_count_to_be_between",
+                 {"approximate": False}),
+}
+
+
+def column_metrics(
+    df: DataFrame, metrics: dict[str, list[str]], keys: tuple[str, ...] = ()
+) -> dict[tuple, dict[str, Any]]:
+    """Profile statistics through the pass executor: ``metrics`` maps a
+    column to the names of its statistics (keys of ``_METRICS``). Each one is
+    a bound-free check of one suite, whose single domain group
+    ``run_passes`` runs with ``keys`` in front; ``verdict`` reads each back.
+    Returns key values → ``{"n": rows, "<column>__<name>": value}``; a key
+    without rows has no entry."""
+    suite = ExpectationSuite("column-metrics")
+    names = {suite.add("expect_table_row_count_to_be_between").id: "n"}
+    for c, wanted in metrics.items():
+        for m in wanted:
+            etype, kwargs = _METRICS[m]
+            names[suite.add(etype, column=c, **kwargs).id] = f"{c}__{m}"
+    (group,) = plan_suite(suite).groups
+    with SparkThreadPool(df.sparkSession) as pool:
+        passes = run_passes(group, df, list(keys), pool)
+    passes.release()
+    out: dict[tuple, dict[str, Any]] = {}
+    for key, vals in passes.values.items():
+        row = out[key] = {}
+        for c in group.checks:
+            v = verdict(c, vals)
+            row[names[c.cfg.id]] = (v.observed if isinstance(c, CompiledAgg)
+                                    else v.element_count - v.unexpected_count)
+    return out
 
 
 def profile_suite(
@@ -70,8 +118,8 @@ def profile_suite(
     drift_p: float = 0.05,
     drift_bins: int = 5,
 ) -> ExpectationSuite:
-    """Build a suite from observed data (≤4 Spark jobs + 1 with drift
-    gates, independent of column count).
+    """Build a suite from observed data in a number of Spark queries that
+    does not grow with the column count (module docstring).
 
     ``value_set_threshold``: widest cardinality band that still gets an
     ``expect_column_values_to_be_in_set`` (reference default MANY; ours FEW
@@ -84,7 +132,7 @@ def profile_suite(
     and a boundary-KS p-gate per numeric column (baseline CDF from the SAME
     cumulative boundary counts the KS check reads, so the training batch
     scores D = 0 / p = 1 by construction and only distribution SHIFT in a
-    future batch trips the gate). Adds one bundled agg job for all numeric
+    future batch trips the gate). Adds one bundled agg query for all numeric
     columns; the value-set pass already collects the category counts.
     """
     cols = columns or df.columns
@@ -93,21 +141,13 @@ def profile_suite(
     if unknown:
         raise ValueError(f"profile columns not in schema: {unknown}")
 
-    # ---- pass 1: ONE bundled aggregation for every column ----------------
-    exprs: list[F.Column] = [F.count(F.lit(1)).alias("__n")]
-    for i, c in enumerate(cols):
-        col = F.col(c)
-        exprs.append(F.count(col).alias(f"nn_{i}"))
-        exprs.append(F.approx_count_distinct(col, 0.05).alias(f"ad_{i}"))
-        if isinstance(schema[c], _NUMERIC + _TEMPORAL):
-            exprs.append(F.min(col).alias(f"mn_{i}"))
-            exprs.append(F.max(col).alias(f"mx_{i}"))
-        if isinstance(schema[c], _NUMERIC):
-            d = col.cast("double")
-            exprs.append(F.mean(d).alias(f"av_{i}"))
-            exprs.append(F.percentile_approx(d, 0.5, 1000).alias(f"md_{i}"))
-    stats = df.agg(*exprs).collect()[0].asDict()
-    n = int(stats["__n"] or 0)
+    def metrics(t) -> list[str]:
+        return (["nn", "approx_distinct"]
+                + (["min", "max"] if isinstance(t, _NUMERIC + _TEMPORAL) else [])
+                + (["mean", "median"] if isinstance(t, _NUMERIC) else []))
+
+    stats = column_metrics(df, {c: metrics(schema[c]) for c in cols})[()]
+    n = stats["n"]
 
     suite = ExpectationSuite(name, meta={"profiler": "profile_suite",
                                          "row_count": n})
@@ -122,10 +162,9 @@ def profile_suite(
     in_set_cols: list[tuple[str, str]] = []
     unique_candidates: list[str] = []
 
-    for i, c in enumerate(cols):
-        nonnull = int(stats[f"nn_{i}"] or 0)
-        distinct = int(stats[f"ad_{i}"] or 0)
-        band = _band(distinct, nonnull)
+    for c in cols:
+        nonnull = stats[f"{c}__nn"]
+        band = _band(stats[f"{c}__approx_distinct"], nonnull)
 
         if nonnull == n:
             suite.add("expect_column_values_to_not_be_null", column=c)
@@ -141,27 +180,24 @@ def profile_suite(
         elif band not in ("NONE",) and _BAND_ORDER.index(band) <= threshold_idx:
             in_set_cols.append((c, band))
 
+        mn, mx = stats.get(f"{c}__min"), stats.get(f"{c}__max")
         if isinstance(schema[c], _NUMERIC):
-            mn, mx = stats.get(f"mn_{i}"), stats.get(f"mx_{i}")
             if mn is not None:
                 suite.add("expect_column_values_to_be_between", column=c,
                           min_value=_py(mn), max_value=_py(mx))
-                suite.add("expect_column_mean_to_be_between", column=c,
-                          min_value=_py(stats.get(f"av_{i}")),
-                          max_value=_py(stats.get(f"av_{i}")))
-                suite.add("expect_column_median_to_be_between", column=c,
-                          min_value=_py(stats.get(f"md_{i}")),
-                          max_value=_py(stats.get(f"md_{i}")))
+                for m in ("mean", "median"):
+                    v = _py(stats[f"{c}__{m}"])
+                    suite.add(f"expect_column_{m}_to_be_between", column=c,
+                              min_value=v, max_value=v)
         elif isinstance(schema[c], _TEMPORAL):
-            mn, mx = stats.get(f"mn_{i}"), stats.get(f"mx_{i}")
             if mn is not None:
                 suite.add("expect_column_min_to_be_between", column=c,
                           min_value=str(mn), max_value=str(mn))
                 suite.add("expect_column_max_to_be_between", column=c,
                           min_value=str(mx), max_value=str(mx))
 
-    # ---- pass 2: exact value sets for the low-cardinality columns --------
-    # ONE Spark job for ALL value-set columns (round-3 fusion: the previous
+    # ---- exact value sets for the low-cardinality columns ----------------
+    # ONE Spark query for ALL value-set columns (round-3 fusion: the previous
     # one-groupBy-per-column shape meant hundreds of serial driver job
     # submissions on a wide table): GROUPING SETS ((c1),(c2),…) counts every
     # column's values in a single shuffle; grouping_id() says which column a
@@ -195,10 +231,10 @@ def profile_suite(
     if drift_gates:
         ks_specs: list[tuple[str, list[float]]] = []
         ks_exprs: list[F.Column] = []
-        for i, c in enumerate(cols):
+        for c in cols:
             if not isinstance(schema[c], _NUMERIC):
                 continue
-            mn, mx = stats.get(f"mn_{i}"), stats.get(f"mx_{i}")
+            mn, mx = stats[f"{c}__min"], stats[f"{c}__max"]
             if mn is None or mx is None or not float(mx) > float(mn):
                 continue
             lo, hi = float(mn), float(mx)
@@ -236,18 +272,15 @@ def profile_suite(
                 )
 
     # exact uniqueness verification for HLL-flagged candidates, fused into
-    # ONE agg job for all candidates (emitting a false be_unique would make
-    # the profiled suite fail on its own training batch). Spark plans the
-    # multiple countDistincts via one Expand + two-phase hash aggregate —
+    # ONE bundled query for all candidates (emitting a false be_unique would
+    # make the profiled suite fail on its own training batch). Spark plans
+    # the multiple countDistincts via one Expand + two-phase hash aggregate —
     # one shuffle on (gid, value) partials, spillable, no driver fan-out.
     if unique_candidates:
-        uexprs: list[F.Column] = []
-        for i, c in enumerate(unique_candidates):
-            uexprs.append(F.count(F.col(c)).alias(f"unn_{i}"))
-            uexprs.append(F.countDistinct(F.col(c)).alias(f"ud_{i}"))
-        urow = df.agg(*uexprs).collect()[0].asDict()
-        for i, c in enumerate(unique_candidates):
-            if urow[f"ud_{i}"] == urow[f"unn_{i}"]:
+        exact = column_metrics(
+            df, {c: ["nn", "distinct"] for c in unique_candidates})[()]
+        for c in unique_candidates:
+            if exact[f"{c}__distinct"] == exact[f"{c}__nn"]:
                 suite.add("expect_column_values_to_be_unique", column=c)
 
     if primary_or_compound_key:

@@ -10,11 +10,13 @@ batch-to-batch variation instead of a single batch's point values — the
 
 Spark-first shape: the reference resolves a metric graph PER BATCH (k × many
 small jobs). Ours computes every per-batch metric for every profiled column
-in **ONE Spark job**: batches are tagged with a literal ``__batch_id``,
-union'd, and aggregated with ``groupBy("__batch_id")`` — one shuffle of
-k × (a few hundred bytes) partial rows regardless of batch sizes. Estimator
-math (quantile / bootstrap over the k per-batch values) is numpy on k-length
-vectors, driver-side by construction.
+in **one Spark query**: batches are tagged with a literal ``__batch_id``,
+union'd, and the profile statistics (``profiler.column_metrics``, the
+registry's own metric expressions) run through the pass executor keyed by
+``__batch_id`` — one shuffle of k × (a few hundred bytes) partial rows
+regardless of batch sizes, and as many Spark jobs for k batches as for one.
+Estimator math (quantile / bootstrap over the k per-batch values) is numpy on
+k-length vectors, driver-side by construction.
 
 At 100 TB the union is still one pass: each batch contributes its own scan
 tasks, the groupBy keys are the k batch ids (tiny, uniform), and partial
@@ -29,12 +31,14 @@ from functools import reduce
 from typing import Any
 
 import numpy as np
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F
 
+from great_expectations_spark.profiler import (
+    _NUMERIC,
+    _fused_value_counts,
+    column_metrics,
+)
 from great_expectations_spark.suite import ExpectationSuite
-
-_NUMERIC = (T.IntegerType, T.LongType, T.ShortType, T.ByteType,
-            T.FloatType, T.DoubleType, T.DecimalType)
 
 
 @dataclass
@@ -98,11 +102,12 @@ def estimate_range(
 def multi_batch_metrics(
     batches: list[DataFrame], columns: list[str] | None = None
 ) -> tuple[list[str], list[dict[str, Any]]]:
-    """Per-batch metric rows in ONE Spark job.
+    """Per-batch metric rows in one Spark query.
 
     Returns (profiled_columns, rows) where rows[i] is batch i's metric dict:
     ``n`` plus, per numeric column c, ``{c}__nn/min/max/mean/stddev/median``
-    and per non-numeric column, ``{c}__nn/approx_distinct``.
+    (min and max in the column's own type) and per non-numeric column,
+    ``{c}__nn/approx_distinct``.
     """
     if not batches:
         raise ValueError("need at least one batch")
@@ -119,53 +124,22 @@ def multi_batch_metrics(
         for i, b in enumerate(batches)
     ]
     union = reduce(lambda a, b: a.unionByName(b), tagged)
-
-    exprs: list[F.Column] = [F.count(F.lit(1)).alias("n")]
-    alias_names: list[str] = ["n"]
-
-    def _add(expr: F.Column, name: str) -> None:
-        exprs.append(expr.alias(name))
-        alias_names.append(name)
-
-    for c in cols:
-        col = F.col(c)
-        _add(F.count(col), f"{c}__nn")
-        if isinstance(schema[c], _NUMERIC):
-            d = col.cast("double")
-            _add(F.min(d), f"{c}__min")
-            _add(F.max(d), f"{c}__max")
-            _add(F.mean(d), f"{c}__mean")
-            _add(F.stddev_samp(d), f"{c}__stddev")
-            _add(F.percentile_approx(d, 0.5, 1000), f"{c}__median")
-        else:
-            # rsd 0.05 (not tighter): HLL buffer width is (1.04/rsd)²
-            # registers; sub-1% rsd made the per-batch agg buffer carry
-            # thousands of attributes PER COLUMN (codegen OOM on wide
-            # tables — see profiler._band note)
-            _add(F.approx_count_distinct(col, 0.05), f"{c}__approx_distinct")
-    rows = (
-        union.groupBy("__batch_id")
-        .agg(*exprs)
-        .orderBy("__batch_id")
-        .collect()
-    )
-    # groupBy emits no row for a zero-row batch; reindex by __batch_id so
+    metrics = {
+        c: ["nn", "min", "max", "mean", "stddev", "median"]
+        if isinstance(schema[c], _NUMERIC) else ["nn", "approx_distinct"]
+        for c in cols
+    }
+    by_batch = column_metrics(union, metrics, keys=("__batch_id",))
+    # the pass emits no row for a zero-row batch; reindex by __batch_id so
     # rows[i] is ALWAYS batch i (an empty batch contributes n=0, nn=0 and
     # None metrics — it must reach the estimators, e.g. to drive the
     # row-count floor down, not silently vanish).
-    by_id = {r["__batch_id"]: r.asDict() for r in rows}
-    out: list[dict[str, Any]] = []
-    for i in range(len(batches)):
-        if i in by_id:
-            out.append(by_id[i])
-        else:
-            d: dict[str, Any] = {a: None for a in alias_names}
-            d["__batch_id"] = i
-            d["n"] = 0
-            for c in cols:
-                d[f"{c}__nn"] = 0
-            out.append(d)
-    return cols, out
+    empty = {f"{c}__{m}": 0 if m == "nn" else None
+             for c, names in metrics.items() for m in names}
+    return cols, [
+        {"__batch_id": i, **by_batch.get((i,), {**empty, "n": 0})}
+        for i in range(len(batches))
+    ]
 
 
 class RuleBasedProfiler:
@@ -177,7 +151,7 @@ class RuleBasedProfiler:
         :func:`estimate_range` for every numeric parameter.
     value_set_columns: low-cardinality columns whose batch-wise value-set
         UNION becomes an ``expect_column_values_to_be_in_set`` (computed in
-        one extra grouped job over the union, bounded by
+        one extra grouped query over the union, bounded by
         ``max_value_set_size``).
     round_decimals: round emitted numeric bounds (reference
         ``round_decimals`` parameter-builder knob); None keeps full floats.
@@ -231,7 +205,6 @@ class RuleBasedProfiler:
         columns: list[str] | None = None,
     ) -> ExpectationSuite:
         cols, rows = multi_batch_metrics(batches, columns)
-        schema = {f.name: f.dataType for f in batches[0].schema.fields}
         k = len(rows)
 
         suite = ExpectationSuite(
@@ -269,29 +242,29 @@ class RuleBasedProfiler:
                     mostly=max(0.01, math.floor(worst * 100) / 100),
                 )
 
-            if isinstance(schema[c], _NUMERIC):
-                for metric, expectation in (
-                    ("mean", "expect_column_mean_to_be_between"),
-                    ("median", "expect_column_median_to_be_between"),
-                    ("stddev", "expect_column_stdev_to_be_between"),
-                    ("min", "expect_column_min_to_be_between"),
-                    ("max", "expect_column_max_to_be_between"),
-                ):
-                    vals = [r.get(f"{c}__{metric}") for r in rows]
-                    vals = [v for v in vals if v is not None]
-                    if not vals:
-                        continue
-                    est = self._rng(vals)
-                    suite.add(
-                        expectation,
-                        column=c,
-                        min_value=self._round_lo(est.lo),
-                        max_value=self._round_hi(est.hi),
-                        meta={"rule_based_profiler": {
-                            "metric": metric,
-                            "per_batch": [round(float(v), 9) for v in est.samples],
-                        }},
-                    )
+            # numeric columns only: the others have no such statistics
+            for metric, expectation in (
+                ("mean", "expect_column_mean_to_be_between"),
+                ("median", "expect_column_median_to_be_between"),
+                ("stddev", "expect_column_stdev_to_be_between"),
+                ("min", "expect_column_min_to_be_between"),
+                ("max", "expect_column_max_to_be_between"),
+            ):
+                vals = [r.get(f"{c}__{metric}") for r in rows]
+                vals = [v for v in vals if v is not None]
+                if not vals:
+                    continue
+                est = self._rng(vals)
+                suite.add(
+                    expectation,
+                    column=c,
+                    min_value=self._round_lo(est.lo),
+                    max_value=self._round_hi(est.hi),
+                    meta={"rule_based_profiler": {
+                        "metric": metric,
+                        "per_batch": [round(float(v), 9) for v in est.samples],
+                    }},
+                )
 
         # value-set rule: union of per-batch distinct sets — ONE grouping-
         # sets job for ALL value_set_columns over the union'd batches
@@ -299,8 +272,6 @@ class RuleBasedProfiler:
         # the same executor-side cardinality guard the single-batch profiler
         # uses (an over-size column is dropped before reaching the driver)
         if self.value_set_columns:
-            from great_expectations_spark.profiler import _fused_value_counts
-
             vcols = list(self.value_set_columns)
             union = reduce(
                 lambda a, b: a.unionByName(b),

@@ -276,6 +276,41 @@ def test_metric_dedup_single_bundle(df):
     assert set(exprs) == {"element_count", "mean__n", "table_row_count"}
 
 
+def _observed(spark, df, suite):
+    return [r.result["observed_value"]
+            for r in SuiteRunner(spark).validate(df, suite).results]
+
+
+def test_approximate_distinct_counts_keep_their_rsd(spark):
+    """Two HLL distinct counts of one column at different ``rsd`` in one
+    suite are two sketches: each observes what it observes alone."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(0, 200_000).select(F.col("id").alias("v"))
+
+    def suite(*rsds):
+        s = ExpectationSuite("rsd")
+        for rsd in rsds:
+            s.add("expect_column_unique_value_count_to_be_between",
+                  column="v", approximate=True, rsd=rsd)
+        return s
+
+    alone = [_observed(spark, df, suite(rsd))[0] for rsd in (0.3, 0.01)]
+    assert alone[0] != alone[1]
+    assert _observed(spark, df, suite(0.3, 0.01)) == alone
+
+
+def test_columns_named_alike_keep_their_metrics(spark):
+    """Columns whose names differ only in characters an alias cannot hold
+    (``a b`` and ``a_b``) are two metrics of one bundle, not one."""
+    df = spark.createDataFrame([(1.0, 10.0), (3.0, 30.0)],
+                               "`a b` double, a_b double")
+    s = ExpectationSuite("alike")
+    s.add("expect_column_mean_to_be_between", column="a b")
+    s.add("expect_column_mean_to_be_between", column="a_b")
+    assert _observed(spark, df, s) == [2.0, 20.0]
+
+
 # ---------------------------------------------------------------------------
 # §2.6 meta + §2.4 relational + §2.8 query
 # ---------------------------------------------------------------------------

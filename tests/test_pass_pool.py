@@ -151,3 +151,54 @@ def test_passing_keyed_sinks_cost_no_job(spark, job_ids, tmp_path):
             jobs[path is not None] = len(launched)
         assert jobs[True] <= jobs[False], (name, jobs)
         assert not sink.exists(), name
+
+
+#: Spark jobs of the profilers on the frames below (job-id delta, 8 local
+#: cores, 8 shuffle partitions; under adaptive execution one query launches
+#: several jobs). profile_suite: the statistics, the value sets and the
+#: exact uniqueness verification, plus the KS boundary counts with drift
+#: gates; RuleBasedProfiler.profile: the per-batch statistics and one value
+#: set. Their own metric bundles ran 10, 12 and 9.
+PROFILE_JOBS = 10
+PROFILE_DRIFT_JOBS = 12
+RBP_PROFILE_JOBS = 7
+
+
+@pytest.mark.parametrize("drift_gates,pin", [(False, PROFILE_JOBS),
+                                             (True, PROFILE_DRIFT_JOBS)])
+def test_profile_suite_job_pin(spark, job_ids, drift_gates, pin):
+    """Spark jobs of one profile_suite call over a frame with a
+    low-cardinality, a unique, a numeric and a temporal column, all under
+    the caller's job group."""
+    from great_expectations_spark.profiler import profile_suite
+
+    df = spark.range(0, 2_000).select(
+        (F.col("id") % 7).cast("string").alias("cat"),
+        F.col("id").alias("uid"),
+        (F.col("id") % 100).cast("double").alias("x"),
+        F.timestamp_seconds(F.col("id")).alias("ts"),
+    )
+    launched, grouped = job_ids(
+        f"profile-pin-{drift_gates}",
+        lambda: profile_suite(df, drift_gates=drift_gates))
+    assert grouped == launched
+    assert 0 < len(launched) <= pin, len(launched)
+
+
+def test_rule_based_profiler_job_pin(spark, job_ids):
+    """Spark jobs of one RuleBasedProfiler.profile call over four batches
+    with one value-set column, all under the caller's job group."""
+    from great_expectations_spark import RuleBasedProfiler
+
+    batches = [
+        spark.range(i * 400, (i + 1) * 400).select(
+            F.col("id"),
+            (F.col("id") % 100).cast("double").alias("x"),
+            ((F.col("id") * 37) % 5).cast("string").alias("cat"),
+        )
+        for i in range(4)
+    ]
+    profiler = RuleBasedProfiler(value_set_columns=["cat"])
+    launched, grouped = job_ids("rbp-pin", lambda: profiler.profile(batches))
+    assert grouped == launched
+    assert 0 < len(launched) <= RBP_PROFILE_JOBS, len(launched)

@@ -168,35 +168,29 @@ def test_minhash_banding_shuffles_slim_rows(spark):
     assert out.count() > 0
 
 
-def test_rbp_multi_batch_is_one_aggregation(spark):
-    """multi_batch_metrics: k batches → union + groupBy(batch_id) — the
-    plan contains exactly ONE aggregate exchange (hashpartitioning on
-    __batch_id), not one job per batch."""
+def test_rbp_multi_batch_is_one_aggregation(spark, job_ids):
+    """multi_batch_metrics: k batches → union + groupBy(batch_id), one
+    aggregation whatever k — over 3 batches it launches as many Spark jobs
+    as over 1 (not one job per batch), all in the caller's job group."""
     from great_expectations_spark.rule_based_profiler import multi_batch_metrics
 
-    batches = [
-        spark.range(i * 100, (i + 1) * 100).select(
-            F.col("id"), (F.col("id") % 7).cast("double").alias("x")
-        )
-        for i in range(3)
-    ]
-    # build the plan the function executes (probe via the same shape)
-    from functools import reduce
+    def batches(k):
+        return [
+            spark.range(i * 100, (i + 1) * 100).select(
+                F.col("id"), (F.col("id") % 7).cast("double").alias("x")
+            )
+            for i in range(k)
+        ]
 
-    tagged = [
-        b.select("id", "x").withColumn("__batch_id", F.lit(i))
-        for i, b in enumerate(batches)
-    ]
-    union = reduce(lambda a, b: a.unionByName(b), tagged)
-    agg = union.groupBy("__batch_id").agg(
-        F.count(F.lit(1)).alias("n"), F.mean("x").alias("m")
-    )
-    plan = _plan(agg)
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-    assert "partial_count" in plan or "partial_avg" in plan, plan
-    # and the public function returns one row per batch
-    cols, rows = multi_batch_metrics(batches, columns=["x"])
-    assert len(rows) == 3
+    jobs = []
+    for k in (1, 3):
+        rows = []
+        launched, grouped = job_ids(f"rbp-batches-{k}", lambda: rows.extend(
+            multi_batch_metrics(batches(k), columns=["x"])[1]))
+        assert launched and grouped == launched
+        assert len(rows) == k
+        jobs.append(len(launched))
+    assert jobs[0] == jobs[1], jobs
 
 
 def test_repetition_profile_single_explode(spark):

@@ -232,6 +232,28 @@ def test_microbatch_job_pin(spark, suite, job_ids, tmp_path):
     assert 0 < len(launched) <= MICROBATCH_JOBS, len(launched)
 
 
+def test_microbatch_job_pin_with_violation_rows(spark, suite, job_ids,
+                                                tmp_path):
+    """A clean micro-batch into a store whose violations root already holds
+    an earlier failing epoch's rows runs only the suite's own jobs: the
+    check that one root holds one row shape reads a Parquet footer on the
+    driver, not the root through Spark."""
+    vroot = tmp_path / "violations"
+    ck = Checkpoint(spark, manifest_path=str(tmp_path / "manifest"),
+                    evr_path=str(tmp_path / "evr"),
+                    violations_path=str(vroot))
+    validator = StreamingValidator(suite, ck, run_id="q")
+    validator(spark.createDataFrame(
+        [(f"c{i}", i, "user", None) for i in range(5)], SCHEMA), 0)
+    assert list(vroot.rglob("*.parquet"))
+    clean = spark.createDataFrame(
+        [(f"c{i}", i, "user", "t") for i in range(5)], SCHEMA)
+    launched, grouped = job_ids("clean-micro-batch",
+                                lambda: validator(clean, 1))
+    assert grouped == launched
+    assert 0 < len(launched) <= MICROBATCH_JOBS, len(launched)
+
+
 def test_pii_scan_composes_with_streams(spark, tmp_path):
     """scan_pii / redact_pii are stateless per-row expressions, so they
     apply unchanged to a streaming DataFrame — the firehose-scrubbing
