@@ -8,9 +8,15 @@ deterministic so identical metrics requested by different expectations
 dedup to a single expression (reference: ``Validator._metrics`` cache keyed
 by MetricConfiguration id).
 
-Every partial here is *mergeable across partitions* (counts/sums add,
-min/max combine, histogram buckets add) — the property the resumable
-checkpoint path relies on (SURVEY.md §4.2 item 5).
+An alias carries every parameter its expression reads, so two checks of
+one kind on one column with different parameters never share one.
+
+The counts, sums, min/max and histogram, category and ECDF buckets are
+*mergeable across partitions* (counts and sums add, min/max combine) — the
+property the resumable checkpoint path relies on (SURVEY.md §4.2 item 5).
+``percentile_approx``, the HLL distinct counts, ``collect_set`` and
+``corr`` are not: merging their partials needs sketches (ROADMAP direction
+4), and :func:`quantile_values` is the one quantile expression to swap.
 """
 
 from __future__ import annotations
@@ -45,6 +51,10 @@ class AggMetric:
     details: Callable[[dict[str, Any]], dict[str, Any] | None] = field(
         default=lambda values: None
     )
+
+
+def _digest(value: Any) -> str:
+    return hashlib.md5(repr(value).encode()).hexdigest()[:10]
 
 
 def _dcol(column: str) -> Column:
@@ -89,14 +99,10 @@ def row_count() -> AggMetric:
 
 def median(column: str, approximate: bool = True, relative_error: float = 0.001) -> AggMetric:
     """Reference Spark: ``DataFrame.approxQuantile(col, [0.5], err)``
-    (column_median.py). Ours rides the bundle: ``percentile_approx`` with
-    accuracy ⌈1/err⌉, or exact ``percentile`` when approximate=False."""
-    if approximate:
-        acc = max(100, int(1.0 / max(relative_error, 1e-6)))
-        expr = F.percentile_approx(_dcol(column), 0.5, acc)
-    else:
-        expr = F.percentile(_dcol(column), F.lit(0.5))
-    return _single(safe_alias("median", column, approximate), expr)
+    (column_median.py). Ours is :func:`quantile_values` at ``[0.5]``, so a
+    median and a quantile check at one accuracy share one expression."""
+    q = quantile_values(column, [0.5], relative_error, approximate)
+    return AggMetric(q.exprs, lambda v: (q.finalize(v) or [None])[0])
 
 
 def quantile_values(
@@ -108,16 +114,21 @@ def quantile_values(
     """column.quantile_values (reference: column_quantile_values.py —
     Greenwald–Khanna via DataFrame.approxQuantile). Ours:
     ``percentile_approx`` with an array of quantiles in the shared bundle —
-    one pass for any number of quantiles."""
-    alias = safe_alias("quantiles", column, *quantiles, approximate)
-    qarr = F.array(*[F.lit(float(q)) for q in quantiles])
+    one pass for any number of quantiles — at accuracy ⌊1/err⌋ (at least
+    100; a bool or None error means 0.001), or exact ``percentile`` when
+    approximate=False. The engine's only quantile expression."""
+    qs = [float(q) for q in quantiles]
+    qarr = F.array(*[F.lit(q) for q in qs])
     if approximate:
-        err = 0.001 if allow_relative_error in (True, False, None) else float(allow_relative_error)
+        err = (0.001 if isinstance(allow_relative_error, bool) or allow_relative_error is None
+               else float(allow_relative_error))
         acc = max(100, int(1.0 / max(err, 1e-6)))
+        alias = safe_alias("quantiles", column, *qs, acc)
         expr = F.percentile_approx(_dcol(column), qarr, acc)
     else:
+        alias = safe_alias("quantiles", column, *qs, "exact")
         expr = F.percentile(_dcol(column), qarr)
-    return AggMetric({alias: expr}, lambda v, a=alias: list(v[a]) if v[a] is not None else None)
+    return AggMetric({alias: expr}, lambda v: list(v[alias]) if v[alias] is not None else None)
 
 
 # -- distinctness ---------------------------------------------------------------
@@ -146,17 +157,22 @@ def pair_correlation(column_a: str, column_b: str) -> AggMetric:
     )
 
 
-def unique_proportion(column: str, approximate: bool = False) -> AggMetric:
+def nonnull_count(column: str) -> AggMetric:
+    return _single(safe_alias("nonnull", column), F.count(F.col(column)))
+
+
+def unique_proportion(column: str, approximate: bool = False, rsd: float = 0.05) -> AggMetric:
     """distinct count / non-null count — two bundled aggs, zero extra scans.
-    The approximate count is HLL at Spark's default rsd, 0.05."""
-    distinct = distinct_count(column, approximate, rsd=0.05)
-    nn = safe_alias("nonnull", column)
-    exprs = {**distinct.exprs, nn: F.count(F.col(column))}
+    The approximate count is HLL at ``rsd``, Spark's default 0.05 unless
+    given."""
+    distinct = distinct_count(column, approximate, rsd)
+    nn = nonnull_count(column)
 
     def fin(v: dict[str, Any]) -> Any:
-        return (distinct.finalize(v) / v[nn]) if v[nn] else None
+        n = nn.finalize(v)
+        return (distinct.finalize(v) / n) if n else None
 
-    return AggMetric(exprs, fin)
+    return AggMetric({**distinct.exprs, **nn.exprs}, fin)
 
 
 def distinct_values(column: str) -> AggMetric:
@@ -216,11 +232,39 @@ def histogram(column: str, bins: list[float]) -> AggMetric:
     # the alias must encode EVERY edge, not just endpoints: two histograms
     # over the same column/range with different interior edges (uniform vs
     # quantile bins) must not collide in the domain group's bundle dict
-    bins_digest = hashlib.md5(repr([float(b) for b in bins]).encode()).hexdigest()[:10]
-    alias = safe_alias("hist", column, n, bins_digest)
+    alias = safe_alias("hist", column, n, _digest([float(b) for b in bins]))
     expr = F.expr("array(" + ", ".join(parts) + ")")
 
     def fin(v: dict[str, Any]) -> list[int]:
         return [int(x or 0) for x in v[alias]]
 
     return AggMetric({alias: expr}, fin)
+
+
+def category_counts(column: str, values: list[Any]) -> AggMetric:
+    """Rows equal (null-safe) to each of ``values``, plus the non-null rows
+    equal to none of them; finalizes to ``(counts, other)``. A value's
+    count is keyed by the value and the "other" count by the whole list, so
+    checks with one baseline share their counts."""
+    c = F.col(column)
+    aliases = [safe_alias("category", column, _digest(v)) for v in values]
+    exprs = {a: F.sum(F.when(c.eqNullSafe(F.lit(v)), 1).otherwise(0))
+             for a, v in zip(aliases, values)}
+    other = safe_alias("category_other", column, _digest(values))
+    in_set = c.isin(values) if values else F.lit(False)
+    exprs[other] = F.sum(
+        F.when(c.isNotNull() & ~F.coalesce(in_set, F.lit(False)), 1).otherwise(0)
+    )
+    return AggMetric(exprs, lambda v: ([v[a] or 0 for a in aliases], v[other] or 0))
+
+
+def ecdf_counts(column: str, points: list[float]) -> AggMetric:
+    """Non-null rows at or below each point (the unnormalized ECDF), one
+    conditional sum keyed by each point."""
+    c = _dcol(column)
+    aliases = [safe_alias("ecdf", column, _digest(float(x))) for x in points]
+    exprs = {
+        a: F.sum(F.when(F.col(column).isNotNull() & (c <= F.lit(float(x))), 1).otherwise(0))
+        for a, x in zip(aliases, points)
+    }
+    return AggMetric(exprs, lambda v: [v[a] or 0 for a in aliases])

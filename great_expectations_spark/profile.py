@@ -20,9 +20,12 @@ per SURVEY.md §0):
   reference ``convert_to_json_serializable``); ``details.observed_partition``
   carries the observed profile.
 
-Spark side: ALL counts ride the suite's single bundled aggregation pass
-(one ``sum(when(...))`` per bucket/value — no extra scan, no groupBy); the
-KL arithmetic runs driver-side on numpy vectors of ≤ a few hundred entries.
+Spark side: every count comes from one builder of
+``functions/aggregates.py`` (category, histogram, ECDF and non-null counts,
+quantiles) and rides the suite's single bundled aggregation pass — no extra
+scan, no groupBy; the partition builders run the same builders through
+``profiler.column_metrics``. The KL arithmetic runs driver-side on numpy
+vectors of ≤ a few hundred entries.
 """
 
 from __future__ import annotations
@@ -33,7 +36,9 @@ from typing import Any
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
+from great_expectations_spark.functions import aggregates as A
 from great_expectations_spark.functions.aggregates import AggMetric, safe_alias
+from great_expectations_spark.profiler import column_metrics
 
 
 # ---------------------------------------------------------------------------
@@ -65,30 +70,6 @@ def is_valid_continuous_partition_object(p: Any) -> bool:
     return math.isclose(total, 1.0, rel_tol=1e-6) and all(
         w >= 0 for w in p["weights"]
     )
-
-
-def is_valid_partition_object(p: Any) -> bool:
-    return is_valid_categorical_partition_object(
-        p
-    ) or is_valid_continuous_partition_object(p)
-
-
-def build_categorical_partition_object(
-    df: DataFrame, column: str, sort: str = "value"
-) -> dict[str, Any]:
-    """Baseline categorical profile from value counts (one groupBy job)."""
-    rows = (
-        df.filter(F.col(column).isNotNull())
-        .groupBy(column)
-        .count()
-        .orderBy(column)
-        .collect()
-    )
-    total = sum(r["count"] for r in rows) or 1
-    return {
-        "values": [r[column] for r in rows],
-        "weights": [r["count"] / total for r in rows],
-    }
 
 
 def auto_bin_edges(
@@ -138,52 +119,48 @@ def build_continuous_partition_object(
       directly with numpy+erf on a seeded driver-side sample of
       ``kde_sample_limit`` rows — exact for inputs under the limit).
 
-    One bundled agg job for the edges, one for the bucket weights
-    (``kde`` weights come from the mixture CDF, not a second scan).
+    One bundled aggregation (``profiler.column_metrics``) for the edges,
+    one for the bucket weights (``kde`` weights come from the mixture CDF,
+    not a second scan).
     """
-    c = F.col(column).cast("double")
+    def measure(**metrics: AggMetric) -> dict[str, Any]:
+        return column_metrics(df, metrics)[()]
+
     if bins == "uniform":
-        row = df.agg(F.min(c).alias("lo"), F.max(c).alias("hi")).collect()[0]
-        lo, hi = row["lo"], row["hi"]
-        if lo is None:
+        row = measure(lo=A.col_min(column), hi=A.col_max(column))
+        if row["lo"] is None:
             return {"bins": [0.0, 1.0], "weights": [0.0], "tail_weights": [0.5, 0.5]}
+        lo, hi = float(row["lo"]), float(row["hi"])
         if lo == hi:
             hi = lo + 1.0
         edges = list(np.linspace(lo, hi, n_bins + 1))
     elif bins == "ntile":
-        acc = max(100, int(1.0 / max(allow_relative_error, 1e-6)))
         qs = [i / n_bins for i in range(n_bins + 1)]
-        row = df.agg(
-            F.percentile_approx(c, F.array(*[F.lit(q) for q in qs]), acc).alias("e")
-        ).collect()[0]
-        edges = sorted(set(float(x) for x in row["e"]))
+        row = measure(e=A.quantile_values(column, qs, allow_relative_error))
+        edges = sorted(set(float(x) for x in row["e"] or []))
         if len(edges) < 2:
             edges = [edges[0], edges[0] + 1.0] if edges else [0.0, 1.0]
     elif bins == "auto":
         # FD bin width is insensitive to small quantile error, so the
-        # default IQR comes from percentile_approx (bounded executor memory);
-        # exact F.percentile buffers per-partition value maps — an OOM hazard
-        # on high-cardinality columns at scale — and is kept only behind
-        # ``exact_quantiles`` for SQL-oracle parity (quantile_cont).
-        if exact_quantiles:
-            q25 = F.percentile(c, F.lit(0.25))
-            q75 = F.percentile(c, F.lit(0.75))
-        else:
-            acc = max(1000, int(1.0 / max(allow_relative_error, 1e-6)))
-            q25 = F.percentile_approx(c, F.lit(0.25), acc)
-            q75 = F.percentile_approx(c, F.lit(0.75), acc)
-        row = df.agg(
-            F.count(c).alias("n"),
-            F.min(c).alias("lo"),
-            F.max(c).alias("hi"),
-            q25.alias("q25"),
-            q75.alias("q75"),
-        ).collect()[0]
+        # default IQR comes from percentile_approx (bounded executor memory),
+        # at accuracy 1000 or finer; exact F.percentile buffers per-partition
+        # value maps — an OOM hazard on high-cardinality columns at scale —
+        # and is kept only behind ``exact_quantiles`` for SQL-oracle parity
+        # (quantile_cont).
+        row = measure(
+            n=A.nonnull_count(column),
+            lo=A.col_min(column),
+            hi=A.col_max(column),
+            q=A.quantile_values(column, [0.25, 0.75],
+                                min(allow_relative_error, 0.001),
+                                approximate=not exact_quantiles),
+        )
         if row["lo"] is None:
             return {"bins": [0.0, 1.0], "weights": [0.0], "tail_weights": [0.5, 0.5]}
+        q25, q75 = row["q"]
         edges = auto_bin_edges(
             int(row["n"]), float(row["lo"]), float(row["hi"]),
-            float(row["q25"]), float(row["q75"]),
+            float(q25), float(q75),
         )
     elif bins == "kde":
         return _kde_partition_object(df, column, kde_sample_limit, seed)
@@ -192,9 +169,7 @@ def build_continuous_partition_object(
             f"unsupported bins strategy {bins!r} (uniform|ntile|auto|kde)"
         )
 
-    hist = histogram_metric(column, edges)
-    values = df.agg(*[e.alias(a) for a, e in hist.exprs.items()]).collect()[0].asDict()
-    counts = hist.finalize(values)
+    counts = measure(hist=A.histogram(column, edges))["hist"]
     total = sum(counts) or 1
     return {
         "bins": [float(e) for e in edges],
@@ -258,12 +233,6 @@ def _kde_partition_object(
     }
 
 
-def histogram_metric(column: str, bins: list[float]) -> AggMetric:
-    from great_expectations_spark.functions.aggregates import histogram
-
-    return histogram(column, bins)
-
-
 # ---------------------------------------------------------------------------
 # head previews (reference: table.head / column.head metrics)
 # ---------------------------------------------------------------------------
@@ -321,29 +290,24 @@ def kl_divergence_metric(
     raise ValueError("invalid partition_object")
 
 
+def _observed_categories(
+    cats: AggMetric, vals: dict[str, Any]
+) -> tuple[np.ndarray, float, float]:
+    """A category-count metric's per-value counts, other count and total."""
+    counts, other = cats.finalize(vals)
+    counts = np.asarray(counts, dtype=float)
+    return counts, float(other), float(counts.sum() + other)
+
+
 def _categorical_kl(
     column: str, partition_object: dict[str, Any], tail_weight_holdout: float
 ) -> AggMetric:
     values = list(partition_object["values"])
     baseline = np.asarray(partition_object["weights"], dtype=float)
-    c = F.col(column)
-
-    exprs: dict[str, Any] = {}
-    val_aliases: list[str] = []
-    for i, v in enumerate(values):
-        a = safe_alias("klcat", column, i)
-        val_aliases.append(a)
-        exprs[a] = F.sum(F.when(c.eqNullSafe(F.lit(v)), 1).otherwise(0))
-    other_alias = safe_alias("klcat_other", column)
-    in_set = c.isin(values) if values else F.lit(False)
-    exprs[other_alias] = F.sum(
-        F.when(c.isNotNull() & ~F.coalesce(in_set, F.lit(False)), 1).otherwise(0)
-    )
+    cats = A.category_counts(column, values)
 
     def fin(vals: dict[str, Any]) -> float:
-        counts = np.array([vals[a] or 0 for a in val_aliases], dtype=float)
-        other = float(vals[other_alias] or 0)
-        total = counts.sum() + other
+        counts, other, total = _observed_categories(cats, vals)
         if total == 0:
             return float("nan")
         pk = counts / total
@@ -358,17 +322,15 @@ def _categorical_kl(
         return _kl(pk, qk)
 
     def details(vals: dict[str, Any]) -> dict[str, Any]:
-        counts = np.array([vals[a] or 0 for a in val_aliases], dtype=float)
-        other = float(vals[other_alias] or 0)
-        total = counts.sum() + other or 1.0
+        counts, _, total = _observed_categories(cats, vals)
         return {
             "observed_partition": {
                 "values": values,
-                "weights": [float(x) for x in counts / total],
+                "weights": [float(x) for x in counts / (total or 1.0)],
             }
         }
 
-    return AggMetric(exprs, fin, details)
+    return AggMetric(cats.exprs, fin, details)
 
 
 def _continuous_kl(
@@ -381,22 +343,18 @@ def _continuous_kl(
     weights = np.asarray(partition_object["weights"], dtype=float)
     tail_weights = partition_object.get("tail_weights")
 
-    from great_expectations_spark.functions.aggregates import histogram
-
-    hist = histogram(column, bins)
+    hist = A.histogram(column, bins)
     c = F.col(column).cast("double")
-    below_alias = safe_alias("klbelow", column)
-    above_alias = safe_alias("klabove", column)
-    exprs = dict(hist.exprs)
     lo, hi = bins[0], bins[-1]
+    below_alias = safe_alias("klbelow", column, lo)
+    above_alias = safe_alias("klabove", column, hi)
+    exprs = dict(hist.exprs)
     exprs[below_alias] = F.sum(
         F.when(F.col(column).isNotNull() & (c < lo), 1).otherwise(0)
     )
     exprs[above_alias] = F.sum(
         F.when(F.col(column).isNotNull() & (c > hi), 1).otherwise(0)
     )
-    nn_alias = safe_alias("klnn", column)
-    exprs[nn_alias] = F.count(F.col(column))
 
     def _expected(qk: np.ndarray) -> tuple[np.ndarray, float, float]:
         """Apply holdouts to the baseline per reference semantics."""
@@ -556,26 +514,11 @@ def chisquare_test_metric(
     """
     if not is_valid_categorical_partition_object(partition_object):
         raise ValueError("chi-square test needs a categorical partition_object")
-    values = list(partition_object["values"])
     baseline = np.asarray(partition_object["weights"], dtype=float)
-    c = F.col(column)
-
-    exprs: dict[str, Any] = {}
-    val_aliases: list[str] = []
-    for i, v in enumerate(values):
-        a = safe_alias("chisq", column, i)
-        val_aliases.append(a)
-        exprs[a] = F.sum(F.when(c.eqNullSafe(F.lit(v)), 1).otherwise(0))
-    other_alias = safe_alias("chisq_other", column)
-    in_set = c.isin(values) if values else F.lit(False)
-    exprs[other_alias] = F.sum(
-        F.when(c.isNotNull() & ~F.coalesce(in_set, F.lit(False)), 1).otherwise(0)
-    )
+    cats = A.category_counts(column, list(partition_object["values"]))
 
     def _stat(vals: dict[str, Any]) -> tuple[float, int, np.ndarray, np.ndarray]:
-        counts = np.array([vals[a] or 0 for a in val_aliases], dtype=float)
-        other = float(vals[other_alias] or 0)
-        total = counts.sum() + other
+        counts, other, total = _observed_categories(cats, vals)
         if total == 0:
             return float("nan"), 0, counts, np.zeros_like(counts)
         if other > 0 and tail_weight_holdout <= 0:
@@ -615,7 +558,7 @@ def chisquare_test_metric(
             }
         }
 
-    return AggMetric(exprs, fin, details)
+    return AggMetric(cats.exprs, fin, details)
 
 
 def ks_test_metric(
@@ -638,25 +581,27 @@ def ks_test_metric(
     weights = np.asarray(partition_object["weights"], dtype=float)
     tails = partition_object.get("tail_weights") or [0.0, 0.0]
     cdf_at = float(tails[0]) + np.concatenate([[0.0], np.cumsum(weights)])
+    return _ks_metric(column, bins, cdf_at, "statistic_at_boundaries",
+                      boundaries=bins)
 
-    c = F.col(column).cast("double")
-    nn_alias = safe_alias("ksnn", column)
-    exprs: dict[str, Any] = {nn_alias: F.count(F.col(column))}
-    cum_aliases: list[str] = []
-    for i, b in enumerate(bins):
-        a = safe_alias("kscum", column, i)
-        cum_aliases.append(a)
-        exprs[a] = F.sum(
-            F.when(F.col(column).isNotNull() & (c <= F.lit(b)), 1).otherwise(0)
-        )
+
+def _ks_metric(
+    column: str, points: list[float], cdf: np.ndarray, statistic: str,
+    **about: Any,
+) -> AggMetric:
+    """Both KS metrics: the non-null count and the ECDF counts at ``points``
+    ride the bundle; D = max_j |ECDF(x_j) − cdf_j|, observed value = the
+    asymptotic Kolmogorov p-value at λ = (√n + 0.12 + 0.11/√n)·D; details
+    carry D under ``statistic``, n and ``about``."""
+    nn = A.nonnull_count(column)
+    ecdf = A.ecdf_counts(column, points)
 
     def _d(vals: dict[str, Any]) -> tuple[float, float]:
-        n = float(vals[nn_alias] or 0)
+        n = float(nn.finalize(vals) or 0)
         if n == 0:
             return float("nan"), 0.0
-        ecdf = np.array([vals[a] or 0 for a in cum_aliases], dtype=float) / n
-        d = float(np.abs(ecdf - cdf_at).max())
-        return d, n
+        counts = np.asarray(ecdf.finalize(vals), dtype=float)
+        return float(np.abs(counts / n - cdf).max()), n
 
     def fin(vals: dict[str, Any]) -> float:
         d, n = _d(vals)
@@ -667,15 +612,9 @@ def ks_test_metric(
 
     def details(vals: dict[str, Any]) -> dict[str, Any]:
         d, n = _d(vals)
-        return {
-            "ks": {
-                "statistic_at_boundaries": None if math.isnan(d) else d,
-                "n": n,
-                "boundaries": bins,
-            }
-        }
+        return {"ks": {statistic: None if math.isnan(d) else d, "n": n, **about}}
 
-    return AggMetric(exprs, fin, details)
+    return AggMetric({**nn.exprs, **ecdf.exprs}, fin, details)
 
 
 # -- parameterized-distribution KS ------------------------------------------
@@ -786,42 +725,5 @@ def parameterized_ks_test_metric(
     tightens as n_probes grows (default 20 ⇒ resolution 0.05)."""
     levels = [(j + 1) / (n_probes + 1) for j in range(n_probes)]
     probes = [distribution_ppf(distribution, p, params) for p in levels]
-
-    c = F.col(column).cast("double")
-    nn_alias = safe_alias("pksnn", column)
-    exprs: dict[str, Any] = {nn_alias: F.count(F.col(column))}
-    cum_aliases: list[str] = []
-    for i, x in enumerate(probes):
-        a = safe_alias("pkscum", column, distribution, i, n_probes)
-        cum_aliases.append(a)
-        exprs[a] = F.sum(
-            F.when(F.col(column).isNotNull() & (c <= F.lit(float(x))), 1)
-            .otherwise(0)
-        )
-
-    def _d(vals: dict[str, Any]) -> tuple[float, float]:
-        n = float(vals[nn_alias] or 0)
-        if n == 0:
-            return float("nan"), 0.0
-        ecdf = np.array([vals[a] or 0 for a in cum_aliases], dtype=float) / n
-        return float(np.abs(ecdf - np.asarray(levels)).max()), n
-
-    def fin(vals: dict[str, Any]) -> float:
-        d, n = _d(vals)
-        if math.isnan(d):
-            return float("nan")
-        sqn = math.sqrt(n)
-        return kolmogorov_sf((sqn + 0.12 + 0.11 / sqn) * d)
-
-    def details(vals: dict[str, Any]) -> dict[str, Any]:
-        d, n = _d(vals)
-        return {
-            "ks": {
-                "statistic_at_probes": None if math.isnan(d) else d,
-                "n": n,
-                "distribution": distribution,
-                "n_probes": n_probes,
-            }
-        }
-
-    return AggMetric(exprs, fin, details)
+    return _ks_metric(column, probes, np.asarray(levels), "statistic_at_probes",
+                      distribution=distribution, n_probes=n_probes)

@@ -5,12 +5,13 @@ Reimplements the reference's ``UserConfigurableProfiler``
 unverified — SURVEY.md §0/§3): classify each column's cardinality, then emit
 type- and cardinality-appropriate expectations with observed values as
 bounds. As in the reference, the statistics come from the engine that
-validates expectations: :func:`column_metrics` runs them as bound-free
-checks through ``runner.run_passes``, one bundled aggregation for every
-column. Then ONE GROUPING SETS query counts every low-cardinality column's
-value set and one bundled query verifies the uniqueness candidates exactly
-(plus one for drift gates): the query count does not grow with the column
-count. Under AQE one query launches several Spark jobs.
+validates expectations: :func:`column_metrics` runs the shared aggregate
+metrics (``functions/aggregates.py``) through ``runner.run_passes``, one
+bundled aggregation for every column. Then ONE GROUPING SETS query counts
+every low-cardinality column's value set and one bundled query verifies the
+uniqueness candidates exactly (plus one for drift gates): the query count
+does not grow with the column count. Under AQE one query launches several
+Spark jobs.
 
 Cardinality bands follow the reference's ``ProfilerCardinality``:
     NONE(0) ONE(1) TWO(2) VERY_FEW(<=10) FEW(<=100)
@@ -23,13 +24,15 @@ Low cardinality (<= ``value_set_threshold`` band) → ``be_in_set``; UNIQUE →
 from __future__ import annotations
 
 import math
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from great_expectations_spark.plans.planner import plan_suite
+from great_expectations_spark.functions import aggregates as A
+from great_expectations_spark.functions.aggregates import AggMetric
+from great_expectations_spark.plans.planner import DomainGroup
 from great_expectations_spark.registry import CompiledAgg
-from great_expectations_spark.runner import SparkThreadPool, run_passes, verdict
+from great_expectations_spark.runner import SparkThreadPool, run_passes
 from great_expectations_spark.suite import ExpectationSuite
 
 CARDINALITY_BANDS = [
@@ -57,54 +60,45 @@ def _band(distinct: int, nonnull: int) -> str:
     return "VERY_MANY"
 
 
-#: each profile statistic as the registry expectation that computes it,
-#: run without bounds so only its observed value is read; "nn" is the
-#: not-null check's element_count − unexpected_count
-_METRICS = {
-    "nn": ("expect_column_values_to_not_be_null", {}),
-    "min": ("expect_column_min_to_be_between", {}),
-    "max": ("expect_column_max_to_be_between", {}),
-    "mean": ("expect_column_mean_to_be_between", {}),
-    "stddev": ("expect_column_stdev_to_be_between", {}),
-    "median": ("expect_column_median_to_be_between", {}),
+#: each profile statistic's metric builder
+_STATS: dict[str, Callable[[str], AggMetric]] = {
+    "nn": A.nonnull_count,
+    "min": A.col_min,
+    "max": A.col_max,
+    "mean": A.mean,
+    "stddev": A.stddev,
+    "median": A.median,
     # rsd 0.05, not tighter: the HLL buffer holds (1.04/rsd)² registers, so
     # rsd 0.005 is ~11k aggregation-buffer attributes per column (a 20-column
     # profile built a 24 MiB task binary and OOM'd codegen); rsd 0.05 is 86
     # words per column, linear and cheap at 500 columns
-    "approx_distinct": ("expect_column_unique_value_count_to_be_between",
-                        {"approximate": True, "rsd": 0.05}),
-    "distinct": ("expect_column_unique_value_count_to_be_between",
-                 {"approximate": False}),
+    "approx_distinct": lambda c: A.distinct_count(c, approximate=True, rsd=0.05),
+    "distinct": A.distinct_count,
 }
 
 
+def stats_metrics(metrics: dict[str, list[str]]) -> dict[str, AggMetric]:
+    """``n`` (the row count) plus ``<column>__<stat>`` for each column's
+    statistics (keys of ``_STATS``)."""
+    return {"n": A.row_count(),
+            **{f"{c}__{m}": _STATS[m](c) for c, names in metrics.items()
+               for m in names}}
+
+
 def column_metrics(
-    df: DataFrame, metrics: dict[str, list[str]], keys: tuple[str, ...] = ()
+    df: DataFrame, metrics: dict[str, AggMetric], keys: tuple[str, ...] = ()
 ) -> dict[tuple, dict[str, Any]]:
-    """Profile statistics through the pass executor: ``metrics`` maps a
-    column to the names of its statistics (keys of ``_METRICS``). Each one is
-    a bound-free check of one suite, whose single domain group
-    ``run_passes`` runs with ``keys`` in front; ``verdict`` reads each back.
-    Returns key values → ``{"n": rows, "<column>__<name>": value}``; a key
-    without rows has no entry."""
-    suite = ExpectationSuite("column-metrics")
-    names = {suite.add("expect_table_row_count_to_be_between").id: "n"}
-    for c, wanted in metrics.items():
-        for m in wanted:
-            etype, kwargs = _METRICS[m]
-            names[suite.add(etype, column=c, **kwargs).id] = f"{c}__{m}"
-    (group,) = plan_suite(suite).groups
+    """Named metrics through the pass executor: ``run_passes`` runs them as
+    one bare domain group's bundled aggregation, with ``keys`` in front.
+    Returns key values → ``{name: finalized value}``; a key without rows
+    has no entry."""
+    group = DomainGroup(None, aggs=[CompiledAgg(None, m, bool)
+                                    for m in metrics.values()])
     with SparkThreadPool(df.sparkSession) as pool:
         passes = run_passes(group, df, list(keys), pool)
     passes.release()
-    out: dict[tuple, dict[str, Any]] = {}
-    for key, vals in passes.values.items():
-        row = out[key] = {}
-        for c in group.checks:
-            v = verdict(c, vals)
-            row[names[c.cfg.id]] = (v.observed if isinstance(c, CompiledAgg)
-                                    else v.element_count - v.unexpected_count)
-    return out
+    return {key: {name: m.finalize(vals) for name, m in metrics.items()}
+            for key, vals in passes.values.items()}
 
 
 def profile_suite(
@@ -146,7 +140,8 @@ def profile_suite(
                 + (["min", "max"] if isinstance(t, _NUMERIC + _TEMPORAL) else [])
                 + (["mean", "median"] if isinstance(t, _NUMERIC) else []))
 
-    stats = column_metrics(df, {c: metrics(schema[c]) for c in cols})[()]
+    stats = column_metrics(
+        df, stats_metrics({c: metrics(schema[c]) for c in cols}))[()]
     n = stats["n"]
 
     suite = ExpectationSuite(name, meta={"profiler": "profile_suite",
@@ -225,51 +220,41 @@ def profile_suite(
                 tail_weight_holdout=0.01,
             )
 
-    # drift gates for numeric columns: ONE bundled agg of cumulative
-    # boundary counts for every eligible column; the emitted KS baseline is
-    # those very counts, so the gate is exactly calibrated on this batch
-    if drift_gates:
-        ks_specs: list[tuple[str, list[float]]] = []
-        ks_exprs: list[F.Column] = []
-        for c in cols:
-            if not isinstance(schema[c], _NUMERIC):
+    # drift gates for numeric columns: ONE bundled aggregation of every
+    # eligible column's non-null and ECDF counts at its boundaries — the KS
+    # check's own counts, so the gate is exactly calibrated on this batch
+    ks_bins: dict[str, list[float]] = {}
+    ks_metrics: dict[str, AggMetric] = {}
+    for c in cols if drift_gates else []:
+        mn, mx = stats.get(f"{c}__min"), stats.get(f"{c}__max")
+        if (not isinstance(schema[c], _NUMERIC) or mn is None
+                or not float(mx) > float(mn)):
+            continue
+        lo, hi = float(mn), float(mx)
+        bins = ks_bins[c] = [lo + (hi - lo) * j / drift_bins
+                             for j in range(drift_bins + 1)]
+        ks_metrics[f"{c}__nn"] = A.nonnull_count(c)
+        ks_metrics[f"{c}__ecdf"] = A.ecdf_counts(c, bins)
+    if ks_bins:
+        ks = column_metrics(df, ks_metrics)[()]
+        for c, bins in ks_bins.items():
+            nn = float(ks[f"{c}__nn"] or 0)
+            if nn <= 0:
                 continue
-            mn, mx = stats[f"{c}__min"], stats[f"{c}__max"]
-            if mn is None or mx is None or not float(mx) > float(mn):
+            cum = [cnt / nn for cnt in ks[f"{c}__ecdf"]]
+            weights = [cum[j + 1] - cum[j] for j in range(len(bins) - 1)]
+            if any(w < 0 for w in weights):
                 continue
-            lo, hi = float(mn), float(mx)
-            bins = [lo + (hi - lo) * j / drift_bins for j in range(drift_bins + 1)]
-            ks_specs.append((c, bins))
-            d = F.col(c).cast("double")
-            ks_exprs.append(F.count(F.col(c)).alias(f"ksn__{c}"))
-            for j, b in enumerate(bins):
-                ks_exprs.append(
-                    F.sum(
-                        F.when(F.col(c).isNotNull() & (d <= F.lit(b)), 1)
-                        .otherwise(0)
-                    ).alias(f"ksc__{c}__{j}")
-                )
-        if ks_exprs:
-            ks_stats = df.agg(*ks_exprs).collect()[0].asDict()
-            for c, bins in ks_specs:
-                nn = float(ks_stats[f"ksn__{c}"] or 0)
-                if nn <= 0:
-                    continue
-                cum = [float(ks_stats[f"ksc__{c}__{j}"] or 0) / nn
-                       for j in range(len(bins))]
-                weights = [cum[j + 1] - cum[j] for j in range(len(bins) - 1)]
-                if any(w < 0 for w in weights):
-                    continue
-                suite.add(
-                    "expect_column_bootstrapped_ks_test_p_value_to_be_greater_than",
-                    column=c,
-                    partition_object={
-                        "bins": bins,
-                        "weights": weights,
-                        "tail_weights": [cum[0], 1.0 - cum[-1]],
-                    },
-                    p=drift_p,
-                )
+            suite.add(
+                "expect_column_bootstrapped_ks_test_p_value_to_be_greater_than",
+                column=c,
+                partition_object={
+                    "bins": bins,
+                    "weights": weights,
+                    "tail_weights": [cum[0], 1.0 - cum[-1]],
+                },
+                p=drift_p,
+            )
 
     # exact uniqueness verification for HLL-flagged candidates, fused into
     # ONE bundled query for all candidates (emitting a false be_unique would
@@ -277,8 +262,8 @@ def profile_suite(
     # the multiple countDistincts via one Expand + two-phase hash aggregate —
     # one shuffle on (gid, value) partials, spillable, no driver fan-out.
     if unique_candidates:
-        exact = column_metrics(
-            df, {c: ["nn", "distinct"] for c in unique_candidates})[()]
+        exact = column_metrics(df, stats_metrics(
+            {c: ["nn", "distinct"] for c in unique_candidates}))[()]
         for c in unique_candidates:
             if exact[f"{c}__distinct"] == exact[f"{c}__nn"]:
                 suite.add("expect_column_values_to_be_unique", column=c)

@@ -308,7 +308,9 @@ _agg_between(
 _agg_between(
     "expect_column_proportion_of_unique_values_to_be_between",
     lambda c: A.unique_proportion(
-        c.kwargs["column"], approximate=c.kwargs.get("approximate", False)
+        c.kwargs["column"],
+        approximate=c.kwargs.get("approximate", False),
+        rsd=c.kwargs.get("rsd", 0.05),
     ),
 )
 _agg_between("expect_table_row_count_to_be_between", lambda c: A.row_count())

@@ -12,7 +12,7 @@ Spark-first shape: the reference resolves a metric graph PER BATCH (k × many
 small jobs). Ours computes every per-batch metric for every profiled column
 in **one Spark query**: batches are tagged with a literal ``__batch_id``,
 union'd, and the profile statistics (``profiler.column_metrics``, the
-registry's own metric expressions) run through the pass executor keyed by
+shared aggregate metrics) run through the pass executor keyed by
 ``__batch_id`` — one shuffle of k × (a few hundred bytes) partial rows
 regardless of batch sizes, and as many Spark jobs for k batches as for one.
 Estimator math (quantile / bootstrap over the k per-batch values) is numpy on
@@ -37,6 +37,7 @@ from great_expectations_spark.profiler import (
     _NUMERIC,
     _fused_value_counts,
     column_metrics,
+    stats_metrics,
 )
 from great_expectations_spark.suite import ExpectationSuite
 
@@ -129,7 +130,8 @@ def multi_batch_metrics(
         if isinstance(schema[c], _NUMERIC) else ["nn", "approx_distinct"]
         for c in cols
     }
-    by_batch = column_metrics(union, metrics, keys=("__batch_id",))
+    by_batch = column_metrics(union, stats_metrics(metrics),
+                              keys=("__batch_id",))
     # the pass emits no row for a zero-row batch; reindex by __batch_id so
     # rows[i] is ALWAYS batch i (an empty batch contributes n=0, nn=0 and
     # None metrics — it must reach the estimators, e.g. to drive the

@@ -276,28 +276,83 @@ def test_metric_dedup_single_bundle(df):
     assert set(exprs) == {"element_count", "mean__n", "table_row_count"}
 
 
+def test_one_baseline_counts_once(spark):
+    """A categorical KL and a chi-square check with one baseline read one
+    set of category counts (two values and "other") from the bundle."""
+    from great_expectations_spark.plans.planner import plan_suite
+
+    baseline = {"values": ["a", "b"], "weights": [0.5, 0.5]}
+
+    def bundle(*etypes):
+        s = ExpectationSuite("one-baseline")
+        for etype in etypes:
+            s.add(etype, column="cat", partition_object=baseline, threshold=0.1)
+        return set(plan_suite(s).groups[0].bundle_exprs())
+
+    kl = bundle("expect_column_kl_divergence_to_be_less_than")
+    assert len(kl) == 1 + 3
+    assert bundle("expect_column_kl_divergence_to_be_less_than",
+                  "expect_column_chisquare_test_p_value_to_be_greater_than") == kl
+
+
 def _observed(spark, df, suite):
     return [r.result["observed_value"]
             for r in SuiteRunner(spark).validate(df, suite).results]
 
 
-def test_approximate_distinct_counts_keep_their_rsd(spark):
-    """Two HLL distinct counts of one column at different ``rsd`` in one
-    suite are two sketches: each observes what it observes alone."""
+_UNIFORM_HALVES = {"bins": [0, 50, 100], "weights": [0.5, 0.5]}
+
+
+@pytest.mark.parametrize("etype,common,a,b", [
+    ("expect_column_unique_value_count_to_be_between",
+     {"column": "id", "approximate": True}, {"rsd": 0.3}, {"rsd": 0.01}),
+    ("expect_column_proportion_of_unique_values_to_be_between",
+     {"column": "id", "approximate": True}, {"rsd": 0.3}, {"rsd": 0.01}),
+    ("expect_column_median_to_be_between", {"column": "ln"},
+     {"allow_relative_error": 0.5}, {"allow_relative_error": 0.0001}),
+    ("expect_column_quantile_values_to_be_between",
+     {"column": "ln", "quantile_ranges": {"quantiles": [0.9],
+                                         "value_ranges": [[None, None]]}},
+     {"allow_relative_error": 0.5}, {"allow_relative_error": 0.0001}),
+    ("expect_column_bootstrapped_ks_test_p_value_to_be_greater_than",
+     {"column": "x"}, {"partition_object": _UNIFORM_HALVES},
+     {"partition_object": {"bins": [0, 10, 100], "weights": [0.5, 0.5]}}),
+    ("expect_column_kl_divergence_to_be_less_than",
+     {"column": "cat", "threshold": 1.0, "tail_weight_holdout": 0.1},
+     {"partition_object": {"values": ["a", "b"], "weights": [0.5, 0.5]}},
+     {"partition_object": {"values": ["c", "b"], "weights": [0.5, 0.5]}}),
+    ("expect_column_kl_divergence_to_be_less_than",
+     {"column": "x", "threshold": 1.0}, {"partition_object": _UNIFORM_HALVES},
+     {"partition_object": {"bins": [20, 50, 80], "weights": [0.5, 0.5]}}),
+    ("expect_column_parameterized_distribution_ks_test_p_value_to_be_greater_than",
+     {"column": "x", "distribution": "uniform"},
+     {"params": {"loc": 0, "scale": 100}}, {"params": {"loc": 0, "scale": 200}}),
+], ids=["distinct_count_rsd", "unique_proportion_rsd", "median_accuracy",
+        "quantile_accuracy", "ks_bins", "categorical_kl_values",
+        "continuous_kl_bins", "parameterized_ks_scale"])
+def test_checks_keep_their_parameters(spark, etype, common, a, b):
+    """Two checks of one kind on one column with different parameters in
+    one suite compute two metrics: each observes what it observes alone.
+    One partition keeps the approximate quantiles deterministic."""
     from pyspark.sql import functions as F
 
-    df = spark.range(0, 200_000).select(F.col("id").alias("v"))
+    df = spark.range(0, 100_000, 1, 1).select(
+        "id",
+        (F.rand(1) * 100).alias("x"),
+        F.exp(F.randn(2)).alias("ln"),
+        F.when(F.col("id") % 10 < 5, "a")
+        .when(F.col("id") % 10 < 8, "b").otherwise("c").alias("cat"),
+    )
 
-    def suite(*rsds):
-        s = ExpectationSuite("rsd")
-        for rsd in rsds:
-            s.add("expect_column_unique_value_count_to_be_between",
-                  column="v", approximate=True, rsd=rsd)
+    def suite(*params):
+        s = ExpectationSuite("params")
+        for kw in params:
+            s.add(etype, **common, **kw)
         return s
 
-    alone = [_observed(spark, df, suite(rsd))[0] for rsd in (0.3, 0.01)]
+    alone = [_observed(spark, df, suite(kw))[0] for kw in (a, b)]
     assert alone[0] != alone[1]
-    assert _observed(spark, df, suite(0.3, 0.01)) == alone
+    assert _observed(spark, df, suite(a, b)) == alone
 
 
 def test_columns_named_alike_keep_their_metrics(spark):

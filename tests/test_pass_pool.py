@@ -202,3 +202,22 @@ def test_rule_based_profiler_job_pin(spark, job_ids):
     launched, grouped = job_ids("rbp-pin", lambda: profiler.profile(batches))
     assert grouped == launched
     assert 0 < len(launched) <= RBP_PROFILE_JOBS, len(launched)
+
+
+#: Spark jobs of one build_continuous_partition_object call (job-id delta,
+#: 8 local cores): one bundled aggregation for the edges, one for the
+#: histogram weights; under adaptive execution each launches two jobs.
+PARTITION_JOBS = {"uniform": 4, "ntile": 4, "auto": 4}
+
+
+@pytest.mark.parametrize("bins", sorted(PARTITION_JOBS))
+def test_partition_object_job_pin(spark, job_ids, bins):
+    from great_expectations_spark.profile import build_continuous_partition_object
+
+    df = spark.range(0, 2_000).select(
+        (F.col("id") % 100).cast("double").alias("x"))
+    launched, grouped = job_ids(
+        f"partition-pin-{bins}",
+        lambda: build_continuous_partition_object(df, "x", bins=bins))
+    assert grouped == launched
+    assert 0 < len(launched) <= PARTITION_JOBS[bins], len(launched)
