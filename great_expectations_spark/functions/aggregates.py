@@ -51,6 +51,9 @@ class AggMetric:
     details: Callable[[dict[str, Any]], dict[str, Any] | None] = field(
         default=lambda values: None
     )
+    #: a column whose modes (with ties) the domain group's value-counts
+    #: pass computes for this metric
+    modes_column: str | None = None
 
 
 def _digest(value: Any) -> str:

@@ -42,9 +42,7 @@ from great_expectations_spark.registry import (
     CompiledAgg,
     CompiledContiguous,
     CompiledMap,
-    CompiledMeta,
-    CompiledQuery,
-    CompiledRelational,
+    CompiledSide,
     CompiledUnique,
     compile_expectation,
 )
@@ -120,8 +118,31 @@ class DomainGroup:
     aggs: list[CompiledAgg] = field(default_factory=list)
     uniques: list[CompiledUnique] = field(default_factory=list)
     contiguous: list[CompiledContiguous] = field(default_factory=list)
-    #: columns whose exact value_counts the groupBy pass must produce
-    value_counts_columns: list[str] = field(default_factory=list)
+
+    def add(self, compiled: Compiled) -> None:
+        """File a check under the pass that counts it."""
+        if isinstance(compiled, CompiledMap):
+            if compiled.condition.requires:
+                self.dependent_maps.append(compiled)
+            elif compiled.condition.needs_window:
+                self.window_maps.append(compiled)
+            else:
+                self.maps.append(compiled)
+        elif isinstance(compiled, CompiledAgg):
+            self.aggs.append(compiled)
+        elif isinstance(compiled, CompiledUnique):
+            self.uniques.append(compiled)
+        else:
+            self.contiguous.append(compiled)
+
+    @property
+    def value_counts_columns(self) -> list[str]:
+        """The columns whose modes the value-counts pass computes, once
+        each."""
+        return list(dict.fromkeys(
+            ca.metric.modes_column for ca in self.aggs
+            if ca.metric.modes_column is not None
+        ))
 
     @property
     def checks(self) -> list:
@@ -155,12 +176,11 @@ class DomainGroup:
 
 @dataclass
 class SuitePlan:
-    groups: list[DomainGroup]
-    metas: list[CompiledMeta]
-    relationals: list[CompiledRelational]
-    queries: list[CompiledQuery]
-    #: preserves suite order for EVR output: (kind, compiled)
-    ordered: list[tuple[str, Compiled]] = field(default_factory=list)
+    groups: list[DomainGroup] = field(default_factory=list)
+    #: checks outside the domain groups, each run on its own
+    sides: list[CompiledSide] = field(default_factory=list)
+    #: every compiled check, in suite order (for EVR output)
+    ordered: list[Compiled] = field(default_factory=list)
     #: configs that failed to compile (bad kwargs / unknown type) — the
     #: runner turns these into exception EVRs under catch_exceptions
     broken: list[tuple[Any, Exception]] = field(default_factory=list)
@@ -197,65 +217,20 @@ def plan_suite(suite: ExpectationSuite) -> SuitePlan:
 
 
 def _plan_suite_uncached(suite: ExpectationSuite) -> SuitePlan:
+    plan = SuitePlan()
     groups: dict[Any, DomainGroup] = {}
-    metas: list[CompiledMeta] = []
-    relationals: list[CompiledRelational] = []
-    queries: list[CompiledQuery] = []
-    ordered: list[tuple[str, Compiled]] = []
-
-    def group_for(row_condition: str | None) -> DomainGroup:
-        if row_condition not in groups:
-            groups[row_condition] = DomainGroup(row_condition=row_condition)
-        return groups[row_condition]
-
-    broken: list[tuple[Any, Exception]] = []
     for cfg in suite:
         try:
             compiled = compile_expectation(cfg)
         except Exception as exc:  # noqa: BLE001 — per-expectation isolation
-            broken.append((cfg, exc))
+            plan.broken.append((cfg, exc))
             continue
-        if isinstance(compiled, CompiledMap):
-            g = group_for(cfg.row_condition)
-            if compiled.condition.requires:
-                g.dependent_maps.append(compiled)
-                ordered.append(("map_dependent", compiled))
-            elif compiled.condition.needs_window:
-                g.window_maps.append(compiled)
-                ordered.append(("map_window", compiled))
-            else:
-                g.maps.append(compiled)
-                ordered.append(("map", compiled))
-        elif isinstance(compiled, CompiledAgg):
-            g = group_for(cfg.row_condition)
-            vc_col = getattr(compiled.metric, "groupby_value_counts", None)
-            if vc_col is not None and vc_col not in g.value_counts_columns:
-                g.value_counts_columns.append(vc_col)
-            g.aggs.append(compiled)
-            ordered.append(("agg", compiled))
-        elif isinstance(compiled, CompiledUnique):
-            group_for(cfg.row_condition).uniques.append(compiled)
-            ordered.append(("unique", compiled))
-        elif isinstance(compiled, CompiledContiguous):
-            group_for(cfg.row_condition).contiguous.append(compiled)
-            ordered.append(("contiguous", compiled))
-        elif isinstance(compiled, CompiledMeta):
-            metas.append(compiled)
-            ordered.append(("meta", compiled))
-        elif isinstance(compiled, CompiledRelational):
-            relationals.append(compiled)
-            ordered.append(("relational", compiled))
-        elif isinstance(compiled, CompiledQuery):
-            queries.append(compiled)
-            ordered.append(("query", compiled))
-        else:  # pragma: no cover
-            raise TypeError(f"unhandled compiled kind {type(compiled)}")
-
-    return SuitePlan(
-        groups=list(groups.values()),
-        metas=metas,
-        relationals=relationals,
-        queries=queries,
-        ordered=ordered,
-        broken=broken,
-    )
+        if isinstance(compiled, CompiledSide):
+            plan.sides.append(compiled)
+        else:
+            groups.setdefault(
+                cfg.row_condition, DomainGroup(cfg.row_condition)
+            ).add(compiled)
+        plan.ordered.append(compiled)
+    plan.groups = list(groups.values())
+    return plan

@@ -15,16 +15,17 @@ Compiled kinds:
   two-level aggregation at scale — never the reference's full-table window).
 - :class:`CompiledContiguous` — per-group dense-sequence checks (a keyed
   aggregation counted over groups).
-- :class:`CompiledMeta` — schema-only checks, zero scans.
-- :class:`CompiledRelational` — cross-table checks (left-anti referential
-  joins, row-count comparisons).
-- :class:`CompiledQuery` — arbitrary Spark-SQL QueryExpectation.
+- :class:`CompiledSide` — every other check, run on its own over its
+  ``row_condition``'s batch: schema checks (no scan), Cramér's phi, the
+  cross-table checks (referential, row count vs another table,
+  contamination, repetition) and arbitrary Spark-SQL QueryExpectations.
 """
 
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass, field
+import uuid
+from dataclasses import dataclass
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame, functions as F
@@ -33,7 +34,7 @@ from great_expectations_spark.functions import aggregates as A
 from great_expectations_spark.functions import conditions as C
 from great_expectations_spark.functions.aggregates import AggMetric
 from great_expectations_spark.functions.conditions import MapCondition
-from great_expectations_spark.result import parse_result_format
+from great_expectations_spark.result import parse_result_format, row_value
 from great_expectations_spark.suite import ExpectationConfiguration
 
 
@@ -75,29 +76,21 @@ class CompiledContiguous:
 
 
 @dataclass
-class CompiledMeta:
-    cfg: ExpectationConfiguration
-    run: Callable[[DataFrame], tuple[bool, dict[str, Any]]]
+class CompiledSide:
+    """A check outside the domain groups' counter passes. Both callables
+    take the check's batch (its ``row_condition`` applied) and the named
+    tables."""
 
-
-@dataclass
-class CompiledRelational:
     cfg: ExpectationConfiguration
+    #: (batch, tables) -> (success, result)
     run: Callable[[DataFrame, dict[str, DataFrame]], tuple[bool, dict[str, Any]]]
-    #: referential map checks also emit violation rows via this builder
+    #: (batch, tables) -> the batch's violating rows, with an
+    #: ``observed_value`` string column
     violations: Callable[[DataFrame, dict[str, DataFrame]], DataFrame] | None = None
 
 
-@dataclass
-class CompiledQuery:
-    cfg: ExpectationConfiguration
-    query: str
-    result_format: dict[str, Any] = field(default_factory=lambda: parse_result_format(None))
-
-
 Compiled = (
-    CompiledMap | CompiledAgg | CompiledUnique | CompiledContiguous | CompiledMeta
-    | CompiledRelational | CompiledQuery
+    CompiledMap | CompiledAgg | CompiledUnique | CompiledContiguous | CompiledSide
 )
 
 _REGISTRY: dict[str, Callable[[ExpectationConfiguration], Compiled]] = {}
@@ -473,7 +466,7 @@ _p_value_compiler(
 
 
 @register("expect_column_pair_cramers_phi_value_to_be_less_than")
-def _compile_cramers_phi(cfg: ExpectationConfiguration) -> CompiledMeta:
+def _compile_cramers_phi(cfg: ExpectationConfiguration) -> CompiledSide:
     """Cramér's phi (φ_c) association between two categorical columns.
 
     Reference: ``expect_column_pair_cramers_phi_value_to_be_less_than``
@@ -489,7 +482,7 @@ def _compile_cramers_phi(cfg: ExpectationConfiguration) -> CompiledMeta:
     threshold = float(cfg.kwargs.get("threshold", 0.1))
     max_cells = int(cfg.kwargs.get("max_contingency_cells", 100_000))
 
-    def run(df: DataFrame) -> tuple[bool, dict[str, Any]]:
+    def run(df: DataFrame, tables: dict[str, DataFrame]) -> tuple[bool, dict[str, Any]]:
         import numpy as np
 
         cells = (
@@ -529,29 +522,19 @@ def _compile_cramers_phi(cfg: ExpectationConfiguration) -> CompiledMeta:
             },
         }
 
-    return CompiledMeta(cfg=cfg, run=run)
+    return CompiledSide(cfg=cfg, run=run)
 
 
 @register("expect_column_most_common_value_to_be_in_set")
 def _compile_most_common(cfg: ExpectationConfiguration) -> CompiledAgg:
-    """Most-common value(s) — ties produce a list. Computed via a bundled
-    ``max_by`` pair over the value-counts map … kept simple and exact with a
-    small groupBy-free approach: collect value counts as a map aggregate.
-
-    Implementation: ``F.mode`` gives one mode; tie detection requires counts,
-    so we aggregate count-per-value only for the (small) candidate set via
-    two bundled exprs: the max frequency and the set of values attaining it,
-    using ``collect_list`` over a window-free trick is not expressible as a
-    pure scalar agg — so this metric uses the histogram-style approach:
-    exact value_counts via groupBy happens in the planner's groupBy pass.
-
-    Here we mark it as requiring the groupBy pass by storing a sentinel.
-    """
+    """Most-common value(s), ties as a list. The modes need the column's
+    value counts, which no scalar aggregate gives: the metric names its
+    column in ``modes_column``, and its domain group's value-counts pass
+    (``runner.run_passes``) computes them under ``most_common__<column>``."""
     column = cfg.kwargs["column"]
     value_set = set(cfg.kwargs["value_set"])
     ties_okay = bool(cfg.kwargs.get("ties_okay", False))
-
-    sentinel_alias = A.safe_alias("most_common", column)
+    alias = A.safe_alias("most_common", column)
 
     def validate(observed: Any) -> bool:
         modes = observed or []
@@ -559,11 +542,8 @@ def _compile_most_common(cfg: ExpectationConfiguration) -> CompiledAgg:
             return set(modes) <= value_set
         return len(modes) == 1 and modes[0] in value_set
 
-    metric = AggMetric(
-        exprs={}, finalize=lambda v, a=sentinel_alias: v.get(a)
-    )
-    metric.groupby_value_counts = column  # planner hook (see plans/planner.py)
-    metric.sentinel_alias = sentinel_alias
+    metric = AggMetric(exprs={}, finalize=lambda v: v.get(alias),
+                       modes_column=column)
     return CompiledAgg(cfg=cfg, metric=metric, validate=validate)
 
 
@@ -574,8 +554,8 @@ def _compile_most_common(cfg: ExpectationConfiguration) -> CompiledAgg:
 def _meta(name: str):
     def deco(fn: Callable[[DataFrame, dict[str, Any]], tuple[bool, dict[str, Any]]]):
         @register(name)
-        def compiler(cfg: ExpectationConfiguration) -> CompiledMeta:
-            return CompiledMeta(cfg=cfg, run=lambda df: fn(df, cfg.kwargs))
+        def compiler(cfg: ExpectationConfiguration) -> CompiledSide:
+            return CompiledSide(cfg=cfg, run=lambda df, tables: fn(df, cfg.kwargs))
 
         return fn
 
@@ -668,17 +648,17 @@ def _in_type_list(df: DataFrame, kw: dict[str, Any]):
 # ---------------------------------------------------------------------------
 
 @register("expect_column_values_to_exist_in")
-def _compile_exist_in(cfg: ExpectationConfiguration) -> CompiledRelational:
+def _compile_exist_in(cfg: ExpectationConfiguration) -> CompiledSide:
     """Referential-integrity check (north_star "column-pair referential
     checks"): every non-null value of `column` must exist in
-    `other_table.other_column`. Executed as a LEFT-ANTI join — by default
-    Catalyst/AQE picks broadcast when the dim fits under
-    ``autoBroadcastJoinThreshold`` (SURVEY.md §2.7). ``broadcast=True``
-    FORCES the hint (only when the caller knows the dim is small — an
-    unconditional hint OOMs executors on a large dim at scale);
-    ``broadcast=False`` forbids it (``merge`` hint → sort-merge join)."""
-    from pyspark.sql import functions as F
-
+    `other_table.other_column`. The counts are ONE left join of the batch
+    to the dim's distinct values plus one aggregate; only the violations
+    sink uses a LEFT-ANTI join. By default Catalyst/AQE broadcasts the dim
+    when it fits under ``autoBroadcastJoinThreshold`` (SURVEY.md §2.7).
+    ``broadcast=True`` FORCES the hint (only when the caller knows the dim
+    is small — an unconditional hint OOMs executors on a large dim at
+    scale); ``broadcast=False`` forbids it (``merge`` hint → sort-merge
+    join)."""
     column = cfg.kwargs["column"]
     other_table = cfg.kwargs["other_table"]
     other_column = cfg.kwargs["other_column"]
@@ -696,7 +676,7 @@ def _compile_exist_in(cfg: ExpectationConfiguration) -> CompiledRelational:
     def _viol(df: DataFrame, tables: dict[str, DataFrame]) -> DataFrame:
         return df.filter(F.col(column).isNotNull()).join(
             _dim(tables), on=column, how="left_anti"
-        )
+        ).withColumn("observed_value", F.col(column).cast("string"))
 
     def run(df: DataFrame, tables: dict[str, DataFrame]) -> tuple[bool, dict[str, Any]]:
         from great_expectations_spark.result import calc_map_success
@@ -724,11 +704,11 @@ def _compile_exist_in(cfg: ExpectationConfiguration) -> CompiledRelational:
             "unexpected_count": int(unexpected),
         }
 
-    return CompiledRelational(cfg=cfg, run=run, violations=_viol)
+    return CompiledSide(cfg=cfg, run=run, violations=_viol)
 
 
 @register("expect_table_row_count_to_equal_other_table")
-def _compile_rc_other(cfg: ExpectationConfiguration) -> CompiledRelational:
+def _compile_rc_other(cfg: ExpectationConfiguration) -> CompiledSide:
     other_table = cfg.kwargs["other_table"]
 
     def run(df: DataFrame, tables: dict[str, DataFrame]) -> tuple[bool, dict[str, Any]]:
@@ -736,7 +716,7 @@ def _compile_rc_other(cfg: ExpectationConfiguration) -> CompiledRelational:
         b = tables[other_table].count()
         return a == b, {"observed_value": {"self": a, "other": b}}
 
-    return CompiledRelational(cfg=cfg, run=run)
+    return CompiledSide(cfg=cfg, run=run)
 
 
 @register("expect_column_values_to_be_contiguous")
@@ -769,7 +749,7 @@ def _compile_contiguous(cfg: ExpectationConfiguration) -> CompiledContiguous:
 
 
 @register("expect_table_benchmark_contamination_rate_to_be_less_than")
-def _compile_contamination(cfg: ExpectationConfiguration) -> CompiledRelational:
+def _compile_contamination(cfg: ExpectationConfiguration) -> CompiledSide:
     """Training-data gate (extension; no upstream counterpart): the
     fraction of documents sharing ≥ ``min_hits`` word ``n``-grams with
     ``benchmark_table`` must stay under ``max_rate`` — the GPT-3-style
@@ -800,7 +780,7 @@ def _compile_contamination(cfg: ExpectationConfiguration) -> CompiledRelational:
         return df.join(
             _flagged(df, tables).select(id_column),
             on=id_column, how="left_semi",
-        )
+        ).withColumn("observed_value", F.col(column).cast("string"))
 
     def run(df: DataFrame, tables: dict[str, DataFrame]) -> tuple[bool, dict[str, Any]]:
         element_count = df.filter(F.col(column).isNotNull()).count()
@@ -813,11 +793,11 @@ def _compile_contamination(cfg: ExpectationConfiguration) -> CompiledRelational:
             "observed_value": rate,
         }
 
-    return CompiledRelational(cfg=cfg, run=run, violations=_viol)
+    return CompiledSide(cfg=cfg, run=run, violations=_viol)
 
 
 @register("expect_column_repetition_fractions_to_be_less_than")
-def _compile_repetition(cfg: ExpectationConfiguration) -> CompiledRelational:
+def _compile_repetition(cfg: ExpectationConfiguration) -> CompiledSide:
     """Training-data gate (extension): per-document Gopher-style repetition
     fractions (:func:`~great_expectations_spark.operators.textstats.repetition_profile`)
     must stay under the given thresholds for (``mostly`` of) the documents.
@@ -868,7 +848,8 @@ def _compile_repetition(cfg: ExpectationConfiguration) -> CompiledRelational:
 
     def _viol(df: DataFrame, tables: dict[str, DataFrame]) -> DataFrame:
         bad = _profile(df).filter(_violates()).select(id_column)
-        return df.join(bad, on=id_column, how="left_semi")
+        return df.join(bad, on=id_column, how="left_semi").withColumn(
+            "observed_value", F.col(column).cast("string"))
 
     def run(df: DataFrame, tables: dict[str, DataFrame]) -> tuple[bool, dict[str, Any]]:
         counts = _profile(df).agg(
@@ -885,7 +866,7 @@ def _compile_repetition(cfg: ExpectationConfiguration) -> CompiledRelational:
             ),
         }
 
-    return CompiledRelational(cfg=cfg, run=run, violations=_viol)
+    return CompiledSide(cfg=cfg, run=run, violations=_viol)
 
 
 # ---------------------------------------------------------------------------
@@ -893,14 +874,37 @@ def _compile_repetition(cfg: ExpectationConfiguration) -> CompiledRelational:
 # ---------------------------------------------------------------------------
 
 @register("expect_query_to_return_no_unexpected_rows")
-def _compile_query(cfg: ExpectationConfiguration) -> CompiledQuery:
+def _compile_query(cfg: ExpectationConfiguration) -> CompiledSide:
     """Arbitrary SQL over the batch (the reference's ``{active_batch}``
     placeholder names a temp view of the batch, registered per run).
     Success ⇔
     the query returns zero rows (GX 1.0 UnexpectedRowsExpectation
     semantics)."""
-    return CompiledQuery(
-        cfg=cfg,
-        query=cfg.kwargs["query"],
-        result_format=parse_result_format(cfg.kwargs.get("result_format")),
-    )
+    query = cfg.kwargs["query"]
+    cap = parse_result_format(cfg.kwargs.get("result_format"))[
+        "partial_unexpected_count"]
+
+    def run(df: DataFrame, tables: dict[str, DataFrame]) -> tuple[bool, dict[str, Any]]:
+        # a view name of this call's own: concurrent runs (checkpoint
+        # partitions) and the user's session views never see the batch
+        view = f"active_batch_{uuid.uuid4().hex}"
+        df.createTempView(view)
+        try:
+            res = df.sparkSession.sql(query.replace("{active_batch}", view))
+            # one bounded collect decides success AND yields the sample; the
+            # arbitrary user SQL only re-executes for an exact count when it
+            # returned MORE than the partial cap (the passing case — zero
+            # rows — costs exactly one job)
+            head = res.limit(cap + 1).collect()
+            n = res.count() if len(head) > cap else len(head)
+        finally:
+            df.sparkSession.catalog.dropTempView(view)
+        return n == 0, {
+            "observed_value": int(n),
+            "unexpected_rows": [
+                {k: row_value(v) for k, v in r.asDict().items()}
+                for r in head[:cap]
+            ],
+        }
+
+    return CompiledSide(cfg=cfg, run=run)

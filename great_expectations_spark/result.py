@@ -55,6 +55,15 @@ def parse_result_format(result_format: str | dict[str, Any] | None) -> dict[str,
     return rf
 
 
+def row_value(v: Any) -> Any:
+    """Convert collected Spark values (Row/struct) to plain Python."""
+    if hasattr(v, "asDict"):
+        return {k: row_value(x) for k, x in v.asDict().items()}
+    if isinstance(v, list):
+        return [row_value(x) for x in v]
+    return v
+
+
 def _json_safe(v: Any) -> Any:
     """JSON-safe conversion mirroring the reference's
     ``convert_to_json_serializable`` for the cases we hit: ±inf and NaN

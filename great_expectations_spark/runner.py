@@ -28,10 +28,11 @@ Both executors turn one key's pass values into a check's verdict through
 :func:`violation_frames`; ``SuiteRunner`` adds only what a check's
 ``result_format`` asks for.
 
-Independent passes, relational/query checks and EVR finishing jobs run as
-concurrent Spark jobs on one :class:`SparkThreadPool` per call, so the
-scheduler interleaves their stages. Relational and query checks read the
-batch filtered by their own ``row_condition``, as every domain group does.
+Independent passes, side checks (every check outside the domain groups:
+schema, Cramér's phi, cross-table and query checks) and EVR finishing jobs
+run as concurrent Spark jobs on one :class:`SparkThreadPool` per call, so
+the scheduler interleaves their stages. Every side check reads the batch
+filtered by its own ``row_condition``, as every domain group does.
 
 Persistence: the reference defaults to ``SparkDFExecutionEngine(
 persist=True)`` — caching the batch across metric waves. The engine never
@@ -49,7 +50,6 @@ EVRs: persist or checkpoint such an input before validating it.
 from __future__ import annotations
 
 import traceback
-import uuid
 from concurrent.futures import ThreadPoolExecutor, wait
 from dataclasses import dataclass
 from functools import reduce
@@ -70,8 +70,7 @@ from great_expectations_spark.registry import (
     CompiledAgg,
     CompiledContiguous,
     CompiledMap,
-    CompiledQuery,
-    CompiledRelational,
+    CompiledSide,
     CompiledUnique,
 )
 from great_expectations_spark.result import (
@@ -80,6 +79,7 @@ from great_expectations_spark.result import (
     build_statistics,
     calc_map_success,
     format_map_result,
+    row_value,
 )
 from great_expectations_spark.skew import value_counts as skew_value_counts
 from great_expectations_spark.suite import ExpectationSuite
@@ -175,15 +175,6 @@ def _exception_evr(cfg, exc: Exception) -> ExpectationValidationResult:
             "exception_traceback": "".join(traceback.format_exception(exc)),
         },
     )
-
-
-def _row_value(v: Any) -> Any:
-    """Convert collected Spark values (Row/struct) to plain Python."""
-    if hasattr(v, "asDict"):
-        return {k: _row_value(x) for k, x in v.asDict().items()}
-    if isinstance(v, list):
-        return [_row_value(x) for x in v]
-    return v
 
 
 class SparkThreadPool(ThreadPoolExecutor):
@@ -401,7 +392,7 @@ def run_passes(
                 d = r.asDict()
                 key = tuple(d.pop(k) for k in keys)
                 passes.values.setdefault(key, {}).update(
-                    {k: _row_value(v) for k, v in d.items()}
+                    {k: row_value(v) for k, v in d.items()}
                 )
     except Exception:
         passes.release()
@@ -489,7 +480,8 @@ class SuiteRunner:
 
     Parameters
     ----------
-    spark: session used for query expectations / sink writes.
+    spark: session whose local properties (job group) the pass pool
+        carries to its threads.
     tables: named DataFrames referenced by relational expectations
         (referential integrity dims, row-count comparisons).
     unexpected_index_column_names: default identity columns for
@@ -555,22 +547,12 @@ class SuiteRunner:
         # (its last reader), also when a pass or the write raises
         try:
             with SparkThreadPool(self.spark) as pool:
-                # relational / query expectations are independent of the
-                # domain groups: their joins run on the pool alongside the
-                # groups' passes, each over its own row_condition's batch
+                # side checks are independent of the domain groups: they
+                # run on the pool alongside the groups' passes
                 fut_side = {
-                    cr.cfg.id: pool.submit(
-                        self._run_relational, cr,
-                        domain(df, cr.cfg.row_condition), sinks,
-                    )
-                    for cr in plan.relationals
+                    c.cfg.id: pool.submit(self._run_side, c, df, sinks)
+                    for c in plan.sides
                 }
-                fut_side.update({
-                    cq.cfg.id: pool.submit(
-                        self._run_query, cq, domain(df, cq.cfg.row_condition)
-                    )
-                    for cq in plan.queries
-                })
 
                 for group in plan.groups:
                     gdf = domain(df, group.row_condition)
@@ -590,11 +572,7 @@ class SuiteRunner:
                             group, gdf, pool, results_by_id, sinks, done
                         )
 
-                for cm in plan.metas:
-                    results_by_id[cm.cfg.id] = self._guard(
-                        cm.cfg, lambda cm=cm: self._run_meta(cm, df)
-                    )
-                for c in plan.relationals + plan.queries:
+                for c in plan.sides:
                     results_by_id[c.cfg.id] = self._guard(
                         c.cfg, fut_side[c.cfg.id].result
                     )
@@ -634,18 +612,13 @@ class SuiteRunner:
     ) -> None:
         """Error path: one single-expectation group per expectation, each
         individually guarded — N small jobs instead of one poisoned bundle."""
-        for attr in ("maps", "window_maps", "dependent_maps", "aggs",
-                     "uniques", "contiguous"):
-            for member in getattr(group, attr):
-                mini = DomainGroup(group.row_condition, **{attr: [member]})
-                metric = getattr(member, "metric", None)
-                vc_col = getattr(metric, "groupby_value_counts", None)
-                if vc_col is not None:
-                    mini.value_counts_columns.append(vc_col)
-                try:
-                    self._run_group(mini, gdf, pool, out, sinks, done)
-                except Exception as exc:  # noqa: BLE001
-                    out[member.cfg.id] = _exception_evr(member.cfg, exc)
+        for member in group.checks:
+            mini = DomainGroup(group.row_condition)
+            mini.add(member)
+            try:
+                self._run_group(mini, gdf, pool, out, sinks, done)
+            except Exception as exc:  # noqa: BLE001
+                out[member.cfg.id] = _exception_evr(member.cfg, exc)
 
     def _run_group(
         self,
@@ -734,10 +707,10 @@ class SuiteRunner:
         if level != "BOOLEAN_ONLY" and unexpected_count > 0:
             flags = self._map_flags(cond, gdf, index_cols).filter(F.col("__unexpected"))
             head = flags.limit(n_partial).collect()
-            partial_list = [_row_value(r["__observed"]) for r in head]
+            partial_list = [row_value(r["__observed"]) for r in head]
             if index_cols and level in ("SUMMARY", "COMPLETE"):
                 partial_index = [
-                    {c: _row_value(r[c]) for c in index_cols if c in flags.columns}
+                    {c: row_value(r[c]) for c in index_cols if c in flags.columns}
                     for r in head
                 ]
             if level in ("SUMMARY", "COMPLETE"):
@@ -750,7 +723,7 @@ class SuiteRunner:
                     .collect()
                 )
                 partial_counts = [
-                    {"value": _row_value(r["__observed"]), "count": int(r["count"])}
+                    {"value": row_value(r["__observed"]), "count": int(r["count"])}
                     for r in counts
                 ]
             if (
@@ -765,10 +738,10 @@ class SuiteRunner:
                 # full collects — reference parity; the violations sink is
                 # the at-scale alternative (SURVEY.md §4.3)
                 rows = flags.collect()
-                unexpected_list = [_row_value(r["__observed"]) for r in rows]
+                unexpected_list = [row_value(r["__observed"]) for r in rows]
                 if index_cols:
                     unexpected_index_list = [
-                        {c: _row_value(r[c]) for c in index_cols if c in flags.columns}
+                        {c: row_value(r[c]) for c in index_cols if c in flags.columns}
                         for r in rows
                     ]
                 if rf.get("include_unexpected_rows"):
@@ -776,7 +749,7 @@ class SuiteRunner:
                     full = gdf.withColumn("__unexpected", cond.unexpected)
                     unexpected_rows = [
                         {
-                            k: _row_value(x)
+                            k: row_value(x)
                             for k, x in r.asDict().items()
                             if k != "__unexpected"
                         }
@@ -837,7 +810,7 @@ class SuiteRunner:
                 .limit(n_partial)
                 .collect()
             )
-            partial_list = [_row_value(r["v"]) for r in head]
+            partial_list = [row_value(r["v"]) for r in head]
             if rf["result_format"] in ("SUMMARY", "COMPLETE"):
                 top = (
                     dups.orderBy(F.desc("count"), *cu.key_cols)
@@ -846,9 +819,9 @@ class SuiteRunner:
                 )
                 partial_counts = [
                     {
-                        "value": _row_value(r[cu.key_cols[0]])
+                        "value": row_value(r[cu.key_cols[0]])
                         if len(cu.key_cols) == 1
-                        else {c: _row_value(r[c]) for c in cu.key_cols},
+                        else {c: row_value(r[c]) for c in cu.key_cols},
                         "count": int(r["count"]),
                     }
                     for r in top
@@ -868,58 +841,23 @@ class SuiteRunner:
             )}
         return result
 
-    # ---- meta / relational / query ------------------------------------------
-    def _run_meta(self, cm, df: DataFrame) -> ExpectationValidationResult:
-        success, result = cm.run(df)
-        return ExpectationValidationResult(
-            success=success, expectation_config=cm.cfg.to_dict(), result=result
-        )
-
-    def _run_relational(
-        self, cr: CompiledRelational, df: DataFrame, sinks: list[DataFrame]
+    # ---- side checks ------------------------------------------------------
+    def _run_side(
+        self, c: CompiledSide, df: DataFrame, sinks: list[DataFrame]
     ) -> ExpectationValidationResult:
-        success, result = cr.run(df, self.tables)
-        # like every check's, a sink frame only when some row is unexpected
-        if (self.violations_path and cr.violations is not None
+        """A side check over its ``row_condition``'s batch; like every
+        check's, its sink frame only when some row is unexpected."""
+        batch = domain(df, c.cfg.row_condition)
+        success, result = c.run(batch, self.tables)
+        if (self.violations_path and c.violations is not None
                 and result.get("unexpected_count")):
-            index_cols = self._effective_index_cols(df)
-            column = cr.cfg.kwargs.get("column")
-            viol = cr.violations(df, self.tables).select(
-                *[F.col(c) for c in index_cols],
-                F.lit(cr.cfg.expectation_type).alias("expectation"),
-                F.col(column).cast("string").alias("observed_value"),
-            )
-            sinks.append(viol)
+            sinks.append(c.violations(batch, self.tables).select(
+                *self._effective_index_cols(batch),
+                F.lit(c.cfg.expectation_type).alias("expectation"),
+                "observed_value",
+            ))
         return ExpectationValidationResult(
-            success=success, expectation_config=cr.cfg.to_dict(), result=result
-        )
-
-    def _run_query(self, cq: CompiledQuery, df: DataFrame) -> ExpectationValidationResult:
-        # a view name of this call's own: concurrent runs (checkpoint
-        # partitions) and the user's session views never see the batch
-        view = f"active_batch_{uuid.uuid4().hex}"
-        df.createTempView(view)
-        try:
-            res = self.spark.sql(cq.query.replace("{active_batch}", view))
-            # one bounded collect decides success AND yields the sample; the
-            # arbitrary user SQL only re-executes for an exact count when it
-            # returned MORE than the partial cap (the passing case — zero
-            # rows — costs exactly one job)
-            cap = cq.result_format["partial_unexpected_count"]
-            head = res.limit(cap + 1).collect()
-            n = res.count() if len(head) > cap else len(head)
-        finally:
-            self.spark.catalog.dropTempView(view)
-        head = head[:cap]
-        return ExpectationValidationResult(
-            success=n == 0,
-            expectation_config=cq.cfg.to_dict(),
-            result={
-                "observed_value": int(n),
-                "unexpected_rows": [
-                    {k: _row_value(v) for k, v in r.asDict().items()} for r in head
-                ],
-            },
+            success=success, expectation_config=c.cfg.to_dict(), result=result
         )
 
 

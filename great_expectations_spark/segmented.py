@@ -26,11 +26,12 @@ One ``row_condition`` rule covers every kind: a segment with no rows inside
 a group's ``row_condition`` gets no row for that group's expectations —
 a filtered ``SuiteRunner`` batch never sees it either.
 
-Relational kinds (``exist_in``, row count vs another table, benchmark
-contamination, repetition fractions), query and meta kinds raise a
-``ValueError`` naming the offender (``strict=False`` skips them) — their
-semantics need their own pass; run them through ``SuiteRunner`` instead.
-An expectation that does not compile raises.
+Side checks (``plan_suite``'s ``sides``: schema checks, Cramér's phi,
+``exist_in``, row count vs another table, benchmark contamination,
+repetition fractions and query checks) raise a ``ValueError`` naming the
+first of them (``strict=False`` skips them) — each runs on its own over
+its ``row_condition``'s batch, with no segment key; run them through
+``SuiteRunner`` instead. An expectation that does not compile raises.
 
 Violations sink: pass ``violations_path`` (plus
 ``unexpected_index_column_names``) to append every failing row as
@@ -118,14 +119,12 @@ def _validate_rows(
     plan = plan_suite(monotone_windows(suite, index_cols, segment_col=group_by))
     if plan.broken:
         raise plan.broken[0][1]
-    if strict:
-        for kind, compiled in plan.ordered:
-            if kind in ("meta", "relational", "query"):
-                raise ValueError(
-                    f"{compiled.cfg.expectation_type} is not segmentable "
-                    "(relational/query/meta kinds need their own pass); "
-                    "run it via SuiteRunner or pass strict=False to skip"
-                )
+    if strict and plan.sides:
+        raise ValueError(
+            f"{plan.sides[0].cfg.expectation_type} is not segmentable "
+            "(relational/query/meta kinds need their own pass); "
+            "run it via SuiteRunner or pass strict=False to skip"
+        )
 
     def capped_collect(rel: DataFrame) -> list:
         # ONE job: limit caps what ever reaches the driver, the +1 row
@@ -171,9 +170,9 @@ def _validate_rows(
             passes.release()
 
     out: list[tuple] = []
-    for (_kind, compiled), cfg in zip(plan.ordered, suite):
+    for compiled, cfg in zip(plan.ordered, suite):
         if id(compiled) not in values_of:
-            continue  # a meta/relational/query kind skipped by strict=False
+            continue  # a side check skipped by strict=False
         for (g,), vals in values_of[id(compiled)].items():
             *counters, observed = verdict(compiled, vals)
             # an aggregate's observed value as text; NULL (all-null

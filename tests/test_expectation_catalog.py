@@ -756,6 +756,44 @@ def test_cramers_phi_perfect_association_fails(spark):
     assert evr.result["observed_value"] == pytest.approx(1.0)
 
 
+def test_cramers_phi_reads_the_row_condition_batch(spark):
+    """Cramér's phi scans its row_condition's batch, like every check: the
+    conditioned check reads what the same check reads on the filtered
+    frame (here a perfect association, over 20 of the 30 rows)."""
+    rows = ([("x", "p", 1)] * 10 + [("y", "q", 1)] * 10
+            + [("x", "q", 0)] * 5 + [("y", "p", 0)] * 5)
+    frame = spark.createDataFrame(rows, "a string, b string, k int")
+    kw = dict(column_A="a", column_B="b", threshold=0.5)
+    conditioned = run_one(
+        frame, "expect_column_pair_cramers_phi_value_to_be_less_than",
+        row_condition="k = 1", **kw,
+    )
+    filtered = run_one(
+        frame.filter("k = 1"),
+        "expect_column_pair_cramers_phi_value_to_be_less_than", **kw,
+    )
+    assert filtered.result["observed_value"] == pytest.approx(1.0)
+    assert filtered.result["details"]["n"] == 20
+    assert conditioned.success is filtered.success is False
+    assert conditioned.result == filtered.result
+
+
+def test_most_common_value_survives_bundle_isolation(spark):
+    """A map check on a missing column fails the group's bundled pass; the
+    isolated re-run still computes the most-common-value check's modes."""
+    frame = spark.createDataFrame(
+        [(1,), (1,), (2,), (2,), (3,)], "v int")
+    suite = ExpectationSuite("iso")
+    suite.add("expect_column_values_to_not_be_null", column="missing")
+    suite.add("expect_column_most_common_value_to_be_in_set", column="v",
+              value_set=[1, 2], ties_okay=True)
+    broken, modes = validate(frame, suite).results
+    assert broken.exception_info["raised_exception"] is True
+    assert modes.exception_info["raised_exception"] is False
+    assert modes.success is True
+    assert modes.result["observed_value"] == [1, 2]
+
+
 def test_cramers_phi_cell_guard(spark):
     frame = spark.createDataFrame(
         [(str(i), str(i * 7)) for i in range(50)], "a string, b string"
@@ -915,6 +953,24 @@ class TestTrainingDataGates:
         bad = by_type["expect_column_repetition_fractions_to_be_less_than"]
         assert bad.success is False
         assert bad.exception_info["raised_exception"] is True
+
+    def test_repetition_sink_with_default_column(self, spark, corpus,
+                                                 tmp_path):
+        """The repetition gate's ``column`` defaults to ``text``; a failing
+        check with a sink keeps its verdict and sinks its violating docs."""
+        vp = str(tmp_path / "viol")
+        suite = ExpectationSuite("rep-sink")
+        suite.add(
+            "expect_column_repetition_fractions_to_be_less_than",
+            id_column="doc_id", max_fractions={"top_2gram_char_frac": 0.5},
+        )
+        r = SuiteRunner(spark, violations_path=vp).validate(
+            corpus, suite).results[0]
+        assert r.exception_info["raised_exception"] is False
+        assert r.success is False and r.result["unexpected_count"] == 1
+        v = spark.read.parquet(vp)
+        assert v.count() == r.result["unexpected_count"]
+        assert v.first()["observed_value"] == "x y " * 40
 
     def test_gate_violations_sink(self, spark, corpus, eval_set, tmp_path):
         vp = str(tmp_path / "viol")

@@ -44,9 +44,13 @@ def mixed(spark):
 def test_validate_jobs_land_in_callers_job_group(spark, job_ids, mixed,
                                                  tmp_path):
     """Every job of a SuiteRunner.validate run — bundled, wave-2, value
-    counts, uniqueness, window, query, partial lists and the violations
-    write — is filed under the job group set on the calling thread."""
+    counts, uniqueness, window, query and Cramér's phi side checks, partial
+    lists and the violations write — is filed under the job group set on
+    the calling thread."""
     df, suite = mixed
+    suite = ExpectationSuite("pool-side", list(suite.expectations))
+    suite.add("expect_column_pair_cramers_phi_value_to_be_less_than",
+              column_A="seg", column_B="flag")
     runner = SuiteRunner(spark, violations_path=str(tmp_path / "v"),
                          unexpected_index_column_names=["seg", "t"])
     launched, grouped = job_ids("pool-validate",
