@@ -699,7 +699,7 @@ def q_increasing_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     cond = C.increasing(
         "o_orderdate", strictly=False, partition_by="o_custkey",
         order_by="o_orderkey",
-    )
+    ).window_expr([], [])
     return _flagged_count(orders.filter(F.col("o_orderdate").isNotNull()), cond)
 
 

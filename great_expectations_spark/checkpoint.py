@@ -198,20 +198,17 @@ def suite_hash(suite: ExpectationSuite, segment_col: str | None = None) -> str:
     ).hexdigest()[:16]
 
 
-def suite_result_rows(
-    suite: ExpectationSuite, result: ExpectationSuiteValidationResult
-) -> list[tuple]:
+def suite_result_rows(result: ExpectationSuiteValidationResult) -> list[tuple]:
     """A SuiteRunner result as whole-suite rows in the segmented executor's
     row shape ``(segment=None, expectation_id, expectation_type, success,
-    element_count, missing_count, unexpected_count, observed_value)``.
-    Results come back in suite order, so each row carries the USER suite's
-    expectation id even where the runner rewrote a config."""
+    element_count, missing_count, unexpected_count, observed_value)``, each
+    carrying the id of the config its EVR echoes."""
     rows = []
-    for cfg, r in zip(suite, result.results):
-        res = r.result or {}
+    for r in result.results:
+        cfg, res = r.expectation_config, r.result or {}
         observed = res.get("observed_value")
         rows.append((
-            None, cfg.id, cfg.expectation_type, bool(r.success),
+            None, cfg["id"], cfg["expectation_type"], bool(r.success),
             int(res.get("element_count") or 0),
             int(res.get("missing_count") or 0),
             int(res.get("unexpected_count") or 0),
@@ -602,7 +599,7 @@ class Checkpoint:
             result = SuiteRunner(
                 pdf.sparkSession, violations_path=vpath, **self.runner_kwargs
             ).validate(pdf, suite)
-            rows = suite_result_rows(suite, result)
+            rows = suite_result_rows(result)
             row_segment_col = None
         elapsed = time.monotonic() - t0
 

@@ -41,8 +41,10 @@ class MapCondition:
     missing: Column
     success: Column
     observed: Column
-    #: window-backed conditions (increasing/decreasing) run in their own pass
-    needs_window: bool = False
+    #: window-backed builder (increasing/decreasing): the condition over a
+    #: run's key columns and index columns, built per run by
+    #: ``runner.run_passes`` and counted in the window pass
+    window_expr: Callable[[list[str], list[str]], "MapCondition"] | None = None
     #: scalar aggregate dependencies (alias -> agg expr); when present the
     #: condition is built in wave 2 via ``rebuild_expr(dep_columns)``
     requires: dict[str, Column] = field(default_factory=dict)
@@ -499,10 +501,15 @@ def contain_no_pii(
 
 # --- window-backed conditions ----------------------------------------------
 
+#: ``partition_by`` left out: the window keys default to the run's index
+#: columns minus the target column (an explicit ``None`` is the global window)
+_INDEX_KEYS: Any = object()
+
+
 def increasing(
     column: str,
     strictly: bool = False,
-    partition_by: str | list[str] | None = None,
+    partition_by: str | list[str] | None = _INDEX_KEYS,
     order_by: str | list[str] | None = None,
     **_: Any,
 ) -> MapCondition:
@@ -510,7 +517,8 @@ def increasing(
     ``Window.orderBy(monotonically_increasing_id())`` (shuffles to ONE
     partition; non-scalable). Ours: per-key windows when ``partition_by``
     is given (the canonical transcripts invariant is turn_idx increasing per
-    conv_id), global window otherwise for reference parity on small data.
+    conv_id) or left out (the run's index columns), the global window for
+    ``partition_by=None`` (reference parity on small data).
     """
     return _monotone(column, strictly, partition_by, order_by, decreasing=False)
 
@@ -518,7 +526,7 @@ def increasing(
 def decreasing(
     column: str,
     strictly: bool = False,
-    partition_by: str | list[str] | None = None,
+    partition_by: str | list[str] | None = _INDEX_KEYS,
     order_by: str | list[str] | None = None,
     **_: Any,
 ) -> MapCondition:
@@ -528,46 +536,56 @@ def decreasing(
 def _monotone(
     column: str,
     strictly: bool,
-    partition_by: str | list[str] | None,
+    partition_by: Any,
     order_by: str | list[str] | None,
     decreasing: bool,
 ) -> MapCondition:
+    """The window is built per run by ``window_expr(keys, index_cols)``
+    over ``[*keys, *partition_by]``: the executor's keys (the segment for
+    ``validate_by_group``) go in front, so lag never crosses a segment. An
+    absent ``partition_by`` defaults to ``index_cols`` minus the target
+    column (windowing turn_idx BY turn_idx would be vacuous): a suite that
+    declares identity columns has named its natural window key, so the
+    scale-hazardous GLOBAL window is opt-in — ``partition_by=None``."""
     from pyspark.sql import Window
 
     c = _col(column)
-    if partition_by:
-        keys = [partition_by] if isinstance(partition_by, str) else list(partition_by)
-        w = Window.partitionBy(*keys)
-    else:
-        import warnings
+    # multi-column order_by is the determinism lever when the leading sort
+    # key has duplicates: (key, value) ordering makes the value SEQUENCE
+    # unique even when key ties would let the engine pick a tie order
+    obs = [order_by] if isinstance(order_by, str) else list(order_by or [])
 
-        warnings.warn(
-            f"increasing/decreasing on {column!r} without partition_by uses a "
-            "GLOBAL window: Spark shuffles the whole batch into one task. "
-            "Fine for small batches / reference parity; at scale pass "
-            "partition_by (e.g. partition_by='conv_id') so the window is "
-            "per-key.",
-            stacklevel=3,
-        )
-        w = Window.partitionBy()
-    if order_by:
-        # multi-column order_by is the determinism lever when the leading
-        # sort key has duplicates: (key, value) ordering makes the value
-        # SEQUENCE unique even when key ties would otherwise let the
-        # engine pick an arbitrary (run-varying) tie order
-        obs = [order_by] if isinstance(order_by, str) else list(order_by)
-        w = w.orderBy(*obs)
-    else:
-        w = w.orderBy(F.monotonically_increasing_id())
-    prev = F.lag(c).over(w)
-    if decreasing:
-        cmp = (c < prev) if strictly else (c <= prev)
-    else:
-        cmp = (c > prev) if strictly else (c >= prev)
-    success = F.when(prev.isNull(), F.lit(True)).otherwise(cmp)
-    return MapCondition(
-        [column], _nonnull_domain(column), success, c, needs_window=True
-    )
+    def window_expr(keys: list[str], index_cols: list[str]) -> MapCondition:
+        if partition_by is _INDEX_KEYS:
+            by = [k for k in index_cols if k != column]
+        elif isinstance(partition_by, str):
+            by = [partition_by]
+        else:
+            by = list(partition_by or [])
+        if not keys and not by:
+            import warnings
+
+            warnings.warn(
+                f"increasing/decreasing on {column!r} without partition_by "
+                "uses a GLOBAL window: Spark shuffles the whole batch into "
+                "one task. Fine for small batches / reference parity; at "
+                "scale pass partition_by (e.g. partition_by='conv_id') so "
+                "the window is per-key.",
+                stacklevel=3,
+            )
+        w = Window.partitionBy(*keys, *by).orderBy(
+            *(obs or [F.monotonically_increasing_id()]))
+        prev = F.lag(c).over(w)
+        if decreasing:
+            cmp = (c < prev) if strictly else (c <= prev)
+        else:
+            cmp = (c > prev) if strictly else (c >= prev)
+        success = F.when(prev.isNull(), F.lit(True)).otherwise(cmp)
+        return MapCondition([column], _nonnull_domain(column), success, c)
+
+    # success is a placeholder until built over the run's keys
+    return MapCondition([column], _nonnull_domain(column), F.lit(True), c,
+                        window_expr=window_expr)
 
 
 # --- aggregate-dependent conditions ----------------------------------------

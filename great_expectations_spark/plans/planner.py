@@ -16,7 +16,9 @@ whole-table run, the segment for ``validate_by_group``):
   deterministic alias), KL histogram buckets, and wave-2 dependencies. No
   column cohorts: one scan reads the union of the group's columns.
 - **window** — map conditions that need a window (increasing/decreasing):
-  flags projected then counted in one pass.
+  each built per run over the executor's keys in front of its own
+  ``partition_by`` (absent: the run's index columns), flags projected then
+  counted in one pass.
 - **wave 2** — aggregate-dependent map counters (z-score), rebuilt through
   ``rebuild_expr`` over the wave-1 values.
 - **value counts / uniqueness / contiguity** — one pass per value-counts
@@ -28,6 +30,11 @@ whole-table run, the segment for ``validate_by_group``):
 
 Metric dedup: identical aggregate exprs requested by different expectations
 share one alias → computed once (reference: ``Validator._metrics`` cache).
+
+Every executor plans the caller's suite as written: what differs between
+runs (the executor's keys, its index columns) arrives at run time, so the
+plan cache holds one plan per suite and every result carries the caller's
+expectation ids.
 """
 
 from __future__ import annotations
@@ -46,66 +53,7 @@ from great_expectations_spark.registry import (
     CompiledUnique,
     compile_expectation,
 )
-from great_expectations_spark.suite import ExpectationConfiguration, ExpectationSuite
-
-_MONOTONE_TYPES = frozenset(
-    {
-        "expect_column_values_to_be_increasing",
-        "expect_column_values_to_be_decreasing",
-    }
-)
-
-
-def monotone_windows(
-    suite: ExpectationSuite,
-    index_cols: list[str] | None,
-    segment_col: str | None = None,
-) -> ExpectationSuite:
-    """The window keys increasing/decreasing checks run under, before
-    planning.
-
-    An absent ``partition_by`` defaults to ``index_cols`` minus the target
-    column: a suite that declares identity columns (e.g. ``["conv_id",
-    "turn_idx"]``) has already named its natural window key, so the
-    scale-hazardous GLOBAL window (whole batch shuffled into one task) is
-    opt-in — pass ``partition_by=None`` explicitly for reference parity.
-    (Windowing turn_idx BY turn_idx would leave one row per window and
-    make the check vacuous, hence the target column's exclusion.)
-    ``segment_col`` (the segmented executor) is PREPENDED to every monotone
-    check's keys, so lag never crosses a segment boundary: windowing the
-    frame by ``(segment, *keys)`` computes exactly what a per-segment
-    filtered run windowed by ``keys`` would, and an explicit
-    ``partition_by=None`` becomes the global window of each segment.
-
-    The rewrite keeps suite order, so results map back to the caller's
-    configs (and ids) by position; the checkpoint's ``suite_hash`` is taken
-    from the caller's suite, so its identity is unchanged."""
-    rewritten, changed = [], False
-    for cfg in suite.expectations:
-        if cfg.expectation_type in _MONOTONE_TYPES:
-            kw = cfg.kwargs
-            if "partition_by" in kw:
-                pb = kw["partition_by"]
-                keys = [pb] if isinstance(pb, str) else list(pb or [])
-            else:
-                keys = [c for c in index_cols or [] if c != kw.get("column")]
-            new_keys = None
-            if segment_col is not None:
-                new_keys = [segment_col] + [k for k in keys if k != segment_col]
-            elif "partition_by" not in kw and keys:
-                new_keys = keys
-            if new_keys is not None:
-                cfg = ExpectationConfiguration(
-                    expectation_type=cfg.expectation_type,
-                    kwargs={**kw, "partition_by": new_keys},
-                    meta=cfg.meta,
-                )
-                changed = True
-        rewritten.append(cfg)
-    if not changed:
-        return suite
-    return ExpectationSuite(suite.name, rewritten, suite.meta)
-
+from great_expectations_spark.suite import ExpectationSuite
 
 @dataclass
 class DomainGroup:
@@ -124,7 +72,7 @@ class DomainGroup:
         if isinstance(compiled, CompiledMap):
             if compiled.condition.requires:
                 self.dependent_maps.append(compiled)
-            elif compiled.condition.needs_window:
+            elif compiled.condition.window_expr is not None:
                 self.window_maps.append(compiled)
             else:
                 self.maps.append(compiled)

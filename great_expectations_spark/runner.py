@@ -56,16 +56,13 @@ from functools import reduce
 from typing import Any, Callable, NamedTuple
 
 from pyspark import inheritable_thread_target
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from great_expectations_spark.functions.aggregates import safe_alias
 from great_expectations_spark.functions.conditions import MapCondition
-from great_expectations_spark.plans.planner import (
-    DomainGroup,
-    monotone_windows,
-    plan_suite,
-)
+from great_expectations_spark.plans.planner import DomainGroup, plan_suite
 from great_expectations_spark.registry import (
     CompiledAgg,
     CompiledContiguous,
@@ -234,11 +231,14 @@ def run_passes(
     keys: list[str],
     pool: ThreadPoolExecutor,
     collect: Callable[[DataFrame], list] = DataFrame.collect,
+    index_cols: list[str] | None = None,
 ) -> GroupPasses:
     """One domain group's counter passes over ``gdf``, with the ``keys``
     columns in front of every pass: ``[]`` for the whole table (one row
-    per pass), ``[segment]`` for validate_by_group. Values come back under
-    the runner's aliases (``element_count``, ``nc__<id>``, ``uc__<id>``,
+    per pass), ``[segment]`` for validate_by_group. ``index_cols`` (the
+    executor's unexpected_index_column_names) are the window key of an
+    increasing/decreasing check that leaves ``partition_by`` out. Values
+    come back under the runner's aliases (``element_count``, ``nc__<id>``, ``uc__<id>``,
     ``dk__<id>`` duplicate-key counts, ``ec__<id>`` group counts, metric
     aliases). Independent passes run concurrently on ``pool``; every result
     goes through ``collect`` (validate_by_group's max_groups guard).
@@ -256,15 +256,18 @@ def run_passes(
       ``(*keys, *group_by)``, then per key ``ec__`` (groups holding a
       non-null value) and ``uc__`` (broken groups) — it counts groups, not
       rows, so under its own aliases, and every key of ``gdf`` gets a row;
-    - window: one pass counting ``element_count``, ``nc__`` and ``uc__``
-      of every window-backed map.
+    - window: every window-backed map's condition built once over
+      ``[*keys, *partition_by]``, then one pass counting ``element_count``,
+      ``nc__`` and ``uc__`` of them all.
 
     The uniqueness and window passes count ``element_count`` themselves, so
     a group without a bundled pass still reports it for every key."""
     by = [F.col(k) for k in keys]
     conds: dict[str, tuple[MapCondition, DataFrame]] = {
-        cm.cfg.id: (cm.condition, gdf) for cm in group.maps + group.window_maps
+        cm.cfg.id: (cm.condition, gdf) for cm in group.maps
     }
+    for cm in group.window_maps:
+        conds[cm.cfg.id] = (cm.condition.window_expr(keys, index_cols or []), gdf)
     bad_keys: dict[str, DataFrame] = {}
     persisted: list[DataFrame] = []
 
@@ -367,8 +370,9 @@ def run_passes(
     def window() -> list:
         flags: dict[str, F.Column] = {}
         for cm in group.window_maps:
-            flags[f"nc__{cm.cfg.id}"] = cm.condition.missing.cast("int")
-            flags[f"uc__{cm.cfg.id}"] = cm.condition.unexpected.cast("int")
+            cond = conds[cm.cfg.id][0]
+            flags[f"nc__{cm.cfg.id}"] = cond.missing.cast("int")
+            flags[f"uc__{cm.cfg.id}"] = cond.unexpected.cast("int")
         return collect(
             gdf.select(*by, *[e.alias(a) for a, e in flags.items()])
             .groupBy(*by)
@@ -532,7 +536,6 @@ class SuiteRunner:
             from great_expectations_spark.suite import bind_evaluation_parameters
 
             suite = bind_evaluation_parameters(suite, evaluation_parameters)
-        suite = monotone_windows(suite, self.index_cols)
         plan = plan_suite(suite)
         results_by_id: dict[str, ExpectationValidationResult] = {}
         sinks: list[DataFrame] = []
@@ -555,7 +558,16 @@ class SuiteRunner:
                 }
 
                 for group in plan.groups:
-                    gdf = domain(df, group.row_condition)
+                    try:
+                        # a row_condition that does not resolve fails the
+                        # group's checks: there is no bundle to isolate
+                        gdf = domain(df, group.row_condition)
+                    except AnalysisException as exc:
+                        if not self.catch_exceptions:
+                            raise
+                        for c in group.checks:
+                            results_by_id[c.cfg.id] = _exception_evr(c.cfg, exc)
+                        continue
                     try:
                         self._run_group(
                             group, gdf, pool, results_by_id, sinks, done
@@ -634,7 +646,7 @@ class SuiteRunner:
         when a check has unexpected rows — independent per check, so it goes
         through the pool as well. The passes go on ``done``, for release
         after the violations write."""
-        passes = run_passes(group, gdf, [], pool)
+        passes = run_passes(group, gdf, [], pool, index_cols=self.index_cols)
         done.append(passes)
         if self.violations_path:
             sinks += violation_frames(

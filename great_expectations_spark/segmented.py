@@ -14,9 +14,10 @@ runner passes no key at all — so a 10,000-segment quality report costs the
 same passes as a whole-table run: the bundled pass, z-score's wave 2 over
 the per-segment wave-1 stats, value counts, uniqueness, contiguity (the
 per-group stats keyed by ``(segment, *group_by)``) and the window pass
-(increasing/decreasing windowed by ``(segment, *partition_by)`` through the
-runner's :func:`~great_expectations_spark.plans.planner.monotone_windows`
-rewrite, so lag never crosses a segment boundary). Finishing lives in
+(increasing/decreasing windowed by ``(segment, *partition_by)``, an absent
+``partition_by`` taken from ``unexpected_index_column_names`` as the runner
+takes it, so lag never crosses a segment boundary). The plan is the
+caller's suite as written, the one ``SuiteRunner`` runs. Finishing lives in
 :func:`~great_expectations_spark.runner.verdict`, the function that gives
 ``SuiteRunner`` its counters: each segment's row is that verdict over the
 segment's values, so an aggregate's ``element_count`` is its domain's row
@@ -31,7 +32,10 @@ Side checks (``plan_suite``'s ``sides``: schema checks, Cramér's phi,
 repetition fractions and query checks) raise a ``ValueError`` naming the
 first of them (``strict=False`` skips them) — each runs on its own over
 its ``row_condition``'s batch, with no segment key; run them through
-``SuiteRunner`` instead. An expectation that does not compile raises.
+``SuiteRunner`` instead. An expectation that does not compile raises, and
+so does a ``row_condition`` that does not resolve (where ``SuiteRunner``
+gives that group's checks exception EVRs): a per-segment report has no
+exception column.
 
 Violations sink: pass ``violations_path`` (plus
 ``unexpected_index_column_names``) to append every failing row as
@@ -53,7 +57,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, functions as F
 
-from great_expectations_spark.plans.planner import monotone_windows, plan_suite
+from great_expectations_spark.plans.planner import plan_suite
 from great_expectations_spark.runner import (
     GroupPasses,
     SparkThreadPool,
@@ -109,14 +113,12 @@ def _validate_rows(
     unexpected_index_column_names: list[str] | None,
 ) -> list[tuple]:
     """validate_by_group's engine, returning the driver-local rows in suite
-    order (one per expectation and segment). The plan is built from the
-    window-rewritten suite, whose configs (and ids) differ from the
-    caller's; every row carries the caller's id, mapped back by suite
-    position."""
+    order (one per expectation and segment), each carrying its config's
+    id. Every pass runs keyed by the segment, window passes included."""
     index_cols = [
         c for c in (unexpected_index_column_names or []) if c in df.columns
     ]
-    plan = plan_suite(monotone_windows(suite, index_cols, segment_col=group_by))
+    plan = plan_suite(suite)
     if plan.broken:
         raise plan.broken[0][1]
     if strict and plan.sides:
@@ -152,7 +154,8 @@ def _validate_rows(
         with SparkThreadPool(df.sparkSession) as pool:
             for group in plan.groups:
                 gdf = domain(keyed, group.row_condition)
-                passes = run_passes(group, gdf, ["__g"], pool, capped_collect)
+                passes = run_passes(group, gdf, ["__g"], pool, capped_collect,
+                                    index_cols)
                 done.append(passes)
                 for compiled in group.checks:
                     values_of[id(compiled)] = passes.values
@@ -170,13 +173,14 @@ def _validate_rows(
             passes.release()
 
     out: list[tuple] = []
-    for compiled, cfg in zip(plan.ordered, suite):
+    for compiled in plan.ordered:
         if id(compiled) not in values_of:
             continue  # a side check skipped by strict=False
         for (g,), vals in values_of[id(compiled)].items():
             *counters, observed = verdict(compiled, vals)
             # an aggregate's observed value as text; NULL (all-null
             # segment) stays SQL NULL, not the string 'None'
-            out.append((g, cfg.id, cfg.expectation_type, *counters,
+            out.append((g, compiled.cfg.id, compiled.cfg.expectation_type,
+                        *counters,
                         None if observed is None else str(observed)))
     return out

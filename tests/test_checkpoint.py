@@ -885,3 +885,38 @@ def test_null_partition_value_refused(spark, tmp_path, suite, tdf):
     with pytest.raises(ValueError, match="'day' holds NULLs"):
         ck.run(df, suite, run_id="r1", partition_col="day")
     assert ck.read_manifest().collect() == []
+
+
+def test_results_carry_the_suite_ids(spark, tmp_path, tdf):
+    """An increasing check with no partition_by takes its window key from
+    the index columns at run time; every executor's result echoes the
+    config as the suite holds it: SuiteRunner EVRs, validate_by_group rows
+    and the checkpoint's EVR rows in both modes."""
+    from great_expectations_spark import SuiteRunner, validate_by_group
+
+    s = ExpectationSuite("ids")
+    s.add("expect_column_values_to_be_increasing", column="turn_idx",
+          strictly=True, order_by="turn_idx")
+    s.add("expect_column_values_to_not_be_null", column="text")
+    ids = [c.id for c in s]
+    index = ["conv_id", "turn_idx"]
+    res = SuiteRunner(spark, unexpected_index_column_names=index).validate(
+        tdf, s)
+    assert [r.expectation_config for r in res.results] == [
+        c.to_dict() for c in s]
+    # per conversation the turns ascend; the global window would repeat them
+    assert res.results[0].success
+    rows = validate_by_group(tdf, s, "day",
+                             unexpected_index_column_names=index).collect()
+    assert {r["expectation_id"] for r in rows} == set(ids)
+    assert all(r["success"] for r in rows
+               if r["expectation_id"] == ids[0])
+    for segment_col in (None, "role"):
+        ck = Checkpoint(spark, manifest_path=str(tmp_path / f"m{segment_col}"),
+                        evr_path=str(tmp_path / f"e{segment_col}"),
+                        unexpected_index_column_names=index)
+        ck.run(tdf, s, run_id="r", partition_col="day",
+               segment_col=segment_col)
+        evrs = ck.committed_evrs()
+        assert len(evrs) == 3 * len(ids)
+        assert {r["expectation_id"] for r in evrs} == set(ids)

@@ -191,8 +191,8 @@ def test_monotone_defaults_window_from_index_cols(spark):
     assert evr.success is True
     # the user's suite object is untouched (checkpoint suite_hash stability)
     assert "partition_by" not in suite.expectations[0].kwargs
-    # the EVR records what actually ran
-    assert evr.expectation_config["kwargs"]["partition_by"] == ["conv_id"]
+    # the EVR echoes the config the user wrote
+    assert evr.expectation_config == suite.expectations[0].to_dict()
 
 
 # ---------------------------------------------------------------------------

@@ -397,3 +397,27 @@ def test_validate_by_group_unpersists_on_max_groups_overflow(
         validate_by_group(df, suite, "seg", max_groups=3)
     assert len(persisted) == 1          # the wave-1 grouped relation
     assert persisted[0] in unpersisted  # released despite the raise
+
+
+def test_unresolved_row_condition_fails_only_its_group(spark):
+    """A row_condition naming an unknown column fails the checks of its
+    domain group with exception EVRs; the other group still validates. The
+    segmented executor raises, as it does for a config that does not
+    compile."""
+    from great_expectations_spark import validate_by_group
+
+    df = spark.createDataFrame([(1,), (None,), (3,)], "v int")
+    suite = ExpectationSuite("bad-rc")
+    suite.add("expect_column_values_to_not_be_null", column="v")
+    suite.add("expect_column_values_to_not_be_null", column="v",
+              row_condition="nope = 1")
+    healthy, bad = SuiteRunner(spark).validate(df, suite).results
+    assert not healthy.exception_info["raised_exception"]
+    assert healthy.result["unexpected_count"] == 1
+    assert bad.exception_info["raised_exception"]
+    assert "nope" in bad.exception_info["exception_message"]
+    assert bad.expectation_config == suite.expectations[1].to_dict()
+    with pytest.raises(Exception, match="nope"):
+        SuiteRunner(spark, catch_exceptions=False).validate(df, suite)
+    with pytest.raises(Exception, match="nope"):
+        validate_by_group(df.withColumn("g", F.lit("a")), suite, "g")

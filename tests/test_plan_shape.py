@@ -272,3 +272,39 @@ def test_lm_score_broadcasts_vocab(spark):
     plan = _plan(s)
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
+
+
+def test_one_compile_per_suite(spark, monkeypatch):
+    """SuiteRunner with index columns, validate_by_group and plan_suite
+    all plan the caller's suite as written: one compile per suite, a
+    defaulted window check included."""
+    from great_expectations_spark import (
+        ExpectationSuite,
+        SuiteRunner,
+        validate_by_group,
+    )
+    from great_expectations_spark.plans import planner
+
+    compiles = []
+    uncached = planner._plan_suite_uncached
+
+    def counted(suite):
+        compiles.append(suite)
+        return uncached(suite)
+
+    monkeypatch.setattr(planner, "_PLAN_CACHE", {})
+    monkeypatch.setattr(planner, "_plan_suite_uncached", counted)
+    df = spark.createDataFrame(
+        [("a", "c1", 1), ("a", "c1", 2), ("b", "c2", 1)],
+        "g string, conv_id string, turn_idx int")
+    suite = ExpectationSuite("once")
+    suite.add("expect_column_values_to_be_increasing", column="turn_idx",
+              order_by="turn_idx")
+    suite.add("expect_column_values_to_not_be_null", column="conv_id")
+    index = ["conv_id", "turn_idx"]
+    assert SuiteRunner(spark, unexpected_index_column_names=index).validate(
+        df, suite).success
+    validate_by_group(df, suite, "g",
+                      unexpected_index_column_names=index).collect()
+    planner.plan_suite(suite)
+    assert len(compiles) == 1

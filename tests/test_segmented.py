@@ -373,8 +373,8 @@ def test_windowed_global_window_becomes_per_segment(spark):
 
 def test_windowed_default_keys_from_index_cols(spark):
     """Absent partition_by defaults from unexpected_index_column_names —
-    the same rewrite SuiteRunner applies (planner.monotone_windows) — with
-    the segment column prepended."""
+    the same default SuiteRunner's window pass takes — with the segment
+    key in front."""
     rows = [("a", "k1", 1, 1.0), ("a", "k1", 2, 2.0), ("a", "k2", 1, 5.0),
             ("a", "k2", 2, 4.0), ("b", "k1", 1, 1.0), ("b", "k1", 2, 3.0)]
     df = spark.createDataFrame(rows, "seg string, key string, t int, v double")
