@@ -23,10 +23,15 @@ group's counter passes with a list of key columns in front of every pass:
       ``(index…, expectation, observed_value)`` to the sink — executor-side
       write, never collected to the driver (SURVEY.md §4.3)
 
-Both executors turn one key's pass values into a check's verdict through
-:func:`verdict` and build a group's sink frames through
-:func:`violation_frames`; ``SuiteRunner`` adds only what a check's
-``result_format`` asks for.
+One run loop, ``SuiteRunner._run``, drives a plan for both of its
+callers: :meth:`SuiteRunner.validate` (no keys) and ``validate_by_group``
+(the segment key). It opens the pass pool, runs each domain group's
+passes, builds the group's sink frames through :func:`violation_frames`,
+appends every sink frame in one write and releases what the passes cached.
+The callers differ only in their keys, their collect (``max_groups``),
+their error policy (``catch_exceptions``) and what they build from a
+check's pass values: an EVR with what its ``result_format`` asks for, or
+one :func:`verdict` row per segment.
 
 Independent passes, side checks (every check outside the domain groups:
 schema, Cramér's phi, cross-table and query checks) and EVR finishing jobs
@@ -62,7 +67,7 @@ from pyspark.storagelevel import StorageLevel
 
 from great_expectations_spark.functions.aggregates import safe_alias
 from great_expectations_spark.functions.conditions import MapCondition
-from great_expectations_spark.plans.planner import DomainGroup, plan_suite
+from great_expectations_spark.plans.planner import DomainGroup, SuitePlan, plan_suite
 from great_expectations_spark.registry import (
     CompiledAgg,
     CompiledContiguous,
@@ -97,8 +102,8 @@ def map_violations(
     segment: str | None = None,
 ) -> DataFrame:
     """The violations-sink rows of one map condition: ``(index…,
-    expectation, observed_value)``, led by a ``group`` column when the
-    segmented executor passes its ``segment`` column. The condition is projected
+    expectation, observed_value)``, led by a ``group`` column when a keyed
+    run passes its ``segment`` column. The condition is projected
     BEFORE filtering — window-backed conditions (increasing/decreasing) are
     illegal in a WHERE clause."""
     lead = ["group"] if segment is not None else []
@@ -139,10 +144,10 @@ def unique_violations(
     key — a duplicated key of a uniqueness check (reference row-marking
     parity), a broken group of a contiguity check — found by a semi-join of
     ``rows`` against ``bad_keys`` on ``key_cols`` (led by the ``segment``
-    column for the segmented executor, which also leads the output as
-    ``group``), with ``observed`` as the observed value. The join is
-    null-safe: a NULL or partly-NULL key is a key like any other, and an
-    equi-join never matches NULL."""
+    column of a keyed run, which also leads the output as ``group``), with
+    ``observed`` as the observed value. The join is null-safe: a NULL or
+    partly-NULL key is a key like any other, and an equi-join never matches
+    NULL."""
     keys = ([segment] if segment is not None else []) + key_cols
     dk = bad_keys.select(*[F.col(k).alias(f"__dk{j}") for j, k in enumerate(keys)])
     return rows.join(dk, on=_on_keys(keys, "__dk"), how="left_semi").select(
@@ -210,6 +215,10 @@ class GroupPasses:
     persisted: list[DataFrame]
     #: the group's domain frame the passes read
     frame: DataFrame
+    #: the key columns in front of every pass
+    keys: list[str]
+    #: the run's index columns (window keys, sink and partial-list columns)
+    index_cols: list[str]
 
     def release(self) -> None:
         """Unpersist every relation the passes cached."""
@@ -236,8 +245,8 @@ def run_passes(
     """One domain group's counter passes over ``gdf``, with the ``keys``
     columns in front of every pass: ``[]`` for the whole table (one row
     per pass), ``[segment]`` for validate_by_group. ``index_cols`` (the
-    executor's unexpected_index_column_names) are the window key of an
-    increasing/decreasing check that leaves ``partition_by`` out. Values
+    run's index columns) are the window key of an increasing/decreasing
+    check that leaves ``partition_by`` out. Values
     come back under the runner's aliases (``element_count``, ``nc__<id>``, ``uc__<id>``,
     ``dk__<id>`` duplicate-key counts, ``ec__<id>`` group counts, metric
     aliases). Independent passes run concurrently on ``pool``; every result
@@ -389,7 +398,8 @@ def run_passes(
     if group.window_maps:
         futs.append(pool.submit(window))
     wait(futs)
-    passes = GroupPasses({}, conds, bad_keys, persisted, gdf)
+    passes = GroupPasses({}, conds, bad_keys, persisted, gdf, keys,
+                         index_cols or [])
     try:
         for fut in futs:
             for r in fut.result():
@@ -419,8 +429,8 @@ class Verdict(NamedTuple):
 
 def verdict(compiled, vals: dict[str, Any]) -> Verdict:
     """One check's verdict from one key's pass values — the reference's
-    per-expectation ``_validate``, shared by both executors whatever key
-    the values came from.
+    per-expectation ``_validate``, shared by both callers of the run loop
+    whatever key the values came from.
 
     ``element_count`` is the row count of the check's domain, except for a
     contiguity check, which counts the groups holding a non-null value (and
@@ -444,16 +454,15 @@ def verdict(compiled, vals: dict[str, Any]) -> Verdict:
                    None)
 
 
-def violation_frames(
-    group: DomainGroup,
-    passes: GroupPasses,
-    index_cols: list[str],
-    segment: str | None = None,
-) -> list[DataFrame]:
-    """The violations-sink frames of one domain group, for both executors
-    (``segment`` names the segmented executor's key column): a check's
-    frame only when some key has unexpected rows, so a passing check never
-    re-reads its condition or violating-key frame into an empty write."""
+def violation_frames(group: DomainGroup, passes: GroupPasses) -> list[DataFrame]:
+    """The violations-sink frames of one domain group over the passes'
+    index columns, led by a ``group`` column holding the key of a keyed
+    run: a check's frame only when some key has unexpected rows, so a
+    passing check never re-reads its condition or violating-key frame into
+    an empty write."""
+    index_cols = passes.index_cols
+    segment = passes.keys[0] if passes.keys else None
+
     def broke(c) -> bool:
         return any(verdict(c, v).unexpected_count for v in passes.values.values())
 
@@ -489,8 +498,11 @@ class SuiteRunner:
     tables: named DataFrames referenced by relational expectations
         (referential integrity dims, row-count comparisons).
     unexpected_index_column_names: default identity columns for
-        unexpected_index_list / the violations sink — the transcripts
-        canonical value is ``["conv_id", "turn_idx"]`` (north_star shape).
+        unexpected_index_list / the violations sink, and the window key of
+        an increasing/decreasing check without ``partition_by`` — the
+        transcripts canonical value is ``["conv_id", "turn_idx"]``
+        (north_star shape). Columns the batch lacks are dropped, from the
+        window keys too.
     violations_path: when set, a single melt pass appends every failing row
         as ``(index…, expectation, observed_value)`` parquet partitioned by
         expectation — the at-scale alternative to COMPLETE collects.
@@ -536,27 +548,62 @@ class SuiteRunner:
             from great_expectations_spark.suite import bind_evaluation_parameters
 
             suite = bind_evaluation_parameters(suite, evaluation_parameters)
-        plan = plan_suite(suite)
-        results_by_id: dict[str, ExpectationValidationResult] = {}
+        results_by_id = self._run(df, plan_suite(suite), [], self._evr)
+        results = [results_by_id[cfg.id] for cfg in suite]
+        return ExpectationSuiteValidationResult(
+            success=all(r.success for r in results),
+            results=results,
+            statistics=build_statistics(results),
+        )
+
+    # ------------------------------------------------------------- internals
+    def _run(
+        self,
+        df: DataFrame,
+        plan: SuitePlan,
+        keys: list[str],
+        finish: Callable[[Any, GroupPasses], Any],
+        collect: Callable[[DataFrame], list] = DataFrame.collect,
+    ) -> dict[str, Any]:
+        """The run loop: ``plan`` over ``df`` with ``keys`` in front of every
+        pass, giving expectation id → what ``finish(check, passes)`` built
+        from its group's passes, or the check's exception EVR under
+        ``catch_exceptions`` (without it, the first broken config, unresolved
+        ``row_condition`` or failing pass raises). Finishing may launch
+        partial-list / top-k jobs, independent per check, so it runs on the
+        pass pool too. Side checks have no key column: only a zero-key run
+        runs them, on the pool alongside the groups' passes. The index
+        columns are the caller's that ``df`` has, one list for the whole run.
+        """
+        index_cols = [c for c in self.index_cols or [] if c in df.columns]
+        sides = [] if keys else plan.sides
+        out: dict[str, Any] = {}
         sinks: list[DataFrame] = []
         done: list[GroupPasses] = []
 
         for cfg, exc in plan.broken:
             if not self.catch_exceptions:
                 raise exc
-            results_by_id[cfg.id] = _exception_evr(cfg, exc)
+            out[cfg.id] = _exception_evr(cfg, exc)
+
+        def run_group(group: DomainGroup, gdf: DataFrame) -> None:
+            passes = run_passes(group, gdf, keys, pool, collect, index_cols)
+            done.append(passes)
+            if self.violations_path:
+                sinks.extend(violation_frames(group, passes))
+            futs = {c.cfg.id: pool.submit(finish, c, passes) for c in group.checks}
+            for c in group.checks:
+                out[c.cfg.id] = self._guard(c.cfg, futs[c.cfg.id].result)
 
         # every cached relation is released after the violations write
-        # (its last reader), also when a pass or the write raises
+        # (its last reader), also when a pass or the write raises: a
+        # checkpointed per-partition loop must not accumulate cache entries
         try:
             with SparkThreadPool(self.spark) as pool:
-                # side checks are independent of the domain groups: they
-                # run on the pool alongside the groups' passes
                 fut_side = {
-                    c.cfg.id: pool.submit(self._run_side, c, df, sinks)
-                    for c in plan.sides
+                    c.cfg.id: pool.submit(self._run_side, c, df, index_cols, sinks)
+                    for c in sides
                 }
-
                 for group in plan.groups:
                     try:
                         # a row_condition that does not resolve fails the
@@ -566,28 +613,28 @@ class SuiteRunner:
                         if not self.catch_exceptions:
                             raise
                         for c in group.checks:
-                            results_by_id[c.cfg.id] = _exception_evr(c.cfg, exc)
+                            out[c.cfg.id] = _exception_evr(c.cfg, exc)
                         continue
                     try:
-                        self._run_group(
-                            group, gdf, pool, results_by_id, sinks, done
-                        )
+                        run_group(group, gdf)
                     except Exception:
                         if not self.catch_exceptions:
                             raise
-                        # One bad expectation (e.g. unknown column) poisons the
-                        # shared bundle. Degrade to per-expectation mini-groups
-                        # so healthy expectations still validate and the broken
-                        # one gets its own EVR.exception_info (reference
-                        # catch_exceptions fault-isolation semantics).
-                        self._run_group_isolated(
-                            group, gdf, pool, results_by_id, sinks, done
-                        )
-
-                for c in plan.sides:
-                    results_by_id[c.cfg.id] = self._guard(
-                        c.cfg, fut_side[c.cfg.id].result
-                    )
+                        # One bad expectation (e.g. unknown column) poisons
+                        # the shared bundle. Degrade to one guarded
+                        # single-check group per check, so healthy checks
+                        # still validate and the broken one gets its own
+                        # EVR.exception_info (reference catch_exceptions
+                        # fault-isolation semantics).
+                        for member in group.checks:
+                            mini = DomainGroup(group.row_condition)
+                            mini.add(member)
+                            try:
+                                run_group(mini, gdf)
+                            except Exception as exc:  # noqa: BLE001
+                                out[member.cfg.id] = _exception_evr(member.cfg, exc)
+                for c in sides:
+                    out[c.cfg.id] = self._guard(c.cfg, fut_side[c.cfg.id].result)
 
             if self.violations_path and sinks:
                 reduce(DataFrame.unionByName, sinks).write.mode(
@@ -596,15 +643,8 @@ class SuiteRunner:
         finally:
             for passes in done:
                 passes.release()
+        return out
 
-        results = [results_by_id[cfg.id] for cfg in suite]
-        return ExpectationSuiteValidationResult(
-            success=all(r.success for r in results),
-            results=results,
-            statistics=build_statistics(results),
-        )
-
-    # ------------------------------------------------------------- internals
     def _guard(self, cfg, fn) -> ExpectationValidationResult:
         if not self.catch_exceptions:
             return fn()
@@ -612,49 +652,6 @@ class SuiteRunner:
             return fn()
         except Exception as exc:  # noqa: BLE001 — reference catch_exceptions parity
             return _exception_evr(cfg, exc)
-
-    def _run_group_isolated(
-        self,
-        group: DomainGroup,
-        gdf: DataFrame,
-        pool: ThreadPoolExecutor,
-        out: dict[str, ExpectationValidationResult],
-        sinks: list[DataFrame],
-        done: list[GroupPasses],
-    ) -> None:
-        """Error path: one single-expectation group per expectation, each
-        individually guarded — N small jobs instead of one poisoned bundle."""
-        for member in group.checks:
-            mini = DomainGroup(group.row_condition)
-            mini.add(member)
-            try:
-                self._run_group(mini, gdf, pool, out, sinks, done)
-            except Exception as exc:  # noqa: BLE001
-                out[member.cfg.id] = _exception_evr(member.cfg, exc)
-
-    def _run_group(
-        self,
-        group: DomainGroup,
-        gdf: DataFrame,
-        pool: ThreadPoolExecutor,
-        out: dict[str, ExpectationValidationResult],
-        sinks: list[DataFrame],
-        done: list[GroupPasses],
-    ) -> None:
-        """The group's zero-key passes, its sink frames, then one EVR per
-        check (:meth:`_evr`). Finishing launches partial-list / top-k jobs
-        when a check has unexpected rows — independent per check, so it goes
-        through the pool as well. The passes go on ``done``, for release
-        after the violations write."""
-        passes = run_passes(group, gdf, [], pool, index_cols=self.index_cols)
-        done.append(passes)
-        if self.violations_path:
-            sinks += violation_frames(
-                group, passes, self._effective_index_cols(gdf)
-            )
-        futs = {c.cfg.id: pool.submit(self._evr, c, passes) for c in group.checks}
-        for c in group.checks:
-            out[c.cfg.id] = self._guard(c.cfg, futs[c.cfg.id].result)
 
     def _evr(self, c, passes: GroupPasses) -> ExpectationValidationResult:
         """One check's EVR: the counters and success of :func:`verdict` over
@@ -680,7 +677,8 @@ class SuiteRunner:
         elif isinstance(c, CompiledUnique):
             result = self._unique_result(c, v, passes)
         else:
-            result = self._map_result(c, v, *passes.conds[c.cfg.id])
+            result = self._map_result(c, v, *passes.conds[c.cfg.id],
+                                      passes.index_cols)
         return ExpectationValidationResult(
             success=v.success, expectation_config=c.cfg.to_dict(), result=result
         )
@@ -694,19 +692,15 @@ class SuiteRunner:
         cols.append(cond.unexpected.alias("__unexpected"))
         return gdf.select(*cols)
 
-    def _effective_index_cols(self, gdf: DataFrame) -> list[str]:
-        if not self.index_cols:
-            return []
-        return [c for c in self.index_cols if c in gdf.columns]
-
     def _map_result(
-        self, cm: CompiledMap, v: Verdict, cond, gdf: DataFrame
+        self, cm: CompiledMap, v: Verdict, cond, gdf: DataFrame,
+        run_index_cols: list[str],
     ) -> dict[str, Any]:
         unexpected_count = v.unexpected_count
         rf = cm.result_format
         level = rf["result_format"]
         n_partial = rf["partial_unexpected_count"]
-        index_cols = rf.get("unexpected_index_column_names") or self._effective_index_cols(gdf)
+        index_cols = rf.get("unexpected_index_column_names") or run_index_cols
 
         partial_list: list[Any] = []
         partial_index: list[dict[str, Any]] | None = None
@@ -855,7 +849,8 @@ class SuiteRunner:
 
     # ---- side checks ------------------------------------------------------
     def _run_side(
-        self, c: CompiledSide, df: DataFrame, sinks: list[DataFrame]
+        self, c: CompiledSide, df: DataFrame, index_cols: list[str],
+        sinks: list[DataFrame],
     ) -> ExpectationValidationResult:
         """A side check over its ``row_condition``'s batch; like every
         check's, its sink frame only when some row is unexpected."""
@@ -864,7 +859,7 @@ class SuiteRunner:
         if (self.violations_path and c.violations is not None
                 and result.get("unexpected_count")):
             sinks.append(c.violations(batch, self.tables).select(
-                *self._effective_index_cols(batch),
+                *index_cols,
                 F.lit(c.cfg.expectation_type).alias("expectation"),
                 "observed_value",
             ))

@@ -1,27 +1,26 @@
-"""Segmented validation — the runner's plan, once per segment, in one run.
+"""Segmented validation — the runner's run loop, keyed by the segment.
 
 ``validate_by_group(df, suite, group_by)`` evaluates a suite once per
 distinct value of ``group_by`` (per source, per language, per day, per
 tenant) and returns a long-format DataFrame of per-segment results.
 
 The reference can only express this as N filtered validation runs — N
-full scans. Here it is the plan ``SuiteRunner`` runs, through the
-runner's own passes: ``plan_suite`` groups the suite into domain groups
-(one per distinct ``row_condition``), and
-:func:`~great_expectations_spark.runner.run_passes` runs every group over
-``df.filter(row_condition)`` with the segment as its key — where the
-runner passes no key at all — so a 10,000-segment quality report costs the
-same passes as a whole-table run: the bundled pass, z-score's wave 2 over
-the per-segment wave-1 stats, value counts, uniqueness, contiguity (the
-per-group stats keyed by ``(segment, *group_by)``) and the window pass
-(increasing/decreasing windowed by ``(segment, *partition_by)``, an absent
-``partition_by`` taken from ``unexpected_index_column_names`` as the runner
-takes it, so lag never crosses a segment boundary). The plan is the
-caller's suite as written, the one ``SuiteRunner`` runs. Finishing lives in
-:func:`~great_expectations_spark.runner.verdict`, the function that gives
-``SuiteRunner`` its counters: each segment's row is that verdict over the
-segment's values, so an aggregate's ``element_count`` is its domain's row
-count in both executors.
+full scans. Here it is one run of the loop ``SuiteRunner.validate`` runs
+(``SuiteRunner._run``), over the caller's suite as written, with the
+segment as the key of every pass where ``validate`` passes none: the pass
+pool, every domain group's passes over ``df.filter(row_condition)``, the
+violations sink and the release of cached relations are the runner's. So
+a 10,000-segment quality report costs the same passes as a whole-table
+run: the bundled pass, z-score's wave 2 over the per-segment wave-1 stats,
+value counts, uniqueness, contiguity (the per-group stats keyed by
+``(segment, *group_by)``) and the window pass (increasing/decreasing
+windowed by ``(segment, *partition_by)``, an absent ``partition_by`` taken
+from the index columns as ``SuiteRunner`` takes it, so lag never crosses a
+segment boundary). What this module adds is the segment key column, the
+``max_groups`` collect and what it builds from a check's pass values: one
+row per segment, the :func:`~great_expectations_spark.runner.verdict` that
+gives ``SuiteRunner`` its counters, so an aggregate's ``element_count`` is
+its domain's row count in both.
 
 One ``row_condition`` rule covers every kind: a segment with no rows inside
 a group's ``row_condition`` gets no row for that group's expectations —
@@ -31,18 +30,20 @@ Side checks (``plan_suite``'s ``sides``: schema checks, Cramér's phi,
 ``exist_in``, row count vs another table, benchmark contamination,
 repetition fractions and query checks) raise a ``ValueError`` naming the
 first of them (``strict=False`` skips them) — each runs on its own over
-its ``row_condition``'s batch, with no segment key; run them through
-``SuiteRunner`` instead. An expectation that does not compile raises, and
-so does a ``row_condition`` that does not resolve (where ``SuiteRunner``
-gives that group's checks exception EVRs): a per-segment report has no
-exception column.
+its ``row_condition``'s batch, with no segment key, so a keyed run never
+runs them; run them through ``SuiteRunner`` instead. The run does not
+catch exceptions (``catch_exceptions=False``): an expectation that does
+not compile raises, and so do a ``row_condition`` that does not resolve
+and a failing pass (where ``SuiteRunner`` gives exception EVRs) — a
+per-segment report has no exception column.
 
 Violations sink: pass ``violations_path`` (plus
-``unexpected_index_column_names``) to append every failing row as
-``(group, <index cols…>, expectation, observed_value)`` parquet rows —
-the runner's :func:`~great_expectations_spark.runner.violation_frames`
-with a leading ``group`` column, so a check writes rows only when some
-segment has unexpected rows; nothing row-level ever reaches the driver.
+``unexpected_index_column_names``, dropping those ``df`` lacks) to append
+every failing row as ``(group, <index cols…>, expectation,
+observed_value)`` parquet rows — the runner's
+:func:`~great_expectations_spark.runner.violation_frames` led by the
+segment as ``group``, so a check writes rows only when some segment has
+unexpected rows; nothing row-level ever reaches the driver.
 
 Scale guard: the grouped counters collect to the driver for the
 (Python) finalizers, so segment cardinality must be report-sized —
@@ -52,20 +53,10 @@ million-segment collect.
 
 from __future__ import annotations
 
-from functools import reduce
-from typing import Any
-
 from pyspark.sql import DataFrame, functions as F
 
 from great_expectations_spark.plans.planner import plan_suite
-from great_expectations_spark.runner import (
-    GroupPasses,
-    SparkThreadPool,
-    domain,
-    run_passes,
-    verdict,
-    violation_frames,
-)
+from great_expectations_spark.runner import GroupPasses, SuiteRunner, verdict
 from great_expectations_spark.suite import ExpectationSuite
 
 RESULT_SCHEMA = (
@@ -114,13 +105,9 @@ def _validate_rows(
 ) -> list[tuple]:
     """validate_by_group's engine, returning the driver-local rows in suite
     order (one per expectation and segment), each carrying its config's
-    id. Every pass runs keyed by the segment, window passes included."""
-    index_cols = [
-        c for c in (unexpected_index_column_names or []) if c in df.columns
-    ]
+    id: the runner's run loop keyed by the segment, with no exception
+    catching."""
     plan = plan_suite(suite)
-    if plan.broken:
-        raise plan.broken[0][1]
     if strict and plan.sides:
         raise ValueError(
             f"{plan.sides[0].cfg.expectation_type} is not segmentable "
@@ -141,46 +128,25 @@ def _validate_rows(
             )
         return rows
 
-    # the segment as a string key column: every pass runs keyed by it
-    keyed = df.withColumn("__g", F.col(group_by).cast("string"))
-    frames: list[DataFrame] = []
-    # compiled expectation → its group's {(segment,): {alias: value}}
-    values_of: dict[int, dict[tuple, dict[str, Any]]] = {}
-    done: list[GroupPasses] = []
-    # every cached relation is released even when a pass raises (max_groups
-    # overflow, a failing violations write): a checkpointed per-partition
-    # loop must not accumulate CacheManager entries
-    try:
-        with SparkThreadPool(df.sparkSession) as pool:
-            for group in plan.groups:
-                gdf = domain(keyed, group.row_condition)
-                passes = run_passes(group, gdf, ["__g"], pool, capped_collect,
-                                    index_cols)
-                done.append(passes)
-                for compiled in group.checks:
-                    values_of[id(compiled)] = passes.values
-                if violations_path:
-                    frames += violation_frames(
-                        group, passes, index_cols, segment="__g"
-                    )
-
-        if frames:
-            reduce(DataFrame.unionByName, frames).write.mode(
-                "append"
-            ).partitionBy("expectation").parquet(violations_path)
-    finally:
-        for passes in done:
-            passes.release()
-
-    out: list[tuple] = []
-    for compiled in plan.ordered:
-        if id(compiled) not in values_of:
-            continue  # a side check skipped by strict=False
-        for (g,), vals in values_of[id(compiled)].items():
+    def segment_rows(compiled, passes: GroupPasses) -> list[tuple]:
+        out = []
+        for (g,), vals in passes.values.items():
             *counters, observed = verdict(compiled, vals)
             # an aggregate's observed value as text; NULL (all-null
             # segment) stays SQL NULL, not the string 'None'
             out.append((g, compiled.cfg.id, compiled.cfg.expectation_type,
                         *counters,
                         None if observed is None else str(observed)))
-    return out
+        return out
+
+    runner = SuiteRunner(
+        df.sparkSession,
+        unexpected_index_column_names=unexpected_index_column_names,
+        violations_path=violations_path,
+        catch_exceptions=False,
+    )
+    # the segment as a string key column: every pass runs keyed by it
+    keyed = df.withColumn("__g", F.col(group_by).cast("string"))
+    rows_of = runner._run(keyed, plan, ["__g"], segment_rows, capped_collect)
+    # a side check skipped by strict=False has no rows
+    return [row for c in plan.ordered for row in rows_of.get(c.cfg.id, ())]

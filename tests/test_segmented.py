@@ -57,7 +57,10 @@ def test_per_segment_uniqueness(spark):
     assert out["b"]["missing_count"] == 1   # null key is missing, not dup
 
 
-def test_unsupported_kind_raises_or_skips(spark, seg_df):
+def test_unsupported_kind_raises_or_skips(spark, seg_df, job_ids):
+    """A side check has no segment key: strict mode refuses it, and
+    strict=False skips it without running it — a suite with a query check
+    launches no more jobs than the same suite without it."""
     suite = ExpectationSuite("w")
     suite.add("expect_table_row_count_to_equal_other_table",
               other_table="whatever")
@@ -65,6 +68,47 @@ def test_unsupported_kind_raises_or_skips(spark, seg_df):
         validate_by_group(seg_df, suite, "seg")
     out = validate_by_group(seg_df, suite, "seg", strict=False)
     assert out.count() == 0
+
+    base = ExpectationSuite("w-base")
+    base.add("expect_column_values_to_not_be_null", column="text")
+    with_query = ExpectationSuite("w-query")
+    with_query.add("expect_column_values_to_not_be_null", column="text")
+    with_query.add("expect_query_to_return_no_unexpected_rows",
+                   query="SELECT * FROM {active_batch} WHERE v < 0")
+    with pytest.raises(ValueError, match="not segmentable"):
+        validate_by_group(seg_df, with_query, "seg")
+    jobs = {}
+    for s in (base, with_query):
+        validate_by_group(seg_df, s, "seg", strict=False)  # plan cache
+        launched, _ = job_ids(
+            f"skip-{s.name}",
+            lambda s=s: validate_by_group(seg_df, s, "seg", strict=False),
+        )
+        jobs[s.name] = len(launched)
+    assert 0 < jobs["w-query"] <= jobs["w-base"], jobs
+
+
+def test_errors_raise(spark, seg_df):
+    """validate_by_group catches no exception: a config that does not
+    compile raises its compile error, and a map check on a column the
+    batch lacks raises instead of returning partial rows."""
+    from great_expectations_spark.plans.planner import plan_suite
+
+    broken = ExpectationSuite("err-compile")
+    broken.add("expect_column_values_to_not_be_null", column="text")
+    broken.add("expect_column_values_to_be_frobnicated", column="text")
+    (_cfg, exc), = plan_suite(broken).broken
+    with pytest.raises(type(exc)) as raised:
+        validate_by_group(seg_df, broken, "seg")
+    assert str(raised.value) == str(exc)
+
+    missing = ExpectationSuite("err-column")
+    missing.add("expect_column_values_to_not_be_null", column="text")
+    missing.add("expect_column_values_to_not_be_null", column="no_such_col")
+    out = None
+    with pytest.raises(Exception, match="no_such_col"):
+        out = validate_by_group(seg_df, missing, "seg")
+    assert out is None
 
 
 def test_max_groups_guard(spark):
@@ -374,19 +418,29 @@ def test_windowed_global_window_becomes_per_segment(spark):
 def test_windowed_default_keys_from_index_cols(spark):
     """Absent partition_by defaults from unexpected_index_column_names —
     the same default SuiteRunner's window pass takes — with the segment
-    key in front."""
+    key in front. An index column the batch lacks is dropped from the
+    window keys by both: SuiteRunner validates the check (no exception
+    EVR) and counts what each segment's row counts."""
+    from great_expectations_spark import SuiteRunner
+
     rows = [("a", "k1", 1, 1.0), ("a", "k1", 2, 2.0), ("a", "k2", 1, 5.0),
             ("a", "k2", 2, 4.0), ("b", "k1", 1, 1.0), ("b", "k1", 2, 3.0)]
     df = spark.createDataFrame(rows, "seg string, key string, t int, v double")
     suite = ExpectationSuite("wind")
     suite.add("expect_column_values_to_be_increasing", column="v",
               strictly=True, order_by="t")
-    seg = {r["group"]: r
-           for r in validate_by_group(
-               df, suite, "seg",
-               unexpected_index_column_names=["key"]).collect()}
-    assert not seg["a"]["success"] and seg["a"]["unexpected_count"] == 1
-    assert seg["b"]["success"]
+    for index in (["key"], ["key", "missing_col"]):
+        seg = {r["group"]: r
+               for r in validate_by_group(
+                   df, suite, "seg",
+                   unexpected_index_column_names=index).collect()}
+        assert not seg["a"]["success"] and seg["a"]["unexpected_count"] == 1
+        assert seg["b"]["success"]
+        runner = SuiteRunner(spark, unexpected_index_column_names=index)
+        for g in ("a", "b"):
+            r = runner.validate(df.filter(F.col("seg") == g), suite).results[0]
+            assert not r.exception_info["raised_exception"], index
+            assert r.result["unexpected_count"] == seg[g]["unexpected_count"]
 
 
 def test_windowed_with_row_condition(spark):
