@@ -23,6 +23,10 @@ batch. Our engine lifts that to the north_rule contract:
   and no reader opens a torn attempt's files. A lookup lists only its own
   key's directory: one partition's (a streaming micro-batch) or one suite's
   (a run's resume diff);
+- every EVR row is the :class:`~great_expectations_spark.result.Verdict` a
+  check was judged by, as :func:`~great_expectations_spark.segmented.store_row`
+  builds every ``validate_by_group`` row, in every mode: a ``result_format``
+  that shows no counts (BOOLEAN_ONLY) still stores them;
 - suite-level statistics are re-derivable by **merging** the per-partition
   counters (counts add; ``mostly`` re-evaluated on merged counts) — see
   :func:`merge_map_counts`. This mirrors the reference's
@@ -69,7 +73,7 @@ from great_expectations_spark.result import (
     calc_map_success,
 )
 from great_expectations_spark.runner import SparkThreadPool, SuiteRunner
-from great_expectations_spark.segmented import _validate_rows
+from great_expectations_spark.segmented import _validate_rows, store_row
 from great_expectations_spark.suite import ExpectationSuite
 
 
@@ -89,9 +93,9 @@ MANIFEST_SCHEMA = StructType(
 )
 
 #: one row per (partition × segment × expectation) — the mergeable metrics
-#: store of both run modes. Counts add across partitions; observed_value is
-#: kept (``str(observed)``, NULL for None) for aggregate expectations, whose
-#: verdicts are reported per partition. A whole-suite row (whole-partition
+#: store of both run modes, each row built by ``segmented.store_row``. Counts
+#: add across partitions; observed_value is kept for aggregate expectations,
+#: whose verdicts are reported per partition. A whole-suite row (whole-partition
 #: run, or an empty partition of a segmented run) has ``segment_col`` NULL;
 #: a segmented row names its column, and its ``segment`` may be a genuine
 #: NULL value. Merges key on ``(suite_hash, segment_col, segment,
@@ -196,25 +200,6 @@ def suite_hash(suite: ExpectationSuite, segment_col: str | None = None) -> str:
     return hashlib.sha256(
         f"{suite.suite_hash}|segmented:{segment_col}".encode()
     ).hexdigest()[:16]
-
-
-def suite_result_rows(result: ExpectationSuiteValidationResult) -> list[tuple]:
-    """A SuiteRunner result as whole-suite rows in the segmented executor's
-    row shape ``(segment=None, expectation_id, expectation_type, success,
-    element_count, missing_count, unexpected_count, observed_value)``, each
-    carrying the id of the config its EVR echoes."""
-    rows = []
-    for r in result.results:
-        cfg, res = r.expectation_config, r.result or {}
-        observed = res.get("observed_value")
-        rows.append((
-            None, cfg["id"], cfg["expectation_type"], bool(r.success),
-            int(res.get("element_count") or 0),
-            int(res.get("missing_count") or 0),
-            int(res.get("unexpected_count") or 0),
-            None if observed is None else str(observed),
-        ))
-    return rows
 
 
 @dataclass
@@ -579,6 +564,9 @@ class Checkpoint:
         # rows stay apart from its resume's
         vpath = self.violations_path and self._attempt_dir(pid, commit_id)
 
+        # every store row comes from the verdict its check was judged by
+        # (segmented.store_row), never from its EVR's result dict: a
+        # BOOLEAN_ONLY check commits the counts it measured
         rows: list[tuple] = []
         if segment_col is not None:
             rows = _validate_rows(
@@ -599,7 +587,9 @@ class Checkpoint:
             result = SuiteRunner(
                 pdf.sparkSession, violations_path=vpath, **self.runner_kwargs
             ).validate(pdf, suite)
-            rows = suite_result_rows(result)
+            rows = [store_row(None, r.expectation_config["id"],
+                              r.expectation_config["expectation_type"],
+                              r.verdict) for r in result.results]
             row_segment_col = None
         elapsed = time.monotonic() - t0
 

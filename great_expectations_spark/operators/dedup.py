@@ -154,24 +154,6 @@ def shingle_hash_set(
     )
 
 
-def minhash_signature(shingles_col: str | Column, n_hashes: int = 128) -> Column:
-    """MinHash signature: for permutation *i*, min over shingles of
-    ``xxhash64(shingle_hash, i)`` (a fresh uniform 64-bit hash per seed —
-    the standard k-independent-permutation approximation).
-
-    Nested higher-order functions keep all ``n_hashes × |shingles|`` work
-    JVM-side in one projected expression.
-    """
-    s = F.col(shingles_col) if isinstance(shingles_col, str) else shingles_col
-    return F.when(
-        F.size(s) > 0,
-        F.transform(
-            F.sequence(F.lit(0), F.lit(n_hashes - 1)),
-            lambda i: F.array_min(F.transform(s, lambda h: F.xxhash64(h, i))),
-        ),
-    ).otherwise(F.lit(None).cast("array<bigint>"))
-
-
 def minhash_signatures(
     df: DataFrame,
     text_col: str,

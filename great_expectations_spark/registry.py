@@ -115,10 +115,6 @@ def compile_expectation(cfg: ExpectationConfiguration) -> Compiled:
     return compiler(cfg)
 
 
-def registered_expectations() -> list[str]:
-    return sorted(_REGISTRY)
-
-
 # ---------------------------------------------------------------------------
 # map expectations (§2.3/§2.4)
 # ---------------------------------------------------------------------------

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import math
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, NamedTuple
 
 DEFAULT_PARTIAL_UNEXPECTED_COUNT = 20
 
@@ -78,10 +78,22 @@ def _json_safe(v: Any) -> Any:
     return v
 
 
+class Verdict(NamedTuple):
+    """The counters and success a check was judged by, whatever its EVR's
+    ``result_format`` shows: what a store row records."""
+
+    success: bool
+    element_count: int
+    missing_count: int
+    unexpected_count: int
+    #: an aggregate's finalized metric; None for row- and group-counting checks
+    observed: Any
+
+
 @dataclass
 class ExpectationValidationResult:
     """One EVR: ``{success, result{…}, expectation_config, meta,
-    exception_info}``."""
+    exception_info}``, backed by the :class:`Verdict` it was judged by."""
 
     success: bool
     expectation_config: dict[str, Any]
@@ -94,6 +106,11 @@ class ExpectationValidationResult:
             "exception_traceback": None,
         }
     )
+    #: neither emitted by ``to_dict`` nor compared: a BOOLEAN_ONLY EVR still
+    #: shows ``result == {}``. The default is an exception EVR's: failed, with
+    #: zero counts.
+    verdict: Verdict = field(default=Verdict(False, 0, 0, 0, None),
+                             compare=False, repr=False)
 
     def to_dict(self) -> dict[str, Any]:
         return {

@@ -31,7 +31,7 @@ appends every sink frame in one write and releases what the passes cached.
 The callers differ only in their keys, their collect (``max_groups``),
 their error policy (``catch_exceptions``) and what they build from a
 check's pass values: an EVR with what its ``result_format`` asks for, or
-one :func:`verdict` row per segment.
+one store row per segment from its :func:`verdict`.
 
 Independent passes, side checks (every check outside the domain groups:
 schema, Cramér's phi, cross-table and query checks) and EVR finishing jobs
@@ -58,7 +58,7 @@ import traceback
 from concurrent.futures import ThreadPoolExecutor, wait
 from dataclasses import dataclass
 from functools import reduce
-from typing import Any, Callable, NamedTuple
+from typing import Any, Callable
 
 from pyspark import inheritable_thread_target
 from pyspark.errors import AnalysisException
@@ -78,6 +78,7 @@ from great_expectations_spark.registry import (
 from great_expectations_spark.result import (
     ExpectationSuiteValidationResult,
     ExpectationValidationResult,
+    Verdict,
     build_statistics,
     calc_map_success,
     format_map_result,
@@ -259,8 +260,9 @@ def run_passes(
     - value counts: per column, the modes-with-ties of every key via a
       broadcast max-join;
     - uniqueness: one skew-aware value count over ``(*keys, *key_cols)``
-      (salted as the check's own key decides); missing keys are classified
-      after grouping;
+      (salted when the check's own key is one column — the key columns in
+      front would turn ``value_counts``' auto rule off); missing keys are
+      classified after grouping;
     - contiguity: per-group count/min/max/count_distinct over
       ``(*keys, *group_by)``, then per key ``ec__`` (groups holding a
       non-null value) and ``uc__`` (broken groups) — it counts groups, not
@@ -341,10 +343,8 @@ def run_passes(
         )
 
     def unique(cu: CompiledUnique) -> list:
-        salted = cu.cfg.kwargs.get("salted")
-        if salted is None:
-            salted = len(cu.key_cols) == 1
-        vc = skew_value_counts(gdf, [*keys, *cu.key_cols], salted=salted)
+        vc = skew_value_counts(gdf, [*keys, *cu.key_cols],
+                               salted=len(cu.key_cols) == 1)
         miss = unique_missing(cu)
         dup = ~miss & (F.col("count") > 1)
         bad_keys[cu.cfg.id] = cache(vc.filter(dup))
@@ -416,15 +416,6 @@ def run_passes(
         for vals in passes.values.values():
             vals.setdefault(safe_alias("most_common", col), [])
     return passes
-
-
-class Verdict(NamedTuple):
-    success: bool
-    element_count: int
-    missing_count: int
-    unexpected_count: int
-    #: an aggregate's finalized metric; None for row- and group-counting checks
-    observed: Any
 
 
 def verdict(compiled, vals: dict[str, Any]) -> Verdict:
@@ -680,7 +671,8 @@ class SuiteRunner:
             result = self._map_result(c, v, *passes.conds[c.cfg.id],
                                       passes.index_cols)
         return ExpectationValidationResult(
-            success=v.success, expectation_config=c.cfg.to_dict(), result=result
+            success=v.success, expectation_config=c.cfg.to_dict(), result=result,
+            verdict=v,
         )
 
     # ---- map expectations -------------------------------------------------
@@ -852,19 +844,23 @@ class SuiteRunner:
         self, c: CompiledSide, df: DataFrame, index_cols: list[str],
         sinks: list[DataFrame],
     ) -> ExpectationValidationResult:
-        """A side check over its ``row_condition``'s batch; like every
-        check's, its sink frame only when some row is unexpected."""
+        """A side check over its ``row_condition``'s batch, judged by the
+        counts of its own result; like every check's, its sink frame only
+        when some row is unexpected."""
         batch = domain(df, c.cfg.row_condition)
         success, result = c.run(batch, self.tables)
-        if (self.violations_path and c.violations is not None
-                and result.get("unexpected_count")):
+        v = Verdict(bool(success), *(int(result.get(k) or 0) for k in (
+            "element_count", "missing_count", "unexpected_count")),
+            result.get("observed_value"))
+        if self.violations_path and c.violations is not None and v.unexpected_count:
             sinks.append(c.violations(batch, self.tables).select(
                 *index_cols,
                 F.lit(c.cfg.expectation_type).alias("expectation"),
                 "observed_value",
             ))
         return ExpectationValidationResult(
-            success=success, expectation_config=c.cfg.to_dict(), result=result
+            success=success, expectation_config=c.cfg.to_dict(), result=result,
+            verdict=v,
         )
 
 

@@ -18,9 +18,10 @@ windowed by ``(segment, *partition_by)``, an absent ``partition_by`` taken
 from the index columns as ``SuiteRunner`` takes it, so lag never crosses a
 segment boundary). What this module adds is the segment key column, the
 ``max_groups`` collect and what it builds from a check's pass values: one
-row per segment, the :func:`~great_expectations_spark.runner.verdict` that
-gives ``SuiteRunner`` its counters, so an aggregate's ``element_count`` is
-its domain's row count in both.
+:func:`store_row` per segment from the
+:func:`~great_expectations_spark.runner.verdict` that gives ``SuiteRunner``
+its counters, so an aggregate's ``element_count`` is its domain's row count
+in both. The checkpoint stores the same rows.
 
 One ``row_condition`` rule covers every kind: a segment with no rows inside
 a group's ``row_condition`` gets no row for that group's expectations —
@@ -56,6 +57,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from great_expectations_spark.plans.planner import plan_suite
+from great_expectations_spark.result import Verdict
 from great_expectations_spark.runner import GroupPasses, SuiteRunner, verdict
 from great_expectations_spark.suite import ExpectationSuite
 
@@ -64,6 +66,16 @@ RESULT_SCHEMA = (
     "success boolean, element_count long, missing_count long, "
     "unexpected_count long, observed_value string"
 )
+
+
+def store_row(segment: str | None, eid: str, etype: str, v: Verdict) -> tuple:
+    """One check's :data:`RESULT_SCHEMA` row from the verdict it was judged
+    by — every ``validate_by_group`` row and every checkpoint store row. An
+    aggregate's observed value is kept as text; None (an all-null domain)
+    stays SQL NULL, not the string 'None'."""
+    *counters, observed = v
+    return (segment, eid, etype, *counters,
+            None if observed is None else str(observed))
 
 
 def validate_by_group(
@@ -129,15 +141,9 @@ def _validate_rows(
         return rows
 
     def segment_rows(compiled, passes: GroupPasses) -> list[tuple]:
-        out = []
-        for (g,), vals in passes.values.items():
-            *counters, observed = verdict(compiled, vals)
-            # an aggregate's observed value as text; NULL (all-null
-            # segment) stays SQL NULL, not the string 'None'
-            out.append((g, compiled.cfg.id, compiled.cfg.expectation_type,
-                        *counters,
-                        None if observed is None else str(observed)))
-        return out
+        cfg = compiled.cfg
+        return [store_row(g, cfg.id, cfg.expectation_type, verdict(compiled, vals))
+                for (g,), vals in passes.values.items()]
 
     runner = SuiteRunner(
         df.sparkSession,

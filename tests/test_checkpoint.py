@@ -920,3 +920,60 @@ def test_results_carry_the_suite_ids(spark, tmp_path, tdf):
         evrs = ck.committed_evrs()
         assert len(evrs) == 3 * len(ids)
         assert {r["expectation_id"] for r in evrs} == set(ids)
+
+
+def test_boolean_only_checks_store_their_counts_in_every_mode(spark,
+                                                              tmp_path):
+    """The store records what a check measured, not what its EVR shows: one
+    suite with a failing map check and a failing uniqueness check, run at
+    BASIC and at BOOLEAN_ONLY, commits the same manifest rows_scanned and
+    violations and merges to the same counts through a whole-partition run,
+    a segmented run and run_partition — the counts validate_by_group gives.
+    A BOOLEAN_ONLY EVR still shows no counts."""
+    from great_expectations_spark import validate_by_group
+
+    # per day: text NULL in 2 rows, conversation c8 twice
+    rows = [(f"c{min(i, 8)}", i, "user", None if i < 2 else f"msg {i}", day)
+            for day in ("d1", "d2") for i in range(10)]
+    df = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, day string"
+    )
+    days = ("d1", "d2")
+
+    def counts(rows):
+        return {r["expectation_type"]: (r["element_count"], r["missing_count"],
+                                        r["unexpected_count"]) for r in rows}
+
+    seen = {}
+    for level in ("BASIC", "BOOLEAN_ONLY"):
+        s = ExpectationSuite(f"store-{level}")
+        s.add("expect_column_values_to_not_be_null", column="text",
+              result_format=level)
+        s.add("expect_compound_columns_to_be_unique",
+              column_list=["day", "conv_id"], result_format=level)
+
+        whole, seg, stream = (
+            Checkpoint(spark, manifest_path=str(tmp_path / level / m / "m"),
+                       evr_path=str(tmp_path / level / m / "e"))
+            for m in ("whole", "seg", "stream"))
+        res = whole.run(df, s, run_id="r", partition_col="day")
+        if level == "BOOLEAN_ONLY":
+            assert all(r.result == {} for rec in res.validated
+                       for r in rec.result.results)
+        seg.run(df, s, run_id="r", partition_col="day", segment_col="role")
+        for day in days:
+            stream.run_partition(df.filter(F.col("day") == day), s, "r", day)
+        for mode, ck in (("whole", whole), ("seg", seg), ("stream", stream)):
+            manifest = {r["partition_id"]: (r["rows_scanned"], r["violations"])
+                        for r in ck.read_manifest().collect()}
+            seen[level, mode] = (manifest,
+                                 counts(ck.merged_map_verdicts().collect()))
+        seen[level, "by_group"] = (None, counts(
+            validate_by_group(df, s, "role").collect()))
+
+    expected = {"expect_column_values_to_not_be_null": (20, 0, 4),
+                "expect_compound_columns_to_be_unique": (20, 0, 4)}
+    for key, (manifest, merged) in seen.items():
+        assert merged == expected, key
+        if manifest is not None:
+            assert manifest == {day: (10, 4) for day in days}, key

@@ -821,6 +821,66 @@ def test_multicolumn_values_to_be_unique_alias(df):
     assert evr.success is True
 
 
+def test_unique_evr_lists_top_k_and_duplicate_keys(spark):
+    """A uniqueness EVR reads its lists off the duplicate-key counts: the
+    partial list repeats each duplicated key once per row, capped at
+    partial_unexpected_count; SUMMARY's top-k partial_unexpected_counts
+    order by count, then key; details count the duplicated keys. A
+    single-column and a compound key, at BASIC and SUMMARY, under the
+    default and a cutting partial_unexpected_count."""
+    from collections import Counter
+    from itertools import groupby
+
+    rows = ([("a", 1)] * 3 + [("b", 1)] * 2
+            + [("c", 2), ("c", 3), ("d", 1), (None, None), (None, 5), (None, 5)])
+    frame = spark.createDataFrame(rows, "k string, j int")
+    # a NULL k is a missing single key; a compound key is missing only when
+    # all-NULL, so (None, 5) is a duplicated key like any other
+    keys = {
+        "expect_column_values_to_be_unique": (
+            {"column": "k"}, 3, {"a": 3, "b": 2, "c": 2},
+            [("a", 3), ("b", 2), ("c", 2)]),
+        "expect_compound_columns_to_be_unique": (
+            {"column_list": ["k", "j"]}, 1,
+            {("a", 1): 3, ("b", 1): 2, (None, 5): 2},
+            # a count tie orders by key, Spark's ascending NULL first
+            [(("a", 1), 3), ((None, 5), 2), (("b", 1), 2)]),
+    }
+    suite = ExpectationSuite("unique-evr")
+    for etype, (kwargs, *_) in keys.items():
+        for level in ("BASIC", "SUMMARY"):
+            for n in (20, 2):
+                suite.add(etype, **kwargs, result_format={
+                    "result_format": level, "partial_unexpected_count": n})
+
+    def key(v):
+        return (v["k"], v["j"]) if isinstance(v, dict) else v
+
+    for evr in SuiteRunner(spark).validate(frame, suite).results:
+        cfg = evr.expectation_config
+        rf = cfg["kwargs"]["result_format"]
+        n = rf["partial_unexpected_count"]
+        _, missing, dups, top = keys[cfg["expectation_type"]]
+        res = evr.result
+        assert evr.success is False
+        assert (res["element_count"], res["missing_count"],
+                res["unexpected_count"]) == (11, missing, 7)
+        assert res["details"] == {"duplicate_key_count": 3}
+        partial = [key(v) for v in res["partial_unexpected_list"]]
+        assert len(partial) == min(n, 7)
+        # each key's rows come together, never more of them than it has
+        assert len([k for k, _ in groupby(partial)]) == len(set(partial))
+        assert all(c <= dups[k] for k, c in Counter(partial).items())
+        if n >= 7:
+            assert Counter(partial) == dups
+        if rf["result_format"] == "SUMMARY":
+            counts = [(key(c["value"]), c["count"])
+                      for c in res["partial_unexpected_counts"]]
+            assert counts == top[:n]
+        else:
+            assert "partial_unexpected_counts" not in res
+
+
 # ---------------------------------------------------------------------------
 # mostly edge semantics + invariants (SURVEY.md §5 property row)
 # ---------------------------------------------------------------------------

@@ -105,6 +105,23 @@ def test_whole_table_run_renders_single_page(
     assert os.path.exists(os.path.join(site, "suite.html"))
 
 
+def test_manifest_needed_only_by_partitioned_runs(
+    spark, tmp_path, table_path, suite_path, capsys
+):
+    """The one-shot whole-table run reads no manifest, so it runs without
+    --manifest; --partition-col without it is a usage error, raised before
+    any work."""
+    rc = run_suite.main(["--table", table_path, "--suite", suite_path])
+    assert rc == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["success"] and out["statistics"]["evaluated_expectations"] == 2
+    with pytest.raises(SystemExit) as exc:
+        run_suite.main(["--table", table_path, "--suite", suite_path,
+                        "--partition-col", "day"])
+    assert exc.value.code == 2
+    assert "--manifest" in capsys.readouterr().err
+
+
 def test_curation_gates_suite_on_documents(spark, tmp_path, capsys):
     """The shipped suites/curation_gates.json (PII / token-count /
     repetition gates) runs whole-table on the real documents parquet

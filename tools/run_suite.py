@@ -5,8 +5,8 @@ resumable from the checkpoint manifest, via ``spark-submit --py-files``:
 
     spark-submit --py-files dist/great_expectations_spark.zip \
         tools/run_suite.py --table <path|name> --suite suites/x.json \
-        --manifest <dir> [--evr <dir>] [--violations <dir>] \
-        [--partition-col conv_bucket] [--dim tools=<path>] [--run-id r1]
+        [--partition-col conv_bucket --manifest <dir>] [--evr <dir>] \
+        [--violations <dir>] [--dim tools=<path>] [--run-id r1]
 
 No ``master`` is set here — the cluster manager supplies it; locally
 ``spark-submit --master 'local[8]'`` works identically. Re-submitting the
@@ -31,7 +31,8 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     p.add_argument("--format", default="parquet",
                    choices=["parquet", "table", "orc", "csv", "json"])
     p.add_argument("--suite", required=True, help="suite JSON file")
-    p.add_argument("--manifest", required=True, help="manifest log dir")
+    p.add_argument("--manifest", default=None,
+                   help="manifest log dir; required with --partition-col")
     p.add_argument("--evr", default=None, help="EVR rows dir (one JSON file per commit)")
     p.add_argument("--violations", default=None, help="violations parquet dir")
     p.add_argument("--partition-col", default=None,
@@ -56,7 +57,11 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
                    help="render a static Data Docs site into DIR after the "
                         "run (reads only the EVR store / result object — "
                         "O(partitions), never O(data))")
-    return p.parse_args(argv)
+    args = p.parse_args(argv)
+    if args.partition_col and not args.manifest:
+        p.error("--partition-col needs --manifest: the resumable run "
+                "commits each partition to its log")
+    return args
 
 
 def main(argv: list[str]) -> int:
